@@ -85,8 +85,8 @@ object Bench {
     // The keys run CONCURRENTLY through a small pool — Spark actions are
     // thread-safe, sf0.001 jobs are planning-dominated, and every
     // side-effectful key is already concurrency-clean (sinks/writes use
-    // UUID temp dirs, fixture + memo builds go through computeIfAbsent,
-    // stream keys are batch twins with no shared state dir). Serial, this
+    // UUID temp dirs, PNG fixture builds go through computeIfAbsent and
+    // memo builds through graft.Memo's putIfAbsent, stream keys are batch twins with no shared state dir). Serial, this
     // pass was the bulk of warmup_sec (57-144 s across r7/r8 artifacts);
     // the TIMED passes below stay strictly serial so per-key numbers keep
     // their meaning.

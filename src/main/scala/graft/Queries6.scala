@@ -205,12 +205,12 @@ object Queries6 {
       // merge ~n²/2e9 shingle pairs — xxhash64's 64 bits keep collision
       // odds negligible, matching the string-identity oracle)
       (s, dir) => {
-        // DfMemo: the (doc_id, shh) frame feeds BOTH join branches (the
+        // Memo.frame: the (doc_id, shh) frame feeds BOTH join branches (the
         // per-shh count and the row side) — unmaterialized, Catalyst
         // inlines the explode+hash pass into each and computes it TWICE
         // (measured 2× the key at sf1); persisted once, both branches
         // read the materialized sketch (the memoizedSignatures discipline)
-        val sh = graft.ext.DfMemo.cached(s, Some(dir), "span_shh") {
+        val sh = Memo.frame(s, Some(dir), "span_shh") {
           // opt-r15: one-pass DistinctShingleHashes kernel — the former
           // explode(array_distinct(shingles)) + xxhash64(sh) built every
           // distinct window STRING only to hash it at the next projection;

@@ -23,22 +23,16 @@ object TableRegistry {
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
-  // DataFrames are immutable logical plans — cache per (session, path) so
-  // repeated queries don't re-list files / re-read parquet footers.
-  private val dfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    dfCache.computeIfAbsent((spark, path(sfDir, name)),
-      { case (s, p) => normalizeTs(s.read.parquet(p)) })
-
-  /** Drop this session's cached frames — long-lived JVMs cycling sessions
-    * would otherwise pin stopped sessions (and their plans) forever via the
-    * map's strong references. Mirrors DfMemo.clear / SimSearch.clear. */
-  def clear(spark: SparkSession): Unit = {
-    val it = dfCache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 eq spark) it.remove()
+  /** The fixture table `name` — memoized per (session, path) so repeated
+    * queries don't re-list files or re-read parquet footers, and rebuilt
+    * when the file under the path changes ([[graft.Memo]] snapshot). */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = path(sfDir, name)
+    graft.Memo(spark, s"table:$p", Seq(p))(normalizeTs(spark.read.parquet(p)))
   }
+
+  /** Drop this session's memoized frames and statistics ([[graft.Memo.clear]]). */
+  def clear(spark: SparkSession): Unit = graft.Memo.clear(spark)
 
   /** Boundary normalization of the `events.ts` column to the engine-wide
     * contract "ts = epoch-NANOS bigint". The fixture generator has shipped
@@ -140,19 +134,6 @@ object TableRegistry {
       (ViewMeta(t.name, cols, queryCounts.getOrElse(t.name, 1L), ddlFor(t.name)),
         qualified, quoted)
     }
-  }
-
-  /** (table, column, ordinal) rows — replaces information_schema.columns
-    * scan (cli.py:43-53); ordinal order is intrinsic to df.schema. */
-  def columnsMeta(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    tableNames
-      .flatMap { t =>
-        table(spark, sfDir, t).schema.fields.zipWithIndex.map { case (f, i) =>
-          (t, f.name, i + 1, f.dataType.simpleString)
-        }
-      }
-      .toDF("table_name", "column_name", "ordinal_position", "data_type")
   }
 
   /** Canned analytical query texts — the stand-in corpus for

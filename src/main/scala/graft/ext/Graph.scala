@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,11 +41,11 @@ object Graph {
     // dropped) instead of persistUnkeyed: a CacheManager persist here is
     // keyed by LOGICAL PLAN, so unpersisting it at the end of an unkeyed
     // call could evict a KEYED call's identical shared entry (the exact
-    // cross-eviction hazard DfMemo documents for the putIfAbsent loser) —
+    // cross-eviction hazard Memo documents for the putIfAbsent loser) —
     // and never unpersisting it leaked one entry per call (r8s3 review).
     val degPlan = edges.groupBy("s").agg(count(lit(1)).as("deg"))
     val deg = cacheKey match {
-      case Some(_) => DfMemo.cached(spark, cacheKey, s"prdeg$pairsTag")(degPlan)
+      case Some(_) => Memo.frame(spark, cacheKey, s"prdeg$pairsTag")(degPlan)
       case None => Dedup.truncate(degPlan)
     }
     var rank = deg.select(col("s").as("id"), col("deg"), lit(1000000L).as("rank"))

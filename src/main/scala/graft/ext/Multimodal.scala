@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -247,29 +248,6 @@ object Multimodal {
       col("text").cast("binary").as("media")).as[MediaRecord]
   }
 
-  /** Per-(session, dir, glob) memo of the LISTED ingest dataset — the
-    * plan object only, deliberately NOT persisted: reusing the plan reuses
-    * the InMemoryFileIndex inside its LogicalRelation, so repeated ingest
-    * calls skip the directory re-listing (measured: ~5 s of the sf1
-    * multimodal keys' 6.9 s was re-listing the 50k-file fixture corpus
-    * per invocation — decode itself is ~1.5 s), while every ACTION still
-    * scans and decodes the payload bytes for real. At 100 TB the listing
-    * is exactly what a catalog/manifest layer caches; the bytes are not.
-    * Stopped-session entries swept on access (the DfMemo discipline). */
-  private val listingMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), Dataset[MediaRecord]]()
-
-  /** Drop `spark`'s cached listings (the [[DfMemo.clear]] /
-    * [[graft.ext.Bpe.clear]] sibling — r14 advice): files added to or
-    * removed from an ingest directory mid-session are invisible to the
-    * memoized plan's InMemoryFileIndex until the listing is re-built, so
-    * tests and long-lived sessions need an invalidation hook. Keyed on the
-    * PARENT session (the memo key), not the internal ingest session. */
-  def clearListing(spark: SparkSession): Unit = {
-    val it = listingMemo.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 eq spark) it.remove()
-  }
-
   /** Small-file open cost for the ingest session, in bytes: Spark's 4 MB
     * default models HDFS seek cost and over-counts a local/NVMe small file
     * ~30×, shredding a many-small-files scan into thousands of near-empty
@@ -290,15 +268,12 @@ object Multimodal {
     * it, so frames built here keep small-file packing wherever they are
     * consumed, while every other scan in the parent session keeps Spark's
     * default. */
-  private val ingestSessionMemo = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, SparkSession]()
-
-  private def ingestSession(spark: SparkSession): SparkSession =
-    ingestSessionMemo.computeIfAbsent(spark, { parent =>
+  private def ingestSession(parent: SparkSession): SparkSession =
+    Memo(parent, "ingestsession") {
       val s = parent.newSession()
       s.conf.set("spark.sql.files.openCostInBytes", ingestOpenCostBytes.toString)
       s
-    })
+    }
 
   /** Real ingestion path: a directory of raw media FILES → MediaRecord, via
     * Spark's built-in `binaryFile` source (how media actually lands in a
@@ -306,53 +281,47 @@ object Multimodal {
     * (`<id>.<ext>`); media_type from the extension. The source is
     * scan-parallel, supports `pathGlobFilter`, and never materializes a
     * file on the driver — at 100 TB this is the bulk-ingest scan that
-    * [[extractFeatures]] runs directly on top of. */
+    * [[extractFeatures]] runs directly on top of.
+    *
+    * The listed dataset is memoized per (session, dir, glob) — the plan
+    * only, deliberately NOT persisted: reusing it reuses the
+    * InMemoryFileIndex inside its LogicalRelation, so repeated ingest calls
+    * skip re-listing the directory (~5 s of the sf1 multimodal keys' 6.9 s
+    * was re-listing the 50k-file corpus), while every action still scans
+    * and decodes the payload bytes. Files added to or removed from the
+    * directory stay invisible until [[Memo.clear]]. */
   def mediaFromBinaryFiles(spark: SparkSession, dir: String,
-      glob: String = "*"): Dataset[MediaRecord] = {
-    val it = listingMemo.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    val sit = ingestSessionMemo.entrySet().iterator()
-    while (sit.hasNext) if (sit.next().getKey.sparkContext.isStopped) sit.remove()
-    val existing = listingMemo.get((spark, dir, glob))
-    if (existing != null) existing
-    else {
-      val built = mediaFromBinaryFilesUncached(spark, dir, glob)
-      val prev = listingMemo.putIfAbsent((spark, dir, glob), built)
-      if (prev != null) prev else built
+      glob: String = "*"): Dataset[MediaRecord] =
+    Memo(spark, s"listing:$glob:$dir") {
+      // read through the low-open-cost ingest session (scoping rationale on
+      // [[ingestOpenCostBytes]]); the memo stays keyed on the PARENT session
+      val ingest = ingestSession(spark)
+      import ingest.implicits._
+      ingest.read.format("binaryFile")
+        .option("pathGlobFilter", glob)
+        .load(dir)
+        // One extraction, reused (Filter and Project are separate operators,
+        // so Spark's subexpression elimination would not share three copies
+        // of the regex across them on this bulk-ingest path). Stray
+        // non-conforming files (_SUCCESS, .DS_Store, readme.txt) yield an
+        // empty extraction → NULL doc_id → encoder crash on the primitive
+        // field; skip them instead of killing the ingest. The overflow bound
+        // is EXACT, not a crude length<=18 (which silently dropped valid
+        // 19-digit and zero-padded ids): leading zeros are stripped, then a
+        // 19-digit value admits iff it is <= Long.MaxValue by same-length
+        // string compare; only genuinely unrepresentable ids are skipped.
+        .withColumn("__id", regexp_extract(col("path"), "([0-9]+)\\.[^/.]+$", 1))
+        .withColumn("__idn", regexp_replace(col("__id"), "^0+", ""))
+        .where(col("__id") =!= "" &&
+          (length(col("__idn")) < 19 ||
+            (length(col("__idn")) === 19 &&
+              col("__idn") <= lit(Long.MaxValue.toString))))
+        .select(
+          col("__id").cast("long").as("doc_id"),
+          concat(lit("file/"), regexp_extract(col("path"), "\\.([^/.]+)$", 1)).as("media_type"),
+          col("content").as("media"))
+        .as[MediaRecord]
     }
-  }
-
-  private def mediaFromBinaryFilesUncached(parent: SparkSession, dir: String,
-      glob: String): Dataset[MediaRecord] = {
-    // read through the low-open-cost ingest session (scoping rationale on
-    // [[ingestOpenCostBytes]]); the memo stays keyed on the PARENT session
-    val spark = ingestSession(parent)
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-      // One extraction, reused (Filter and Project are separate operators,
-      // so Spark's subexpression elimination would not share three copies
-      // of the regex across them on this bulk-ingest path). Stray
-      // non-conforming files (_SUCCESS, .DS_Store, readme.txt) yield an
-      // empty extraction → NULL doc_id → encoder crash on the primitive
-      // field; skip them instead of killing the ingest. The overflow bound
-      // is EXACT, not a crude length<=18 (which silently dropped valid
-      // 19-digit and zero-padded ids): leading zeros are stripped, then a
-      // 19-digit value admits iff it is <= Long.MaxValue by same-length
-      // string compare; only genuinely unrepresentable ids are skipped.
-      .withColumn("__id", regexp_extract(col("path"), "([0-9]+)\\.[^/.]+$", 1))
-      .withColumn("__idn", regexp_replace(col("__id"), "^0+", ""))
-      .where(col("__id") =!= "" &&
-        (length(col("__idn")) < 19 ||
-          (length(col("__idn")) === 19 &&
-            col("__idn") <= lit(Long.MaxValue.toString))))
-      .select(
-        col("__id").cast("long").as("doc_id"),
-        concat(lit("file/"), regexp_extract(col("path"), "\\.([^/.]+)$", 1)).as("media_type"),
-        col("content").as("media"))
-      .as[MediaRecord]
-  }
 
   /** Batch feature extraction: one decoder per partition, media never
     * shuffles. Decode-first: payloads a JDK image reader claims get REAL
@@ -549,21 +518,6 @@ object Multimodal {
       * skip the memo and always re-count. */
     private val manifestCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-    private def inputSignature(docs: DataFrame): Option[String] = {
-      val files = docs.inputFiles
-      if (files.isEmpty) None
-      else Some {
-        val conf = docs.sparkSession.sessionState.newHadoopConf()
-        files.sorted.map { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          try {
-            val st = p.getFileSystem(conf).getFileStatus(p)
-            s"$f:${st.getLen}:${st.getModificationTime}"
-          } catch { case _: java.io.IOException => s"$f:?" }
-        }.mkString("|").hashCode.toString
-      }
-    }
-
     /** Materialize (once per fixture dir per JVM) the PNG corpus for `docs`
       * and return its directory — the input to [[mediaFromBinaryFiles]].
       *
@@ -579,13 +533,15 @@ object Multimodal {
           .collect()(0)
         s"${pop.getLong(0)}_${pop.getLong(1)}_${pop.getLong(2)}"
       }
-      val manifest = inputSignature(docs) match {
-        case Some(sig) =>
+      val files = docs.inputFiles
+      val manifest =
+        if (files.isEmpty) computeManifest()
+        else {
+          val sig = Memo.snapshot(docs.sparkSession, files.toSeq).hashCode
           val manifestKey =
             s"$fixtureKey#${docs.queryExecution.analyzed.semanticHash()}#$sig"
           manifestCache.computeIfAbsent(manifestKey, _ => computeManifest())
-        case None => computeManifest()
-      }
+        }
       val tag = s"${fixtureKey.replaceAll("[^A-Za-z0-9._-]", "_")}_$manifest"
       cache.computeIfAbsent(tag, { _ =>
         // executors write into executor-local java.io.tmpdir and the driver

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Memo
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -67,25 +68,13 @@ object QualityModel {
     col("x0") * w(0) + col("x1") * w(1) + col("x2") * w(2) + col("x3") * w(3)
   }
 
-  private val trained = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int, Double), Array[Double]]()
-
-  /** Drop this session's memoized weight vectors (pairs with
-    * [[DfMemo.clear]] for long-lived sessions iterating over corpora). */
-  def clear(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = trained.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 eq spark) it.remove()
-  }
-
   /** [[train]] memoized per (session, corpus key, schedule) — the two
     * declared surface keys (doc_quality_logreg, quality_calibration) share
     * one model per corpus, so the 12-job gradient descent runs once, not
-    * once per key. Same staleness caveat as DfMemo: a corpus mutated in
-    * place under an unchanged key serves stale weights until [[clear]]. */
+    * once per key ([[Memo]]'s key-names-immutable-input contract). */
   def trainCached(spark: org.apache.spark.sql.SparkSession, corpusKey: String,
       feat: DataFrame, steps: Int, eta: Double): Array[Double] =
-    trained.computeIfAbsent((spark, corpusKey, steps, eta),
-      _ => train(feat, steps, eta))
+    Memo(spark, s"logreg:$corpusKey:$steps:$eta")(train(feat, steps, eta))
 
   /** Train `steps` full-batch gradient steps at rate `eta` from w = 0:
     * wⱼ += η · avg((y − σ(w·x)) · xⱼ). Deterministic given the corpus. */

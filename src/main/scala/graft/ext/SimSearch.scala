@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Memo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -139,16 +140,13 @@ object SimSearch {
     math.max(8, math.min(30, ceilLog2))
   }
 
-  private def memoized(spark: SparkSession, cacheKey: Option[String], tag: String)
-      (build: => DataFrame): DataFrame = DfMemo.cached(spark, cacheKey, tag)(build)
-
   /** The ANN pair set of the fixture embeddings table, materialized once
     * per (session, dir) — consumed by simjoin_ann's downstream keys (the
     * PageRank recurrence references it in every iteration's subtree) and
     * warmed untimed by Bench like the pipeline's profile caches. Single
     * definition so call sites can't drift on the LSH parameters. */
   def annPairsMemo(spark: SparkSession, dir: String): DataFrame =
-    DfMemo.cached(spark, Some(dir), "annpairs") {
+    Memo.frame(spark, Some(dir), "annpairs") {
       val emb = graft.catalog.TableRegistry.table(spark, dir, "embeddings")
       // truncate lineage, not just persist: the banded projection's LOGICAL
       // plan carries nBands·r 64-literal weight arrays, and the PageRank
@@ -184,10 +182,10 @@ object SimSearch {
   def annSelfJoin(spark: SparkSession, emb: DataFrame, dim: Int,
       rPlanes: Int, nBands: Int, threshold: Double,
       cacheKey: Option[String] = None): DataFrame = {
-    val e = memoized(spark, cacheKey, s"ann:$dim:$rPlanes:$nBands") {
+    val e = Memo.frame(spark, cacheKey, s"ann:$dim:$rPlanes:$nBands") {
       withNorm(emb)
     }
-    val banded = memoized(spark, cacheKey, s"annbands:$dim:$rPlanes:$nBands") {
+    val banded = Memo.frame(spark, cacheKey, s"annbands:$dim:$rPlanes:$nBands") {
       e.select(col("vec_id"),
         explode(array((0 until nBands).map(b =>
           struct(lit(b).as("band"),
@@ -208,37 +206,9 @@ object SimSearch {
       .orderBy("a_id", "b_id")
   }
 
-  /** IVF-style top-k: deterministic "centroids" (the first nCentroids
-    * vectors by vec_id — a k-means iteration would refine these; seeding is
-    * enough to demonstrate the index shape); assignment rides the shared
-    * broadcast-centroid [[argminAssign]]; the query probes its nProbe
-    * nearest centroids and brute-forces only those clusters.
-    *
-    * 100 TB posture: assignment is scan-parallel; the probe filter prunes
-    * (nCentroids-nProbe)/nCentroids of the corpus before any distance math;
-    * the per-cluster layout would be a partitionBy("cluster") write.
-    */
-  /** Collected-centroid memo — the seeding collect is deterministic per
-    * (source, n), so repeated index builds (ivfTopK + kmeans over the same
-    * fixture dir) share one n × dim matrix instead of re-running the
-    * top-n scan per call. */
-  private val centroidMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), Array[(Int, Array[Double])]]()
-
-  /** Drop every driver-side memo owned by `spark` — the centroid matrices
-    * here AND the persisted frames in [[DfMemo]] (one call frees both; a
-    * long-lived JVM cycling sessions would otherwise pin stopped sessions
-    * and their n × dim matrices forever). */
-  def clear(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = centroidMemo.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 eq spark) it.remove()
-    val sit = sizeMemo.entrySet().iterator()
-    while (sit.hasNext) if (sit.next().getKey._1 eq spark) sit.remove()
-    DfMemo.clear(spark)
-  }
-
-  private val sizeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Long]()
+  /** Drop every memo owned by `spark` ([[Memo.clear]]): centroid
+    * matrices, corpus sizes, PCA directions and persisted index frames. */
+  def clear(spark: org.apache.spark.sql.SparkSession): Unit = Memo.clear(spark)
 
   /** Corpus-scaled cluster count k = max(8, n div 256): SemDeDup-style
     * clustering keeps the EXPECTED cluster size constant (~256) as the
@@ -255,11 +225,8 @@ object SimSearch {
     * ([[scaledK]], [[scaledPlanes]]) — memoized per (session, corpus) so
     * repeated index builds over one fixture cost one metadata-sized job. */
   def corpusSize(emb: DataFrame, cacheKey: Option[String] = None): Long =
-    cacheKey match {
-      case Some(k) =>
-        sizeMemo.computeIfAbsent((emb.sparkSession, k), _ => emb.count())
-      case None => emb.count()
-    }
+    cacheKey.fold(emb.count())(k =>
+      Memo(emb.sparkSession, s"corpussize:$k")(emb.count()))
 
   /** (ci, cv, c2) centroid index frame for the corpus-scaled assignment:
     * the first `k` nonzero-norm vectors by vec_id, indexed 0..k−1 in
@@ -275,15 +242,11 @@ object SimSearch {
   def centroidFrame(emb: DataFrame, k: Int,
       cacheKey: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def build: DataFrame =
+    Memo.frame(emb.sparkSession, cacheKey.map(ck => s"$ck:k$k"), "centroidframe") {
       withNorm(emb).orderBy("vec_id").limit(k)
         .withColumn("ci",
           (row_number().over(Window.orderBy("vec_id")) - 1).cast("int"))
         .select(col("ci"), col("v").as("cv"), dot(col("v"), col("v")).as("c2"))
-    cacheKey match {
-      case Some(ck) =>
-        DfMemo.cached(emb.sparkSession, Some(s"$ck:k$k"), "centroidframe")(build)
-      case None => build
     }
   }
 
@@ -346,19 +309,14 @@ object SimSearch {
     * centroids transit as broadcast data, not literals. */
   def assignClusters(emb: DataFrame, k: Int,
       cacheKey: Option[String] = None): DataFrame = {
-    def build: DataFrame = {
-      val e = withNorm(emb).select(col("vec_id"), col("v"))
-      e.join(argminAssign(e, centroidFrame(emb, k, cacheKey)), Seq("vec_id"))
-        .select(col("vec_id"), col("v"), col("cluster"), col("m"))
-    }
     // memoized + persisted per (corpus, k): the SemDeDup pair join reads
     // this frame from BOTH sides and the stats key reads it again — one
     // k-literal projection pass serves all of them (at 100 TB the
     // equivalent is materializing the assignment once at index-build time)
-    cacheKey match {
-      case Some(ck) =>
-        DfMemo.cached(emb.sparkSession, Some(s"$ck:k$k"), "clusterassign")(build)
-      case None => build
+    Memo.frame(emb.sparkSession, cacheKey.map(ck => s"$ck:k$k"), "clusterassign") {
+      val e = withNorm(emb).select(col("vec_id"), col("v"))
+      e.join(argminAssign(e, centroidFrame(emb, k, cacheKey)), Seq("vec_id"))
+        .select(col("vec_id"), col("v"), col("cluster"), col("m"))
     }
   }
 
@@ -525,17 +483,16 @@ object SimSearch {
     * are driver MATH only — the IVF probe ranking (n = 16 distances
     * against one query), the PQ codebook (n = 4 slices), and the k-means
     * seed matrix; corpus-side assignment always goes through the broadcast
-    * [[argminAssign]], never through literals built from this. */
+    * [[argminAssign]], never through literals built from this. Memoized
+    * per (session, cacheKey, n), so repeated index builds over one fixture
+    * (ivfTopK + kmeans) share one matrix instead of re-running the scan. */
   def seedCentroids(emb: DataFrame, n: Int, cacheKey: Option[String] = None)
       : Array[(Int, Array[Double])] = {
     def compute: Array[(Int, Array[Double])] =
       withNorm(emb).orderBy("vec_id").limit(n).collect()
         .zipWithIndex
         .map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
-    cacheKey match {
-      case Some(k) => centroidMemo.computeIfAbsent((emb.sparkSession, k, n), _ => compute)
-      case None => compute
-    }
+    cacheKey.fold(compute)(k => Memo(emb.sparkSession, s"centroids:$k:$n")(compute))
   }
 
   /** One full k-means iteration over the corpus: E-step assigns every
@@ -626,24 +583,15 @@ object SimSearch {
     (v, lam)
   }
 
-  /** Memoized pcaTop results — the power iteration is a deterministic
-    * driver-side fold (a handful of small aggregate jobs), so
-    * embedding_pca_power and embedding_abtt share ONE run per
-    * (session, dir, iters) instead of each paying the full chain (the
-    * centroidMemo discipline). */
-  private val pcaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (Array[Double], Double, Array[Double])]()
-
   /** [[pcaTopComponent]] plus the corpus mean it already computed — the
     * internal form [[abttTopK]] builds on (ABTT needs μ for the centering,
-    * and recomputing it would be a redundant pass). */
+    * and recomputing it would be a redundant pass). Memoized per (session,
+    * cacheKey, iters): embedding_pca_power and embedding_abtt share ONE
+    * power iteration instead of each paying the full chain. */
   private[graft] def pcaTop(spark: SparkSession, emb: DataFrame, iters: Int = 3,
       cacheKey: Option[String] = None): (Array[Double], Double, Array[Double]) =
-    cacheKey match {
-      case Some(k) => pcaMemo.computeIfAbsent((spark, k, iters),
-        _ => pcaTopCompute(spark, emb, iters))
-      case None => pcaTopCompute(spark, emb, iters)
-    }
+    cacheKey.fold(pcaTopCompute(spark, emb, iters))(k =>
+      Memo(spark, s"pca:$k:$iters")(pcaTopCompute(spark, emb, iters)))
 
   private def pcaTopCompute(spark: SparkSession, emb: DataFrame, iters: Int)
       : (Array[Double], Double, Array[Double]) = {
@@ -747,6 +695,16 @@ object SimSearch {
       .limit(k)
   }
 
+  /** IVF-style top-k: deterministic "centroids" (the first nCentroids
+    * vectors by vec_id — a k-means iteration would refine these; seeding is
+    * enough to demonstrate the index shape); assignment rides the shared
+    * broadcast-centroid [[argminAssign]]; the query probes its nProbe
+    * nearest centroids and brute-forces only those clusters.
+    *
+    * 100 TB posture: assignment is scan-parallel; the probe filter prunes
+    * (nCentroids-nProbe)/nCentroids of the corpus before any distance math;
+    * the per-cluster layout would be a partitionBy("cluster") write.
+    */
   def ivfTopK(spark: SparkSession, emb: DataFrame, queryVecId: Long, k: Int,
       nCentroids: Int = 16, nProbe: Int = 4, cacheKey: Option[String] = None): DataFrame = {
     val centroids = seedCentroids(emb, nCentroids, cacheKey)

@@ -368,8 +368,4 @@ object TextAnalysis {
       (t, i) => (length(t).cast("long") * i.cast("long")) % 1000003L),
       lit(0L), (acc, x) => (acc + x) % 1000003L)
   }
-
-  /** xxhash64 content fingerprint (engine-native fast path; not
-    * cross-engine reproducible — property-tested, not oracle-checked). */
-  def hashFingerprint(text: Column): Column = xxhash64(text)
 }

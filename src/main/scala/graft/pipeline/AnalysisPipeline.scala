@@ -15,23 +15,19 @@ import org.apache.spark.sql.functions._
   */
 object AnalysisPipeline {
 
-  // Profiles are deterministic per (sfDir, approx) and profiling is the
-  // pipeline's only heavy scan — memoize the collected per-column stats so
-  // score_partition / emit_partition_scripts / entry don't re-profile the
-  // same fixtures (compute-once, SURVEY §0's fix for the reference's double
-  // stat computation).
-  private val profileCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), Seq[Profiler.ColumnProfile]]()
-
   /** Memoized per-column profiles for every profiled table — the
     * compute-once statistic store every pipeline entry point (and any
-    * profile-derived query key) shares. */
+    * profile-derived query key) shares, so score_partition /
+    * emit_partition_scripts / entry don't re-profile the same fixtures
+    * (SURVEY §0's fix for the reference's double stat computation). The
+    * memo re-profiles when a profiled table's files change. */
   def profilesFor(spark: SparkSession, sfDir: String,
       approxCardinality: Boolean): Seq[Profiler.ColumnProfile] =
-    profileCache.computeIfAbsent((sfDir, approxCardinality), { _ =>
+    graft.Memo(spark, s"profiles:$sfDir:$approxCardinality",
+        TableRegistry.profiledTables.map(TableRegistry.path(sfDir, _))) {
       computeProfiles(spark, views(spark, sfDir),
         TableRegistry.table(spark, sfDir, _), approxCardinality)
-    })
+    }
 
   /** Profile every view via `tableFor` — the un-memoized core shared by the
     * fixture path ([[profilesFor]]) and the catalog path
@@ -75,13 +71,6 @@ object AnalysisPipeline {
       ViewMeta(t, cols, 1L, TableRegistry.viewDdl(t))
     }
 
-  /** Workload-derived statistics (usage frequencies, per-column exec-time
-    * weights, per-view priorities) are metadata-sized and deterministic per
-    * sfDir — memoized as collected rows, like the profiles, so repeated
-    * pipeline entry points don't rescan the query log. */
-  private val workloadCache = new java.util.concurrent.ConcurrentHashMap[String,
-    (Seq[(String, Long)], Seq[(String, String, Long)], Seq[(String, Double)])]()
-
   /** Cap on distinct workload texts parsed driver-side per analysis — keeps
     * the driver's footprint metadata-sized against a warehouse-scale query
     * log (texts beyond the N most frequent are dropped with a warning).
@@ -89,12 +78,19 @@ object AnalysisPipeline {
   val maxWorkloadTexts: Int =
     graft.introspect.QueryIntrospector.maxWorkloadTexts
 
+  /** Workload-derived statistics (usage frequencies, per-column exec-time
+    * weights, per-view priorities) are metadata-sized and deterministic per
+    * sfDir — memoized as collected rows, like the profiles, so repeated
+    * pipeline entry points don't rescan the query log. The memo reads the
+    * `events` log and the profiled tables' column lists, so a change to
+    * either rebuilds it. */
   private def workloadFor(spark: SparkSession, sfDir: String)
       : (Seq[(String, Long)], Seq[(String, String, Long)], Seq[(String, Double)]) =
-    workloadCache.computeIfAbsent(sfDir, { _ =>
+    graft.Memo(spark, s"workload:$sfDir",
+        (TableRegistry.profiledTables :+ "events").map(TableRegistry.path(sfDir, _))) {
       computeWorkload(spark, views(spark, sfDir),
         TableRegistry.queryLog(spark, sfDir))
-    })
+    }
 
   /** The per-distinct-text aggregate STATE every log-derived statistic is
     * linear in: (query, cnt, sum_exec, sum_priority). One scan of the log
@@ -162,7 +158,10 @@ object AnalysisPipeline {
       approxCardinality: Boolean = false): DataFrame = {
     import spark.implicits._
     // profile scans and workload derivations touch disjoint inputs — overlap
-    // them (cold-cache wall clock becomes max of the two, not the sum)
+    // them (cold-cache wall clock becomes max of the two, not the sum). Both
+    // sides first read the views' schemas; resolve the tables before the
+    // fork, or each memoized table frame is built (one schema job) by both.
+    views(spark, sfDir)
     val profilesF = {
       import scala.concurrent.{ExecutionContext, Future}
       implicit val ec: ExecutionContext = ExecutionContext.global
@@ -200,8 +199,8 @@ object AnalysisPipeline {
     * deployment it's the engine's own listener-captured log — see
     * graft.listener.UsageListener).
     *
-    * Not memoized: catalog contents are mutable session state, unlike the
-    * immutable fixture dirs. */
+    * Not memoized: catalog contents are mutable session state with no
+    * fixture files to snapshot. */
   def runFromCatalog(spark: SparkSession, queryLog: DataFrame,
       db: Option[String] = None,
       nameFilter: String => Boolean = _ => true,

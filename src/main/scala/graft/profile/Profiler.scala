@@ -218,13 +218,4 @@ object Profiler {
     }
   }
 
-  /** Profiles for a set of named tables as one DataFrame (long format —
-    * SURVEY §1: joinable struct<view,column,…> rather than nested maps). */
-  def profileTables(
-      spark: SparkSession,
-      tables: Seq[(String, DataFrame)],
-      approxCardinality: Boolean = false): DataFrame = {
-    import spark.implicits._
-    tables.flatMap { case (n, df) => profile(spark, n, df, approxCardinality) }.toDF()
-  }
 }

@@ -3,6 +3,7 @@ package graft
 import graft.catalog.TableRegistry
 import graft.pipeline.AnalysisPipeline
 import graft.recommend.SpecParser
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The advisor loop closed end to end: recommendation text → SpecParser →
@@ -238,6 +239,72 @@ class AdvisorEndToEndSpec extends SparkSpec {
       spec.map(s => graft.catalog.IcebergMeta.splitFragments(s).head)
     assert(top1(fromListener("orders")).contains("o_custkey"),
       s"expected o_custkey to win: ${fromListener("orders")}")
+  }
+
+  test("tables rewritten under the same path are re-profiled, re-scored and re-vetted") {
+    // `dir` is advised before and after every rewrite; the oracle for each
+    // step is the same call on a never-advised copy of `dir`
+    import java.nio.file.{Files, Paths}
+    val dir = copyFixtures("graft_stale")
+    def rewrite(name: String)(f: DataFrame => DataFrame): Unit = {
+      val p = Paths.get(TableRegistry.path(dir, name))
+      val staged = s"$p.staged"
+      f(spark.read.parquet(p.toString)).coalesce(1).write.parquet(staged)
+      Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+      Files.move(Paths.get(staged), p)
+    }
+    def fresh(): String = {
+      val src = Paths.get(dir)
+      val out = Files.createTempDirectory("graft_stale_fresh")
+      Files.walk(src).forEach { f =>
+        val to = out.resolve(src.relativize(f).toString)
+        if (Files.isDirectory(f)) Files.createDirectories(to) else Files.copy(f, to)
+      }
+      out.toString
+    }
+    def profiles(d: String) =
+      AnalysisPipeline.profilesFor(spark, d, approxCardinality = false).filter(_.view == "lineitem")
+    def advice(df: DataFrame) = df.collect()
+      .map(r => r.getAs[String]("view") -> Option(r.getAs[String]("partition_spec"))).toMap
+    // the workload-derived score terms: usage frequency, exec-time weight,
+    // view priority
+    def workload(d: String) = AnalysisPipeline.scores(spark, d)
+      .select("view", "column", "weighted_frequency", "weight", "avg_priority").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> (2 to 4).map(i => Option(r.get(i)))).toMap
+    def vetted(d: String) = {
+      val stats = AnalysisPipeline.textStatsOf(TableRegistry.queryLog(spark, d))
+      val (recs, evidence) = AnalysisPipeline.runVettedFromStats(spark, d, stats)
+      (advice(recs), evidence.collect().map(_.toString).toSet)
+    }
+
+    // 1. advise the original tables
+    val profiles0 = profiles(dir)
+    val advice0 = advice(AnalysisPipeline.run(spark, dir))
+    val workload0 = workload(dir)
+
+    // 2. lineitem rewritten: fewer rows, a different distribution
+    rewrite("lineitem")(_.where(col("l_orderkey") % 3 === 0)
+      .withColumn("l_quantity", col("l_orderkey").cast("double")))
+    val profiles1 = profiles(dir)
+    assert(profiles1.map(_.totalCount).max < profiles0.map(_.totalCount).max)
+    assert(profiles1 == profiles(fresh()))
+    val advice1 = advice(AnalysisPipeline.run(spark, dir))
+    assert(advice1 != advice0)
+    assert(advice1 == advice(AnalysisPipeline.run(spark, fresh())))
+
+    // 3. events rewritten: one canned query text left in the workload
+    rewrite("events")(_.where(col("event_id") % 5 === 1))
+    val workload2 = workload(dir)
+    assert(workload2 != workload0)
+    assert(workload2 == workload(fresh()))
+
+    // 4. the drift re-analysis path (runVettedFromStats) sees the profile
+    // of one more lineitem rewrite
+    val vetted2 = vetted(dir)
+    rewrite("lineitem")(_.withColumn("l_quantity", lit(1.0)))
+    val vetted3 = vetted(dir)
+    assert(vetted3 != vetted2)
+    assert(vetted3 == vetted(fresh()))
   }
 
   test("catalog discovery resolves tables of a NON-current database") {

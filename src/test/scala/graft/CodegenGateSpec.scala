@@ -226,7 +226,7 @@ class CodegenGateSpec extends SparkSpec {
     // CODEGEN_ONLY turns every CodeGeneratorWithInterpretedFallback site into
     // compile-or-throw: if any expression in these plans (ours or Spark's)
     // generated bad Java, the query fails instead of silently de-optimizing.
-    graft.ext.DfMemo.clear(spark) // drop memoized frames so plans re-execute
+    Memo.clear(spark) // drop memoized frames so plans re-execute
     val prev = spark.conf.getOption("spark.sql.codegen.factoryMode")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
@@ -242,7 +242,7 @@ class CodegenGateSpec extends SparkSpec {
         case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
         case None => spark.conf.unset("spark.sql.codegen.factoryMode")
       }
-      graft.ext.DfMemo.clear(spark)
+      Memo.clear(spark)
     }
   }
 }

@@ -382,16 +382,15 @@ class ExtSpec extends SparkSpec {
     assert(am(4L) == 0L && am(12L) == 10L && am(33L) == 33L)
   }
 
-  test("DfMemo is re-entrant: a memoized build may itself hit the memo") {
-    import graft.ext.DfMemo
+  test("Memo is re-entrant: a memoized build may itself hit the memo") {
     import spark.implicits._
     // the old computeIfAbsent form died with "Recursive update" whenever a
     // nested key landed in the outer key's hash bin (intermittent — bins
     // depend on the session's identity hash); 64 nested keys make a bin
     // collision near-certain, so this test is deterministic in practice
-    val out = DfMemo.cached(spark, Some("reentrant-outer"), "memo-test") {
+    val out = Memo.frame(spark, Some("reentrant-outer"), "memo-test") {
       val inners = (0 until 64).map { i =>
-        DfMemo.cached(spark, Some(s"reentrant-inner-$i"), "memo-test") {
+        Memo.frame(spark, Some(s"reentrant-inner-$i"), "memo-test") {
           Seq(i).toDF("v")
         }
       }
@@ -399,10 +398,46 @@ class ExtSpec extends SparkSpec {
     }
     assert(out.count() == 64)
     // and the memo actually memoizes: same handle back
-    val again = DfMemo.cached(spark, Some("reentrant-outer"), "memo-test") {
+    val again = Memo.frame(spark, Some("reentrant-outer"), "memo-test") {
       fail("must not rebuild"); null
     }
     assert(again eq out)
+
+    // across kinds in the one map: a value memo whose build runs a profile
+    // build, which reads every fixture table through TableRegistry.table
+    val dir = copyFixtures("graft_memo_nested")
+    val outer = Memo(spark, s"memo-test-nested:$dir") {
+      (0 until 64).map(i => Memo(spark, s"memo-test-nested:$dir:$i")(i)).sum +
+        graft.pipeline.AnalysisPipeline.profilesFor(spark, dir, approxCardinality = false).size
+    }
+    val profiles = graft.pipeline.AnalysisPipeline.profilesFor(spark, dir, approxCardinality = false)
+    assert(outer == (0 until 64).sum + profiles.size && profiles.nonEmpty)
+    assert(graft.pipeline.AnalysisPipeline.profilesFor(spark, dir, approxCardinality = false) eq profiles)
+    assert(TableRegistry.table(spark, dir, "lineitem") eq TableRegistry.table(spark, dir, "lineitem"))
+    assert(Memo(spark, s"memo-test-nested:$dir")(fail("must not rebuild"): Int) == outer)
+  }
+
+  test("Memo.clear on a child session unpersists its frames and keeps the parent's") {
+    import spark.implicits._
+    val child = spark.newSession()
+    def cached(f: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
+      .lookupCachedData(f.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    val parentFrame = Memo.frame(spark, Some("clear-scope-parent"), "memo-test") {
+      Seq(-1).toDF("v")
+    }
+    // distinct data per frame: CacheManager keys cached data by plan
+    val childFrames = (0 until 3).map { i =>
+      Memo.frame(child, Some(s"clear-scope-child-$i"), "memo-test") { Seq(i).toDF("v") }
+    }
+    (parentFrame +: childFrames).foreach(_.count())
+    childFrames.foreach(f => assert(cached(f)))
+    Memo.clear(child)
+    childFrames.foreach(f => assert(!cached(f), "child frame still cached"))
+    assert(cached(parentFrame), "parent frame was unpersisted")
+    assert(Memo.frame(spark, Some("clear-scope-parent"), "memo-test") {
+      fail("parent entry was dropped"); null
+    } eq parentFrame)
+    parentFrame.unpersist()
   }
 
   test("ImageCodec decodes PngFixtures renders bit-exactly (dims, bands, sample sum)") {

@@ -165,6 +165,51 @@ class ListenerSpec extends SparkSpec {
       s"unaudited driver-materialization sites: ${offenders -- audited}")
   }
 
+  test("grep gate: ConcurrentHashMap / AtomicReference fields only in graft.Memo or the allowlist") {
+    // graft.Memo alone decides how long a memo lives and when it is stale;
+    // a new map or reference field elsewhere is a new ad-hoc memo
+    // unless it is listed here with the reason it is not one
+    val allowed = Map(
+      "Memo.scala" -> Set("entries"), // the memo registry itself
+      // an accumulator of observed references, not a memo
+      "UsageListener.scala" -> Set("stats"),
+      // PngFixtures: the rendered on-disk PNG corpus and its population
+      // manifest outlive sessions (a directory per population)
+      "Multimodal.scala" -> Set("cache", "manifestCache"),
+      // a write guard: which dir's bucketed-join tables are on disk
+      "Queries5.scala" -> Set("bucketedJoinDir"))
+    val root = new java.io.File("src/main/scala")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    assume(root.isDirectory, "run from repo root")
+    val mention = java.util.regex.Pattern.compile("""\b(ConcurrentHashMap|AtomicReference)\b""")
+    val field = java.util.regex.Pattern.compile("""\b(?:val|var)\s+(\w+)""")
+    val declared = walk(root).flatMap { f =>
+      // code only: line comments, scaladoc lines and imports do not declare
+      val code = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .linesIterator
+        .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("/*") ||
+          l.trim.startsWith("import "))
+        .map(l => l.indexOf("//") match { case -1 => l; case i => l.substring(0, i) })
+        .mkString("\n")
+      val m = mention.matcher(code)
+      Iterator.continually(m).takeWhile(_.find()).map { hit =>
+        // the field a mention belongs to: the nearest val/var before it
+        val fm = field.matcher(code.substring(0, hit.start()))
+        var name = "<none>"
+        while (fm.find()) name = fm.group(1)
+        f.getName -> name
+      }.toSeq
+    }.toSet
+    val offenders = declared.filterNot { case (file, name) =>
+      allowed.getOrElse(file, Set.empty[String]).contains(name) }
+    assert(offenders.isEmpty, s"ad-hoc memo fields outside graft.Memo: $offenders")
+    // the allowlist must not go stale either
+    val stale = allowed.toSeq.flatMap { case (f, ns) => ns.map(f -> _) }.toSet -- declared
+    assert(stale.isEmpty, s"stale allowlist entries: $stale")
+  }
+
   test("grep gate: every Window.partitionBy file is in the audited window inventory") {
     // The r12 hot-key audit made every window partition bounded
     // (COVERAGE.md "Window inventory"): doc-bounded frames, per-entity

@@ -18,6 +18,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** A writable copy of the `sfDir` fixture tables in a fresh temp dir. */
+  def copyFixtures(prefix: String): String = {
+    val out = java.nio.file.Files.createTempDirectory(prefix)
+    new java.io.File(sfDir).listFiles().foreach { f =>
+      java.nio.file.Files.copy(f.toPath, out.resolve(f.getName))
+    }
+    out.toString
+  }
+
   override def afterAll(): Unit = {
     // keep the session alive across suites in the same JVM (getOrCreate
     // returns the shared one); SBT forks one JVM for all tests.
