@@ -2444,7 +2444,7 @@ check("parse_query_columns", pd.DataFrame(
      for (kd, n2), v in sorted(acc.items())]))
 
 # parse_trino_dialect: hand-derived sqlglot-equivalent ground truth for the
-# twelve canned Trino-only texts (Queries9.trinoDialectTexts) — one row per
+# twelve canned Trino-only texts (surface.AdvisorKeys.trinoDialectTexts) — one row per
 # (text, kind, name). Independent hand derivation: read each text, apply
 # Trino semantics (ARRAY[...] is a literal, "x" is an identifier, UNNEST's
 # argument columns are references, AT TIME ZONE is an operator over both

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch probe main — runs the flagship pipeline on sf0.001 and prints the
   * recommendations. Not part of the library API.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val recs = SparkEntry.entry(spark)
     recs.collect().foreach { r =>

@@ -1,959 +1,23 @@
 package graft
 
-import graft.catalog.TableRegistry
-import graft.pipeline.AnalysisPipeline
-import graft.score.Scoring
-import graft.usage.Usage
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.surface._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The operator surface of the engine, one entry per SURVEY.md §2 row, each
-  * with (where SQL-expressible) a DuckDB oracle twin over the same parquet.
-  *
-  * Oracle-determinism rules (SURVEY §5): explicit ORDER BY over keys that
-  * make the row multiset deterministic; money sums via DECIMAL(18,2) then
-  * cast to double (exact on both engines); DuckDB aggregates CAST to Spark's
-  * natural result types (count/sum(bigint)→BIGINT, floor→BIGINT); raw
-  * nanosecond timestamps never emitted (Spark reads them µs-truncated).
-  */
+/** One declared operator: its key, its Spark implementation and (where
+  * SQL-expressible) the DuckDB oracle twin over the same parquet. */
 final case class QSpec(
     name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
+/** The operator surface, assembled from the domain modules of
+  * [[graft.surface]] — the one place that lists them. Determinism rules
+  * for the oracles: see the [[graft.surface]] package object. */
 object Queries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    TableRegistry.table(s, dir, name)
-
-  private def withQlog(body: String): String =
-    s"WITH qlog AS (\n${TableRegistry.queryLogOracleCte}\n)\n$body"
-
-  /** (qk → referenced table) ground truth for the canned workload. */
-  private val refTablesValues: String =
-    Seq((0, "lineitem"), (1, "orders"), (1, "lineitem"), (2, "customer"),
-      (3, "orders"), (4, "supplier"), (4, "nation"))
-      .map { case (k, n) => s"($k, '$n')" }.mkString(", ")
-
-  /** (qk, column, multiplicity) of every column reference per canned query. */
-  private val refColsSeq: Seq[(Int, String, Int)] = Seq(
-    (0, "l_returnflag", 2), (0, "l_quantity", 1), (0, "l_shipdate", 1),
-    (1, "o_orderkey", 2), (1, "l_quantity", 1), (1, "l_orderkey", 1), (1, "o_totalprice", 1),
-    (2, "c_mktsegment", 2),
-    (3, "o_orderdate", 1), (3, "o_orderstatus", 1),
-    (4, "s_name", 1), (4, "s_nationkey", 1), (4, "n_nationkey", 1), (4, "n_name", 1))
-
-  private val refJoinColsSeq: Seq[(Int, String, Int)] = Seq(
-    (1, "o_orderkey", 1), (1, "l_orderkey", 1),
-    (4, "s_nationkey", 1), (4, "n_nationkey", 1))
-
-  private val refWhereColsSeq: Seq[(Int, String, Int)] = Seq(
-    (0, "l_shipdate", 1), (1, "o_totalprice", 1),
-    (3, "o_orderdate", 1), (3, "o_orderstatus", 1), (4, "n_name", 1))
-
-  private def valuesOf(xs: Seq[(Int, String, Int)]): String =
-    xs.map { case (k, n, c) => s"($k, '$n', $c)" }.mkString(", ")
-
-  /** murmur3_x86_32 of a BIGINT column replayed in pure DuckDB SQL: the
-    * value's two little-endian 32-bit blocks through the standard mix
-    * (k*c1, rotl15, k*c2, h^=k, rotl13, h*5+e6546b64) and final avalanche,
-    * all mod 2^32 via HUGEINT multiplies. Seed 0 = the Iceberg spec hash
-    * (vector: 34 → 2017239379); seed 42 = Spark's `hash()` for LongType.
-    * Exposes `v` (input) and `sh` (signed int32 hash) in CTE `msigned`. */
-  private[graft] def murmurCte(table: String, colExpr: String, seed: Int): String =
-    s"""WITH mbase AS (SELECT $colExpr AS v FROM $table),
-       |mblk AS (SELECT v, v & 4294967295 AS b0, (v >> 32) & 4294967295 AS b1 FROM mbase),
-       |m1 AS (SELECT v, b1, CAST((CAST(b0 AS HUGEINT) * 3432918353) % 4294967296 AS BIGINT) AS k FROM mblk),
-       |m2 AS (SELECT v, b1, ((k << 15) | (k >> 17)) & 4294967295 AS k FROM m1),
-       |m3 AS (SELECT v, b1, CAST((CAST(k AS HUGEINT) * 461845907) % 4294967296 AS BIGINT) AS k FROM m2),
-       |m4 AS (SELECT v, b1, xor(CAST($seed AS BIGINT), k) AS h FROM m3),
-       |m5 AS (SELECT v, b1, ((h << 13) | (h >> 19)) & 4294967295 AS h FROM m4),
-       |m6 AS (SELECT v, b1, CAST((CAST(h AS HUGEINT) * 5 + 3864292196) % 4294967296 AS BIGINT) AS h FROM m5),
-       |m7 AS (SELECT v, h, CAST((CAST(b1 AS HUGEINT) * 3432918353) % 4294967296 AS BIGINT) AS k FROM m6),
-       |m8 AS (SELECT v, h, ((k << 15) | (k >> 17)) & 4294967295 AS k FROM m7),
-       |m9 AS (SELECT v, h, CAST((CAST(k AS HUGEINT) * 461845907) % 4294967296 AS BIGINT) AS k FROM m8),
-       |m10 AS (SELECT v, xor(h, k) AS h FROM m9),
-       |m11 AS (SELECT v, ((h << 13) | (h >> 19)) & 4294967295 AS h FROM m10),
-       |m12 AS (SELECT v, CAST((CAST(h AS HUGEINT) * 5 + 3864292196) % 4294967296 AS BIGINT) AS h FROM m11),
-       |mf0 AS (SELECT v, xor(h, 8) AS h FROM m12),
-       |mf1 AS (SELECT v, xor(h, h >> 16) AS h FROM mf0),
-       |mf2 AS (SELECT v, CAST((CAST(h AS HUGEINT) * 2246822507) % 4294967296 AS BIGINT) AS h FROM mf1),
-       |mf3 AS (SELECT v, xor(h, h >> 13) AS h FROM mf2),
-       |mf4 AS (SELECT v, CAST((CAST(h AS HUGEINT) * 3266489909) % 4294967296 AS BIGINT) AS h FROM mf3),
-       |mf5 AS (SELECT v, xor(h, h >> 16) AS h FROM mf4),
-       |msigned AS (SELECT v, CASE WHEN h >= 2147483648 THEN h - 4294967296 ELSE h END AS sh FROM mf5)
-       |""".stripMargin
-
-  // ---------------------------------------------------------------- scans
-
-  private val scanSpecs = Seq(
-    QSpec("scan_catalog_views",
-      (s, dir) => {
-        import s.implicits._
-        TableRegistry.profiledTables.flatMap { tb =>
-          t(s, dir, tb).schema.fieldNames.zipWithIndex.map { case (c, i) => (tb, c, i + 1) }
-        }.toDF("table_name", "column_name", "ordinal_position")
-          .orderBy("table_name", "ordinal_position")
-      },
-      Some {
-        val rows = TableRegistry.profiledTables.flatMap { tb =>
-          TableRegistry.profiledColumns(tb).zipWithIndex.map { case (c, i) =>
-            s"('$tb', '$c', ${i + 1})"
-          }
-        }.mkString(", ")
-        s"SELECT * FROM (VALUES $rows) AS t(table_name, column_name, ordinal_position) ORDER BY table_name, ordinal_position"
-      }),
-
-    QSpec("scan_querylog_sorted",
-      (s, dir) =>
-        TableRegistry.queryLog(s, dir)
-          .select(col("query_id").cast("long").as("query_id"),
-            col("execution_time_ms"), col("cpu_time_ms"), col("input_bytes"))
-          .orderBy(desc("execution_time_ms"), asc("query_id")).limit(20),
-      Some(withQlog(
-        """SELECT CAST(query_id AS BIGINT) AS query_id, execution_time_ms, cpu_time_ms, input_bytes
-          |FROM qlog ORDER BY execution_time_ms DESC, CAST(query_id AS BIGINT) ASC LIMIT 20""".stripMargin))),
-
-    QSpec("limit_probe",
-      (s, dir) => t(s, dir, "region").orderBy("r_regionkey").limit(1),
-      Some("SELECT * FROM region ORDER BY r_regionkey LIMIT 1")),
-
-    // ---------------------------------------------------------------- filters
-
-    QSpec("filter_conjunctive",
-      (s, dir) => t(s, dir, "lineitem")
-        .where(col("l_returnflag") === "R" && col("l_linestatus") === "F")
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-        .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-      Some(
-        """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey FROM lineitem
-          |WHERE l_returnflag = 'R' AND l_linestatus = 'F'
-          |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin)),
-
-    QSpec("filter_point",
-      (s, dir) => t(s, dir, "events").where(col("event_id") === 42)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          round(col("value"), 2).as("value")),
-      Some("SELECT event_id, user_id, event_type, ROUND(value, 2) AS value FROM events WHERE event_id = 42")),
-
-    QSpec("filter_time_range",
-      // create_time >= TIMESTAMP literal (F4, fixed boundary — README.md:81's
-      // interval form with a pinned timestamp for determinism). ts is epoch
-      // nanos (bigint) on the Spark side.
-      (s, dir) => t(s, dir, "events")
-        .where(col("ts") >= lit(1705276800L * 1000000000L))
-        .groupBy("event_type").agg(count(lit(1)).as("cnt"))
-        .orderBy("event_type"),
-      Some(
-        """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS cnt FROM events
-          |WHERE ts >= TIMESTAMP '2024-01-15 00:00:00'
-          |GROUP BY event_type ORDER BY event_type""".stripMargin)),
-
-    QSpec("filter_isin",
-      (s, dir) => t(s, dir, "nation")
-        .where(col("n_name").isin("NATION_3", "NATION_7", "NATION_12"))
-        .select("n_nationkey", "n_name", "n_regionkey").orderBy("n_nationkey"),
-      Some(
-        """SELECT n_nationkey, n_name, n_regionkey FROM nation
-          |WHERE n_name IN ('NATION_3', 'NATION_7', 'NATION_12') ORDER BY n_nationkey""".stripMargin)),
-
-    // ---------------------------------------------------------------- joins
-
-    QSpec("join_broadcast_left",
-      (s, dir) => t(s, dir, "orders")
-        .join(broadcast(t(s, dir, "customer")),
-          col("o_custkey") === col("c_custkey"), "left")
-        .select(col("o_orderkey"), col("c_mktsegment"),
-          round(col("c_acctbal"), 2).as("c_acctbal"))
-        .orderBy("o_orderkey"),
-      Some(
-        """SELECT o_orderkey, c_mktsegment, ROUND(c_acctbal, 2) AS c_acctbal
-          |FROM orders LEFT JOIN customer ON o_custkey = c_custkey ORDER BY o_orderkey""".stripMargin)),
-
-    QSpec("join_semi",
-      (s, dir) => t(s, dir, "customer")
-        .join(t(s, dir, "orders").where(col("o_totalprice") > 150000),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name").orderBy("c_custkey"),
-      Some(
-        """SELECT c_custkey, c_name FROM customer
-          |WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 150000)
-          |ORDER BY c_custkey""".stripMargin)),
-
-    QSpec("join_equi_inner",
-      (s, dir) => t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(
-          round(sum(col("l_quantity").cast("decimal(18,2)")).cast("double"), 2).as("sum_qty"),
-          count(lit(1)).as("cnt"))
-        .orderBy("o_orderstatus"),
-      Some(
-        """SELECT o_orderstatus,
-          |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
-
-    QSpec("join_explode_agg",
-      (s, dir) => {
-        import s.implicits._
-        val stop = Seq("the", "a", "data", "join", "merge", "spark").toDF("token")
-        t(s, dir, "documents")
-          .select(col("n_chars"), explode(split(col("text"), " ")).as("token"))
-          .join(broadcast(stop), Seq("token"))
-          .groupBy("token").agg(count(lit(1)).as("cnt"),
-            // A12: average over the joined-exploded rows
-            round(sum(col("n_chars")).cast("double") / count(lit(1)), 6).as("avg_chars"))
-          .orderBy("token")
-      },
-      Some(
-        """SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt,
-          |  ROUND(CAST(SUM(n_chars) AS DOUBLE) / COUNT(*), 6) AS avg_chars
-          |FROM (SELECT n_chars, UNNEST(string_split(text, ' ')) AS token FROM documents) toks
-          |JOIN (VALUES ('the'), ('a'), ('data'), ('join'), ('merge'), ('spark')) AS stop(token) USING (token)
-          |GROUP BY token ORDER BY token""".stripMargin)),
-
-    // ------------------------------------------------------------- set ops
-
-    QSpec("setop_union_all",
-      (s, dir) => t(s, dir, "customer").select(col("c_nationkey").cast("int").as("nationkey"))
-        .unionByName(t(s, dir, "supplier").select(col("s_nationkey").cast("int").as("nationkey")))
-        .groupBy("nationkey").agg(count(lit(1)).as("cnt"))
-        .orderBy("nationkey"),
-      Some(
-        """SELECT nationkey, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-          |  SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer
-          |  UNION ALL SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier
-          |) u GROUP BY nationkey ORDER BY nationkey""".stripMargin)))
-
-  // ---------------------------------------------------------------- aggs
-
-  private val aggSpecs = Seq(
-    QSpec("q1_agg",
-      // flagship TPC-H-Q1-shaped aggregate (A1/A8 family + E4 arithmetic)
-      (s, dir) => t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          round(sum(col("l_quantity").cast("decimal(18,2)")).cast("double"), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double"), 2).as("sum_price"),
-          round(sum(col("l_quantity").cast("decimal(18,2)")).cast("double") / count(lit(1)), 6).as("avg_qty"),
-          count(lit(1)).as("cnt"))
-        .orderBy("l_returnflag", "l_linestatus"),
-      Some(
-        """SELECT l_returnflag, l_linestatus,
-          |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty,
-          |  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_price,
-          |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_qty,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM lineitem GROUP BY l_returnflag, l_linestatus
-          |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
-
-    QSpec("expr_to_json",
-      // E9 JSON render as an expression: to_json(struct(...))
-      (s, dir) => t(s, dir, "events")
-        .where(col("event_id") < 50)
-        .select(col("event_id"),
-          to_json(struct(col("event_id"), col("event_type"))).as("j"))
-        .orderBy("event_id"),
-      Some(
-        """SELECT event_id,
-          |  CAST(to_json(struct_pack(event_id := event_id, event_type := event_type)) AS VARCHAR) AS j
-          |FROM events WHERE event_id < 50 ORDER BY event_id""".stripMargin)),
-
-    QSpec("sql_end_to_end",
-      // the SQL surface itself: a canned workload query run through
-      // spark.sql over registered temp views (decimal-safe aggregate form)
-      (s, dir) => {
-        TableRegistry.tableNames.foreach { n =>
-          t(s, dir, n).createOrReplaceTempView(s"graft_$n")
-        }
-        s.sql(
-          """SELECT l_returnflag,
-            |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty,
-            |  COUNT(*) AS cnt
-            |FROM graft_lineitem WHERE l_shipdate >= DATE '1995-01-01'
-            |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
-      },
-      Some(
-        """SELECT l_returnflag,
-          |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM lineitem WHERE l_shipdate >= DATE '1995-01-01'
-          |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
-
-    QSpec("agg_count_distinct",
-      (s, dir) => t(s, dir, "lineitem").agg(
-        countDistinct(col("l_returnflag")).as("distinct_flag"),
-        countDistinct(col("l_suppkey")).as("distinct_supp"),
-        countDistinct(col("l_partkey")).as("distinct_part"),
-        count(lit(1)).as("total")),
-      Some(
-        """SELECT CAST(COUNT(DISTINCT l_returnflag) AS BIGINT) AS distinct_flag,
-          |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS distinct_supp,
-          |  CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS distinct_part,
-          |  CAST(COUNT(*) AS BIGINT) AS total
-          |FROM lineitem""".stripMargin)),
-
-    QSpec("agg_approx_distinct",
-      // HLL++ — the sketch estimate itself is deterministic for fixed data
-      // but not DuckDB-reproducible (engine-internal mixing), so the
-      // DRIVER-VISIBLE columns are the exact counts plus a within-5%
-      // ASSERTION of the sketch against them: the key hash-checks that the
-      // approximate structure lands inside the band, not just that it
-      // produced a row. rsd=0.01, not the 0.05 default: rsd is ONE sigma,
-      // and the default's measured error reaches 6.4% on the fixtures
-      // (l_orderkey at sf0.001) — at 0.01 the measured error is ≤0.7% at
-      // every SF, so the 5% band holds with 7× margin. The raw estimates
-      // stay out of the hashed surface by design (SURVEY §5 rule 1);
-      // ProfilerSpec asserts the banded profile path.
-      (s, dir) => t(s, dir, "lineitem")
-        .agg(
-          countDistinct(col("l_partkey")).as("exact_part"),
-          countDistinct(col("l_orderkey")).as("exact_order"),
-          approx_count_distinct(col("l_partkey"), 0.01).as("ap"),
-          approx_count_distinct(col("l_orderkey"), 0.01).as("ao"))
-        .select(col("exact_part"), col("exact_order"),
-          (abs(col("ap") - col("exact_part")).cast("double") /
-            col("exact_part") <= 0.05).as("part_within_5pct"),
-          (abs(col("ao") - col("exact_order")).cast("double") /
-            col("exact_order") <= 0.05).as("order_within_5pct")),
-      Some(
-        """SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS exact_part,
-          |  CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS exact_order,
-          |  TRUE AS part_within_5pct, TRUE AS order_within_5pct
-          |FROM lineitem""".stripMargin)),
-
-    QSpec("agg_percentile_exact",
-      (s, dir) => t(s, dir, "lineitem").agg(
-        round(expr("percentile(l_quantity, 0.1D)"), 6).as("qty_p10"),
-        round(expr("percentile(l_quantity, 0.5D)"), 6).as("qty_p50"),
-        round(expr("percentile(l_quantity, 0.9D)"), 6).as("qty_p90"),
-        round(expr("percentile(l_tax, 0.5D)"), 6).as("tax_p50")),
-      Some(
-        """SELECT ROUND(quantile_cont(l_quantity, 0.1), 6) AS qty_p10,
-          |  ROUND(quantile_cont(l_quantity, 0.5), 6) AS qty_p50,
-          |  ROUND(quantile_cont(l_quantity, 0.9), 6) AS qty_p90,
-          |  ROUND(quantile_cont(l_tax, 0.5), 6) AS tax_p50
-          |FROM lineitem""".stripMargin)),
-
-    QSpec("agg_percentile",
-      // approx sketch variant (reference approx_percentile). Same
-      // hash-checkable shape as agg_approx_distinct: the driver-visible
-      // columns are the EXACT percentiles plus a within-5% assertion of
-      // the GK sketch against each (the sketch returns a member value, the
-      // exact interpolates — 5% relative covers that gap at any SF; the
-      // raw sketch outputs stay out of the hashed surface by design).
-      (s, dir) => t(s, dir, "lineitem")
-        .agg(
-          percentile_approx(col("l_quantity"), array(lit(0.1), lit(0.5), lit(0.9)), lit(10000)).as("ap"),
-          expr("percentile(l_quantity, array(0.1D, 0.5D, 0.9D))").as("ex"))
-        .select(
-          round(element_at(col("ex"), 1), 6).as("qty_p10"),
-          round(element_at(col("ex"), 2), 6).as("qty_p50"),
-          round(element_at(col("ex"), 3), 6).as("qty_p90"),
-          (abs(element_at(col("ap"), 1) - element_at(col("ex"), 1)) /
-            element_at(col("ex"), 1) <= 0.05).as("p10_within_5pct"),
-          (abs(element_at(col("ap"), 2) - element_at(col("ex"), 2)) /
-            element_at(col("ex"), 2) <= 0.05).as("p50_within_5pct"),
-          (abs(element_at(col("ap"), 3) - element_at(col("ex"), 3)) /
-            element_at(col("ex"), 3) <= 0.05).as("p90_within_5pct")),
-      Some(
-        """SELECT ROUND(quantile_cont(l_quantity, 0.1), 6) AS qty_p10,
-          |  ROUND(quantile_cont(l_quantity, 0.5), 6) AS qty_p50,
-          |  ROUND(quantile_cont(l_quantity, 0.9), 6) AS qty_p90,
-          |  TRUE AS p10_within_5pct, TRUE AS p50_within_5pct, TRUE AS p90_within_5pct
-          |FROM lineitem""".stripMargin)),
-
-    QSpec("agg_min_max_range",
-      (s, dir) => t(s, dir, "lineitem").agg(
-        round(min("l_extendedprice"), 2).as("min_price"),
-        round(max("l_extendedprice"), 2).as("max_price"),
-        round(max("l_extendedprice") - min("l_extendedprice"), 2).as("value_range"),
-        min("l_suppkey").as("min_supp"),
-        max("l_suppkey").as("max_supp")),
-      Some(
-        """SELECT ROUND(MIN(l_extendedprice), 2) AS min_price,
-          |  ROUND(MAX(l_extendedprice), 2) AS max_price,
-          |  ROUND(MAX(l_extendedprice) - MIN(l_extendedprice), 2) AS value_range,
-          |  MIN(l_suppkey) AS min_supp, MAX(l_suppkey) AS max_supp
-          |FROM lineitem""".stripMargin)),
-
-    QSpec("agg_date_granularity",
-      // two-level date aggregation (A7, partitioning.py:380-408)
-      (s, dir) => {
-        val inner = t(s, dir, "lineitem")
-          .groupBy(
-            dayofmonth(col("l_shipdate")).as("day_val"),
-            month(col("l_shipdate")).as("month_val"),
-            year(col("l_shipdate")).as("year_val"))
-          .agg(count(lit(1)).as("cnt"))
-        inner.agg(
-          countDistinct(col("day_val")).as("day_count"),
-          countDistinct(col("month_val")).as("month_count"),
-          countDistinct(col("year_val")).as("year_count"))
-      },
-      Some(
-        """WITH date_counts AS (
-          |  SELECT CAST(EXTRACT(DAY FROM l_shipdate) AS INT) AS day_val,
-          |    CAST(EXTRACT(MONTH FROM l_shipdate) AS INT) AS month_val,
-          |    CAST(EXTRACT(YEAR FROM l_shipdate) AS INT) AS year_val,
-          |    COUNT(*) AS cnt
-          |  FROM lineitem GROUP BY 1, 2, 3)
-          |SELECT CAST(COUNT(DISTINCT day_val) AS BIGINT) AS day_count,
-          |  CAST(COUNT(DISTINCT month_val) AS BIGINT) AS month_count,
-          |  CAST(COUNT(DISTINCT year_val) AS BIGINT) AS year_count
-          |FROM date_counts""".stripMargin)),
-
-    QSpec("agg_table_rollup",
-      // A8: per-table execution totals from the workload (J3 join, no loop)
-      (s, dir) => {
-        val (totals, _) = Scoring.performanceMetrics(s, TableRegistry.queryLog(s, dir))
-        totals.select(col("table"), col("execution_time"), col("query_count"))
-          .orderBy("table")
-      },
-      Some(withQlog(
-        s"""SELECT name AS "table", CAST(SUM(execution_time_ms) AS BIGINT) AS execution_time,
-           |  CAST(COUNT(*) AS BIGINT) AS query_count
-           |FROM qlog JOIN (VALUES $refTablesValues) AS refs(qk, name)
-           |  ON CAST(CAST(qlog.query_id AS BIGINT) % 5 AS INT) = refs.qk
-           |GROUP BY name ORDER BY name""".stripMargin))),
-
-    QSpec("agg_column_weight",
-      // A9: per-(table, column) execution-time weights
-      (s, dir) => {
-        val (_, weights) = Scoring.performanceMetrics(s, TableRegistry.queryLog(s, dir))
-        weights.orderBy("table", "column")
-      },
-      Some(withQlog(
-        s"""SELECT refs."table", refs."column", CAST(SUM(execution_time_ms * refs.cnt) AS BIGINT) AS weight
-           |FROM qlog JOIN (
-           |  SELECT tv.qk, tv.name AS "table", cv."column", cv.cnt
-           |  FROM (VALUES $refTablesValues) AS tv(qk, name)
-           |  JOIN (VALUES ${valuesOf(refColsSeq)}) AS cv(qk, "column", cnt) ON tv.qk = cv.qk
-           |) refs ON CAST(CAST(qlog.query_id AS BIGINT) % 5 AS INT) = refs.qk
-           |GROUP BY refs."table", refs."column" ORDER BY refs."table", refs."column"""".stripMargin))),
-
-    QSpec("agg_value_counts",
-      (s, dir) => t(s, dir, "events").groupBy("event_type")
-        .agg(count(lit(1)).as("cnt")).orderBy("event_type"),
-      Some("SELECT event_type, CAST(COUNT(*) AS BIGINT) AS cnt FROM events GROUP BY event_type ORDER BY event_type")),
-
-    QSpec("agg_histogram",
-      (s, dir) => t(s, dir, "orders")
-        .groupBy(floor(col("o_totalprice") / 10000).as("bucket"))
-        .agg(count(lit(1)).as("cnt")).orderBy("bucket"),
-      Some(
-        """SELECT CAST(FLOOR(o_totalprice / 10000) AS BIGINT) AS bucket,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin)),
-
-    QSpec("agg_weighted_frequency",
-      // A1: the reference's aggregate_column_usage Counter as a distributed
-      // union → groupBy → sum (partitioning.py:68-100).
-      (s, dir) => Usage.weightedFrequency(s,
-        AnalysisPipeline.views(s, dir), TableRegistry.queryLog(s, dir)),
-      Some {
-        val metaRows = (TableRegistry.profiledTables.flatMap(tb =>
-          TableRegistry.profiledColumns(tb).map(c => s"('$c', 1)")) ++
-          TableRegistry.ddlJoinColumns.map(c => s"('$c', 1)")).mkString(", ")
-        withQlog(
-          s"""SELECT name, CAST(SUM(weight) AS BIGINT) AS weighted_frequency FROM (
-             |  SELECT name, weight FROM (VALUES $metaRows) AS meta(name, weight)
-             |  UNION ALL
-             |  SELECT refs.name AS name, 1 AS weight
-             |  FROM qlog JOIN (VALUES $refTablesValues) AS refs(qk, name)
-             |    ON CAST(CAST(qlog.query_id AS BIGINT) % 5 AS INT) = refs.qk
-             |) u GROUP BY name ORDER BY weighted_frequency DESC, name ASC""".stripMargin)
-      }))
-
-  // ------------------------------------------------ beyond-reference bonus
-
-  private val bonusSpecs = Seq(
-    QSpec("agg_rollup",
-      // hierarchical subtotals (not in the reference — engine generality).
-      // Null subtotal keys are coalesced to 'ALL' so null-ordering
-      // differences between engines can't break the compare.
-      (s, dir) => t(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("l_quantity").cast("decimal(18,2)")).cast("double"), 2).as("sum_qty"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("cnt"), col("sum_qty"))
-        .orderBy("flag", "status"),
-      Some(
-        """SELECT COALESCE(l_returnflag, 'ALL') AS flag, COALESCE(l_linestatus, 'ALL') AS status,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt,
-          |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty
-          |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-          |ORDER BY flag, status""".stripMargin)),
-
-    QSpec("window_running_sum",
-      // frame-spec window (rowsBetween) — not in the reference; ordered
-      // running total per group over a deterministic key. The o_orderkey
-      // < 300 cut bounds the declared surface, and because the frame is a
-      // PREFIX of the same o_orderkey order, a surviving row's running sum
-      // only ever saw rows that also survive — the filter commutes with
-      // the window, so it runs BEFORE it (pushed to the scan) and the
-      // per-status window partitions stay constant-size instead of a third
-      // of the table on one task (o_orderstatus has 3 values — Catalyst
-      // cannot push a filter through a window itself; r12 hot-key audit).
-      (s, dir) => t(s, dir, "orders")
-        .select(col("o_orderstatus"), col("o_orderkey"),
-          col("o_totalprice").cast("decimal(18,2)").as("p"))
-        .where(col("o_orderkey") < 300)
-        .withColumn("running",
-          sum(col("p")).over(Window.partitionBy("o_orderstatus")
-            .orderBy("o_orderkey").rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .select(col("o_orderstatus"), col("o_orderkey"),
-          round(col("running").cast("double"), 2).as("running"))
-        .orderBy("o_orderstatus", "o_orderkey"),
-      Some(
-        """SELECT o_orderstatus, o_orderkey,
-          |  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-          |    PARTITION BY o_orderstatus ORDER BY o_orderkey
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 2) AS running
-          |FROM orders QUALIFY o_orderkey < 300
-          |ORDER BY o_orderstatus, o_orderkey""".stripMargin)),
-
-    QSpec("agg_stats_moments",
-      // statistical profiling functions (stddev/corr) — rounded to absorb
-      // partition-order fp drift in the merge formulas
-      (s, dir) => t(s, dir, "part").agg(
-        round(stddev_samp(col("p_retailprice")), 4).as("price_stddev"),
-        round(corr(col("p_size"), col("p_retailprice")), 4).as("size_price_corr"),
-        round(avg(col("p_retailprice")), 4).as("price_avg")),
-      Some(
-        """SELECT ROUND(stddev_samp(p_retailprice), 4) AS price_stddev,
-          |  ROUND(corr(p_size, p_retailprice), 4) AS size_price_corr,
-          |  ROUND(AVG(p_retailprice), 4) AS price_avg
-          |FROM part""".stripMargin)),
-
-    QSpec("filter_like",
-      (s, dir) => t(s, dir, "part")
-        .where(col("p_name").like("%widget%"))
-        .groupBy("p_brand").agg(count(lit(1)).as("cnt"))
-        .orderBy("p_brand"),
-      Some(
-        """SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS cnt FROM part
-          |WHERE p_name LIKE '%widget%' GROUP BY p_brand ORDER BY p_brand""".stripMargin)),
-
-    QSpec("q3_shipping",
-      // TPC-H-Q3-shaped 3-way join: filters on both sides, revenue agg, topk
-      (s, dir) => t(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .where(col("l_shipdate") >= lit("1996-01-01"))
-        .groupBy("o_orderkey")
-        .agg(round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .cast("decimal(18,4)")).cast("double"), 4).as("revenue"),
-          count(lit(1)).as("n_items"))
-        .orderBy(desc("revenue"), asc("o_orderkey")).limit(20),
-      Some(
-        """SELECT o_orderkey,
-          |  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue,
-          |  CAST(COUNT(*) AS BIGINT) AS n_items
-          |FROM customer JOIN orders ON c_custkey = o_custkey
-          |  JOIN lineitem ON o_orderkey = l_orderkey
-          |WHERE c_mktsegment = 'BUILDING' AND l_shipdate >= TIMESTAMP '1996-01-01'
-          |GROUP BY o_orderkey ORDER BY revenue DESC, o_orderkey ASC LIMIT 20""".stripMargin)),
-
-    QSpec("q5_region",
-      // TPC-H-Q5-shaped 6-way join through the dimension chain.
-      //
-      // opt-r15 (guide §2.3/§3.3 — filter before the big shuffle): the
-      // former chain applied r_name = 'ASIA' only AFTER
-      // customer⋈orders⋈lineitem⋈supplier, so every lineitem row crossed
-      // the two fact-sized joins before ~4/5 of them were discarded. All
-      // joins are inner and the filter touches only the supplier→nation→
-      // region chain, so reordering is result-identical (oracle
-      // untouched): resolve the ASIA supplier set FIRST (dimension-sized,
-      // nation/region broadcast), join it to lineitem at the scan, and
-      // only the surviving ~1/5 of lineitem rides the o_orderkey and
-      // o_custkey joins. At 100 TB this cuts the two largest shuffles of
-      // the plan by the region's selectivity. No broadcast hint on the
-      // supplier side: it grows with the corpus; AQE broadcasts it at
-      // fixture scale on its own.
-      (s, dir) => {
-        val asiaSupp = t(s, dir, "supplier")
-          .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-          .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-          .where(col("r_name") === "ASIA")
-          .select(col("s_suppkey"), col("n_name"))
-        t(s, dir, "lineitem")
-          .join(asiaSupp, col("l_suppkey") === col("s_suppkey"))
-          .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-          .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-          .groupBy("n_name")
-          .agg(round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .cast("decimal(18,4)")).cast("double"), 4).as("revenue"))
-          .orderBy("n_name")
-      },
-      Some(
-        """SELECT n_name,
-          |  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-          |FROM customer JOIN orders ON c_custkey = o_custkey
-          |  JOIN lineitem ON o_orderkey = l_orderkey
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN nation ON s_nationkey = n_nationkey
-          |  JOIN region ON n_regionkey = r_regionkey
-          |WHERE r_name = 'ASIA'
-          |GROUP BY n_name ORDER BY n_name""".stripMargin)),
-
-    QSpec("join_anti",
-      // explicit left-anti (the dedup survivors pattern as a relational op)
-      (s, dir) => t(s, dir, "customer")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_mktsegment").orderBy("c_custkey"),
-      Some(
-        """SELECT c_custkey, c_mktsegment FROM customer
-          |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-          |ORDER BY c_custkey""".stripMargin)))
-
-  // ------------------------------------------------- window / sort / parse
-
-  private val windowSpecs = Seq(
-    QSpec("window_topn_per_view",
-      // W1 per-group top-N via the native bounded-heap aggregate
-      // (functions.TopKRows). Spark 4's WindowGroupLimit already bounds the
-      // row_number form's shuffle (partial group-limit before the exchange),
-      // but it still SORTS every map partition fully (O(n log n)) before
-      // limiting, then sorts again after the shuffle. The aggregate keeps a
-      // k-bounded heap per (group, partition) — O(n log k) with no sort
-      // operator at all — and the same O(groups × partitions × k) exchange.
-      // Exact and merge-order independent under the (price desc, orderkey,
-      // linenumber) total order — FunctionsSpec asserts equality with the
-      // window form.
-      (s, dir) => {
-        import graft.functions.TopKRows.topKRows
-        t(s, dir, "lineitem")
-          .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-            round(col("l_extendedprice"), 2).as("price"))
-          .groupBy("l_returnflag")
-          .agg(topKRows(struct(col("price"), col("l_orderkey"), col("l_linenumber")), 3).as("top"))
-          .select(col("l_returnflag"), posexplode(col("top")))
-          .select(col("l_returnflag"), col("col.l_orderkey"), col("col.l_linenumber"),
-            col("col.price"), (col("pos") + 1).cast("int").as("rank"))
-          .orderBy("l_returnflag", "rank")
-      },
-      Some(
-        """SELECT * FROM (
-          |  SELECT l_returnflag, l_orderkey, l_linenumber, ROUND(l_extendedprice, 2) AS price,
-          |    CAST(ROW_NUMBER() OVER (PARTITION BY l_returnflag
-          |      ORDER BY ROUND(l_extendedprice, 2) DESC, l_orderkey ASC, l_linenumber ASC) AS INT) AS rank
-          |  FROM lineitem) ranked
-          |WHERE rank <= 3 ORDER BY l_returnflag, rank""".stripMargin)),
-
-    QSpec("sort_limit_topk",
-      (s, dir) => t(s, dir, "events")
-        .select(col("event_id"), round(col("value"), 2).as("value"))
-        .orderBy(desc("value"), asc("event_id")).limit(10),
-      Some(
-        """SELECT event_id, ROUND(value, 2) AS value FROM events
-          |ORDER BY value DESC, event_id ASC LIMIT 10""".stripMargin)),
-
-    QSpec("parse_query_columns",
-      // P2: Catalyst-parser extraction of (kind, name) references across the
-      // workload, weighted by how often each text ran. The oracle VALUES are
-      // hand-derived ground truth for the five canned texts.
-      (s, dir) => {
-        import s.implicits._
-        val log = TableRegistry.queryLog(s, dir)
-        // capped heavy-hitter collect — distinct texts of a warehouse-scale
-        // log are not metadata-sized (r4 verdict "What's wrong #1")
-        val texts = graft.introspect.QueryIntrospector.workloadTexts(log)
-        val refRows: Seq[(String, String, String, Long)] = texts.flatMap { q =>
-          graft.introspect.QueryIntrospector.parse(s, q).toSeq.flatMap { r =>
-            r.tables.groupBy(identity).map { case (n, v) => (q, "table", n, v.size.toLong) } ++
-              r.joinColumns.map { case (n, c) => (q, "join_col", n, c.toLong) } ++
-              r.whereColumns.map { case (n, c) => (q, "where_col", n, c.toLong) } ++
-              r.allColumns.map { case (n, c) => (q, "col", n, c.toLong) }
-          }
-        }
-        val refsDf = refRows.toDF("query", "kind", "name", "cnt")
-        log.join(broadcast(refsDf), Seq("query"))
-          .groupBy("kind", "name").agg(sum("cnt").as("total"))
-          .orderBy("kind", "name")
-      },
-      Some {
-        val all = refColsSeq.map { case (k, n, c) => (k, "col", n, c) } ++
-          refJoinColsSeq.map { case (k, n, c) => (k, "join_col", n, c) } ++
-          refWhereColsSeq.map { case (k, n, c) => (k, "where_col", n, c) } ++
-          Seq((0, "table", "lineitem", 1), (1, "table", "orders", 1), (1, "table", "lineitem", 1),
-            (2, "table", "customer", 1), (3, "table", "orders", 1),
-            (4, "table", "supplier", 1), (4, "table", "nation", 1))
-        val vals = all.map { case (k, kind, n, c) => s"($k, '$kind', '$n', $c)" }.mkString(", ")
-        withQlog(
-          s"""SELECT refs.kind, refs.name, CAST(SUM(refs.cnt) AS BIGINT) AS total
-             |FROM qlog JOIN (VALUES $vals) AS refs(qk, kind, name, cnt)
-             |  ON CAST(CAST(qlog.query_id AS BIGINT) % 5 AS INT) = refs.qk
-             |GROUP BY refs.kind, refs.name ORDER BY refs.kind, refs.name""".stripMargin)
-      }))
-
-  // ---------------------------------------------------------------- scoring
-
-  private val scoreSpecs = Seq(
-    QSpec("score_resource",
-      (s, dir) => Scoring.resourceScores(TableRegistry.queryLog(s, dir))
-        .select(col("query_id").cast("long").as("query_id"),
-          round(col("resource_score"), 6).as("resource_score"))
-        .orderBy("query_id"),
-      Some(withQlog(
-        """SELECT CAST(query_id AS BIGINT) AS query_id,
-          |  ROUND(execution_time_ms / GREATEST((SELECT MAX(execution_time_ms) FROM qlog), 1) * 40.0
-          |      + cpu_time_ms / GREATEST((SELECT MAX(cpu_time_ms) FROM qlog), 1) * 30.0
-          |      + input_bytes / GREATEST((SELECT MAX(input_bytes) FROM qlog), 1) * 15.0
-          |      + peak_memory_bytes / GREATEST((SELECT MAX(peak_memory_bytes) FROM qlog), 1) * 15.0, 6)
-          |    AS resource_score
-          |FROM qlog ORDER BY query_id""".stripMargin))),
-
-    QSpec("score_query_type",
-      (s, dir) => Scoring.queryTypes(TableRegistry.queryLog(s, dir))
-        .select(col("query_id").cast("long").as("query_id"),
-          col("is_interactive"), col("partition_priority"))
-        .orderBy("query_id"),
-      Some(withQlog(
-        """SELECT CAST(query_id AS BIGINT) AS query_id,
-          |  (POSITION('LIMIT' IN UPPER(query)) > 0 OR execution_time_ms < 10000) AS is_interactive,
-          |  CASE WHEN POSITION('LIMIT' IN UPPER(query)) > 0 OR execution_time_ms < 10000
-          |    THEN 2.0 ELSE 1.0 END AS partition_priority
-          |FROM qlog ORDER BY query_id""".stripMargin))),
-
-    QSpec("score_distribution",
-      // C6 over lineitem's first-5 (numeric) columns: skew = p90/p10 with the
-      // intended guards, density = distinct/total.
-      (s, dir) => {
-        // derived from the pipeline's memoized profile store (compute-once:
-        // whichever of score_partition / score_distribution / emit runs
-        // first pays the scans; the Profiler itself keeps the percentile and
-        // distinct passes separate — mixing multi-DISTINCT Expand with
-        // imperative percentile buffers in one aggregate is ~10× slower)
-        import s.implicits._
-        graft.pipeline.AnalysisPipeline.profilesFor(s, dir, approxCardinality = false)
-          .filter(p => p.view == "lineitem" && p.skewRatio.isDefined)
-          .map(p => (p.column, p.skewRatio.get, p.cardinality, p.totalCount))
-          .toDF("column", "skew_raw", "card", "total")
-          .select(col("column"),
-            // skew is a ratio of interpolated percentiles (generally
-            // non-decimal rationals — the ROUND-boundary hazard needs an
-            // exact 5·10^-7-grid value, which p90/p10 of real data
-            // essentially never is); density IS an integer ratio → exact
-            round(col("skew_raw"), 6).as("skew_ratio"),
-            graft.ext.ExactMath.ratioRounded(col("card"), col("total"), 6)
-              .as("density"))
-          .orderBy("column")
-      },
-      Some {
-        val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity")
-        val parts = cols.map { c =>
-          s"""SELECT '$c' AS "column", quantile_cont($c, 0.1) AS p10, quantile_cont($c, 0.9) AS p90,
-             |  CAST(COUNT(DISTINCT $c) AS BIGINT) AS distinct_count, CAST(COUNT(*) AS BIGINT) AS total
-             |FROM lineitem""".stripMargin
-        }.mkString("\nUNION ALL\n")
-        s"""SELECT "column",
-           |  ROUND(CASE WHEN p10 <> p90 AND p10 <> 0 THEN p90 / p10 ELSE 1.0 END, 6) AS skew_ratio,
-           |  (CAST(((2000000::HUGEINT * distinct_count + total) // (2::HUGEINT * total)) AS DOUBLE) / 1000000) AS density
-           |FROM ($parts) stats ORDER BY "column"""".stripMargin
-      }))
-
-  // ------------------------------------------------------------ transforms
-
-  private val transformSpecs = Seq(
-    QSpec("transform_date",
-      (s, dir) => t(s, dir, "lineitem")
-        .groupBy(date_trunc("month", col("l_shipdate")).cast("date").as("month_start"))
-        .agg(count(lit(1)).as("cnt")).orderBy("month_start"),
-      Some(
-        """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month_start,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM lineitem GROUP BY 1 ORDER BY month_start""".stripMargin)),
-
-    QSpec("transform_truncate",
-      (s, dir) => t(s, dir, "part")
-        .groupBy((floor(col("p_size") / 10) * 10).as("trunc_size"))
-        .agg(count(lit(1)).as("cnt")).orderBy("trunc_size"),
-      Some(
-        """SELECT CAST(FLOOR(p_size / 10) * 10 AS BIGINT) AS trunc_size,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM part GROUP BY 1 ORDER BY trunc_size""".stripMargin)),
-
-    QSpec("transform_bucket_iceberg",
-      // T3 without the caveat: byte-compatible Iceberg bucket via the
-      // custom codegen Expression (spec vectors in FunctionsSpec), now with
-      // a FULL oracle — murmur3_x86_32 replayed in DuckDB SQL (murmurCte,
-      // seed 0) and bucketed by (hash & MaxInt) % n exactly as the spec says.
-      (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
-        t(s, dir, "lineitem")
-          .selectExpr("iceberg_bucket(8, l_suppkey) AS bucket")
-          .groupBy("bucket").agg(count(lit(1)).as("cnt")).orderBy("bucket")
-      },
-      Some(murmurCte("lineitem", "l_suppkey", 0) +
-        """SELECT CAST((sh & 2147483647) % 8 AS INT) AS bucket,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM msigned GROUP BY 1 ORDER BY bucket""".stripMargin)),
-
-    QSpec("transform_bucket",
-      // T3 with Spark's own Murmur3 (`hash()`, seed 42): same DuckDB murmur
-      // replay, bucketed with Java-semantics pmod on the signed hash.
-      (s, dir) => t(s, dir, "lineitem")
-        .groupBy(pmod(hash(col("l_suppkey")), lit(8)).as("bucket"))
-        .agg(count(lit(1)).as("cnt")).orderBy("bucket"),
-      Some(murmurCte("lineitem", "l_suppkey", 42) +
-        """SELECT CAST(((sh % 8) + 8) % 8 AS INT) AS bucket,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM msigned GROUP BY 1 ORDER BY bucket""".stripMargin)))
-
-  // ------------------------------------------------------------- text / ext
-
-  private val extSpecs = Seq(
-    QSpec("dedup_exact",
-      // X1: exact dedup on text, min-doc_id winner (stable tiebreak)
-      (s, dir) => t(s, dir, "documents")
-        .groupBy("text")
-        .agg(min("doc_id").as("doc_id"), count(lit(1)).as("dup_count"))
-        .select("doc_id", "dup_count")
-        .orderBy("doc_id"),
-      Some(
-        """SELECT MIN(doc_id) AS doc_id, CAST(COUNT(*) AS BIGINT) AS dup_count
-          |FROM documents GROUP BY text ORDER BY doc_id""".stripMargin)),
-
-    QSpec("text_tokens",
-      (s, dir) => t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("cnt"))
-        .orderBy("token"),
-      Some(
-        """SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM (SELECT UNNEST(string_split(text, ' ')) AS token FROM documents) toks
-          |GROUP BY token ORDER BY token""".stripMargin)),
-
-    QSpec("token_count",
-      (s, dir) => t(s, dir, "documents")
-        .select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"))
-        .orderBy("doc_id"),
-      Some(
-        """SELECT doc_id, CAST(LEN(string_split(text, ' ')) AS INT) AS n_tokens
-          |FROM documents ORDER BY doc_id""".stripMargin)),
-
-    QSpec("json_extract",
-      (s, dir) => t(s, dir, "events")
-        .select(get_json_object(col("props"), "$.k").cast("int").as("k_val"))
-        .groupBy("k_val").agg(count(lit(1)).as("cnt"))
-        .orderBy("k_val"),
-      Some(
-        """SELECT CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS INT) AS k_val,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM events GROUP BY 1 ORDER BY k_val""".stripMargin)),
-
-    QSpec("json_struct_roundtrip",
-      // Typed JSON columns at scale: to_json(struct(...)) renders one JSON
-      // doc per event, from_json with a DDL SCHEMA parses it back in ONE
-      // pass (JsonToStructs — schema projection; contrast json_extract's
-      // per-field get_json_object, one parse per field). The oracle
-      // verifies from_json ∘ to_json = id by computing the same rollup
-      // straight from the base columns — any parse/render drift (types,
-      // null handling, field order) breaks the hash match.
-      (s, dir) => {
-        val ev = t(s, dir, "events")
-        val doc = ev.select(to_json(struct(col("event_id"), col("event_type"),
-          get_json_object(col("props"), "$.k").cast("int").as("k"))).as("doc"))
-        doc.select(from_json(col("doc"),
-            org.apache.spark.sql.types.StructType.fromDDL(
-              "event_id BIGINT, event_type STRING, k INT")).as("r"))
-          .select(col("r.event_type").as("event_type"), col("r.k").as("k"))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("cnt"), sum("k").as("k_sum"))
-          .orderBy("event_type")
-      },
-      Some(
-        """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS cnt,
-          |  CAST(SUM(CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS INT)) AS BIGINT) AS k_sum
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
-
-    QSpec("expr_date_arith",
-      // E2 completion: the calendar-arithmetic family (day offsets, month
-      // offsets with end-of-month clamping, day distances) — all
-      // integer-exact, so the engines must agree to the day. Month
-      // arithmetic clamps identically (Mar 31 − 2 months → Jan 31) in
-      // Spark's add_months and DuckDB's INTERVAL subtraction.
-      (s, dir) => t(s, dir, "lineitem")
-        .groupBy(year(col("l_shipdate")).as("ship_year"))
-        .agg(count(lit(1)).as("cnt"),
-          min(date_add(col("l_shipdate").cast("date"), 90)).as("min_plus90"),
-          max(add_months(col("l_shipdate").cast("date"), -2)).as("max_minus2m"),
-          sum(datediff(lit(java.sql.Date.valueOf("1996-06-01")),
-            col("l_shipdate").cast("date"))).as("days_to_ref"))
-        .orderBy("ship_year"),
-      Some(
-        """SELECT CAST(EXTRACT(YEAR FROM l_shipdate) AS INT) AS ship_year,
-          |  CAST(COUNT(*) AS BIGINT) AS cnt,
-          |  MIN(CAST(l_shipdate AS DATE) + 90) AS min_plus90,
-          |  MAX(CAST(CAST(l_shipdate AS DATE) - INTERVAL 2 MONTH AS DATE)) AS max_minus2m,
-          |  CAST(SUM(date_diff('day', CAST(l_shipdate AS DATE), DATE '1996-06-01')) AS BIGINT) AS days_to_ref
-          |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)),
-
-    QSpec("agg_conditional_family",
-      // Conditional/boolean aggregates (count_if / bool_or / bool_and /
-      // filtered COUNT DISTINCT) — all map-side-combining hash aggregates.
-      // Thresholds (488 / 0.05) are fixture-calibrated to produce MIXED
-      // true/false per group at both verify SFs, so the booleans are real
-      // assertions, not constants.
-      (s, dir) => t(s, dir, "events")
-        .groupBy("event_type")
-        .agg(expr("count_if(value > 50)").as("n_high"),
-          expr("bool_or(value > 488)").as("any_extreme"),
-          expr("bool_and(value > 0.05)").as("all_above_floor"),
-          expr("count(DISTINCT CASE WHEN value > 50 THEN user_id END)").as("users_high"))
-        .orderBy("event_type"),
-      Some(
-        """SELECT event_type,
-          |  CAST(count_if(value > 50) AS BIGINT) AS n_high,
-          |  bool_or(value > 488) AS any_extreme,
-          |  bool_and(value > 0.05) AS all_above_floor,
-          |  CAST(COUNT(DISTINCT CASE WHEN value > 50 THEN user_id END) AS BIGINT) AS users_high
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
-
-    QSpec("expr_map_ops",
-      // MAP-typed columns (§2.7 complex types): per-source token→count
-      // built with map_from_arrays(collect_list…), then probed with
-      // element_at / size / an aggregate HOF over map_values. The map is
-      // INTERNAL — the hashed output is scalars, so collect_list's
-      // nondeterministic order cannot leak (map lookups are order-blind
-      // and the value fold is a sum of longs, exact in any order). The
-      // oracle computes the same scalars straight from the token stream —
-      // any drift in Spark's map semantics (dup keys, null lookups via
-      // the coalesce) breaks the hash.
-      (s, dir) => {
-        val toks = t(s, dir, "documents")
-          .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-          .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
-        toks.groupBy("source")
-          .agg(map_from_arrays(collect_list("tok"), collect_list("cnt")).as("m"))
-          .select(col("source"),
-            coalesce(element_at(col("m"), "the"), lit(0L)).as("the_cnt"),
-            size(col("m")).as("n_distinct_toks"),
-            aggregate(map_values(col("m")), lit(0L), (a, v) => a + v).as("total_toks"))
-          .orderBy("source")
-      },
-      Some(
-        """WITH tk AS (SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents)
-          |SELECT source,
-          |  CAST(count_if(tok = 'the') AS BIGINT) AS the_cnt,
-          |  CAST(COUNT(DISTINCT tok) AS INT) AS n_distinct_toks,
-          |  CAST(COUNT(*) AS BIGINT) AS total_toks
-          |FROM tk GROUP BY source ORDER BY source""".stripMargin)))
-
-  val specs: Seq[QSpec] =
-    scanSpecs ++ aggSpecs ++ bonusSpecs ++ windowSpecs ++ scoreSpecs ++ transformSpecs ++ extSpecs
-
-  def allSpecs: Seq[QSpec] =
-    specs ++ QueriesExt.specs ++ Queries3.specs ++ Queries4.specs ++ Queries5.specs ++
-      Queries6.specs ++ Queries7.specs ++ Queries8.specs ++ Queries9.specs ++
-      Queries10.specs ++ Queries11.specs ++ Queries12.specs ++ Queries13.specs ++
-      Queries14.specs ++ Queries15.specs ++ Queries16.specs
+  def allSpecs: Seq[QSpec] = Seq(
+    AdvisorKeys.specs, RelationalKeys.specs, LayoutKeys.specs, DedupKeys.specs,
+    RetrievalKeys.specs, TextKeys.specs, MultimodalKeys.specs, StreamKeys.specs).flatten
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allSpecs.map(q => q.name -> q.fn).toMap

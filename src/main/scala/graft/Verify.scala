@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,25 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // events.ts is timestamp[ns] parquet; Spark 4 rejects NANOS unless read
-      // as epoch-nanos bigint (graft code derives timestamps from it).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // openCostInBytes keeps Spark's 4 MB default here; the many-small-
-      // files ingest fix is scoped to Multimodal.ingestSession (r14
-      // verdict #2 — session-wide 128 KB shattered regular scans' splits
-      // at high core counts; see graft.Bench for the mechanism)
-      // opt-r15: same AQE coalescing policy as graft.Bench (respect the
-      // advisory size; see Bench.scala for the measured mechanism)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "8m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_ONLY=k1,k2 restricts the dump to named

@@ -31,7 +31,7 @@ object Anomaly {
     * are never replicated through a per-group window.
     *
     * The EXACT-percentile twin lives only in the `anomaly_mad` oracle key
-    * (Queries9.scala), where the DuckDB comparison must be bit-exact;
+    * (surface.RelationalKeys), where the DuckDB comparison must be bit-exact;
     * pipelines and reports use this form.
     *
     * Returns one row per group: (groupCol, med, mad, n_outliers). */

@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
-  /** The X56 GPT-2-shape pretokenizer (see Queries13's
+  /** The X56 GPT-2-shape pretokenizer (see surface.TextKeys'
     * `pretokenize_bpe_regex` for the ASCII-explicit / lookahead-free
     * rationale) — merge training runs over the same pretoken stream the
     * fertility key counts. */
@@ -239,14 +239,14 @@ object Bpe {
   /** X65's oracle: the same training chain, then the symbol-id table and
     * the per-doc ordered fold — DuckDB's `list(… ORDER BY pos)` +
     * `list_reduce` replay the engine's sort_array + aggregate exactly, and
-    * the murmur3 shard rides [[graft.Queries.murmurCte]] (the
+    * the murmur3 shard rides [[ExactMath.murmurCte]] (the
     * shard_manifest oracle). */
   def tokenizeShardsOracleSql(nMerges: Int, nShards: Int): String = {
     val pat = pretokenPattern.replace("'", "''")
     val sep = "chr(31)"
     val sep2 = s"$sep || $sep"
     s"""${trainCtes(nMerges)},
-       |${graft.Queries.murmurCte("documents", "doc_id", 42).stripPrefix("WITH ").stripSuffix("\n")
+       |${ExactMath.murmurCte("documents", "doc_id", 42).stripPrefix("WITH ").stripSuffix("\n")
           // the murmur chain's m1..m12 stage CTEs collide with the training
           // chain's m1..m10 merge CTEs — rename just the numeric m-stages
           // (mbase/mblk/mf0../msigned are collision-free)

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * decontamination and sequential-funnel analysis. Both are declarative
   * plans; the test-time helpers exist so hand-built corpora with known
   * answers can drive them (CurationSpec) while the declared query keys run
-  * them over the fixtures with DuckDB oracle twins (Queries5).
+  * them over the fixtures with DuckDB oracle twins (`decontaminate_ngram`
+  * in surface.DedupKeys, `funnel_stages` in surface.RelationalKeys).
   */
 object Curation {
 

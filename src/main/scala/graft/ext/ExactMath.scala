@@ -59,4 +59,34 @@ object ExactMath {
     val scale = math.pow(10, places).toLong
     s"(CAST(((${2L * scale}::HUGEINT * ($a) + ($b)) // (2::HUGEINT * ($b))) AS DOUBLE) / $scale)"
   }
+
+  /** murmur3_x86_32 of a BIGINT column replayed in pure DuckDB SQL: the
+    * value's two little-endian 32-bit blocks through the standard mix
+    * (k*c1, rotl15, k*c2, h^=k, rotl13, h*5+e6546b64) and final avalanche,
+    * all mod 2^32 via HUGEINT multiplies. Seed 0 = the Iceberg spec hash
+    * (vector: 34 → 2017239379); seed 42 = Spark's `hash()` for LongType.
+    * Exposes `v` (input) and `sh` (signed int32 hash) in CTE `msigned`. */
+  private[graft] def murmurCte(table: String, colExpr: String, seed: Int): String =
+    s"""WITH mbase AS (SELECT $colExpr AS v FROM $table),
+       |mblk AS (SELECT v, v & 4294967295 AS b0, (v >> 32) & 4294967295 AS b1 FROM mbase),
+       |m1 AS (SELECT v, b1, CAST((CAST(b0 AS HUGEINT) * 3432918353) % 4294967296 AS BIGINT) AS k FROM mblk),
+       |m2 AS (SELECT v, b1, ((k << 15) | (k >> 17)) & 4294967295 AS k FROM m1),
+       |m3 AS (SELECT v, b1, CAST((CAST(k AS HUGEINT) * 461845907) % 4294967296 AS BIGINT) AS k FROM m2),
+       |m4 AS (SELECT v, b1, xor(CAST($seed AS BIGINT), k) AS h FROM m3),
+       |m5 AS (SELECT v, b1, ((h << 13) | (h >> 19)) & 4294967295 AS h FROM m4),
+       |m6 AS (SELECT v, b1, CAST((CAST(h AS HUGEINT) * 5 + 3864292196) % 4294967296 AS BIGINT) AS h FROM m5),
+       |m7 AS (SELECT v, h, CAST((CAST(b1 AS HUGEINT) * 3432918353) % 4294967296 AS BIGINT) AS k FROM m6),
+       |m8 AS (SELECT v, h, ((k << 15) | (k >> 17)) & 4294967295 AS k FROM m7),
+       |m9 AS (SELECT v, h, CAST((CAST(k AS HUGEINT) * 461845907) % 4294967296 AS BIGINT) AS k FROM m8),
+       |m10 AS (SELECT v, xor(h, k) AS h FROM m9),
+       |m11 AS (SELECT v, ((h << 13) | (h >> 19)) & 4294967295 AS h FROM m10),
+       |m12 AS (SELECT v, CAST((CAST(h AS HUGEINT) * 5 + 3864292196) % 4294967296 AS BIGINT) AS h FROM m11),
+       |mf0 AS (SELECT v, xor(h, 8) AS h FROM m12),
+       |mf1 AS (SELECT v, xor(h, h >> 16) AS h FROM mf0),
+       |mf2 AS (SELECT v, CAST((CAST(h AS HUGEINT) * 2246822507) % 4294967296 AS BIGINT) AS h FROM mf1),
+       |mf3 AS (SELECT v, xor(h, h >> 13) AS h FROM mf2),
+       |mf4 AS (SELECT v, CAST((CAST(h AS HUGEINT) * 3266489909) % 4294967296 AS BIGINT) AS h FROM mf3),
+       |mf5 AS (SELECT v, xor(h, h >> 16) AS h FROM mf4),
+       |msigned AS (SELECT v, CASE WHEN h >= 2147483648 THEN h - 4294967296 ELSE h END AS sh FROM mf5)
+       |""".stripMargin
 }

@@ -1,6 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** File-layout maintenance — the operational counterpart of the advisor's
   * partitioning recommendations (reference README.md's "better partition
@@ -14,6 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (metadata: one `FileStatus` per input file). Partitioned layouts compact
   * per partition directory so the advisor's pruning keys survive the
   * rewrite.
+  *
+  * Also the partition data-skipping tier the LayoutKeys surface declares:
+  * Bloom and zone-map partition indexes, adaptive range bounds, salt
+  * plans, z-order layout stats, index FPR, balance/staleness and
+  * workload-pruning reports ([[graft.streaming.StreamingIndex]] maintains
+  * the same indexes incrementally).
   */
 object Layout {
 
@@ -77,5 +85,415 @@ object Layout {
     val n = math.min(nL, Int.MaxValue.toLong).toInt
     src.repartition(n).write.mode("overwrite").parquet(outDir)
     spark.read.parquet(outDir)
+  }
+
+  /** Partition-level Bloom data-skipping index (X71): per month-partition
+    * of `orders`, the k-hash Bloom bit set over the join key plus a probe
+    * report (would the index admit `probeKey`? is it actually there?) —
+    * the index a lakehouse skipping layer maintains next to each
+    * partition so point/semi-join scans prune partitions before touching
+    * data. Hash family is the minhash affine family over the key VALUE
+    * (h_i = ((i·2654435761 mod P)·key + (i·40503+17 mod P)) mod P mod m,
+    * P = 1e9+7) — pure integer arithmetic, so DuckDB and python replay
+    * the exact bit positions; products stay < 2^63 for any BIGINT key in
+    * the fixture domain. Scale shape: one scan → (month, key) distinct
+    * (map-side combined), bit explode is ×k on the DISTINCT keys only,
+    * per-partition state is ≤ m bits, and the index is MERGEABLE (bitwise
+    * OR) so 1000 executors build shard blooms independently. */
+  private[graft] def bloomPartitionIndex(orders: DataFrame, mBits: Long,
+      kHashes: Int, probeKey: Long): DataFrame = {
+    val P = 1000000007L
+    def bitOf(i: Column, key: Column) =
+      ((((i * lit(2654435761L)) % P) * key + (i * lit(40503L) + 17L) % P) % P) % mBits
+    val probeBits = (1 to kHashes).map { i =>
+      ((((i * 2654435761L) % P) * probeKey + (i * 40503L + 17L) % P) % P) % mBits
+    }.distinct
+    // ONE scan, one (month, key) shuffle, one month rollup: the ×k bit
+    // explode rides the already-distinct key rows, so every per-month stat
+    // (rows via Σnr/k — each key row appears k times — distinct keys,
+    // distinct bits, probe bits, ground truth) folds in a single grouped
+    // aggregation; no join, no second scan of the fact table.
+    val keys = orders
+      .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"), col("o_custkey"))
+      .groupBy("month", "o_custkey").agg(count(lit(1)).as("nr"))
+    keys
+      .select(col("month"), col("o_custkey"), col("nr"),
+        explode(sequence(lit(1), lit(kHashes))).as("i"))
+      .select(col("month"), col("o_custkey"), col("nr"),
+        bitOf(col("i"), col("o_custkey")).as("bit"))
+      .groupBy("month").agg(
+        expr(s"sum(nr) div $kHashes").as("n_rows"),
+        countDistinct("o_custkey").as("n_keys"),
+        countDistinct("bit").as("n_set_bits"),
+        countDistinct(when(col("bit").isin(probeBits: _*), col("bit")))
+          .as("probe_hits"),
+        max(when(col("o_custkey") === probeKey, 1).otherwise(0)).as("probe_actual"))
+      .select(col("month"), col("n_rows"), col("n_keys"), col("n_set_bits"),
+        graft.ext.ExactMath.ratioRounded(col("n_set_bits"), lit(mBits), 6).as("fill"),
+        (col("probe_hits") === probeBits.size).cast("int").as("probe_maybe"),
+        col("probe_actual").cast("int").as("probe_actual"))
+      .orderBy("month")
+  }
+
+  /** Partition zone-map (min/max) skipping index (X73): the OTHER index a
+    * lakehouse skipping layer maintains beside X71's Bloom — per
+    * month-partition of `orders`, the [min, max] envelope of a measure
+    * column plus a range-probe report: would the zone map admit the scan
+    * (`probe_maybe` = envelope overlaps [lo, hi]) and does the partition
+    * actually hold a qualifying row (`probe_actual`)? The gap between the
+    * two IS the zone map's false-positive behavior, surfaced honestly.
+    * One scan, one map-side-combined month rollup, ≤ one row of state per
+    * partition, mergeable (min/max fold), no join, no second scan. */
+  private[graft] def zonemapPartitionIndex(orders: DataFrame, valueCol: String,
+      lo: Double, hi: Double): DataFrame =
+    orders
+      .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
+        col(valueCol).as("v"))
+      .groupBy("month").agg(
+        count(lit(1)).as("n_rows"),
+        min("v").as("min_val"),
+        max("v").as("max_val"),
+        max(when(col("v").between(lo, hi), 1).otherwise(0)).as("probe_actual"))
+      .select(col("month"), col("n_rows"), col("min_val"), col("max_val"),
+        (!(col("max_val") < lo || col("min_val") > hi)).cast("int")
+          .as("probe_maybe"),
+        col("probe_actual").cast("int"))
+      .orderBy("month")
+
+  /** Adaptive range-partition boundaries (X74): the balanced range layout
+    * the reference's whole advisory loop exists to recommend — given a
+    * target of `nBuckets` range partitions over a join/sort key, emit per
+    * bucket its key interval [lo_key, hi_key], distinct-key count, and row
+    * count, where a key's bucket is `floor(startOffset · B / N)` over the
+    * key-ordered cumulative row count (exact integer arithmetic; a hot key
+    * spanning several bucket widths lands whole in the bucket its offset
+    * starts in, so buckets absorb skew instead of splitting a key).
+    *
+    * Scale shape — the global weighted cumsum is decomposed two-level so
+    * NO single-partition window ever sees the key domain: keys group by a
+    * coarse prefix (`key div groupWidth`); per-group subtotals (a frame
+    * `distinctKeys/groupWidth` small) take the only global window; the
+    * per-key cumsum runs partitionBy(group) — each window partition is ≤
+    * groupWidth keys — and the group offsets broadcast back. The DuckDB
+    * oracle computes the SAME boundaries with one naive global cumsum,
+    * certifying the decomposition exact. */
+  /** The X74 bounds arithmetic over an ALREADY-materialized (k, nr)
+    * histogram (callers pass a [[Dedup.truncate]]d frame so the offsets
+    * branch, the per-key cumsum, and the total all ride one computation).
+    * Factored out (opt-r15) so [[partitionBalanceReport]] can feed the
+    * base-epoch histogram from its single dual-count fact scan instead of
+    * scanning the fact table a second time. */
+  private[graft] def boundsFromHistogram(histKNr: DataFrame, nBuckets: Int,
+      groupWidth: Long): DataFrame = {
+    val perKey = histKNr
+      .withColumn("grp", graft.ext.ExactMath.intDiv(col("k"), lit(groupWidth)))
+    val grpOffsets = perKey.groupBy("grp").agg(sum("nr").as("gnr"))
+      .withColumn("goff", coalesce(sum("gnr").over(
+        Window.orderBy("grp").rowsBetween(Window.unboundedPreceding, -1)),
+        lit(0L)))
+    // opt-r15: the total rides a broadcast scalar column instead of a
+    // driver .first() — one fewer action (and driver round-trip) per
+    // invocation; same exact-integer bucket arithmetic.
+    val total = perKey.agg(sum("nr").as("tot"))
+    perKey
+      .withColumn("woff", coalesce(sum("nr").over(
+        Window.partitionBy("grp").orderBy("k")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .join(broadcast(grpOffsets.select("grp", "goff")), Seq("grp"))
+      .crossJoin(broadcast(total))
+      .withColumn("bucket", graft.ext.ExactMath.intDiv(
+        (col("goff") + col("woff")) * nBuckets, col("tot")))
+      .groupBy("bucket").agg(
+        min("k").as("lo_key"), max("k").as("hi_key"),
+        count(lit(1)).as("n_keys"), sum("nr").as("n_rows"))
+      .orderBy("bucket")
+  }
+
+  private[graft] def rangePartitionBounds(orders: DataFrame, keyCol: String,
+      nBuckets: Int, groupWidth: Long): DataFrame =
+    // The distinct-key histogram is materialized ONCE ([[Dedup.truncate]]:
+    // localCheckpoint on local[n], reliable checkpoint under a checkpoint
+    // dir) — the offsets branch, the per-key cumsum, and the total all ride
+    // it, so the fact table is scanned exactly once however large it is.
+    boundsFromHistogram(
+      Dedup.truncate(orders.groupBy(col(keyCol).as("k"))
+        .agg(count(lit(1)).as("nr"))),
+      nBuckets, groupWidth)
+
+  /** Skew salting plan (X75): the per-key salt-factor head a skew-aware
+    * join planner consumes — the `nBuckets`-relative weight of the top
+    * `topN` heaviest keys (count desc, key asc ties), salt_factor =
+    * ceil(n_rows · nBuckets / total) clamped to ≥ 1: replicate-broadcast
+    * the other side by this factor (or split the key across this many
+    * salted sub-keys) and the hot key's partition work falls back under
+    * the uniform-bucket envelope. One map-side-combined groupBy, a top-N
+    * head (TakeOrdered-sized driver result), and a broadcast scalar total;
+    * nothing else leaves the executors. */
+  private[graft] def saltPlanTopK(events: DataFrame, nBuckets: Int,
+      topN: Int): DataFrame = {
+    // opt-r15: the former `events.count()` was a SECOND full fact scan
+    // (plus a driver action) run at query-construction time; Σ of the
+    // per-key counts IS the row total (count(lit(1)) counts every row,
+    // null keys included), so derive it from the histogram instead and
+    // ride it in as a broadcast scalar column. The histogram is
+    // checkpointed ([[Dedup.truncate]], the X74 discipline) because BOTH
+    // the top-N head and the total read it — one fact scan total, same
+    // exact integer arithmetic.
+    val perKey = Dedup.truncate(
+      events.groupBy(col("user_id")).agg(count(lit(1)).as("n_rows")))
+    val total = perKey.agg(sum("n_rows").as("tot"))
+    perKey
+      .orderBy(col("n_rows").desc, col("user_id").asc)
+      .limit(topN)
+      .crossJoin(broadcast(total))
+      .select(col("user_id"), col("n_rows"),
+        graft.ext.ExactMath.ratioRounded(col("n_rows"), col("tot"), 6)
+          .as("share"),
+        greatest(lit(1L), graft.ext.ExactMath.intDiv(
+          col("n_rows") * nBuckets + col("tot") - 1L, col("tot")))
+          .as("salt_factor"))
+      .orderBy(col("n_rows").desc, col("user_id").asc)
+  }
+
+  /** Z-order clustering layout report (X76): the multi-dimensional
+    * data-skipping layout the single-column tier (X71/X73/X74) can't
+    * reach — interleave the bits of two bucketed dimensions (customer key
+    * scaled to 8 bits against its max; order-month ordinal scaled to 8
+    * bits against `nMonths`) into a 16-bit Morton code, cut the code
+    * space into `nBlocks` equal ranges (value-based, so NO global sort is
+    * needed to assign blocks), and emit each block's [lo,hi] envelope in
+    * BOTH dimensions beside the same report for the naive date-sorted
+    * layout. Read the two side by side: the z-order blocks are tight in
+    * both dimensions (a predicate on EITHER column skips blocks) while
+    * the linear layout is tight only in the sort dimension — the measured
+    * argument for OPTIMIZE ZORDER over single-column clustering. All
+    * arithmetic is integer (bit shifts + exact scaled division), so
+    * DuckDB and python replay every code and envelope bit-exactly; the
+    * only non-grouped action is the max-key scalar (metadata-sized). */
+  private[graft] def zorderLayoutStats(orders: DataFrame, baseYear: Int,
+      nMonths: Int, nBlocks: Int): DataFrame = {
+    // opt-r15: the max-key scalar rides a broadcast column instead of a
+    // driver .first() — one fewer action per invocation; the broadcast
+    // subtree is the same column-pruned max aggregation.
+    val maxKey1 = orders.agg((max("o_custkey") + 1L).as("mk1"))
+    val dord = (year(col("o_orderdate")) - baseYear) * 12 +
+      month(col("o_orderdate")) - 1
+    val dims = orders.crossJoin(broadcast(maxKey1)).select(
+      graft.ext.ExactMath.intDiv(col("o_custkey") * 256L, col("mk1"))
+        .as("cx"),
+      graft.ext.ExactMath.intDiv(dord.cast("long") * 256L, lit(nMonths.toLong))
+        .as("dx"))
+    val z = (0 until 8).map { i =>
+      shiftleft(shiftright(col("cx"), i) bitwiseAND 1L, 2 * i + 1) +
+        shiftleft(shiftright(col("dx"), i) bitwiseAND 1L, 2 * i)
+    }.reduce(_ + _)
+    // opt-r15: ONE scan + ONE fact-sized aggregation for both layout
+    // reports. The former unionAll of two groupBys referenced `dims`
+    // twice, so the fact scan (and the dimension-scaling arithmetic) ran
+    // once per layout. Count/min/max compose associatively, so aggregate
+    // the fact ONCE to the (zorder block, linear block) CELL grid — ≤
+    // nBlocks² rows, map-side combined — and fold each layout's report
+    // from the cells (two metadata-sized aggregations). Row-identical
+    // output, fact scans 2 → 1, and the per-row work is one grouped
+    // aggregation instead of two (plans/r15/zorder_layout_before/
+    // _after.txt). At 100 TB the second full fact pass disappears.
+    // The 2-element layout explode rides the CELL frame (≤ nBlocks² rows
+    // — free), not the fact, so the fact-sized aggregation subtree is
+    // referenced exactly once: no persist, no checkpoint, no double pass.
+    // (Two rejected variants, both measured: explode-on-the-fact doubled
+    // the rows through the aggregation, +0.15 s; an eager cell checkpoint
+    // cost a materialization job that outweighed the saved 2.7 MB fixture
+    // scan, +0.25 s.)
+    val cells = dims
+      .groupBy(
+        graft.ext.ExactMath.intDiv(z, lit(65536L / nBlocks)).as("zb"),
+        graft.ext.ExactMath.intDiv(col("dx") * nBlocks, lit(256L)).as("lb"))
+      .agg(count(lit(1)).as("c"),
+        min("cx").as("cxl"), max("cx").as("cxh"),
+        min("dx").as("dxl"), max("dx").as("dxh"))
+    cells
+      .select(explode(array(
+          struct(lit("zorder").as("layout"), col("zb").as("block")),
+          struct(lit("linear").as("layout"), col("lb").as("block")))).as("t"),
+        col("c"), col("cxl"), col("cxh"), col("dxl"), col("dxh"))
+      .groupBy(col("t.layout").as("layout"), col("t.block").as("block"))
+      .agg(
+        sum("c").as("n_rows"),
+        min("cxl").as("cx_lo"), max("cxh").as("cx_hi"),
+        min("dxl").as("dx_lo"), max("dxh").as("dx_hi"))
+      .select(col("layout"), col("block"), col("n_rows"),
+        col("cx_lo"), col("cx_hi"), col("dx_lo"), col("dx_hi"),
+        ((col("cx_hi") - col("cx_lo") + 1L) * (col("dx_hi") - col("dx_lo") + 1L))
+          .as("envelope_area"))
+      .orderBy("layout", "block")
+  }
+
+  /** Bloom-index false-positive-rate measurement (X77): the quality dial
+    * an operator watches AFTER deploying X71's index — probe every month
+    * partition with 100 keys KNOWN to the corpus (the 100 smallest
+    * distinct custkeys) and 100 keys known ABSENT (maxKey+1..maxKey+100),
+    * count pairs the index admits vs pairs that actually hold the key,
+    * and report the observed FPR per probe class (false admissions over
+    * negative pairs). The absent class measures pure hash-collision FPR
+    * at the index's realized fill; the present class shows admissions
+    * dominated by true hits plus cross-month collisions. Scale shape:
+    * ONE scan of the fact feeds a checkpointed distinct (month, key)
+    * frame; everything downstream (bit frames, probe cross, hit counts)
+    * is months × 200 probes — metadata-sized however large the fact is;
+    * probes broadcast into every join. */
+  private[graft] def bloomIndexFpr(orders: DataFrame, mBits: Long,
+      kHashes: Int, nProbes: Int): DataFrame = {
+    val P = 1000000007L
+    def bitOf(i: Column, key: Column) =
+      ((((i * lit(2654435761L)) % P) * key + (i * lit(40503L) + 17L) % P) % P) % mBits
+    val mk = Dedup.truncate(orders.select(
+      date_format(col("o_orderdate"), "yyyy-MM").as("month"),
+      col("o_custkey").as("k")).distinct())
+    val maxKey = mk.agg(max("k")).first().getLong(0)
+    val present = mk.select("k").distinct().orderBy("k").limit(nProbes)
+      .withColumn("probe_class", lit("present"))
+    val absent = mk.sparkSession.range(1, nProbes + 1)
+      .select((lit(maxKey) + col("id")).as("k"),
+        lit("absent").as("probe_class"))
+    val probes = present.unionAll(absent)
+    val probeBits = probes
+      .select(col("k"), col("probe_class"),
+        explode(sequence(lit(1), lit(kHashes))).as("i"))
+      .select(col("k"), col("probe_class"), bitOf(col("i"), col("k")).as("bit"))
+      .distinct()
+    val probeN = probeBits.groupBy("k", "probe_class")
+      .agg(count(lit(1)).as("nb"))
+    // opt-r15: NO distinct before the probe join. The former
+    // `.distinct()` shuffled the full keys×k bit explode just to dedup
+    // (month, bit) pairs, but the only consumer is `hits`, whose
+    // countDistinct("bit") dedups anyway — so the broadcast probe join
+    // (≤ nProbes·k bit values, ~2% selectivity at m=16384) filters the
+    // explode FIRST and the distinct work happens on the survivors. At
+    // 100 TB this deletes the largest exchange of the plan (fact-keys×k
+    // rows); row-identical output by countDistinct idempotence.
+    val monthBits = mk
+      .select(col("month"), explode(sequence(lit(1), lit(kHashes))).as("i"),
+        col("k"))
+      .select(col("month"), bitOf(col("i"), col("k")).as("bit"))
+    val hits = monthBits.join(broadcast(probeBits), Seq("bit"))
+      .groupBy("month", "k").agg(countDistinct("bit").as("nh"))
+    val pairs = mk.select("month").distinct()
+      .crossJoin(broadcast(probeN))
+    pairs
+      .join(hits, Seq("month", "k"), "left")
+      .join(mk.withColumn("act", lit(1)), Seq("month", "k"), "left")
+      .select(col("probe_class"),
+        (coalesce(col("nh"), lit(0L)) === col("nb")).cast("int").as("adm"),
+        coalesce(col("act"), lit(0)).as("act"))
+      .groupBy("probe_class").agg(
+        count(lit(1)).as("n_pairs"),
+        sum("adm").as("n_admitted"),
+        sum("act").cast("long").as("n_actual"),
+        sum(when(col("adm") === 1 && col("act") === 0, 1L).otherwise(0L))
+          .as("n_false_pos"))
+      .select(col("probe_class"), col("n_pairs"), col("n_admitted"),
+        col("n_actual"), col("n_false_pos"),
+        graft.ext.ExactMath.ratioRounded(col("n_false_pos"),
+          col("n_pairs") - col("n_actual"), 6).as("fpr"))
+      .orderBy("probe_class")
+  }
+
+  /** Range-layout balance / staleness report (X79): the ADAPTIVE half of
+    * adaptive partitioning — X74 computes balanced bounds from the data a
+    * layout was built on; this report re-evaluates those FROZEN bounds
+    * against the data as it stands now and says whether the layout went
+    * stale. Bounds come from the base epoch (orders before `baseCutoff`,
+    * through [[rangePartitionBounds]] unchanged); every current key is
+    * assigned by the step function "greatest lo_key ≤ key" (keys below
+    * the first bound fall to bucket 0); per bucket the report emits
+    * key/row counts, corpus share, load_ratio = share·B (1.0 = perfectly
+    * balanced) and the rebalance flag at rounded load_ratio ≥ 1.5 — the
+    * signal an adaptive layout manager acts on by re-running X74. Scale
+    * shape: the bounds frame is ≤ B rows and BROADCASTS into the
+    * assignment join; the current-key histogram is checkpointed once (the
+    * X74 discipline) and feeds both the assignment and the total; nothing
+    * data-proportional crosses the driver. */
+  private[graft] def partitionBalanceReport(orders: DataFrame,
+      baseCutoff: String, keyCol: String, nBuckets: Int,
+      groupWidth: Long): DataFrame = {
+    // opt-r15: ONE fact scan + ONE checkpoint serve BOTH histograms. The
+    // former shape ran rangePartitionBounds on the filtered fact (scan +
+    // checkpoint #1) and built the current-epoch histogram from a second
+    // full scan (+ checkpoint #2); the base-epoch per-key counts are just
+    // a conditional count in the same grouped aggregation, and keys absent
+    // before the cutoff drop out via nr_base > 0 — row-identical to the
+    // filtered groupBy (plan evidence: plans/r15/partition_balance_report
+    // _before/_after.txt, 2 fact scans → 1).
+    val hist = Dedup.truncate(orders.groupBy(col(keyCol).as("k"))
+      .agg(count(lit(1)).as("nr"),
+        count(when(col("o_orderdate") < lit(baseCutoff).cast("timestamp"), 1))
+          .as("nr_base")))
+    val bounds = boundsFromHistogram(
+      hist.where(col("nr_base") > 0).select(col("k"), col("nr_base").as("nr")),
+      nBuckets, groupWidth).select("bucket", "lo_key")
+    val perKey = hist.select("k", "nr")
+    // opt-r15: total as a broadcast scalar column (one fewer driver
+    // action; the agg reads the checkpoint, not the fact)
+    val total = perKey.agg(sum("nr").as("tot"))
+    perKey
+      .join(broadcast(bounds), col("k") >= col("lo_key"), "left")
+      .groupBy("k", "nr").agg(coalesce(max("bucket"), lit(0L)).as("bucket"))
+      .groupBy("bucket").agg(
+        count(lit(1)).as("n_keys"), sum("nr").as("n_rows"))
+      .crossJoin(broadcast(total))
+      .select(col("bucket"), col("n_keys"), col("n_rows"),
+        graft.ext.ExactMath.ratioRounded(col("n_rows"), col("tot"), 6)
+          .as("share"),
+        graft.ext.ExactMath.ratioRounded(col("n_rows") * nBuckets, col("tot"), 6)
+          .as("load_ratio"))
+      .withColumn("rebalance", (col("load_ratio") >= 1.5).cast("int"))
+      .orderBy("bucket")
+  }
+
+  /** Workload pruning simulation (X80): the reference's whole advisory
+    * loop asks "would this partition layout help THIS workload?" — this
+    * key answers it measurably. Every logged query (the §1 query-log
+    * derivation) is screened against the month layout + X73 zone maps:
+    * a recognized `o_orderdate >= DATE 'd'` predicate prunes months below
+    * d's month (partition pruning); a recognized `o_totalprice > p`
+    * predicate prunes months whose zone-map max ≤ p; queries not touching
+    * `orders` or carrying no recognized predicate are reported
+    * `supported = 0` with zero pruning — the simulator is honest about
+    * its predicate coverage, never optimistic. Output per distinct
+    * workload query: run count, support flag, partition/pruned counts,
+    * prune_frac (ratioRounded). Scale shape: the workload rollup is
+    * O(distinct queries), the partition stats are one fact scan →
+    * month rollup (≤ one row per partition), and the simulation is a
+    * broadcast cross of two metadata-sized frames — nothing
+    * data-proportional moves for ANY log or fact size. */
+  private[graft] def workloadPruningSim(qlog: DataFrame,
+      orders: DataFrame): DataFrame = {
+    val datePat = "o_orderdate >= DATE '([0-9-]+)'"
+    val pricePat = "o_totalprice > ([0-9.]+)"
+    val wl = qlog.groupBy("query").agg(count(lit(1)).as("n_runs"))
+      .withColumn("date_lit", regexp_extract(col("query"), datePat, 1))
+      .withColumn("price_lit", regexp_extract(col("query"), pricePat, 1))
+      .withColumn("on_orders", col("query").contains("FROM orders"))
+      .withColumn("supported", (col("on_orders") &&
+        (col("date_lit") =!= "" || col("price_lit") =!= "")).cast("int"))
+    val parts = orders
+      .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
+        col("o_totalprice"))
+      .groupBy("month").agg(max("o_totalprice").as("max_price"))
+    parts.crossJoin(broadcast(wl))
+      .withColumn("pruned", when(col("supported") === 1 &&
+        ((col("date_lit") =!= "" &&
+          col("month") < substring(col("date_lit"), 1, 7)) ||
+         (col("price_lit") =!= "" &&
+          col("max_price") <= col("price_lit").cast("double"))), 1L)
+        .otherwise(0L))
+      .groupBy("query", "n_runs", "supported").agg(
+        count(lit(1)).as("n_partitions"),
+        sum("pruned").as("n_pruned"))
+      .select(col("query"), col("n_runs"), col("supported"),
+        col("n_partitions"), col("n_pruned"),
+        graft.ext.ExactMath.ratioRounded(col("n_pruned"), col("n_partitions"), 6)
+          .as("prune_frac"))
+      .orderBy("query")
   }
 }

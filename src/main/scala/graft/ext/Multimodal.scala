@@ -468,7 +468,7 @@ object Multimodal {
     * and sample sum, and the hash compare would catch it.
     *
     * Generation is a one-time per-fixture-dir side artifact (same contract
-    * as the bucketed-table layout in Queries5): files are written from
+    * as the bucketed-table layout in surface.LayoutKeys): files are written from
     * executors via `foreachPartition` into a staging dir, then atomically
     * renamed into place — a crashed half-write is invisible. Local-FS file
     * IO is fine here because fixtures are test scaffolding; a cluster

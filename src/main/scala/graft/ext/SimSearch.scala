@@ -329,7 +329,7 @@ object SimSearch {
     * re-creates O(n²) inside it however well k scales. The default sits
     * 16× above the expected size, so it never engages on honestly
     * clustered data (every driver fixture + sf1/skew stress measured well
-    * under it — see Queries11's key notes) and the declared key's output
+    * under it — see surface.DedupKeys' dedup_semantic notes) and the declared key's output
     * — and its DuckDB oracle — are byte-identical to the uncapped form
     * there. When it DOES engage, pairing within (cluster, sub) is the
     * documented SemDeDup cap approximation: at most ⌈size/cap⌉ − 1 extra

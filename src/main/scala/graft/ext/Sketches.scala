@@ -146,7 +146,7 @@ object Sketches {
     * "maybe seen" iff ALL its k positions are set. No false negatives, so
     * flagged ⊇ true dups; the per-source false-positive count is the price
     * of replacing a corpus-sized anti-join with an O(m) broadcast bit-set
-    * — the at-scale front door to [[graft.Queries6]]'s dedup_incremental.
+    * — the at-scale front door to [[graft.surface.DedupKeys]]' dedup_incremental.
     * Returns (source, n_new, n_flagged, n_dup, n_false_pos). */
   def bloomPrefilter(docs: DataFrame, histPred: Column, newPred: Column,
       headTokens: Int = 8, k: Int = 3, m: Int = 4096): DataFrame = {

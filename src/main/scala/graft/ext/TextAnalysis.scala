@@ -368,4 +368,35 @@ object TextAnalysis {
       (t, i) => (length(t).cast("long") * i.cast("long")) % 1000003L),
       lit(0L), (acc, x) => (acc + x) % 1000003L)
   }
+
+  /** ASCII-explicit PII patterns (the X50 range discipline: explicit
+    * classes, no lookahead, no \d/\w/\b property classes — Java regex, RE2
+    * and python re run these identically). Phone is the hyphenated
+    * NNN-NNN-NNNN shape on purpose: an un-anchored all-digits pattern
+    * would be locale guesswork, and the explicit shape keeps every
+    * engine's leftmost-greedy scan byte-identical. */
+  private[graft] val emailPat = """[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"""
+  private[graft] val ipv4Pat = """[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"""
+  private[graft] val phonePat = """[0-9]{3}-[0-9]{3}-[0-9]{4}"""
+
+  /** The X62 redaction chain, exposed for the planted-PII spec: SEQUENTIAL
+    * passes (email → IPv4 → phone), each counting on ITS OWN input — so an
+    * IPv4 inside an already-redacted email domain is counted zero times,
+    * deterministically, on every engine (the count-then-replace order is
+    * part of the declared semantics, not an implementation detail). One
+    * scan, per-row regex work only — no shuffle, no join; ORDER BY is the
+    * declared key's, not the operator's. */
+  private[graft] def piiRedact(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("n_email",
+        size(regexp_extract_all(col("text"), lit(emailPat), lit(0))).cast("long"))
+      .withColumn("t1", regexp_replace(col("text"), emailPat, "<EMAIL>"))
+      .withColumn("n_ipv4",
+        size(regexp_extract_all(col("t1"), lit(ipv4Pat), lit(0))).cast("long"))
+      .withColumn("t2", regexp_replace(col("t1"), ipv4Pat, "<IP>"))
+      .withColumn("n_phone",
+        size(regexp_extract_all(col("t2"), lit(phonePat), lit(0))).cast("long"))
+      .withColumn("redacted_text", regexp_replace(col("t2"), phonePat, "<PHONE>"))
+      .select(col("doc_id"), col("source"), col("n_email"), col("n_ipv4"),
+        col("n_phone"), col("redacted_text"))
 }

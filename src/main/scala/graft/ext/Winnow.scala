@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Winnowing fingerprint selection (Schleimer, Wilkerson, Aiken, SIGMOD
   * 2003) — the shared core of the `fingerprint_winnowing` key (X55) and
-  * its randomized PropertySpec guarantee check. See Queries13.scala for
+  * its randomized PropertySpec guarantee check. See surface.DedupKeys for
   * the operator-level contract and scale commentary.
   */
 object Winnow {
@@ -47,7 +47,7 @@ object Winnow {
 
   /** Fingerprint-verified maximal shared token runs — the operator-level
     * core of `winnow_match_spans` (X57) and `dedup_span_removal` (X58);
-    * see Queries13.scala for the full contract and scale commentary.
+    * see surface.DedupKeys for the full contract and scale commentary.
     * Returns one row (a_id, b_id, a_start, b_start, run_tokens) per
     * maximal shared run of ≥ `minRun` tokens between docs sharing a
     * winnowed fingerprint with document frequency in [2, dfCap], with

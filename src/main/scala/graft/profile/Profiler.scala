@@ -80,7 +80,7 @@ object Profiler {
     // the fixtures reaches 6.4% at the default), and the cardinality bands
     // (10/100/1k/10k) misband within ~rsd of a boundary — 0.02 costs ~4 KB
     // of sketch state per column and keeps banding errors to the boundary's
-    // immediate neighborhood. (Queries.agg_approx_distinct runs its sketch
+    // immediate neighborhood. (the agg_approx_distinct key runs its sketch
     // even tighter, rsd 0.01, because its within-5% band is HASH-asserted;
     // here 0.02 suffices for banding and halves the per-column state.)
     def card(c: String): Column =
@@ -92,7 +92,7 @@ object Profiler {
     // update pay the expand factor — measured 25× slower at sf0.1. Exact
     // percentiles keep the verification path deterministic (the reference
     // used approx_percentile — the approx twin is exposed via
-    // percentile_approx in Queries.agg_percentile).
+    // percentile_approx in the agg_percentile key).
     val plainAggs = scala.collection.mutable.ArrayBuffer[Column](count(lit(1)).as("_total"))
     fields.foreach { f =>
       val c = f.name

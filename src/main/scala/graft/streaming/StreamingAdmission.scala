@@ -53,15 +53,15 @@ object StreamingAdmission {
       TextAnalysis.gopherRules(col("text"), col("n_chars"))
     docs
       .withColumn("n_email", size(regexp_extract_all(col("text"),
-        lit(graft.Queries14.emailPat), lit(0))).cast("long"))
+        lit(TextAnalysis.emailPat), lit(0))).cast("long"))
       .withColumn("t1",
-        regexp_replace(col("text"), graft.Queries14.emailPat, "<EMAIL>"))
+        regexp_replace(col("text"), TextAnalysis.emailPat, "<EMAIL>"))
       .withColumn("n_ipv4", size(regexp_extract_all(col("t1"),
-        lit(graft.Queries14.ipv4Pat), lit(0))).cast("long"))
+        lit(TextAnalysis.ipv4Pat), lit(0))).cast("long"))
       .withColumn("t2",
-        regexp_replace(col("t1"), graft.Queries14.ipv4Pat, "<IP>"))
+        regexp_replace(col("t1"), TextAnalysis.ipv4Pat, "<IP>"))
       .withColumn("n_phone", size(regexp_extract_all(col("t2"),
-        lit(graft.Queries14.phonePat), lit(0))).cast("long"))
+        lit(TextAnalysis.phonePat), lit(0))).cast("long"))
       .withColumn("n_red", col("n_email") + col("n_ipv4") + col("n_phone"))
       .withColumn("q_pass", rLen && rWord && rStop && rRep)
       .select(col("source"), col("n_red"), col("q_pass"),

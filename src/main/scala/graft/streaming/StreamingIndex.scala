@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * folds each arriving micro-batch into per-partition index state:
   * row count, the [min, max] zone-map envelope of the measure column, and
   * the Bloom bit set over the join key (the EXACT affine-family bits the
-  * batch key emits, [[bitsOfKey]] = Queries16.bloomPartitionIndex's
+  * batch key emits, [[bitsOfKey]] = Layout.bloomPartitionIndex's
   * family, so the streamed index and the batch-built index can never
   * disagree on a bit).
   *
@@ -44,7 +44,7 @@ object StreamingIndex {
   private val P = 1000000007L
 
   /** The k Bloom bit positions of a key — MUST stay bit-identical to
-    * Queries16.bloomPartitionIndex's column-level family (same affine
+    * Layout.bloomPartitionIndex's column-level family (same affine
     * constants, same mod order); the streamed and batch-built indexes are
     * interchangeable only because of this. */
   def bitsOfKey(key: Long, mBits: Long, kHashes: Int): Set[Long] =

@@ -231,7 +231,7 @@ object StreamingUsage {
     * evict stream-stream join state (unbounded otherwise; the 100 TB
     * posture is exactly this: state ∝ rate × horizon, not stream length).
     * Emits raw pairs; the per-user summary (and the DuckDB oracle) lives in
-    * the batch twin `event_pair_join` in Queries4. Input: two streams each
+    * the batch twin `event_pair_join` in surface.StreamKeys. Input: two streams each
     * with (user_id long, ts long epoch-nanos). */
   def pairJoinStream(clicks: DataFrame, purchases: DataFrame,
       windowMinutes: Int): DataFrame = {

@@ -1,0 +1,481 @@
+package graft
+package surface
+
+import graft.catalog.TableRegistry
+import graft.ext.{ExactMath, Layout}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** Storage layout and data-skipping indexes: report sinks and partitioned
+  * writes, small-file compaction, the bucketed co-located join, z-order
+  * and shard planning, and the partition index tier built in
+  * [[graft.ext.Layout]] (Bloom and zone-map indexes, adaptive range
+  * bounds, salt plans, z-order layout stats, index FPR, balance and
+  * workload-pruning reports).
+  */
+object LayoutKeys {
+
+  private def tmpOut(tag: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${java.util.UUID.randomUUID}"
+
+  /** The (session, fixture dir) whose bucketed-join tables are currently
+    * materialized — guards the one-time layout write in
+    * `join_bucketed_colocated` (single-slot: switching dirs rewrites). */
+  private val bucketedJoinDir =
+    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String)]()
+
+  val specs: Seq[QSpec] = Seq(
+
+    QSpec("sink_csv",
+      // S9 + S11: write the report artifact as CSV, read it back (schema
+      // preserved explicitly — the dashboard contract), return the round trip.
+      (s, dir) => {
+        val agg = t(s, dir, "orders").groupBy("o_orderpriority")
+          .agg(count(lit(1)).as("cnt"),
+            round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2).as("total_price"))
+        val out = tmpOut("sink_csv")
+        agg.coalesce(1).write.mode("overwrite").option("header", "true").csv(out)
+        s.read.option("header", "true").schema(agg.schema).csv(out)
+          .orderBy("o_orderpriority")
+      },
+      Some(
+        """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS cnt,
+          |  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price
+          |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+
+    QSpec("sink_json",
+      // S10 + S11: line-delimited JSON artifact round trip.
+      (s, dir) => {
+        val agg = t(s, dir, "customer").groupBy("c_mktsegment")
+          .agg(count(lit(1)).as("cnt"),
+            round(sum(col("c_acctbal").cast("decimal(18,2)")).cast("double"), 2).as("total_bal"))
+        val out = tmpOut("sink_json")
+        agg.coalesce(1).write.mode("overwrite").json(out)
+        s.read.schema(agg.schema).json(out).orderBy("c_mktsegment")
+      },
+      Some(
+        """SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS cnt,
+          |  ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_bal
+          |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+
+    QSpec("sink_orc",
+      // S9/S11 family widened to a second columnar format: ORC artifact
+      // round trip (spark-avro isn't on the offline classpath; ORC is
+      // built into Spark SQL). Same write→read→compare contract as the
+      // CSV/JSON sinks.
+      (s, dir) => {
+        val agg = t(s, dir, "part").groupBy("p_brand")
+          .agg(count(lit(1)).as("cnt"),
+            round(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double"), 2).as("total_price"))
+        val out = tmpOut("sink_orc")
+        agg.coalesce(1).write.mode("overwrite").orc(out)
+        s.read.schema(agg.schema).orc(out).orderBy("p_brand")
+      },
+      Some(
+        """SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS cnt,
+          |  ROUND(CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price
+          |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin)),
+
+    QSpec("layout_compact",
+      // small-file compaction round trip: fragment the supplier table into
+      // 64 files, compact to ~1 MiB targets, and return the data — the
+      // oracle proves compaction is layout-only (row multiset identical to
+      // the source table); CompactionSpec asserts the file-count collapse.
+      (s, dir) => {
+        val frag = tmpOut("layout_frag")
+        t(s, dir, "supplier").repartition(64).write.mode("overwrite").parquet(frag)
+        val out = tmpOut("layout_compact")
+        graft.ext.Layout.compact(s, frag, out, targetBytes = 1L << 20)
+          .orderBy("s_suppkey")
+      },
+      Some("SELECT * FROM supplier ORDER BY s_suppkey")),
+
+    QSpec("write_partitioned",
+      // T5: materialize the advisor's recommendation — partitioned write by
+      // month(l_shipdate), then read back through partition discovery.
+      (s, dir) => {
+        val out = tmpOut("write_part")
+        // repartition by the partition column first: one file per partition
+        // instead of (tasks × partitions) small files — the file-count
+        // discipline that matters at 1000-executor scale.
+        // opt-r15: EXPLICIT partition count. A bare repartition(col) is an
+        // AQE-coalescible shuffle, and with advisory-size coalescing
+        // (Bench opt-r15) the write stage collapsed to 1-2 tasks — the
+        // whole fact written by one thread (measured +1.7 s at sf0.1; the
+        // same single-writer cliff a cluster would hit). Pinning the count
+        // to the session's shuffle parallelism keeps the writers parallel
+        // and the per-month file layout identical (partitionBy splits by
+        // value either way).
+        t(s, dir, "lineitem")
+          .withColumn("ship_month", date_trunc("month", col("l_shipdate")).cast("date"))
+          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
+            col("ship_month"))
+          .write.mode("overwrite").partitionBy("ship_month").parquet(out)
+        s.read.parquet(out)
+          .groupBy("ship_month")
+          .agg(count(lit(1)).as("cnt"),
+            round(sum(col("l_quantity").cast("decimal(18,2)")).cast("double"), 2).as("sum_qty"))
+          .orderBy("ship_month")
+      },
+      Some(
+        """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS ship_month,
+          |  CAST(COUNT(*) AS BIGINT) AS cnt,
+          |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty
+          |FROM lineitem GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+
+    QSpec("transform_zorder",
+      // Z-order (Morton) interleave of two 16-bit key spaces — the
+      // within-file layout key that makes min/max data skipping work on BOTH
+      // columns (the advisor's partitioning recommendations compose with
+      // this as the intra-partition sort). Bit-spread via the classic
+      // magic-mask ladder — identical shift/and/or trees on both engines, no
+      // UDF. Emits the top-20 rows by z-value; at scale the same column
+      // feeds repartitionByRange(zval) + sortWithinPartitions(zval).
+      (s, dir) => {
+        def spread(c: Column): Column = {
+          // 16-bit value → even bit positions of a 32-bit word
+          val s1 = (c.bitwiseOR(shiftleft(c, 8))).bitwiseAND(lit(0x00FF00FFL))
+          val s2 = (s1.bitwiseOR(shiftleft(s1, 4))).bitwiseAND(lit(0x0F0F0F0FL))
+          val s3 = (s2.bitwiseOR(shiftleft(s2, 2))).bitwiseAND(lit(0x33333333L))
+          (s3.bitwiseOR(shiftleft(s3, 1))).bitwiseAND(lit(0x55555555L))
+        }
+        val x = pmod(col("l_partkey"), lit(65536L))
+        val y = pmod(col("l_suppkey"), lit(65536L))
+        t(s, dir, "lineitem")
+          .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
+            (spread(x).bitwiseOR(shiftleft(spread(y), 1))).as("zval"))
+          .orderBy(asc("zval"), asc("l_orderkey"), asc("l_linenumber"))
+          .limit(20)
+      },
+      Some(
+        """WITH b AS (SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
+          |    l_partkey % 65536 AS x, l_suppkey % 65536 AS y FROM lineitem),
+          |sx AS (SELECT *, (x | (x << 8)) & 16711935 AS x1, (y | (y << 8)) & 16711935 AS y1 FROM b),
+          |s2 AS (SELECT *, (x1 | (x1 << 4)) & 252645135 AS x2, (y1 | (y1 << 4)) & 252645135 AS y2 FROM sx),
+          |s3 AS (SELECT *, (x2 | (x2 << 2)) & 858993459 AS x3, (y2 | (y2 << 2)) & 858993459 AS y3 FROM s2),
+          |s4 AS (SELECT *, (x3 | (x3 << 1)) & 1431655765 AS x4, (y3 | (y3 << 1)) & 1431655765 AS y4 FROM s3)
+          |SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
+          |  (x4 | (y4 << 1)) AS zval
+          |FROM s4 ORDER BY zval, l_orderkey, l_linenumber LIMIT 20""".stripMargin)),
+
+    QSpec("join_bucketed_colocated",
+      // The storage layout the advisor's scripts exist to produce, driven
+      // end-to-end: both fact and dim written as 8-bucket tables on the
+      // join key (`bucketBy` + `sortBy` + saveAsTable), then joined and
+      // rolled up. With matching bucket counts the join needs NO exchange
+      // on either side — PlanSpec asserts the shuffle-free plan (with
+      // broadcast disabled; under AQE at fixture scale the small side may
+      // broadcast instead, which is also shuffle-free). The oracle proves
+      // the bucketed round trip is layout-only.
+      (s, dir) => {
+        // bucketing is a ONE-TIME layout investment (exactly what the
+        // advisor's scripts produce); materialize it once per (session,
+        // fixture dir) — same contract as Memo.frame's sketch passes — so the
+        // steady state this key measures is the exchange-free JOIN, not a
+        // repeated table rewrite. Switching dirs re-materializes.
+        LayoutKeys.synchronized {
+          if (bucketedJoinDir.get() != ((s, dir))) {
+            s.sql("DROP TABLE IF EXISTS graft_bj_orders")
+            s.sql("DROP TABLE IF EXISTS graft_bj_customer")
+            t(s, dir, "orders").write.mode("overwrite")
+              .bucketBy(8, "o_custkey").sortBy("o_custkey")
+              .option("path", tmpOut("bj_orders")).saveAsTable("graft_bj_orders")
+            t(s, dir, "customer").write.mode("overwrite")
+              .bucketBy(8, "c_custkey").sortBy("c_custkey")
+              .option("path", tmpOut("bj_customer")).saveAsTable("graft_bj_customer")
+            bucketedJoinDir.set((s, dir))
+          }
+        }
+        s.table("graft_bj_orders")
+          .join(s.table("graft_bj_customer"), col("o_custkey") === col("c_custkey"))
+          .groupBy("c_mktsegment")
+          .agg(count(lit(1)).as("n_orders"),
+            round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2)
+              .as("revenue"))
+          .orderBy("c_mktsegment")
+      },
+      Some(
+        """SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_orders,
+          |  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS revenue
+          |FROM orders JOIN customer ON o_custkey = c_custkey
+          |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+
+    QSpec("shard_manifest",
+      // Export planning for a corpus write: deterministic shard assignment
+      // (murmur3(doc_id) pmod 16 — the split_train_test hash family: no RNG
+      // state, stable under re-runs and any partitioning) plus the per-shard
+      // manifest row a distributed writer plans from — doc count, total
+      // characters (the bytes proxy this fixture carries), id range, and the
+      // integer-exact balance ratio of the shard against the mean. One
+      // groupBy with O(shards) groups; the manifest is metadata-sized at any
+      // corpus scale, and the assignment column doubles as the physical
+      // repartition key for the write itself.
+      (s, dir) => {
+        val sharded = t(s, dir, "documents")
+          .withColumn("shard", pmod(hash(col("doc_id")), lit(16)))
+          .groupBy("shard")
+          .agg(count(lit(1)).as("n_docs"),
+            sum("n_chars").as("total_chars"),
+            min("doc_id").as("min_id"), max("doc_id").as("max_id"))
+        val total = sharded.agg(sum("n_docs").as("all_docs"),
+          count(lit(1)).as("n_shards"))
+        sharded.crossJoin(broadcast(total))
+          .withColumn("balance_r", graft.ext.ExactMath.ratioRounded(
+            col("n_docs").cast("decimal(38,0)") * col("n_shards").cast("decimal(38,0)"),
+            col("all_docs"), 6))
+          .select("shard", "n_docs", "total_chars", "min_id", "max_id", "balance_r")
+          .orderBy("shard")
+      },
+      Some(ExactMath.murmurCte("documents", "doc_id", 42) + {
+        val bal = graft.ext.ExactMath.ratioRoundedSql(
+          "n_docs::HUGEINT * n_shards", "all_docs", 6)
+        s""", sharded AS (
+           |  SELECT ((sh % 16) + 16) % 16 AS shard,
+           |    CAST(COUNT(*) AS BIGINT) AS n_docs,
+           |    CAST(SUM(d.n_chars) AS BIGINT) AS total_chars,
+           |    MIN(d.doc_id) AS min_id, MAX(d.doc_id) AS max_id
+           |  FROM msigned JOIN documents d ON d.doc_id = msigned.v
+           |  GROUP BY 1),
+           |tot AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS all_docs,
+           |    CAST(COUNT(*) AS BIGINT) AS n_shards FROM sharded)
+           |SELECT shard, n_docs, total_chars, min_id, max_id, $bal AS balance_r
+           |FROM sharded, tot ORDER BY shard""".stripMargin
+      })),
+
+    QSpec("bloom_partition_index",
+      // X71 — partition-level Bloom data-skipping index + probe-pruning
+      // report (the index emission a lakehouse skipping layer maintains;
+      // bloom_prefilter is the JOIN-side consumer, this is the per-
+      // partition INDEX artifact): m=16384 bits / k=3 affine hashes over
+      // o_custkey per order month, fill ratio, and for probe key 777 both
+      // the index verdict (all 3 bits set) and ground truth. The oracle
+      // replays the exact bit arithmetic.
+      (s, dir) => Layout.bloomPartitionIndex(t(s, dir, "orders"),
+        mBits = 16384L, kHashes = 3, probeKey = 777L),
+      Some(
+        """WITH k AS (SELECT strftime(o_orderdate, '%Y-%m') AS month, o_custkey,
+          |    COUNT(*) AS nr
+          |  FROM orders GROUP BY 1, 2),
+          |b AS (SELECT DISTINCT month,
+          |    ((((i * 2654435761) % 1000000007) * o_custkey
+          |      + (i * 40503 + 17) % 1000000007) % 1000000007) % 16384 AS bit
+          |  FROM k, range(1, 4) t(i)),
+          |pb AS (SELECT DISTINCT
+          |    ((((i * 2654435761) % 1000000007) * 777
+          |      + (i * 40503 + 17) % 1000000007) % 1000000007) % 16384 AS bit
+          |  FROM range(1, 4) t(i)),
+          |pm AS (SELECT month, SUM(nr) AS n_rows, COUNT(*) AS n_keys,
+          |    MAX(CASE WHEN o_custkey = 777 THEN 1 ELSE 0 END) AS probe_actual
+          |  FROM k GROUP BY 1),
+          |sb AS (SELECT month, COUNT(*) AS n_set_bits,
+          |    COUNT(*) FILTER (WHERE bit IN (SELECT bit FROM pb)) AS probe_hits
+          |  FROM b GROUP BY 1)
+          |SELECT pm.month, CAST(n_rows AS BIGINT) AS n_rows,
+          |  CAST(n_keys AS BIGINT) AS n_keys,
+          |  CAST(n_set_bits AS BIGINT) AS n_set_bits,
+          |  CAST((2000000 * n_set_bits + 16384) // 32768 AS DOUBLE) / 1000000 AS fill,
+          |  CAST(CASE WHEN probe_hits = (SELECT COUNT(*) FROM pb)
+          |    THEN 1 ELSE 0 END AS INT) AS probe_maybe,
+          |  CAST(probe_actual AS INT) AS probe_actual
+          |FROM pm JOIN sb USING (month) ORDER BY month""".stripMargin)),
+
+    QSpec("zonemap_partition_index",
+      // X73 — per-month min/max zone map over o_totalprice + a NARROW
+      // interior range probe [249000, 249250]: the envelope admits nearly
+      // every partition (probe_maybe=1) while ground truth is sparse —
+      // the zone map's false-positive behavior on an uncorrelated column,
+      // surfaced honestly (and exactly why X71's Bloom exists for point
+      // probes). min/max/actual compare exactly: all three engines read
+      // the same stored doubles and fold them without arithmetic.
+      (s, dir) => Layout.zonemapPartitionIndex(t(s, dir, "orders"),
+        valueCol = "o_totalprice", lo = 249000.0, hi = 249250.0),
+      Some(
+        """SELECT strftime(o_orderdate, '%Y-%m') AS month,
+          |  COUNT(*) AS n_rows, MIN(o_totalprice) AS min_val,
+          |  MAX(o_totalprice) AS max_val,
+          |  CAST(CASE WHEN MAX(o_totalprice) < 249000.0
+          |      OR MIN(o_totalprice) > 249250.0 THEN 0 ELSE 1 END AS INT)
+          |    AS probe_maybe,
+          |  CAST(MAX(CASE WHEN o_totalprice BETWEEN 249000.0 AND 249250.0
+          |    THEN 1 ELSE 0 END) AS INT) AS probe_actual
+          |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    QSpec("range_partition_bounds",
+      // X74 — adaptive balanced range-partition boundaries over o_custkey
+      // at B=16: bucket = floor(startOffset·16/N) over the key-ordered
+      // cumulative row count. The oracle computes the same boundaries with
+      // ONE naive global cumsum, certifying the engine's two-level
+      // (group-offset + within-group) decomposition exact.
+      (s, dir) => Layout.rangePartitionBounds(t(s, dir, "orders"),
+        keyCol = "o_custkey", nBuckets = 16, groupWidth = 1024L),
+      Some(
+        """WITH k AS (SELECT o_custkey AS k, COUNT(*) AS nr FROM orders GROUP BY 1),
+          |c AS (SELECT k, nr, COALESCE(SUM(nr) OVER (ORDER BY k
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS s FROM k),
+          |t AS (SELECT SUM(nr) AS n FROM k)
+          |SELECT CAST((s * 16) // n AS BIGINT) AS bucket,
+          |  MIN(k) AS lo_key, MAX(k) AS hi_key,
+          |  CAST(COUNT(*) AS BIGINT) AS n_keys, CAST(SUM(nr) AS BIGINT) AS n_rows
+          |FROM c, t GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    QSpec("salt_plan_topk",
+      // X75 — skew salting plan head: the 10 heaviest event user_ids
+      // (count desc, key asc) with their corpus share and salt_factor =
+      // ceil(n_rows·32/total) — the replication factor a skew-aware join
+      // planner applies to the build side of each hot key.
+      (s, dir) => Layout.saltPlanTopK(t(s, dir, "events"), nBuckets = 32, topN = 10),
+      Some(
+        s"""WITH k AS (SELECT user_id, COUNT(*) AS n_rows FROM events GROUP BY 1),
+          |t AS (SELECT SUM(n_rows) AS n FROM k),
+          |r AS (SELECT user_id, n_rows, ROW_NUMBER() OVER (
+          |    ORDER BY n_rows DESC, user_id ASC) AS rk FROM k)
+          |SELECT user_id, CAST(n_rows AS BIGINT) AS n_rows,
+          |  ${graft.ext.ExactMath.ratioRoundedSql("n_rows", "n", 6)} AS share,
+          |  CAST(GREATEST(1, (n_rows * 32 + n - 1) // n) AS BIGINT) AS salt_factor
+          |FROM r, t WHERE rk <= 10
+          |ORDER BY n_rows DESC, user_id ASC""".stripMargin)),
+
+    QSpec("zorder_layout",
+      // X76 — z-order vs linear clustering layout report: 16 equal Morton-
+      // code blocks over (custkey-scaled-to-8-bits, month-ordinal-scaled-
+      // to-8-bits) beside 16 date-sorted blocks, each with both dimension
+      // envelopes + area. The oracle replays the bit interleave term by
+      // term.
+      (s, dir) => Layout.zorderLayoutStats(t(s, dir, "orders"),
+        baseYear = 1995, nMonths = 84, nBlocks = 16),
+      Some {
+        val zSql = (0 until 8).map(i =>
+          s"((((cx >> $i) & 1) << ${2 * i + 1}) + (((dx >> $i) & 1) << ${2 * i}))")
+          .mkString(" + ")
+        s"""WITH d AS (SELECT
+          |    ((o_custkey * 256) // (SELECT MAX(o_custkey) + 1 FROM orders)) AS cx,
+          |    ((((EXTRACT(year FROM o_orderdate) - 1995) * 12
+          |       + EXTRACT(month FROM o_orderdate) - 1) * 256) // 84) AS dx
+          |  FROM orders),
+          |r AS (
+          |  SELECT 'zorder' AS layout, ($zSql) // 4096 AS block,
+          |    COUNT(*) AS n_rows, MIN(cx) AS cx_lo, MAX(cx) AS cx_hi,
+          |    MIN(dx) AS dx_lo, MAX(dx) AS dx_hi
+          |  FROM d GROUP BY 2
+          |  UNION ALL
+          |  SELECT 'linear', (dx * 16) // 256, COUNT(*), MIN(cx), MAX(cx),
+          |    MIN(dx), MAX(dx)
+          |  FROM d GROUP BY 2)
+          |SELECT layout, CAST(block AS BIGINT) AS block,
+          |  CAST(n_rows AS BIGINT) AS n_rows, cx_lo, cx_hi, dx_lo, dx_hi,
+          |  CAST((cx_hi - cx_lo + 1) * (dx_hi - dx_lo + 1) AS BIGINT)
+          |    AS envelope_area
+          |FROM r ORDER BY layout, block""".stripMargin
+      }),
+
+    QSpec("bloom_index_fpr",
+      // X77 — observed false-positive rate of X71's partition Bloom
+      // index: 100 known-present + 100 known-absent probe keys against
+      // every month partition; the absent class reads the pure
+      // hash-collision FPR at the realized fill, integer-exact on all
+      // three engines.
+      (s, dir) => Layout.bloomIndexFpr(t(s, dir, "orders"),
+        mBits = 16384L, kHashes = 3, nProbes = 100),
+      Some {
+        def bit(k: String) = s"((((i * 2654435761) % 1000000007) * ($k)" +
+          s" + (i * 40503 + 17) % 1000000007) % 1000000007) % 16384"
+        s"""WITH mk AS (SELECT DISTINCT strftime(o_orderdate, '%Y-%m') AS month,
+          |    o_custkey AS k FROM orders),
+          |mx AS (SELECT MAX(k) AS maxk FROM mk),
+          |pk AS (SELECT k, 'present' AS probe_class
+          |    FROM (SELECT DISTINCT k FROM mk ORDER BY k LIMIT 100)
+          |  UNION ALL SELECT maxk + i, 'absent' FROM mx, range(1, 101) t(i)),
+          |pb AS (SELECT DISTINCT k, probe_class, ${bit("k")} AS bit
+          |  FROM pk, range(1, 4) t(i)),
+          |pn AS (SELECT k, probe_class, COUNT(*) AS nb FROM pb GROUP BY 1, 2),
+          |mb AS (SELECT DISTINCT month, ${bit("k")} AS bit
+          |  FROM mk, range(1, 4) t(i)),
+          |hit AS (SELECT mb.month, pb.k, COUNT(DISTINCT mb.bit) AS nh
+          |  FROM mb JOIN pb ON mb.bit = pb.bit GROUP BY 1, 2),
+          |pair AS (SELECT mo.month, pn.k, pn.probe_class, pn.nb
+          |  FROM (SELECT DISTINCT month FROM mk) mo, pn),
+          |j AS (SELECT pair.probe_class,
+          |    CASE WHEN COALESCE(hit.nh, 0) = pair.nb THEN 1 ELSE 0 END AS adm,
+          |    CASE WHEN mk2.k IS NOT NULL THEN 1 ELSE 0 END AS act
+          |  FROM pair
+          |  LEFT JOIN hit ON hit.month = pair.month AND hit.k = pair.k
+          |  LEFT JOIN mk mk2 ON mk2.month = pair.month AND mk2.k = pair.k)
+          |SELECT probe_class, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+          |  CAST(SUM(adm) AS BIGINT) AS n_admitted,
+          |  CAST(SUM(act) AS BIGINT) AS n_actual,
+          |  CAST(SUM(CASE WHEN adm = 1 AND act = 0 THEN 1 ELSE 0 END) AS BIGINT)
+          |    AS n_false_pos,
+          |  ${graft.ext.ExactMath.ratioRoundedSql(
+            "SUM(CASE WHEN adm = 1 AND act = 0 THEN 1 ELSE 0 END)",
+            "COUNT(*) - SUM(act)", 6)} AS fpr
+          |FROM j GROUP BY 1 ORDER BY 1""".stripMargin
+      }),
+
+    QSpec("partition_balance_report",
+      // X79 — staleness check of a FROZEN range layout: bounds computed
+      // on orders before 1994-01-01 (the X74 arithmetic verbatim),
+      // re-evaluated on the full corpus via greatest-lo_key-≤-key step
+      // assignment; per bucket share, load_ratio (1.0 = balanced) and the
+      // rebalance flag at rounded load_ratio ≥ 1.5. The oracle replays
+      // bounds + step assignment with one naive global cumsum.
+      (s, dir) => Layout.partitionBalanceReport(t(s, dir, "orders"),
+        baseCutoff = "1998-01-01", keyCol = "o_custkey", nBuckets = 16,
+        groupWidth = 1024L),
+      Some(
+        s"""WITH bk AS (SELECT o_custkey AS k, COUNT(*) AS nr FROM orders
+          |  WHERE o_orderdate < TIMESTAMP '1998-01-01' GROUP BY 1),
+          |c AS (SELECT k, nr, COALESCE(SUM(nr) OVER (ORDER BY k
+          |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS s FROM bk),
+          |tb AS (SELECT SUM(nr) AS n FROM bk),
+          |bounds AS (SELECT (s * 16) // n AS bucket, MIN(k) AS lo_key
+          |  FROM c, tb GROUP BY 1),
+          |ck AS (SELECT o_custkey AS k, COUNT(*) AS nr FROM orders GROUP BY 1),
+          |t2 AS (SELECT SUM(nr) AS n FROM ck),
+          |asg AS (SELECT k, nr, COALESCE((SELECT MAX(bucket) FROM bounds b
+          |    WHERE b.lo_key <= ck.k), 0) AS bucket FROM ck),
+          |g AS (SELECT bucket, COUNT(*) AS n_keys, SUM(nr) AS n_rows
+          |  FROM asg GROUP BY 1)
+          |SELECT CAST(bucket AS BIGINT) AS bucket,
+          |  CAST(n_keys AS BIGINT) AS n_keys, CAST(n_rows AS BIGINT) AS n_rows,
+          |  ${graft.ext.ExactMath.ratioRoundedSql("n_rows", "n", 6)} AS share,
+          |  ${graft.ext.ExactMath.ratioRoundedSql("n_rows * 16", "n", 6)}
+          |    AS load_ratio,
+          |  CAST(CASE WHEN ${graft.ext.ExactMath.ratioRoundedSql(
+            "n_rows * 16", "n", 6)} >= 1.5
+          |    THEN 1 ELSE 0 END AS INT) AS rebalance
+          |FROM g, t2 ORDER BY bucket""".stripMargin)),
+
+    QSpec("workload_pruning_sim",
+      // X80 — workload-driven pruning simulation: every logged query
+      // screened against the month layout + zone maps; recognized
+      // o_orderdate >= DATE / o_totalprice > predicates prune, everything
+      // else reports supported = 0 honestly. The oracle replays the qlog
+      // CTE + the same regex recognizers.
+      (s, dir) => Layout.workloadPruningSim(
+        TableRegistry.queryLog(s, dir), t(s, dir, "orders")),
+      Some(
+        s"""WITH qlog AS (
+          |${TableRegistry.queryLogOracleCte}
+          |),
+          |wl AS (SELECT query, COUNT(*) AS n_runs,
+          |    regexp_extract(query, 'o_orderdate >= DATE ''([0-9-]+)''', 1)
+          |      AS date_lit,
+          |    regexp_extract(query, 'o_totalprice > ([0-9.]+)', 1) AS price_lit,
+          |    (query LIKE '%FROM orders%') AS on_orders
+          |  FROM qlog GROUP BY 1),
+          |w2 AS (SELECT *, CASE WHEN on_orders AND (date_lit <> '' OR price_lit <> '')
+          |    THEN 1 ELSE 0 END AS supported FROM wl),
+          |p AS (SELECT strftime(o_orderdate, '%Y-%m') AS month,
+          |    MAX(o_totalprice) AS max_price FROM orders GROUP BY 1),
+          |j AS (SELECT query, n_runs, supported,
+          |    CASE WHEN supported = 1 AND ((date_lit <> '' AND month < substr(date_lit, 1, 7))
+          |      OR (price_lit <> '' AND max_price <= CAST(price_lit AS DOUBLE)))
+          |    THEN 1 ELSE 0 END AS pruned FROM p, w2)
+          |SELECT query, CAST(n_runs AS BIGINT) AS n_runs,
+          |  CAST(supported AS INT) AS supported,
+          |  CAST(COUNT(*) AS BIGINT) AS n_partitions,
+          |  CAST(SUM(pruned) AS BIGINT) AS n_pruned,
+          |  ${graft.ext.ExactMath.ratioRoundedSql("SUM(pruned)", "COUNT(*)", 6)}
+          |    AS prune_frac
+          |FROM j GROUP BY 1, 2, 3 ORDER BY query""".stripMargin)))
+}

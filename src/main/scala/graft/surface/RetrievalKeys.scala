@@ -1,0 +1,868 @@
+package graft
+package surface
+
+import graft.ext.{ExactMath, Graph, SimSearch}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+/** Similarity search and retrieval: brute-force, IVF, quantized, product-
+  * quantized, binary and Matryoshka top-k, ANN and exact similarity joins,
+  * k-NN joins and classification, lexical scoring (TF-IDF, BM25, inverted
+  * index), rank fusion, graph ranking, embedding post-processing (PCA,
+  * all-but-the-top, normalization) and recall measurements.
+  */
+object RetrievalKeys {
+
+  val specs: Seq[QSpec] = Seq(
+
+    QSpec("simsearch_topk",
+      (s, dir) => SimSearch.topK(s, t(s, dir, "embeddings"), queryVecId = 0, k = 10),
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
+          |SELECT vec_id, ROUND(list_sum(list_transform(range(1, len(v)+1), i -> v[i]*qv[i])) /
+          |  (sqrt(list_sum(list_transform(v, x -> x*x))) * sqrt(list_sum(list_transform(qv, x -> x*x)))), 6) AS cos
+          |FROM e, q WHERE vec_id <> 0 ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin)),
+
+    QSpec("simjoin_ann",
+      // X4 banded random-hyperplane ANN self-join (AND-OR LSH: 8 bands of
+      // corpus-scaled r planes — see SimSearch.scaledPlanes). The plane
+      // weights are integer-derived literals and the dot products fold
+      // ascending (codegen VectorDot), so the oracle replays the band
+      // buckets bit-for-bit, including the corpus-scaled r (the params CTE
+      // derives the same r = clamp(ceil(log2(ceil(n/8))), 8, 30) from
+      // count(*)). Recall vs the exact join is asserted in ExtSpec.
+      (s, dir) => {
+        val emb = t(s, dir, "embeddings")
+        SimSearch.annSelfJoin(s, emb, dim = 64,
+          rPlanes = SimSearch.scaledPlanes(emb, Some(dir)),
+          nBands = SimSearch.annBands, threshold = 0.25, cacheKey = Some(dir))
+      },
+      Some(
+        """WITH params AS (SELECT GREATEST(8, LEAST(30, CAST(ceil(log2(GREATEST(CAST(ceil(count(*) / 8.0) AS BIGINT), 1))) AS INT))) AS r FROM embeddings),
+          |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e
+          |      WHERE list_sum(list_transform(v, x -> x*x)) > 0),
+          |bk AS (SELECT vec_id, band,
+          |  CAST(list_sum(list_transform(range(r), j -> CASE WHEN
+          |    list_sum(list_transform(range(len(v)), i -> v[i+1] * CAST((i*2654435761 + (band*r+j)*2246822519 + i*(band*r+j)*3266489917) % 1000 - 500 AS DOUBLE))) >= 0
+          |    THEN (1 << j) ELSE 0 END)) AS INT) AS bucket
+          |  FROM n, params, range(8) bs(band)),
+          |cand AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
+          |  FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
+          |SELECT a_id, b_id, cos FROM (
+          |  SELECT c.a_id, c.b_id,
+          |    ROUND(list_sum(list_transform(range(len(x.v)), i -> x.v[i+1]*y.v[i+1])) / (x.nrm*y.nrm), 6) AS cos
+          |  FROM cand c JOIN n x ON x.vec_id = c.a_id JOIN n y ON y.vec_id = c.b_id) z
+          |WHERE cos >= 0.25 ORDER BY a_id, b_id""".stripMargin)),
+
+    QSpec("simjoin_exact",
+      // exact-threshold twin (bounded: embeddings stays small by fixture
+      // design; at scale this is the per-bucket verification step)
+      (s, dir) => SimSearch.exactSelfJoin(s, t(s, dir, "embeddings"), threshold = 0.30,
+        idCap = Some(500L)),
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+          |  FROM embeddings WHERE vec_id < 500),
+          |p AS (
+          |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+          |    ROUND(list_sum(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i])) /
+          |      (sqrt(list_sum(list_transform(a.v, x -> x*x))) * sqrt(list_sum(list_transform(b.v, x -> x*x)))), 6) AS cos
+          |  FROM e a, e b WHERE a.vec_id < b.vec_id)
+          |SELECT a_id, b_id, cos FROM p WHERE cos >= 0.30 ORDER BY a_id, b_id""".stripMargin)),
+
+    QSpec("simsearch_ivf",
+      // IVF-bucketed ANN: deterministic seeding (first-16 centroids),
+      // ascending-fold distances, first-index argmin tie-break — all
+      // replayed by the oracle (assignment via ranked window, probes via
+      // the same L2 ordering). Recall vs brute force asserted in ExtSpec.
+      (s, dir) => SimSearch.ivfTopK(s, t(s, dir, "embeddings"),
+        queryVecId = 0, k = 10, nCentroids = 16, nProbe = 4, cacheKey = Some(dir)),
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e),
+          |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, v AS cv,
+          |         list_sum(list_transform(v, x -> x*x)) AS c2
+          |         FROM n ORDER BY vec_id LIMIT 16),
+          |asg AS (
+          |  SELECT vec_id, v, nrm, ci AS cluster FROM (
+          |    SELECT n.vec_id, n.v, n.nrm, cent.ci,
+          |      row_number() OVER (PARTITION BY n.vec_id ORDER BY
+          |        list_sum(list_transform(range(len(n.v)), i -> n.v[i+1]*cent.cv[i+1])) * -2.0 + cent.c2, cent.ci) AS rk
+          |    FROM n, cent) r WHERE rk = 1),
+          |q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 0),
+          |probes AS (SELECT cent.ci FROM cent, q
+          |           ORDER BY list_sum(list_transform(range(len(qv)), i -> (cent.cv[i+1]-qv[i+1])*(cent.cv[i+1]-qv[i+1]))), cent.ci
+          |           LIMIT 4)
+          |SELECT a.vec_id, ROUND(list_sum(list_transform(range(len(a.v)), i -> a.v[i+1]*q.qv[i+1])) / (a.nrm*q.qnrm), 6) AS cos
+          |FROM asg a, q WHERE a.cluster IN (SELECT ci FROM probes) AND a.vec_id <> 0
+          |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin)),
+
+    QSpec("text_tfidf",
+      // TF-IDF term scoring: tf and df from two grouped aggregates over the
+      // exploded token stream, corpus size via a broadcast scalar (never a
+      // driver-side count), top-3 terms per document by score. Rank runs on
+      // the UNROUNDED score (identical IEEE arithmetic on both engines);
+      // only the emitted value is rounded. Output bounded to doc_id < 50.
+      (s, dir) => {
+        // opt-r15: examined — the INITIAL plan shows the corpus explode
+        // inlined into four branches (tf, len, dfreq, n), but the tf/len/
+        // dfreq branches end in exchanges ReuseExchange dedups at runtime.
+        // A windows-over-tf rewrite (len = Σcnt per doc, df = count per
+        // token as window functions) was built and measured AMBIGUOUS
+        // (sf1 2.56 → 2.43 s, sf0.1/32c 0.49 → 0.55 s — the window sorts
+        // trade evenly against the join shuffles), so the join form with
+        // its map-side-combined dfreq stays.
+        val toks = t(s, dir, "documents")
+          .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        val tf = toks.groupBy("doc_id", "token").agg(count(lit(1)).as("cnt"))
+        val len = toks.groupBy("doc_id").agg(count(lit(1)).as("len"))
+        val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
+        val n = t(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
+        val scored = tf
+          .join(len, "doc_id")
+          .join(dfreq, "token")
+          .crossJoin(broadcast(n))
+          .withColumn("score",
+            (col("cnt") / col("len")) *
+              ((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
+        scored
+          .withColumn("rank", row_number().over(
+            Window.partitionBy("doc_id").orderBy(desc("score"), asc("token"))))
+          .where(col("rank") <= 3 && col("doc_id") < 50)
+          .select(col("doc_id"), col("rank").cast("int").as("rank"), col("token"),
+            round(col("score"), 6).as("tfidf"))
+          .orderBy("doc_id", "rank")
+      },
+      Some(
+        """WITH toks AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS token
+          |    FROM documents),
+          |tf AS (SELECT doc_id, token, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),
+          |len AS (SELECT doc_id, COUNT(*) AS len FROM toks GROUP BY 1),
+          |dfreq AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),
+          |n AS (SELECT COUNT(*) AS n_docs FROM documents),
+          |scored AS (SELECT tf.doc_id, tf.token,
+          |    (CAST(tf.cnt AS DOUBLE) / len.len) *
+          |      ((n.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5)) AS score
+          |  FROM tf JOIN len USING (doc_id) JOIN dfreq USING (token) CROSS JOIN n),
+          |ranked AS (SELECT doc_id, token, score, ROW_NUMBER() OVER (
+          |    PARTITION BY doc_id ORDER BY score DESC, token) AS rank FROM scored)
+          |SELECT doc_id, CAST(rank AS INT) AS rank, token,
+          |  ROUND(score, 6) AS tfidf
+          |FROM ranked WHERE rank <= 3 AND doc_id < 50
+          |ORDER BY doc_id, rank""".stripMargin)),
+
+    QSpec("agg_vector_centroid",
+      // Per-label embedding centroid in long format (label, dim, value):
+      // posexplode fans each vector into 64 (label, pos) cells, then a
+      // grouped mean — one shuffle keyed on (label, pos), partial sums
+      // map-side. Long format keeps the result joinable and avoids a
+      // collect_list re-assembly; at 100 TB the shuffle carries
+      // O(labels × dims) groups regardless of row count. The per-element
+      // float→double sums commute to within 1e-15 of each other across
+      // engines; round(6) is ~9 orders of magnitude coarser.
+      (s, dir) => t(s, dir, "embeddings")
+        .select(col("label"), posexplode(col("embedding")))
+        .groupBy(col("label"), (col("pos") + 1).cast("int").as("pos"))
+        .agg(round(avg(col("col").cast("double")), 6).as("centroid"))
+        .orderBy("label", "pos"),
+      Some(
+        """SELECT label, CAST(r.i AS INT) AS pos,
+          |  ROUND(AVG(CAST(embedding[r.i] AS DOUBLE)), 6) AS centroid
+          |FROM embeddings CROSS JOIN range(1, 65) r(i)
+          |GROUP BY 1, 2 ORDER BY label, pos""".stripMargin)),
+
+    QSpec("kmeans_iterate",
+      // One full k-means iteration (E-step: nearest-centroid assignment as
+      // a shuffle-free literal-centroid projection with codegen VectorDot;
+      // M-step: per-(cluster, dim) mean — shuffle carries O(k × dim)
+      // partial sums whatever the corpus size). Oracle replays assignment
+      // (same −2·v·c + ‖c‖² ranking, same tie-break) and the grouped mean.
+      (s, dir) => graft.ext.SimSearch.kmeansIterate(s, t(s, dir, "embeddings"), 8,
+        cacheKey = Some(dir)),
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+          |    FROM embeddings),
+          |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, v AS cv,
+          |    list_sum(list_transform(v, x -> x*x)) AS c2
+          |  FROM e ORDER BY vec_id LIMIT 8),
+          |asg AS (SELECT vec_id, v, ci AS cluster FROM (
+          |    SELECT e.vec_id, e.v, cent.ci,
+          |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+          |        list_sum(list_transform(range(len(e.v)), i -> e.v[i+1]*cent.cv[i+1])) * -2.0 + cent.c2,
+          |        cent.ci) AS rk
+          |    FROM e, cent) r WHERE rk = 1)
+          |SELECT cluster, CAST(r.i AS INT) AS pos,
+          |  ROUND(AVG(v[r.i]), 6) AS centroid, CAST(COUNT(*) AS BIGINT) AS n
+          |FROM asg CROSS JOIN range(1, 65) r(i)
+          |GROUP BY 1, 2 ORDER BY cluster, pos""".stripMargin)),
+
+    QSpec("simsearch_quant",
+      // int8-quantized brute-force top-k: per-vector symmetric scales cancel
+      // out of the cosine, so both engines evaluate exact small-integer
+      // sums — bit-reproducible despite the lossy codes. Recall vs the
+      // exact topK is asserted in ExtSpec.
+      (s, dir) => SimSearch.quantizedTopK(s, t(s, dir, "embeddings"),
+        queryVecId = 0, k = 10),
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS ma FROM e),
+          |q AS (SELECT vec_id, CASE WHEN ma = 0 THEN list_transform(v, x -> 0.0)
+          |    ELSE list_transform(v, x -> floor(x / (ma / 127) + 0.5)) END AS q FROM m),
+          |n AS (SELECT vec_id, q, sqrt(list_sum(list_transform(q, x -> x*x))) AS qn FROM q),
+          |qq AS (SELECT q AS qv, qn AS qvn FROM n WHERE vec_id = 0)
+          |SELECT vec_id,
+          |  ROUND(list_sum(list_transform(range(1, len(q)+1), i -> q[i]*qv[i])) / (qn*qvn), 6) AS qcos
+          |FROM n, qq WHERE vec_id <> 0
+          |ORDER BY qcos DESC, vec_id LIMIT 10""".stripMargin)),
+
+    QSpec("knn_join",
+      // k-NN JOIN: 8 probe vectors each ranked against the disjoint corpus
+      // in one pass — broadcast probes, codegen VectorDot cosines, and the
+      // bounded-heap TopKRows aggregate for per-probe top-3 (map-side
+      // partial heaps; the exchange carries O(probes × partitions × k)
+      // rows, no Sort operator). The oracle replays it with a rank window.
+      (s, dir) => SimSearch.knnJoin(s, t(s, dir, "embeddings"),
+        nQueries = 8, k = 3),
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e),
+          |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id < 8),
+          |c AS (SELECT vec_id, v, nrm FROM n WHERE vec_id >= 8),
+          |p AS (SELECT q_id, vec_id,
+          |  ROUND(list_sum(list_transform(range(1, len(v)+1), i -> v[i]*qv[i])) / (nrm*qn), 6) AS cos
+          |  FROM c, q),
+          |r AS (SELECT q_id, vec_id, cos, CAST(ROW_NUMBER() OVER (
+          |    PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS INT) AS rank FROM p)
+          |SELECT q_id, rank, vec_id, cos FROM r WHERE rank <= 3
+          |ORDER BY q_id, rank""".stripMargin)),
+
+    QSpec("embed_normalize",
+      // Embedding L2-normalization + head-dim summary (matryoshka-style
+      // truncation prep): per-vector norm and the sum of the first 8
+      // normalized dims. Stateless map over the scan — no shuffle, no UDF;
+      // the sums are sequential left-folds in BOTH engines (Spark
+      // aggregate() and DuckDB list_sum walk the list in index order), so
+      // ROUND(…, 6) after the single division is bit-stable.
+      (s, dir) => t(s, dir, "embeddings")
+        .select(col("vec_id"),
+          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+        .withColumn("nrm", sqrt(expr("aggregate(v, 0D, (a, x) -> a + x * x)")))
+        .select(col("vec_id"), round(col("nrm"), 6).as("l2_norm"),
+          round(when(col("nrm") === 0d, lit(0d))
+            .otherwise(expr("aggregate(slice(v, 1, 8), 0D, (a, x) -> a + x)") / col("nrm")), 6)
+            .as("head8_sum"))
+        .orderBy("vec_id"),
+      Some(
+        """WITH e AS (SELECT vec_id,
+          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |n AS (SELECT vec_id, v,
+          |    sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
+          |SELECT vec_id, ROUND(nrm, 6) AS l2_norm,
+          |  ROUND(CASE WHEN nrm = 0 THEN 0
+          |    ELSE list_sum(list_slice(v, 1, 8)) / nrm END, 6) AS head8_sum
+          |FROM n ORDER BY vec_id""".stripMargin)),
+
+    QSpec("graph_pagerank",
+      // PageRank over the ANN similarity graph, in 1e-6 fixed point:
+      // integer ranks make every contribution sum exact and commutative,
+      // so a 5-iteration power method is hash-comparable across engines —
+      // a double-based PageRank never could be (shuffle order would flip
+      // low bits). Answers the dedup keep-policy question "which doc is
+      // most central to its near-dup neighborhood". Scale shape: each
+      // iteration is one shuffle join on the src id + one grouped sum;
+      // rank state is O(nodes) and lives in executors, never the driver.
+      // The edge PAIR SET is memoized (Memo.frame): the rank recurrence
+      // references the edge list in every iteration's subtree, and without
+      // materialization Catalyst would re-run the ANN join ~2×iters times
+      // inside the one final plan.
+      (s, dir) => Graph.pagerankFixedPoint(s, SimSearch.annPairsMemo(s, dir),
+        iters = 5, cacheKey = Some(dir)),
+      Some {
+        def step(prev: String): String =
+          s"""(SELECT dg.s AS id, dg.deg,
+             |    150000 + (850 * c.contrib) // 1000 AS rank
+             |  FROM dg JOIN (SELECT ed.d AS id, SUM(r.rank // r.deg) AS contrib
+             |    FROM ed JOIN $prev r ON ed.s = r.id GROUP BY ed.d) c ON dg.s = c.id)""".stripMargin
+        s"""WITH params AS (SELECT GREATEST(8, LEAST(30, CAST(ceil(log2(GREATEST(CAST(ceil(count(*) / 8.0) AS BIGINT), 1))) AS INT))) AS r FROM embeddings),
+           |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+           |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e
+           |      WHERE list_sum(list_transform(v, x -> x*x)) > 0),
+           |bk AS (SELECT vec_id, band,
+           |  CAST(list_sum(list_transform(range(r), j -> CASE WHEN
+           |    list_sum(list_transform(range(len(v)), i -> v[i+1] * CAST((i*2654435761 + (band*r+j)*2246822519 + i*(band*r+j)*3266489917) % 1000 - 500 AS DOUBLE))) >= 0
+           |    THEN (1 << j) ELSE 0 END)) AS INT) AS bucket
+           |  FROM n, params, range(8) bs(band)),
+           |cd AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
+           |  FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
+           |pr AS (SELECT a_id, b_id FROM (
+           |  SELECT c.a_id, c.b_id,
+           |    ROUND(list_sum(list_transform(range(len(x.v)), i -> x.v[i+1]*y.v[i+1])) / (x.nrm*y.nrm), 6) AS cos
+           |  FROM cd c JOIN n x ON x.vec_id = c.a_id JOIN n y ON y.vec_id = c.b_id) z
+           |  WHERE cos >= 0.25),
+           |ed AS (SELECT a_id AS s, b_id AS d FROM pr UNION ALL SELECT b_id, a_id FROM pr),
+           |dg AS (SELECT s, COUNT(*) AS deg FROM ed GROUP BY s),
+           |r0 AS (SELECT s AS id, deg, CAST(1000000 AS BIGINT) AS rank FROM dg),
+           |r1 AS ${step("r0")},
+           |r2 AS ${step("r1")},
+           |r3 AS ${step("r2")},
+           |r4 AS ${step("r3")},
+           |r5 AS ${step("r4")}
+           |SELECT id AS vec_id, CAST(deg AS BIGINT) AS deg, CAST(rank AS BIGINT) AS rank
+           |FROM r5 ORDER BY vec_id""".stripMargin
+      }),
+
+    QSpec("rank_fusion_rrf",
+      // Hybrid-retrieval fusion: reciprocal rank fusion (k=60) of the exact
+      // cosine top-10 and the int8-quantized top-10 for the same query —
+      // the standard way to merge rankings from different retrievers
+      // without score calibration. Ranks are ints, each 1/(60+r) is one
+      // double division, and the two terms add in a fixed order, so the
+      // fused scores hash-match. Both input rankings are 10-row TakeOrdered
+      // results; the fusion itself is metadata-sized.
+      (s, dir) => {
+        val ex = SimSearch.topK(s, t(s, dir, "embeddings"), queryVecId = 0, k = 10)
+          .withColumn("r_exact",
+            row_number().over(Window.orderBy(desc("cos"), asc("vec_id"))))
+          .select("vec_id", "r_exact")
+        val qu = SimSearch.quantizedTopK(s, t(s, dir, "embeddings"), queryVecId = 0, k = 10)
+          .withColumn("r_quant",
+            row_number().over(Window.orderBy(desc("qcos"), asc("vec_id"))))
+          .select("vec_id", "r_quant")
+        ex.join(qu, Seq("vec_id"), "full_outer")
+          .select(col("vec_id"),
+            round(
+              when(col("r_exact").isNotNull, lit(1.0) / (lit(60) + col("r_exact")))
+                .otherwise(lit(0.0)) +
+              when(col("r_quant").isNotNull, lit(1.0) / (lit(60) + col("r_quant")))
+                .otherwise(lit(0.0)), 9).as("rrf"),
+            coalesce(col("r_exact"), lit(0)).as("r_exact"),
+            coalesce(col("r_quant"), lit(0)).as("r_quant"))
+          .orderBy(desc("rrf"), asc("vec_id"))
+      },
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+          |ex AS (SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY cos DESC, vec_id) AS INT) AS r_exact
+          |  FROM (SELECT vec_id, ROUND(list_sum(list_transform(range(1, len(v)+1), i -> v[i]*qv[i])) /
+          |      (sqrt(list_sum(list_transform(v, x -> x*x))) * sqrt(list_sum(list_transform(qv, x -> x*x)))), 6) AS cos
+          |    FROM e, q WHERE vec_id <> 0 ORDER BY cos DESC, vec_id LIMIT 10)),
+          |m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS ma FROM e),
+          |qz AS (SELECT vec_id, CASE WHEN ma = 0 THEN list_transform(v, x -> 0.0)
+          |    ELSE list_transform(v, x -> floor(x / (ma / 127) + 0.5)) END AS q FROM m),
+          |n AS (SELECT vec_id, q, sqrt(list_sum(list_transform(q, x -> x*x))) AS qn FROM qz),
+          |qq AS (SELECT q AS qv, qn AS qvn FROM n WHERE vec_id = 0),
+          |qu AS (SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY qcos DESC, vec_id) AS INT) AS r_quant
+          |  FROM (SELECT vec_id,
+          |      ROUND(list_sum(list_transform(range(1, len(q)+1), i -> q[i]*qv[i])) / (qn*qvn), 6) AS qcos
+          |    FROM n, qq WHERE vec_id <> 0 ORDER BY qcos DESC, vec_id LIMIT 10))
+          |SELECT COALESCE(ex.vec_id, qu.vec_id) AS vec_id,
+          |  ROUND(CASE WHEN r_exact IS NOT NULL THEN CAST(1.0 AS DOUBLE)/(60+r_exact) ELSE 0 END
+          |    + CASE WHEN r_quant IS NOT NULL THEN CAST(1.0 AS DOUBLE)/(60+r_quant) ELSE 0 END, 9) AS rrf,
+          |  COALESCE(r_exact, 0) AS r_exact, COALESCE(r_quant, 0) AS r_quant
+          |FROM ex FULL OUTER JOIN qu ON ex.vec_id = qu.vec_id
+          |ORDER BY rrf DESC, vec_id""".stripMargin)),
+
+    QSpec("ann_recall_at_k",
+      // The ANN-family calibration twin of lsh_recall_curve: recall@10 of
+      // the IVF index against brute-force ground truth, as a function of
+      // nProbe — THE accuracy/cost dial an operator tunes before running
+      // IVF over a full corpus (fixture: probing 2 of 16 cells already
+      // recovers 7–10 of the true top-10; 4 cells 9–10). Both retrievers
+      // are independently replayed by the DuckDB twin (same seeding,
+      // argmin tie-breaks, ascending folds as simsearch_ivf/_topk), so
+      // the measured recall itself is hash-exact. Reuses the memoized IVF
+      // index across the two probe settings.
+      (s, dir) => {
+        val emb = t(s, dir, "embeddings")
+        val bruteIds = SimSearch.topK(s, emb, queryVecId = 0, k = 10)
+          .select(col("vec_id")).withColumn("hit", lit(1L))
+        Seq(2, 4).map { p =>
+          SimSearch.ivfTopK(s, emb, queryVecId = 0, k = 10, nCentroids = 16,
+              nProbe = p, cacheKey = Some(dir))
+            .select(lit(p).as("n_probe"), col("vec_id"))
+        }.reduce(_ unionAll _)
+          .join(broadcast(bruteIds), Seq("vec_id"), "left")
+          .groupBy("n_probe")
+          .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
+          .select(col("n_probe"), col("k"), col("n_hit"),
+            graft.ext.ExactMath.ratioRounded(col("n_hit"), col("k"), 6)
+              .as("recall"))
+          .orderBy("n_probe")
+      },
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e),
+          |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, v AS cv,
+          |         list_sum(list_transform(v, x -> x*x)) AS c2 FROM n ORDER BY vec_id LIMIT 16),
+          |asg AS (
+          |  SELECT vec_id, v, nrm, ci AS cluster FROM (
+          |    SELECT n.vec_id, n.v, n.nrm, cent.ci,
+          |      row_number() OVER (PARTITION BY n.vec_id ORDER BY
+          |        list_sum(list_transform(range(len(n.v)), i -> n.v[i+1]*cent.cv[i+1])) * -2.0 + cent.c2, cent.ci) AS rk
+          |    FROM n, cent) r WHERE rk = 1),
+          |q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 0),
+          |pr AS (SELECT unnest([2, 4]) AS n_probe),
+          |ranked AS (
+          |  SELECT cent.ci, row_number() OVER (ORDER BY
+          |    list_sum(list_transform(range(len(qv)), i -> (cent.cv[i+1]-qv[i+1])*(cent.cv[i+1]-qv[i+1]))), cent.ci) AS rk
+          |  FROM cent, q),
+          |probed AS (SELECT pr.n_probe, ranked.ci FROM pr JOIN ranked ON ranked.rk <= pr.n_probe),
+          |cand AS (
+          |  SELECT pb.n_probe, a.vec_id,
+          |    list_sum(list_transform(range(len(a.v)), i -> a.v[i+1]*q.qv[i+1])) / (a.nrm*q.qnrm) AS cos
+          |  FROM probed pb JOIN asg a ON a.cluster = pb.ci, q WHERE a.vec_id <> 0),
+          |ivf AS (SELECT n_probe, vec_id FROM (
+          |    SELECT n_probe, vec_id, row_number() OVER (PARTITION BY n_probe ORDER BY cos DESC, vec_id) AS rk
+          |    FROM cand) r WHERE rk <= 10),
+          |brute AS (SELECT n.vec_id FROM n, q WHERE n.vec_id <> 0
+          |  ORDER BY list_sum(list_transform(range(len(n.v)), i -> n.v[i+1]*q.qv[i+1])) / (n.nrm*q.qnrm) DESC, n.vec_id LIMIT 10)
+          |SELECT CAST(n_probe AS INT) AS n_probe, CAST(COUNT(*) AS BIGINT) AS k,
+          |  CAST(SUM(CASE WHEN vec_id IN (SELECT vec_id FROM brute) THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
+          |  (CAST(((2000000::HUGEINT * SUM(CASE WHEN vec_id IN (SELECT vec_id FROM brute) THEN 1 ELSE 0 END) + COUNT(*)) // (2::HUGEINT * COUNT(*))) AS DOUBLE) / 1000000) AS recall
+          |FROM ivf GROUP BY n_probe ORDER BY n_probe""".stripMargin)),
+
+    QSpec("inverted_index",
+      // Posting lists: per token, document frequency, total term frequency,
+      // and the first 16 doc ids of the sorted posting list (rendered as a
+      // comma-joined string — the declared surface stays scalar-typed so
+      // the driver's row-hash compare never meets a nested column). The
+      // per-doc
+      // distinct step aggregates (token, doc) pairs FIRST — map-side combine
+      // collapses each doc's repeats before the shuffle, and the second
+      // aggregation then builds df/tf/postings in one pass. Postings are
+      // CAPPED at 16 ids per token (a head sample, not the full list): an
+      // uncapped collect_list on a stopword's posting list is driver-safe
+      // here but executor-heap-hostile at 100 TB — the full list at scale
+      // lives partitioned by (token bucket, doc range), never in one array.
+      // df >= 3 keeps the emitted index to the useful-vocabulary slice.
+      (s, dir) => t(s, dir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        .groupBy("token", "doc_id").agg(count(lit(1)).as("tf"))
+        .groupBy("token").agg(
+          count(lit(1)).as("df"),
+          sum("tf").as("total_tf"),
+          concat_ws(",",
+            slice(sort_array(collect_list(col("doc_id"))), 1, 16)).as("postings_head"))
+        .where(col("df") >= 3)
+        .orderBy("token"),
+      Some(
+        """WITH td AS (
+          |  SELECT token, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
+          |  FROM (SELECT doc_id, UNNEST(string_split(text, ' ')) AS token
+          |        FROM documents) x
+          |  GROUP BY token, doc_id)
+          |SELECT token, CAST(COUNT(*) AS BIGINT) AS df,
+          |  CAST(SUM(tf) AS BIGINT) AS total_tf,
+          |  array_to_string((list_sort(list(doc_id)))[1:16], ',') AS postings_head
+          |FROM td GROUP BY token HAVING COUNT(*) >= 3 ORDER BY token""".stripMargin)),
+
+    QSpec("embedding_pca_power",
+      // Top principal component of the mean-centered embeddings — 3 rounds
+      // of distributed power iteration (ext/SimSearch.pcaTopComponent), the
+      // whitening / "all-but-the-top" kernel of embedding post-processing.
+      // Per round: one scan computing d_i = v·eᵢ − v·μ (codegen VectorDot
+      // against the literal direction) and one O(dim)-group shuffle for
+      // w_j = Σ dᵢ·e_ij − μ_j·Σ dᵢ; only dim doubles reach the driver, no
+      // covariance matrix is ever materialized. Deterministic: v₀ = 1/√dim,
+      // no RNG; cross-row double sums commute ~1e-15, round(6) is 9 orders
+      // coarser (the agg_vector_centroid contract). The oracle replays the
+      // same 3 iterations as chained CTEs — the restart-FREE path only: a
+      // null-space restart at this fixture would make the engine diverge
+      // from the oracle's division-by-zero and fail LOUDLY, so equality
+      // also certifies no restart fired (the restart contract itself is
+      // unit-tested on a simplex corpus in ExtSpec).
+      (s, dir) => {
+        import s.implicits._
+        val (v, lam) = graft.ext.SimSearch.pcaTopComponent(
+          s, t(s, dir, "embeddings"), iters = 3, cacheKey = Some(dir))
+        v.zipWithIndex.toSeq.map { case (x, i) => (i + 1, x, lam) }
+          .toDF("pos", "loading_raw", "ev_raw")
+          .select(col("pos"), round(col("loading_raw"), 6).as("loading"),
+            round(col("ev_raw"), 6).as("eigenvalue"))
+          .orderBy("pos")
+      },
+      Some(pcaOracleCtes +
+        """
+          |SELECT v3.j AS pos, ROUND(v3.x, 6) AS loading,
+          |  ROUND(l3.l / (nn.n - 1), 6) AS eigenvalue
+          |FROM v3, l3, nn ORDER BY pos""".stripMargin)),
+
+    QSpec("embedding_abtt",
+      // All-but-the-top retrieval (X16 composed into its end effect): strip
+      // the corpus mean and the power-iteration top component from every
+      // embedding, then rank the top-10 cosine neighbors of query vec 0 in
+      // the whitened space. The per-row transform is a codegen'd HOF against
+      // LITERAL mean/direction arrays (one scan, no shuffle); ranking is the
+      // same broadcast-query TakeOrdered as simsearch_topk. Ordering uses
+      // the ROUNDED similarity with vec_id tiebreak so the rank cannot hinge
+      // on ~1e-15 cross-row summation jitter between engines. The oracle
+      // replays the full chain: 3 PCA iterations, the projection removal,
+      // and the cosine ranking.
+      (s, dir) => graft.ext.SimSearch.abttTopK(
+        s, t(s, dir, "embeddings"), queryVecId = 0, k = 10,
+        cacheKey = Some(dir)),
+      Some(pcaOracleCtes +
+        """,
+          |vdm AS (SELECT SUM(v3.x * mu.m) AS s FROM v3 JOIN mu USING (j)),
+          |di AS (SELECT e.vec_id, SUM(e.v[v3.j] * v3.x) AS d
+          |  FROM e CROSS JOIN v3 GROUP BY 1),
+          |tr AS (SELECT e.vec_id, v3.j AS j,
+          |    e.v[v3.j] - mu.m - v3.x * (di.d - vdm.s) AS x
+          |  FROM e JOIN di USING (vec_id) CROSS JOIN v3
+          |  JOIN mu ON mu.j = v3.j CROSS JOIN vdm),
+          |nrm AS (SELECT vec_id, sqrt(SUM(x * x)) AS n FROM tr GROUP BY 1),
+          |qt AS (SELECT j, x FROM tr WHERE vec_id = 0),
+          |qn AS (SELECT n AS qn FROM nrm WHERE vec_id = 0),
+          |sim AS (SELECT tr.vec_id, SUM(tr.x * qt.x) AS dt
+          |  FROM tr JOIN qt USING (j) WHERE tr.vec_id <> 0 GROUP BY 1)
+          |SELECT sim.vec_id, ROUND(sim.dt / (nrm.n * qn.qn), 6) AS cos
+          |FROM sim JOIN nrm USING (vec_id) CROSS JOIN qn
+          |WHERE nrm.n > 0
+          |ORDER BY ROUND(sim.dt / (nrm.n * qn.qn), 6) DESC, vec_id
+          |LIMIT 10""".stripMargin)),
+
+    QSpec("mine_hard_negatives",
+      // Hard-negative mining for contrastive embedding training: for each
+      // of the first 8 anchors, the 5 most-similar vectors with a
+      // DIFFERENT label (the boundary-hugging negatives a triplet/InfoNCE
+      // loss wants). Anchors broadcast, corpus scans once, label
+      // inequality applied before any distance math, bounded-heap TopKRows
+      // rollup — no window over the corpus, no shuffle of vector bodies.
+      // Ranking on (rounded cos desc, vec_id) is jitter-proof.
+      (s, dir) => SimSearch.hardNegatives(s, t(s, dir, "embeddings"),
+        nQueries = 8, k = 5),
+      Some(
+        """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+          |  FROM embeddings),
+          |n AS (SELECT vec_id, label, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm
+          |  FROM e WHERE list_sum(list_transform(v, x -> x*x)) > 0),
+          |q AS (SELECT vec_id AS q_id, label AS q_label, v AS qv, nrm AS qn
+          |  FROM n WHERE vec_id < 8),
+          |p AS (SELECT q_id, q_label, vec_id, label AS neg_label,
+          |    ROUND(list_sum(list_transform(range(1, len(v)+1), i -> v[i]*qv[i])) / (nrm*qn), 6) AS cos
+          |  FROM n, q WHERE vec_id >= 8 AND label <> q_label),
+          |r AS (SELECT q_id, q_label, vec_id, neg_label, cos,
+          |    CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
+          |  FROM p)
+          |SELECT q_id, q_label, rank, vec_id, neg_label, cos
+          |FROM r WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin)),
+
+    QSpec("simsearch_pq",
+      // Product-quantization retrieval (the IVF-PQ compression half): 8×8
+      // subspaces, 4 codes each (first-4 seed slices), asymmetric-distance
+      // top-10 vs query vec 0. Codebook and query tables are plan-time
+      // literals rounded to integer micros, so scoring is 8 exact long
+      // lookups per row after 32 8-dim codegen dots for encoding — one
+      // scan, no shuffle, TakeOrdered head. The oracle replays the
+      // sub-assignment with the engine's own −2·v·c + ‖c‖² ranking and the
+      // same micro-rounded tables.
+      (s, dir) => SimSearch.pqTopK(s, t(s, dir, "embeddings"),
+        queryVecId = 0, k = 10, cacheKey = Some(dir)),
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |nz AS (SELECT vec_id, v FROM e WHERE list_sum(list_transform(v, x -> x*x)) > 0),
+          |seed AS (SELECT ci, v FROM (
+          |    SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, v FROM nz) s
+          |  WHERE ci < 4),
+          |subm AS (SELECT r.s, seed.ci, seed.v[r.s*8+1 : r.s*8+8] AS cs,
+          |    list_sum(list_transform(seed.v[r.s*8+1 : r.s*8+8], x -> x*x)) AS c2
+          |  FROM seed CROSS JOIN range(8) r(s)),
+          |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+          |qt AS (SELECT s, ci,
+          |    CAST(ROUND(list_sum(list_transform(range(8), i -> qv[s*8+i+1] * cs[i+1])) * 1000000.0, 0) AS BIGINT) AS qdot_m,
+          |    CAST(ROUND(c2 * 1000000.0, 0) AS BIGINT) AS c2_m
+          |  FROM subm, q),
+          |qn AS (SELECT sqrt(list_sum(list_transform(qv, x -> x*x))) AS qn FROM q),
+          |enc AS (SELECT vec_id, s, ci AS code FROM (
+          |    SELECT n.vec_id, sm.s, sm.ci,
+          |      row_number() OVER (PARTITION BY n.vec_id, sm.s ORDER BY
+          |        list_sum(list_transform(range(8), i -> n.v[sm.s*8+i+1] * sm.cs[i+1])) * -2.0 + sm.c2,
+          |        sm.ci) AS rk
+          |    FROM nz n CROSS JOIN subm sm WHERE n.vec_id <> 0) z WHERE rk = 1),
+          |agg AS (SELECT vec_id, CAST(SUM(qt.qdot_m) AS BIGINT) AS am,
+          |    CAST(SUM(qt.c2_m) AS BIGINT) AS rm
+          |  FROM enc JOIN qt ON enc.s = qt.s AND enc.code = qt.ci
+          |  GROUP BY vec_id)
+          |SELECT vec_id,
+          |  ROUND((CAST(am AS DOUBLE)/1000000.0) / (sqrt(CAST(rm AS DOUBLE)/1000000.0) * qn.qn), 6) AS pq_cos
+          |FROM agg, qn WHERE rm > 0
+          |ORDER BY pq_cos DESC, vec_id LIMIT 10""".stripMargin)),
+
+    QSpec("bm25_topk",
+      // BM25 retrieval (Lucene-standard nonnegative idf, k1 = 1.2,
+      // b = 0.75)
+      // for the query {join, vector, dup} — the lexical-ranking
+      // counterpart of the embedding retrievers. k1 = 6/5 and b = 3/4 are
+      // RATIONAL, so the whole per-(doc, term) score reduces to
+      //   idf · 44·T·tf / (20·T·tf + 6·T + 18·dl·D)
+      // (T = corpus tokens, D = docs, dl = doc length) — integer
+      // numerator/denominator with idf = ln(1 + (N−df+½)/(df+½)) =
+      // ln((2N+2)/(2df+1)) in milli-nats (ln of an integer-product ratio,
+      // the select_dsir discipline; the Lucene form is STRICTLY POSITIVE,
+      // so every integer division below sees nonnegative operands — no
+      // floor-vs-truncate exposure), rounded to
+      // integer MICROS per term, summed exactly per doc; the top-20 ranks
+      // on the integer micros (desc, doc_id) so order cannot jitter.
+      // Decimal(38,0) products — no overflow cliff at 100 TB token counts.
+      // Scale shape: one token scan serves dl and tf (the tf branch is
+      // pre-filtered to the 3 query terms before its shuffle); df/idf and
+      // corpus stats are metadata-sized broadcasts; TakeOrdered head.
+      (s, dir) => {
+        val qTerms = Seq("join", "vector", "dup")
+        val dec = "decimal(38,0)"
+        val toks = t(s, dir, "documents")
+          .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+        val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
+        val stats = dl.agg(count(lit(1)).as("nd"), sum("dl").as("tt"))
+        val tf = toks.where(col("tok").isin(qTerms: _*))
+          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+        val idf = tf.groupBy("tok").agg(count(lit(1)).as("df"))
+          .crossJoin(broadcast(stats))
+          .select(col("tok"),
+            round(log((col("nd") * 2 + 2).cast("double") /
+              (col("df") * 2 + 1).cast("double")) * 1000.0, 0)
+              .cast("long").as("idf_milli"))
+        val num = col("idf_milli").cast(dec) * 44 * col("tt").cast(dec) *
+          col("tf").cast(dec) * 1000
+        val den = col("tf").cast(dec) * 20 * col("tt").cast(dec) +
+          col("tt").cast(dec) * 6 + col("dl").cast(dec) * col("nd").cast(dec) * 18
+        tf.join(broadcast(idf), "tok").join(dl, "doc_id")
+          .crossJoin(broadcast(stats))
+          .select(col("doc_id"),
+            ExactMath.ratioRounded(num, den, 0).cast("long").as("sm"))
+          .groupBy("doc_id")
+          .agg(count(lit(1)).as("n_terms"), sum("sm").as("score_micros"))
+          .orderBy(col("score_micros").desc, col("doc_id")).limit(20)
+          .select(col("doc_id"), col("n_terms"), col("score_micros"),
+            ExactMath.ratioRounded(col("score_micros"), lit(1000000L), 6)
+              .as("bm25"))
+      },
+      Some(
+        s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+           |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks GROUP BY doc_id),
+           |stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd, CAST(SUM(dl) AS BIGINT) AS tt FROM dl),
+           |tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM toks
+           |  WHERE tok IN ('join', 'vector', 'dup') GROUP BY 1, 2),
+           |idf AS (SELECT tok,
+           |    CAST(ROUND(ln(CAST(nd*2 + 2 AS DOUBLE) / CAST(df*2 + 1 AS DOUBLE)) * 1000.0, 0) AS BIGINT) AS idf_milli
+           |  FROM (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY tok), stats),
+           |term AS (SELECT doc_id,
+           |    CAST(${ExactMath.ratioRoundedSql(
+                  "idf_milli::HUGEINT * 44 * tt * tf * 1000",
+                  "tf::HUGEINT * 20 * tt + tt::HUGEINT * 6 + dl::HUGEINT * nd * 18", 0)} AS BIGINT) AS sm
+           |  FROM tf JOIN idf USING (tok) JOIN dl USING (doc_id), stats),
+           |d AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms,
+           |    CAST(SUM(sm) AS BIGINT) AS score_micros
+           |  FROM term GROUP BY doc_id)
+           |SELECT doc_id, n_terms, score_micros,
+           |  ${ExactMath.ratioRoundedSql("score_micros", "1000000", 6)} AS bm25
+           |FROM d ORDER BY score_micros DESC, doc_id LIMIT 20""".stripMargin)),
+
+    QSpec("simsearch_hamming",
+      // Binary-code retrieval: sign-bit binarize (SignPack — 1 bit/dim,
+      // 512× smaller than fp64), Hamming-nearest 50 candidates via
+      // XOR+popcount, exact cosine re-rank to top-10. The corpus stage is
+      // one fused codegen scan ending in TakeOrdered — 2 ALU ops of
+      // distance math per vector; the 64-FLOP exact cosine touches only
+      // the 50-row candidate set. Candidate cut ranks on the INTEGER
+      // Hamming distance (vec_id tie-break), so the set is identical on
+      // every engine. Recall vs the exact top-10 is pinned in
+      // Queries12Spec (0.7 on this fixture's near-random embeddings; a
+      // planted duplicate ranks first with hamming 0).
+      (s, dir) => SimSearch.hammingTopK(s, t(s, dir, "embeddings"),
+        queryVecId = 0, k = 10, cand = 50),
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm
+          |  FROM e WHERE list_sum(list_transform(v, x -> x*x)) > 0),
+          |q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 0),
+          |h AS (SELECT vec_id, v, nrm,
+          |    CAST(list_sum(list_transform(range(1, len(v)+1),
+          |      i -> CASE WHEN (v[i] >= 0) != (qv[i] >= 0) THEN 1 ELSE 0 END)) AS INT) AS hamming
+          |  FROM n, q WHERE vec_id <> 0),
+          |c AS (SELECT vec_id, v, nrm, hamming FROM h ORDER BY hamming, vec_id LIMIT 50),
+          |rr AS (SELECT vec_id, hamming,
+          |    ROUND(list_sum(list_transform(range(1, len(v)+1), i -> v[i]*qv[i])) / (nrm*qnrm), 6) AS cos
+          |  FROM c, q)
+          |SELECT rank, vec_id, hamming, cos FROM (
+          |  SELECT CAST(row_number() OVER (ORDER BY cos DESC, vec_id) AS INT) AS rank,
+          |    vec_id, hamming, cos FROM rr) x
+          |WHERE rank <= 10 ORDER BY rank""".stripMargin)),
+
+    QSpec("simsearch_matryoshka",
+      // Matryoshka prefix-dimension retrieval (Kusupati et al. 2022): score
+      // by the first-32-dim cosine (half the FLOPs and — on a columnar
+      // layout — half the bytes per vector), keep the 100 best, re-rank by
+      // full-dim cosine to top-10. Stage-1 ranks on the MICRO-rounded
+      // score (long) with vec_id tie-break — the candidate set cannot flip
+      // on last-ulp jitter; one scan → TakeOrdered, re-rank over the
+      // constant 100-row set. Recall@10 = 0.9 on the fixture (pinned with
+      // the exact-retrieval twin in Queries12Spec).
+      (s, dir) => SimSearch.matryoshkaTopK(s, t(s, dir, "embeddings"),
+        queryVecId = 0, prefixDim = 32, cand = 100, k = 10),
+      Some(
+        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm,
+          |    list_transform(range(1, 33), i -> v[i]) AS pv
+          |  FROM e WHERE list_sum(list_transform(v, x -> x*x)) > 0),
+          |n2 AS (SELECT vec_id, v, nrm, pv,
+          |    sqrt(list_sum(list_transform(pv, x -> x*x))) AS pnrm
+          |  FROM n WHERE list_sum(list_transform(pv, x -> x*x)) > 0),
+          |q AS (SELECT v AS qv, nrm AS qnrm, pv AS qpv, pnrm AS qpnrm FROM n2 WHERE vec_id = 0),
+          |s1 AS (SELECT vec_id, v, nrm,
+          |    CAST(ROUND(list_sum(list_transform(range(1, 33), i -> pv[i]*qpv[i]))
+          |      / (pnrm*qpnrm) * 1000000.0, 0) AS BIGINT) AS s1_micros
+          |  FROM n2, q WHERE vec_id <> 0),
+          |c AS (SELECT vec_id, v, nrm, s1_micros FROM s1 ORDER BY s1_micros DESC, vec_id LIMIT 100),
+          |rr AS (SELECT vec_id, s1_micros,
+          |    ROUND(list_sum(list_transform(range(1, len(v)+1), i -> v[i]*qv[i])) / (nrm*qnrm), 6) AS cos
+          |  FROM c, q)
+          |SELECT rank, vec_id, s1_micros, cos FROM (
+          |  SELECT CAST(row_number() OVER (ORDER BY cos DESC, vec_id) AS INT) AS rank,
+          |    vec_id, s1_micros, cos FROM rr) x
+          |WHERE rank <= 10 ORDER BY rank""".stripMargin)),
+
+    QSpec("embedding_qa_report",
+      // Vector-store intake QA: the screen a pipeline runs BEFORE building
+      // any index on a new embedding batch — wrong-dimension rows (break
+      // every fixed-dim kernel), non-finite elements (NaN poisons cosine
+      // top-k ordering, ±Inf poisons normalization), zero-norm vectors
+      // (undefined direction — every retriever here drops them), and the
+      // norm distribution (p50/p95 — a collapsed or exploding norm spread
+      // flags a bad encoder run). One scan; norms fold through VectorDot
+      // only for clean rows (NaN/Inf must not enter the percentile input).
+      // Percentile surface is INTEGER micros: interpolation between
+      // integer micros lands on exact .5 halves (representable doubles),
+      // where round-to-unit agrees on every engine — whereas /1e6 first
+      // would put the half at the 7th decimal, the engine-ambiguous
+      // boundary ExactMath exists to avoid. The healthy fixture reads
+      // all-zeros on every defect column — the honest corpus answer;
+      // planted defects pinned in Queries12Spec.
+      (s, dir) => {
+        val v = SimSearch.asDouble(col("embedding"))
+        val nonfinite = exists(v, x => isnan(x) || x === Double.PositiveInfinity
+          || x === Double.NegativeInfinity)
+        val base = t(s, dir, "embeddings").select(
+          lit(1L).as("one"),
+          (size(col("embedding")) =!= 64).as("bad_dim"),
+          nonfinite.as("bad_val"),
+          when(!nonfinite && size(col("embedding")) === 64,
+            round(SimSearch.norm(v) * 1e6).cast("long")).as("nrm_micros"))
+        base.agg(
+          count(lit(1)).as("n_vecs"),
+          sum(when(col("bad_dim"), 1L).otherwise(0L)).as("n_bad_dim"),
+          sum(when(!col("bad_dim") && col("bad_val"), 1L).otherwise(0L)).as("n_nonfinite"),
+          sum(when(col("nrm_micros") === 0L, 1L).otherwise(0L)).as("n_zero_norm"),
+          round(expr("percentile(nrm_micros, 0.5D)"), 0).cast("long").as("norm_p50_micros"),
+          round(expr("percentile(nrm_micros, 0.95D)"), 0).cast("long").as("norm_p95_micros"))
+      },
+      Some(
+        """WITH e AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
+          |    len(embedding) <> 64 AS bad_dim,
+          |    len(list_filter(embedding, x -> isnan(CAST(x AS DOUBLE))
+          |      OR CAST(x AS DOUBLE) = CAST('inf' AS DOUBLE)
+          |      OR CAST(x AS DOUBLE) = CAST('-inf' AS DOUBLE))) > 0 AS bad_val
+          |  FROM embeddings),
+          |m AS (SELECT bad_dim, bad_val,
+          |    CASE WHEN NOT bad_val AND NOT bad_dim
+          |      THEN CAST(ROUND(sqrt(list_sum(list_transform(v, x -> x*x))) * 1000000) AS BIGINT)
+          |      ELSE NULL END AS nrm_micros
+          |  FROM e)
+          |SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs,
+          |  CAST(SUM(CASE WHEN bad_dim THEN 1 ELSE 0 END) AS BIGINT) AS n_bad_dim,
+          |  CAST(SUM(CASE WHEN NOT bad_dim AND bad_val THEN 1 ELSE 0 END) AS BIGINT) AS n_nonfinite,
+          |  CAST(SUM(CASE WHEN nrm_micros = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_norm,
+          |  CAST(ROUND(quantile_cont(nrm_micros, 0.5), 0) AS BIGINT) AS norm_p50_micros,
+          |  CAST(ROUND(quantile_cont(nrm_micros, 0.95), 0) AS BIGINT) AS norm_p95_micros
+          |FROM m""".stripMargin)),
+
+    QSpec("simsearch_filtered",
+      // X61 — label-filtered top-10 cosine neighbors of vec 0 (whose own
+      // label is unconstrained — the probe is looked up unfiltered). The
+      // label predicate reaches the parquet scan as a pushed filter
+      // (PlanSpec pin), so distance math touches ~10% of the corpus.
+      (s, dir) => SimSearch.filteredTopK(s, t(s, dir, "embeddings"),
+        queryVecId = 0, k = 10, labelValue = 3),
+      Some(
+        """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
+          |SELECT vec_id, ROUND(list_sum(list_transform(range(1, len(v)+1), i -> v[i]*qv[i])) /
+          |  (sqrt(list_sum(list_transform(v, x -> x*x))) * sqrt(list_sum(list_transform(qv, x -> x*x)))), 6) AS cos
+          |FROM e, q WHERE vec_id <> 0 AND label = 3
+          |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin)),
+
+    QSpec("knn_classify",
+      // X70 — kNN majority-vote classification over the embedding column,
+      // the evaluation face the retrieval tier lacked (knn_join emits
+      // neighbors; this turns them into predictions + a confusion matrix):
+      // 64 probe vectors classified by the majority label of their 5
+      // nearest (rounded-cosine, vec_id-asc ties) among the disjoint rest;
+      // vote ties break to the smallest label. Rides the knn_join kernel
+      // unchanged (broadcast probes, codegen dot, bounded-heap top-k — no
+      // shuffle proportional to the corpus), so the scale story is the
+      // retrieval tier's: brute-force per partition at fixture scale, IVF
+      // bucketing as the 100 TB path. Surface is the O(labels²) confusion
+      // rollup a model-eval job actually reads.
+      (s, dir) => {
+        val emb = t(s, dir, "embeddings")
+        val lab = emb.select(col("vec_id"), col("label"))
+        val pred = SimSearch.knnJoin(s, emb, nQueries = 64, k = 5)
+          .join(lab, Seq("vec_id"))
+          .groupBy("q_id", "label").agg(count(lit(1)).as("n"))
+          .withColumn("rk", row_number().over(
+            Window.partitionBy("q_id").orderBy(col("n").desc, col("label").asc)))
+          .where(col("rk") === 1)
+          .select(col("q_id"), col("label").as("pred_label"))
+        pred
+          .join(lab.select(col("vec_id").as("q_id"), col("label").as("true_label")),
+            Seq("q_id"))
+          .groupBy("true_label", "pred_label").agg(count(lit(1)).as("n"))
+          .orderBy("true_label", "pred_label")
+      },
+      Some(
+        """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+          |n AS (SELECT vec_id, label, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e),
+          |q AS (SELECT vec_id AS q_id, label AS true_label, v AS qv, nrm AS qn FROM n WHERE vec_id < 64),
+          |c AS (SELECT vec_id, label, v, nrm FROM n WHERE vec_id >= 64),
+          |p AS (SELECT q_id, c.vec_id, c.label,
+          |    ROUND(list_sum(list_transform(range(1, len(v)+1), i -> v[i]*qv[i])) / (nrm*qn), 6) AS cos
+          |  FROM c, q),
+          |r AS (SELECT q_id, label, ROW_NUMBER() OVER (
+          |    PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank FROM p),
+          |v AS (SELECT q_id, label, COUNT(*) AS nv FROM r WHERE rank <= 5 GROUP BY 1, 2),
+          |pr AS (SELECT q_id, label AS pred_label FROM (
+          |    SELECT q_id, label, nv, ROW_NUMBER() OVER (
+          |      PARTITION BY q_id ORDER BY nv DESC, label ASC) AS rk FROM v) z
+          |  WHERE rk = 1)
+          |SELECT q.true_label, pr.pred_label, CAST(COUNT(*) AS BIGINT) AS n
+          |FROM pr JOIN q USING (q_id)
+          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)))
+
+  /** Chained-CTE replay of [[graft.ext.SimSearch.pcaTop]]'s three power-
+    * iteration rounds (e/idx/mu/nn/v0 then d_k/w_k/l_k/v_k per round) —
+    * shared by the `embedding_pca_power` and `embedding_abtt` oracles so
+    * the two replays cannot drift. Ends after v3 (no trailing newline);
+    * callers append `\nSELECT …` or `,\n<more CTEs>`. */
+  private def pcaOracleCtes: String = {
+    def iter(k: Int, prev: String): String =
+      s"""d$k AS (SELECT e.vec_id, SUM((e.v[$prev.j] - mu.m) * $prev.x) AS d
+         |  FROM e CROSS JOIN $prev JOIN mu ON mu.j = $prev.j GROUP BY 1),
+         |w$k AS (SELECT idx.j, SUM((e.v[idx.j] - mu.m) * d$k.d) AS w
+         |  FROM e JOIN d$k USING (vec_id) CROSS JOIN idx
+         |  JOIN mu ON mu.j = idx.j GROUP BY 1),
+         |l$k AS (SELECT sqrt(SUM(w * w)) AS l FROM w$k),
+         |v$k AS (SELECT w$k.j, w$k.w / l$k.l AS x FROM w$k, l$k)""".stripMargin
+    s"""WITH e AS (SELECT vec_id,
+       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |  FROM embeddings),
+       |idx AS (SELECT CAST(r.i AS INT) AS j FROM range(1, 65) r(i)),
+       |mu AS (SELECT idx.j AS j, AVG(e.v[idx.j]) AS m
+       |  FROM e CROSS JOIN idx GROUP BY 1),
+       |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM e),
+       |v0 AS (SELECT j, CAST(0.125 AS DOUBLE) AS x FROM idx),
+       |${iter(1, "v0")},
+       |${iter(2, "v1")},
+       |${iter(3, "v2")}""".stripMargin
+  }
+}

@@ -177,7 +177,7 @@ class ListenerSpec extends SparkSpec {
       // manifest outlive sessions (a directory per population)
       "Multimodal.scala" -> Set("cache", "manifestCache"),
       // a write guard: which dir's bucketed-join tables are on disk
-      "Queries5.scala" -> Set("bucketedJoinDir"))
+      "LayoutKeys.scala" -> Set("bucketedJoinDir"))
     val root = new java.io.File("src/main/scala")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
@@ -215,52 +215,65 @@ class ListenerSpec extends SparkSpec {
     // (COVERAGE.md "Window inventory"): doc-bounded frames, per-entity
     // ordered histories, metadata-sized groups, sub-bucketed two-level
     // prefixes, or micro-batch-bounded state. This gate makes the audit
-    // STANDING — a file gaining a partitionBy window must be added here
-    // with its boundedness class, or converted (max_by / TopKRows /
+    // STANDING, per site: a file may hold exactly its audited number of
+    // partitionBy windows, one reason each. A new window must be added
+    // here with its boundedness class, or converted (max_by / TopKRows /
     // groupBy+join-back / two-level) like the thirteen r12 sites.
-    val audited = Set(
-      "Winnow.scala", // doc_id frames + (pair, diagonal) islands — doc-bounded
-      "Queries.scala", // window_running_sum — declared-cut input (≤ 300 keys)
-      "Queries3.scala", // window_lag_lead — per-entity ordered history
-      "Queries4.scala", // locf (status × days spine), tfidf rank (per doc),
-      //                   ntile in-bucket numbering (two-level)
-      "Queries5.scala", // length_bucket_batches in-sub numbering (two-level)
-      "Queries6.scala", // vocab_growth two-level bucket prefix
-      "Queries7.scala", // chunk_cdc (per doc), cluster_keep_policy (~256-doc clusters)
-      "Queries8.scala", // q17 per-part avg window (opt-r15) — per-entity
-      //                   (l_partkey) frames, bounded by part fan-out; the
-      //                   window replaced a second fact scan + fact-sized
-      //                   join-back (one exchange serves avg + predicate)
-      "Queries9.scala", // cohort_retention — user over DISTINCT weeks (≤ #weeks rows)
-      "Queries11.scala", // scd2 (entity history, declared-capped),
-      //                    sample_weight two-level, curriculum 50-row head
-      "Queries16.scala", // knn_classify vote rank — ≤ nQueries(64) partitions
-      //                    of ≤ #labels rows (the post-TopKRows vote rollup);
-      //                    range_partition_bounds group-offset window — the
-      //                    only global window runs over the coarse-group
-      //                    subtotal frame (distinctKeys/groupWidth rows)
-      "Scoring.scala", // top-N per view — table-count-sized
-      "StreamingUsage.scala", // sessionize twin (entity) + LSH flags (micro-batch)
-      "Temporal.scala", // as-of running-last — per-key ordered history
-      "TextAnalysis.scala") // packSequences two-level shard prefix
+    val audited = Map(
+      // fingerprintFrame doc_id frames (2) + matchSpans (pair, diagonal)
+      // islands — doc-bounded
+      "Winnow.scala" -> 3,
+      // window_running_sum — declared-cut input (≤ 300 keys)
+      // window_lag_lead — per-entity ordered history
+      // gapfill_locf — locf over the (status × days) spine
+      // window_ntile — in-bucket numbering (two-level)
+      // q17_small_qty — per-part avg window (opt-r15): per-entity
+      //   (l_partkey) frames, bounded by part fan-out; the window replaced
+      //   a second fact scan + fact-sized join-back (one exchange serves
+      //   avg + predicate)
+      // cohort_retention — user over DISTINCT weeks (≤ #weeks rows)
+      // scd2_intervals — entity history, declared-capped
+      "RelationalKeys.scala" -> 7,
+      // length_bucket_batches — in-sub numbering (two-level, 2 windows)
+      // vocab_growth_curve — two-level bucket prefix
+      // sample_weight_systematic — two-level (2 windows)
+      "TextKeys.scala" -> 5,
+      // text_tfidf — rank per doc
+      // knn_classify — vote rank, ≤ nQueries(64) partitions of ≤ #labels
+      //   rows (the post-TopKRows vote rollup)
+      "RetrievalKeys.scala" -> 2,
+      // cluster_keep_policy — ~256-doc clusters
+      "DedupKeys.scala" -> 1,
+      // rangePartitionBounds' group-offset window — the only global window
+      // runs over the coarse-group subtotal frame (distinctKeys/groupWidth
+      // rows)
+      "Layout.scala" -> 1,
+      // top-N per view — table-count-sized
+      "Scoring.scala" -> 1,
+      // sessionize twin (entity) + LSH flags (micro-batch)
+      "StreamingUsage.scala" -> 2,
+      // as-of running-last (2) — per-key ordered history
+      "Temporal.scala" -> 2,
+      // packSequences two-level shard prefix (2)
+      "TextAnalysis.scala" -> 2)
     val root = new java.io.File("src/main/scala")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     assume(root.isDirectory, "run from repo root")
-    val offenders = walk(root).filter { f =>
+    val sites = walk(root).map { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       // strip line comments so prose explaining WHY a window was removed
       // does not count as a site
-      src.linesIterator
+      f.getName -> src.linesIterator
         .map(l => l.indexOf("//") match { case -1 => l; case i => l.substring(0, i) })
-        .exists(_.contains("Window.partitionBy"))
-    }.map(_.getName).toSet
-    assert((offenders -- audited).isEmpty,
-      s"unaudited Window.partitionBy sites: ${offenders -- audited}")
-    // the allowlist must not go stale either — a converted file comes OFF it
-    assert((audited -- offenders).isEmpty,
-      s"stale window-audit entries: ${audited -- offenders}")
+        .map(_.split("Window\\.partitionBy", -1).length - 1).sum
+    }.groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0)
+    val unaudited = sites.filter { case (f, n) => n > audited.getOrElse(f, 0) }
+    assert(unaudited.isEmpty, s"unaudited Window.partitionBy sites (file -> count): $unaudited")
+    // the inventory must not go stale either — a converted site comes OFF it
+    val stale = audited.filter { case (f, n) => sites.getOrElse(f, 0) < n }
+    assert(stale.isEmpty, s"stale window-audit entries (file -> audited count): $stale")
   }
 
   test("self-hosted advisor: session serves the workload, then advises on it") {

@@ -156,7 +156,7 @@ class Queries10Spec extends SparkSpec {
     val docs = Seq(
       (0L, "the quick fox", "en", 13L),
       (1L, "的 是 了", "zh", 5L)).toDF("doc_id", "text", "lang", "n_chars")
-    val byLang = Queries10.tokenizerFertility(docs).collect()
+    val byLang = surface.TextKeys.tokenizerFertility(docs).collect()
       .map(r => r.getAs[String]("lang") -> r).toMap
     assert(byLang("en").getAs[Double]("bytes_per_char") == 1.0,
       s"ascii should be 1 byte/char: ${byLang("en")}")

@@ -105,7 +105,7 @@ class Queries14Spec extends SparkSpec {
       // two phones, an IP at end-of-string, no email
       (2L, "call 111-222-3333 then 444-555-6666 at 192.168.0.255", "src0"),
       (3L, "clean text with no identifiers at all", "src0")))
-    val out = Queries14.piiRedact(spark.read.parquet(s"$dir/documents.parquet"))
+    val out = graft.ext.TextAnalysis.piiRedact(spark.read.parquet(s"$dir/documents.parquet"))
       .orderBy("doc_id").collect()
     def row(i: Int) = (out(i).getLong(2), out(i).getLong(3), out(i).getLong(4),
       out(i).getString(5))

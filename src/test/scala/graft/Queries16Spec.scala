@@ -121,7 +121,7 @@ class Queries16Spec extends SparkSpec {
       ks.map(k => (java.sql.Timestamp.valueOf(s"$mo-01 00:00:00"), k))
     val orders = (mk("1995-01", keys1) ++ mk("1995-02", Seq(fp, 9L)) ++
       mk("1995-03", Seq(11L, 12L))).toDF("o_orderdate", "o_custkey")
-    val out = Queries16.bloomPartitionIndex(orders, m, 3, fp).collect()
+    val out = graft.ext.Layout.bloomPartitionIndex(orders, m, 3, fp).collect()
       .map(r => r.getString(0) -> ((r.getInt(5), r.getInt(6)))).toMap
     assert(out("1995-01") == ((1, 0)), s"false positive: ${out("1995-01")}")
     assert(out("1995-02") == ((1, 1)), s"true positive: ${out("1995-02")}")
@@ -137,7 +137,7 @@ class Queries16Spec extends SparkSpec {
       (4L, "a b c b c d"), // {abc,bcb,cbc,bcd}: 2/4 → exactly 0.5, flagged
       (5L, "x y z w")      // disjoint → 0.0
     ).toDF("doc_id", "text")
-    val out = Queries16.decontaminateEval(docs, evalMod = 3L, flagAt = 0.5)
+    val out = surface.DedupKeys.decontaminateEval(docs, evalMod = 3L, flagAt = 0.5)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getInt(4)))).toMap
     assert(out(1L) == ((3L, 3L, 1.0, 1)), out(1L).toString)
@@ -157,7 +157,7 @@ class Queries16Spec extends SparkSpec {
       mk("1995-02", Seq(1000.0, 500000.0)) ++
       mk("1995-03", Seq(249100.0, 300000.0)))
       .toDF("o_orderdate", "o_totalprice")
-    val out = Queries16.zonemapPartitionIndex(orders, "o_totalprice",
+    val out = graft.ext.Layout.zonemapPartitionIndex(orders, "o_totalprice",
       249000.0, 249250.0).collect()
       .map(r => r.getString(0) -> ((r.getInt(4), r.getInt(5)))).toMap
     assert(out == Map("1995-01" -> ((0, 0)), "1995-02" -> ((1, 0)),
@@ -170,7 +170,7 @@ class Queries16Spec extends SparkSpec {
     // keys 1..8 × 1 row, B=4 → two keys per bucket; groupWidth=2 forces
     // the two-level cumsum across 4 groups (decomposition exercised)
     val uni = (1L to 8L).flatMap(rows(_, 1)).toDF("o_custkey")
-    val u = Queries16.rangePartitionBounds(uni, "o_custkey", 4, 2L).collect()
+    val u = graft.ext.Layout.rangePartitionBounds(uni, "o_custkey", 4, 2L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(u.toSeq == Seq((0L, 1L, 2L, 2L, 2L), (1L, 3L, 4L, 2L, 2L),
       (2L, 5L, 6L, 2L, 2L), (3L, 7L, 8L, 2L, 2L)), u.mkString(","))
@@ -178,7 +178,7 @@ class Queries16Spec extends SparkSpec {
     // lands WHOLE in bucket 1; buckets 2 of the uniform layout vanish and
     // the tail keys 6..8 start at offset 16·¾ → bucket 3
     val skew = ((1L to 4L) ++ (6L to 8L)).flatMap(rows(_, 1)) ++ rows(5L, 9)
-    val sk = Queries16.rangePartitionBounds(skew.toDF("o_custkey"), "o_custkey", 4, 2L)
+    val sk = graft.ext.Layout.rangePartitionBounds(skew.toDF("o_custkey"), "o_custkey", 4, 2L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(4)))
     assert(sk.toSeq == Seq((0L, 1L, 4L, 4L), (1L, 5L, 5L, 9L), (3L, 6L, 8L, 3L)),
       sk.mkString(","))
@@ -192,7 +192,7 @@ class Queries16Spec extends SparkSpec {
     val orders = Seq(1L, 128L, 255L)
       .map(k => (java.sql.Timestamp.valueOf("1992-01-01 00:00:00"), k))
       .toDF("o_orderdate", "o_custkey")
-    val out = Queries16.zorderLayoutStats(orders, 1992, 84, 16).collect()
+    val out = graft.ext.Layout.zorderLayoutStats(orders, 1992, 84, 16).collect()
       .map(r => (r.getString(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(7)))).toMap
     assert(out(("zorder", 0L)) == ((1L, 1L, 1L, 1L)))
@@ -218,7 +218,7 @@ class Queries16Spec extends SparkSpec {
       ks.map(k => (java.sql.Timestamp.valueOf(s"$mo-01 00:00:00"), k))
     val orders = (mk("1995-01", m1Keys) ++ mk("1995-02", Seq(x)))
       .toDF("o_orderdate", "o_custkey")
-    val out = Queries16.bloomIndexFpr(orders, m, 3, nProbes = 100).collect()
+    val out = graft.ext.Layout.bloomIndexFpr(orders, m, 3, nProbes = 100).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     // exact replay over the 100 present (all corpus keys) + 100 absent
@@ -248,7 +248,7 @@ class Queries16Spec extends SparkSpec {
     // 24 rows (load_ratio 3.0, flagged) while the others sit at 0.33
     val orders = (mk("1997-06", 1L to 8L) ++
       mk("1999-01", Seq.fill(16)(8L))).toDF("o_orderdate", "o_custkey")
-    val out = Queries16.partitionBalanceReport(orders, "1998-01-01",
+    val out = graft.ext.Layout.partitionBalanceReport(orders, "1998-01-01",
       "o_custkey", 4, 2L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(4),
         r.getInt(5)))
@@ -269,7 +269,7 @@ class Queries16Spec extends SparkSpec {
     // months: 01 (max 100), 02 (max 900), 03 (max 400)
     val orders = (mk("1995-01", Seq(100.0)) ++ mk("1995-02", Seq(900.0, 10.0)) ++
       mk("1995-03", Seq(400.0))).toDF("o_orderdate", "o_totalprice")
-    val out = Queries16.workloadPruningSim(qlog, orders).collect()
+    val out = graft.ext.Layout.workloadPruningSim(qlog, orders).collect()
       .map(r => r.getString(0).take(14) ->
         ((r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4)))).toMap
     // date query (2 runs): months 01, 02 < "1995-03" pruned → 2 of 3
@@ -286,7 +286,7 @@ class Queries16Spec extends SparkSpec {
     // 7 each (ceil(7·8/64) = 1), user 5 has 4
     val ev = (Seq.fill(32)(9L) ++ (1L to 4L).flatMap(u => Seq.fill(7)(u)) ++
       Seq.fill(4)(5L)).toDF("user_id")
-    val out = Queries16.saltPlanTopK(ev, nBuckets = 8, topN = 4).collect()
+    val out = graft.ext.Layout.saltPlanTopK(ev, nBuckets = 8, topN = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(out.toSeq == Seq((9L, 32L, 0.5, 4L), (1L, 7L, 0.109375, 1L),
       (2L, 7L, 0.109375, 1L), (3L, 7L, 0.109375, 1L)), out.mkString(","))

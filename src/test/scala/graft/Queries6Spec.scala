@@ -8,7 +8,7 @@ class Queries6Spec extends SparkSpec {
 
   import spark.implicits._
 
-  private def key(name: String) = Queries6.specs.find(_.name == name).get.fn
+  private def key(name: String) = Queries.allSpecs.find(_.name == name).get.fn
 
   test("span_dup_fraction: shared 4-gram spans are flagged, unique ones are not") {
     // docs 1 and 2 share the 4-gram "a b c d" (and only that one); doc 3 is

@@ -1224,10 +1224,10 @@ class StreamingSpec extends SparkSpec {
       .as[(java.sql.Timestamp, Long, Double)].collect().toSeq
     // batch twins: the DECLARED index keys built from the full frame
     val df = rows.toDF("o_orderdate", "o_custkey", "o_totalprice")
-    val bloomWant = Queries16.bloomPartitionIndex(df, 16384L, 3, 777L)
+    val bloomWant = graft.ext.Layout.bloomPartitionIndex(df, 16384L, 3, 777L)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(3), r.getInt(5)))).toMap
-    val zoneWant = Queries16.zonemapPartitionIndex(df, "o_totalprice",
+    val zoneWant = graft.ext.Layout.zonemapPartitionIndex(df, "o_totalprice",
       249000.0, 249250.0).collect()
       .map(r => r.getString(0) -> ((r.getDouble(2), r.getDouble(3)))).toMap
     def run(splits: Seq[Seq[(java.sql.Timestamp, Long, Double)]])
