@@ -2,6 +2,7 @@ package graft
 
 import graft.pipeline.AnalysisPipeline
 import graft.report.ReportExporter
+import org.apache.spark.sql.SparkSession
 
 /** CLI entry point — the analog of the reference's `python -m src.cli`
   * (cli.py:11-137): run the advisor, print the partition scripts, export the
@@ -73,82 +74,90 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    try {
-      // the SAME timeFilter scopes the recommendations AND the exported
-      // artifacts — a filtered dashboard next to whole-history scripts
-      // would silently mislead
-      val recs = AnalysisPipeline.run(spark, sfDir, timeFilter = timeFilter).collect()
-      recs.foreach { r =>
-        println(r.getAs[String]("script"))
-      }
+    try advise(spark, sfDir, outDir, timeFilter, execute, catalog, namespace)
+    finally spark.stop()
+  }
 
-      ReportExporter.export(spark, sfDir, outDir, timeFilter)
-      println(s"artifacts exported to $outDir/")
+  /** Everything Main does with a session: print the balance-vetted advice,
+    * export the artifacts, and under `execute` apply each accepted spec. */
+  private[graft] def advise(spark: SparkSession, sfDir: String, outDir: String,
+      timeFilter: Option[String], execute: Boolean, catalog: Option[String],
+      namespace: String): Unit = {
+    // the SAME timeFilter scopes the recommendations AND the exported
+    // artifacts — a filtered dashboard next to whole-history scripts
+    // would silently mislead. What is printed is what --execute applies:
+    // the balance-vetted advice, demoted candidates excluded
+    val recs = AnalysisPipeline.runVetted(spark, sfDir, timeFilter = timeFilter)._1.collect()
+    recs.foreach { r =>
+      println(r.getAs[String]("script"))
+    }
 
-      // `--catalog rest:<url>` routes commits through the Iceberg REST
-      // catalog protocol (the service is the commit authority); tables the
-      // service does not serve fall through to the filesystem probe, and a
-      // commit failure on one view must not abort the remaining views
-      // (partial application with no report is worse than either outcome)
-      val restCat = catalog.filter(_.startsWith("rest:")).map(c =>
-        graft.catalog.IcebergRest.Catalog(c.stripPrefix("rest:"), namespace))
-      val hmsCat = catalog.filter(_.startsWith("hms:")).map(c =>
-        graft.catalog.IcebergHms.parseUri(c.stripPrefix("hms:")))
+    ReportExporter.export(spark, sfDir, outDir, timeFilter)
+    println(s"artifacts exported to $outDir/")
 
-      if (execute) {
-        recs.filter(r => r.getAs[String]("partition_spec") != null).foreach { r =>
-          val view = r.getAs[String]("view")
-          val spec = r.getAs[String]("partition_spec")
-          val tableDir = s"$sfDir/$view"
-          if (restCat.exists(c => graft.catalog.IcebergRest.isIcebergTable(c, view))) {
-            try {
-              val specId = graft.catalog.IcebergRest.applySpec(restCat.get, view, spec)
-              println(s"committed REPLACE PARTITION SPEC for $view via REST catalog " +
-                s"(default-spec-id $specId)")
-            } catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"REST commit FAILED for $view: ${e.getMessage} " +
-                "— continuing with the remaining recommendations")
-            }
-          } else if (hmsCat.exists(c => graft.catalog.IcebergHms.isIcebergTable(c, view))) {
-            try {
-              val loc = graft.catalog.IcebergHms.applySpec(spark, hmsCat.get, view, spec)
-              println(s"committed REPLACE PARTITION SPEC for $view via HMS catalog " +
-                s"(metadata $loc)")
-            } catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"HMS commit FAILED for $view: ${e.getMessage} " +
-                "— continuing with the remaining recommendations")
-            }
-          } else if (graft.catalog.IcebergMeta.isIcebergTable(spark, tableDir)) {
-            // S5 executed natively: the table is a filesystem Iceberg
-            // table, so REPLACE PARTITION SPEC commits as real spec
-            // evolution against its metadata (cli.py:124-133's execute).
-            // Guarded like the catalog branches: one failed commit (e.g. a
-            // supersession or an inconclusive verification) must not abort
-            // the remaining views
-            try {
-              val v = graft.catalog.IcebergMeta.applySpec(spark, tableDir, spec)
-              println(s"committed REPLACE PARTITION SPEC for $view (metadata v$v)")
-            } catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"filesystem commit FAILED for $view: ${e.getMessage} " +
-                "— continuing with the remaining recommendations")
-            }
-          } else {
-            // parquet fixture: materialize the first partition key as a
-            // real partitioned layout (the physical effect of the spec);
-            // fragment splitting goes through THE shared depth-aware
-            // splitter, not an ad-hoc split that breaks on `bucket(4, c)`
-            val firstSpec = graft.catalog.IcebergMeta.splitFragments(spec).head
-            val df = graft.catalog.TableRegistry.table(spark, sfDir, view)
-            val (colName, partCol) = graft.recommend.SpecParser.toColumn(firstSpec, df)
-            df.withColumn(s"__p_$colName", partCol)
-              .write.mode("overwrite").partitionBy(s"__p_$colName")
-              .parquet(s"$outDir/partitioned/$view")
-            println(s"materialized $view partitioned by $firstSpec")
+    // `--catalog rest:<url>` routes commits through the Iceberg REST
+    // catalog protocol (the service is the commit authority); tables the
+    // service does not serve fall through to the filesystem probe, and a
+    // commit failure on one view must not abort the remaining views
+    // (partial application with no report is worse than either outcome)
+    val restCat = catalog.filter(_.startsWith("rest:")).map(c =>
+      graft.catalog.IcebergRest.Catalog(c.stripPrefix("rest:"), namespace))
+    val hmsCat = catalog.filter(_.startsWith("hms:")).map(c =>
+      graft.catalog.IcebergHms.parseUri(c.stripPrefix("hms:")))
+
+    if (execute) {
+      recs.filter(r => r.getAs[String]("partition_spec") != null).foreach { r =>
+        val view = r.getAs[String]("view")
+        val spec = r.getAs[String]("partition_spec")
+        val tableDir = s"$sfDir/$view"
+        if (restCat.exists(c => graft.catalog.IcebergRest.isIcebergTable(c, view))) {
+          try {
+            val specId = graft.catalog.IcebergRest.applySpec(restCat.get, view, spec)
+            println(s"committed REPLACE PARTITION SPEC for $view via REST catalog " +
+              s"(default-spec-id $specId)")
+          } catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"REST commit FAILED for $view: ${e.getMessage} " +
+              "— continuing with the remaining recommendations")
           }
+        } else if (hmsCat.exists(c => graft.catalog.IcebergHms.isIcebergTable(c, view))) {
+          try {
+            val loc = graft.catalog.IcebergHms.applySpec(spark, hmsCat.get, view, spec)
+            println(s"committed REPLACE PARTITION SPEC for $view via HMS catalog " +
+              s"(metadata $loc)")
+          } catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"HMS commit FAILED for $view: ${e.getMessage} " +
+              "— continuing with the remaining recommendations")
+          }
+        } else if (graft.catalog.IcebergMeta.isIcebergTable(spark, tableDir)) {
+          // S5 executed natively: the table is a filesystem Iceberg
+          // table, so REPLACE PARTITION SPEC commits as real spec
+          // evolution against its metadata (cli.py:124-133's execute).
+          // Guarded like the catalog branches: one failed commit (e.g. a
+          // supersession or an inconclusive verification) must not abort
+          // the remaining views
+          try {
+            val v = graft.catalog.IcebergMeta.applySpec(spark, tableDir, spec)
+            println(s"committed REPLACE PARTITION SPEC for $view (metadata v$v)")
+          } catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"filesystem commit FAILED for $view: ${e.getMessage} " +
+              "— continuing with the remaining recommendations")
+          }
+        } else {
+          // parquet fixture: materialize the first partition key as a
+          // real partitioned layout (the physical effect of the spec);
+          // fragment splitting goes through THE shared depth-aware
+          // splitter, not an ad-hoc split that breaks on `bucket(4, c)`
+          val firstSpec = graft.catalog.IcebergMeta.splitFragments(spec).head
+          val df = graft.catalog.TableRegistry.table(spark, sfDir, view)
+          val (colName, partCol) = graft.recommend.SpecParser.toColumn(firstSpec, df)
+          df.withColumn(s"__p_$colName", partCol)
+            .write.mode("overwrite").partitionBy(s"__p_$colName")
+            .parquet(s"$outDir/partitioned/$view")
+          println(s"materialized $view partitioned by $firstSpec")
         }
-      } else {
-        println("dry run (pass --execute to materialize partitioned layouts)")
       }
-    } finally spark.stop()
+    } else {
+      println("dry run (pass --execute to materialize partitioned layouts)")
+    }
   }
 }

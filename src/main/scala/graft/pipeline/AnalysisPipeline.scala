@@ -7,11 +7,17 @@ import graft.score.Scoring
 import graft.usage.Usage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** End-to-end advisor pipeline (reference cli.py:11-137 stages 3–8), fully
   * native: discover → profile → parse workload → score → recommend. Each
   * statistic is computed once and reused (the reference recomputed
   * cardinality/performance twice — cli.py:83-89 vs partitioning.py:334-335).
+  * Profiling and the per-text workload state run in Spark; everything after
+  * them is catalog-sized and runs in plain Scala through one core
+  * ([[advise]]), as the reference's pandas tail does; entry points return
+  * local frames.
   */
 object AnalysisPipeline {
 
@@ -43,8 +49,6 @@ object AnalysisPipeline {
     // scan, not the sum). On small executors (local[4]) concurrent jobs
     // oversubscribe and measure ~3× slower — stay serial there.
     if (spark.sparkContext.defaultParallelism >= 16 && vs.size > 1) {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
       // cap the submission pool: threads mostly block on job completion, but
       // one-per-table is unbounded against a warehouse-scale catalog (500
       // tables = 500 driver threads); 32 in-flight jobs saturates any
@@ -84,12 +88,10 @@ object AnalysisPipeline {
     * pipeline entry points don't rescan the query log. The memo reads the
     * `events` log and the profiled tables' column lists, so a change to
     * either rebuilds it. */
-  private def workloadFor(spark: SparkSession, sfDir: String)
-      : (Seq[(String, Long)], Seq[(String, String, Long)], Seq[(String, Double)]) =
+  private def workloadFor(spark: SparkSession, sfDir: String): Scoring.Workload =
     graft.Memo(spark, s"workload:$sfDir",
         (TableRegistry.profiledTables :+ "events").map(TableRegistry.path(sfDir, _))) {
-      computeWorkload(spark, views(spark, sfDir),
-        TableRegistry.queryLog(spark, sfDir))
+      workloadOf(spark, views(spark, sfDir), textStatsOf(TableRegistry.queryLog(spark, sfDir)))
     }
 
   /** The per-distinct-text aggregate STATE every log-derived statistic is
@@ -108,16 +110,17 @@ object AnalysisPipeline {
         sum(when(Scoring.isInteractiveCol, lit(2.0)).otherwise(lit(1.0)))
           .as("sum_priority"))
 
-  /** Workload-stat core over an arbitrary (views, queryLog) pair — shared by
-    * the fixture path ([[workloadFor]]) and the catalog path. One full scan
-    * of the log (building the per-text state), then metadata-sized work. */
-  private def computeWorkload(spark: SparkSession, vs: Seq[ViewMeta],
-      rawQueryLog: DataFrame)
-      : (Seq[(String, Long)], Seq[(String, String, Long)], Seq[(String, Double)]) =
-    computeWorkloadFromStats(spark, vs, textStatsOf(rawQueryLog))
+  /** The workload's heavy hitters — the [[maxWorkloadTexts]] most frequent
+    * texts of the per-text state (anything dropped is logged, never
+    * silent) — parsed once on the driver, for every derivation to share. */
+  def parsedWorkload(spark: SparkSession, textStats: DataFrame)
+      : Seq[(String, Option[graft.introspect.QueryIntrospector.SqlRefs])] =
+    graft.introspect.QueryIntrospector.parseAll(spark,
+      graft.introspect.QueryIntrospector.topTextsByCount(textStats, maxWorkloadTexts))
 
-  /** Workload-stat core over per-text aggregate state ([[textStatsOf]]) —
-    * the shared tail of the batch path and the incremental streaming path.
+  /** Workload statistics from per-text aggregate state ([[textStatsOf]]) —
+    * the one derivation behind the batch, filtered, catalog and streaming
+    * paths.
     *
     * 100 TB posture: the state DataFrame is one row per distinct text
     * (distributed, never collected whole); only the maxWorkloadTexts
@@ -125,70 +128,85 @@ object AnalysisPipeline {
     * coverage — the advisor's scores are frequency-weighted, so the dropped
     * tail moves them least), and the three derivations are joins against the
     * cached state, not rescans of the log. */
-  private[graft] def computeWorkloadFromStats(spark: SparkSession, vs: Seq[ViewMeta],
-      textStats: DataFrame)
-      : (Seq[(String, Long)], Seq[(String, String, Long)], Seq[(String, Double)]) = {
+  private def workloadOf(spark: SparkSession, vs: Seq[ViewMeta],
+      textStats: DataFrame): Scoring.Workload = {
     val stats = textStats.cache()
     try {
-      // heavy-hitter selection straight off the state (it already carries
-      // per-text counts) through the ONE shared selector — anything dropped
-      // is logged, never silent
-      val texts = graft.introspect.QueryIntrospector.topTextsByCount(
-        stats, maxWorkloadTexts)
-      // one driver-side parse of the capped texts, shared by all three
-      // derivations — the reference re-parsed the log per analysis stage
-      val parsed = graft.introspect.QueryIntrospector.parseAll(spark, texts)
+      val parsed = parsedWorkload(spark, stats)
       val refsDf = Scoring.parsedRefsFrom(spark, parsed).cache()
       try {
-        val usage = Usage.weightedFrequencyFromStats(spark, vs, stats, parsed)
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        val (_, colWeights) = Scoring.performanceMetricsFromStats(stats, refsDf)
-        val weights = colWeights.collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-        val priorities = Scoring.viewPrioritiesFromStats(stats, refsDf)
-          .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-        (usage, weights, priorities)
+        Scoring.collectWorkload(Usage.weightedFrequencyFromStats(spark, vs, stats, parsed),
+          Scoring.performanceMetricsFromStats(stats, refsDf)._2,
+          Scoring.viewPrioritiesFromStats(stats, refsDf))
       } finally refsDf.unpersist()
     } finally stats.unpersist()
   }
 
-  /** Composite partition scores for every (view, column) — all statistics
-    * computed once (each memoized at metadata size). */
-  def scores(spark: SparkSession, sfDir: String,
-      approxCardinality: Boolean = false): DataFrame = {
-    import spark.implicits._
+  /** Everything one advise pass produces: every scored (view, column), one
+    * recommendation per view, and — on a vetted pass — each ranked
+    * candidate's balance evidence. */
+  final case class Advice(
+      scored: Seq[Scoring.Scored],
+      recommendations: Seq[Recommender.Recommendation],
+      evidence: Seq[Balance.VettedCandidate])
+
+  /** The one tail every entry point runs, in plain Scala over catalog-sized
+    * rows: score → rank → select transforms → (balance-vet) → scripts.
+    *
+    * With `vet = Some((tableFor, maxSkew))`, every ranked candidate's
+    * selected transform is evaluated against its table (`Balance.vet`, the
+    * `partition_size_report` shape), and candidates whose max/mean skew
+    * exceeds `maxSkew` (or that collapse to a single partition) are DEMOTED
+    * before script assembly — a recommendation that cannot produce
+    * balanced partitions is not a recommendation. `qualify` names each view
+    * in its script. */
+  private def advise(profiles: Seq[Profiler.ColumnProfile], workload: Scoring.Workload,
+      topN: Int, vs: Seq[String], vet: Option[(String => DataFrame, Double)],
+      qualify: String => String = identity): Advice = {
+    val scored = Scoring.score(profiles, workload)
+    val candidates = Scoring.rank(scored, topN)(_.profile.view, _.profile.column, _.score)
+      .map { case (s, k) =>
+        val p = s.profile
+        Recommender.Candidate(p.view, p.column, k.toLong, s.score, Recommender.spec(
+          p.column, p.dataType, p.cardinality, p.valueRange, p.dateGranularity))
+      }
+    val evidence = vet.fold(Seq.empty[Balance.VettedCandidate]) { case (tableFor, maxSkew) =>
+      Balance.vet(candidates.map(c => (c.view, c.column, c.rank, c.spec)), tableFor, maxSkew)
+    }
+    val demoted = evidence.filterNot(_.accepted).map(v => (v.view, v.column)).toSet
+    val kept = candidates.filterNot(c => demoted((c.view, c.column)))
+      .map(c => c.copy(view = qualify(c.view)))
+    Advice(scored, Recommender.render(kept, vs.map(qualify)), evidence)
+  }
+
+  /** [[advise]] over the fixture tables at `sfDir`. The workload is the
+    * memoized whole `events` log, that log under `timeFilter` (a SQL
+    * predicate, e.g. `"ts >= 1704844800000000000"`), or caller-supplied
+    * per-text state ([[textStatsOf]] shape); profiles are data-side
+    * statistics and stay unfiltered and memoized. `maxSkew` turns on
+    * balance vetting. */
+  private[graft] def adviceFor(spark: SparkSession, sfDir: String,
+      approxCardinality: Boolean = false, topN: Int = 3,
+      timeFilter: Option[String] = None, textStats: Option[DataFrame] = None,
+      maxSkew: Option[Double] = None): Advice = {
     // profile scans and workload derivations touch disjoint inputs — overlap
     // them (cold-cache wall clock becomes max of the two, not the sum). Both
     // sides first read the views' schemas; resolve the tables before the
     // fork, or each memoized table frame is built (one schema job) by both.
-    views(spark, sfDir)
-    val profilesF = {
-      import scala.concurrent.{ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Future(profilesFor(spark, sfDir, approxCardinality))
-    }
-    val workload = workloadFor(spark, sfDir)
-    val profiles = {
-      import scala.concurrent.Await
-      import scala.concurrent.duration.Duration
-      Await.result(profilesF, Duration.Inf)
-    }
-    assembleScores(spark, profiles, workload)
+    val vs = views(spark, sfDir)
+    val profilesF = Future(profilesFor(spark, sfDir, approxCardinality))(ExecutionContext.global)
+    val stats = textStats.orElse(timeFilter.map(f =>
+      textStatsOf(TableRegistry.queryLog(spark, sfDir).where(expr(f)))))
+    val workload = stats.fold(workloadFor(spark, sfDir))(workloadOf(spark, vs, _))
+    advise(Await.result(profilesF, Duration.Inf), workload, topN, vs.map(_.view),
+      maxSkew.map(m => (TableRegistry.table(spark, sfDir, _), m)))
   }
 
-  /** Collected statistics → composite score DataFrame (shared tail of the
-    * fixture and catalog paths). */
-  private def assembleScores(spark: SparkSession,
-      profiles: Seq[Profiler.ColumnProfile],
-      workload: (Seq[(String, Long)], Seq[(String, String, Long)], Seq[(String, Double)]))
-      : DataFrame = {
-    import spark.implicits._
-    val (usageRows, weightRows, priorityRows) = workload
-    val usage = usageRows.toDF("name", "weighted_frequency")
-    val colWeights = weightRows.toDF("table", "column", "weight")
-    val priorities = priorityRows.toDF("table", "avg_priority")
-    Scoring.partitionScores(profiles.toDF(), usage, colWeights, priorities)
-  }
+  /** Composite partition scores for every (view, column) — all statistics
+    * computed once (each memoized at metadata size); a local frame. */
+  def scores(spark: SparkSession, sfDir: String,
+      approxCardinality: Boolean = false): DataFrame =
+    Scoring.scoresFrame(spark, adviceFor(spark, sfDir, approxCardinality).scored)
 
   /** Catalog-discovery advisor (reference cli.py's real flow: discover from
     * information_schema → profile → score → recommend): runs the whole
@@ -205,28 +223,18 @@ object AnalysisPipeline {
       db: Option[String] = None,
       nameFilter: String => Boolean = _ => true,
       approxCardinality: Boolean = false, topN: Int = 3): DataFrame =
-    runFromCatalogCore(spark, vs => computeWorkload(spark, vs, queryLog),
-      db, nameFilter, approxCardinality, topN)
+    runFromCatalogStats(spark, textStatsOf(queryLog), db, nameFilter, approxCardinality, topN)
 
   /** [[runFromCatalog]] over maintained per-text aggregate state
     * ([[textStatsOf]] shape) instead of a raw log — the incremental path:
     * a streaming advisor merges each micro-batch into the state and
     * re-derives ONLY the scores here, so per-batch work is O(batch + state),
     * never O(accumulated history). Exact equivalence with the batch path is
-    * by construction: both funnel through [[computeWorkloadFromStats]]. */
+    * by construction: both funnel through the same workload derivation. */
   def runFromCatalogStats(spark: SparkSession, textStats: DataFrame,
       db: Option[String] = None,
       nameFilter: String => Boolean = _ => true,
-      approxCardinality: Boolean = false, topN: Int = 3): DataFrame =
-    runFromCatalogCore(spark, vs => computeWorkloadFromStats(spark, vs, textStats),
-      db, nameFilter, approxCardinality, topN)
-
-  private def runFromCatalogCore(spark: SparkSession,
-      workloadOf: Seq[ViewMeta] =>
-        (Seq[(String, Long)], Seq[(String, String, Long)], Seq[(String, Double)]),
-      db: Option[String],
-      nameFilter: String => Boolean,
-      approxCardinality: Boolean, topN: Int): DataFrame = {
+      approxCardinality: Boolean = false, topN: Int = 3): DataFrame = {
     val resolved = TableRegistry.fromCatalogResolved(spark, db, nameFilter)
     require(resolved.nonEmpty, "no catalog tables matched — register temp views or pass a db")
     val vs = resolved.map(_._1)
@@ -239,63 +247,43 @@ object AnalysisPipeline {
     val parseSafeOf = resolved.map { case (v, _, pq) => v.view -> pq }.toMap
     val profiles = computeProfiles(spark, vs,
       name => spark.table(parseSafeOf(name)), approxCardinality)
-    val workload = workloadOf(vs)
-    val ranked = Scoring.topNPerView(assembleScores(spark, profiles, workload), topN)
     // emit scripts under the FULLY-QUALIFIED names: an `ALTER TABLE bare`
     // script run from a session on a different current database would hit
     // the wrong (or no) table — the exact class of bug the profiling-side
     // qualification above fixes
-    val qmapEntries = resolved.flatMap { case (v, q, _) => Seq(lit(v.view), lit(q)) }
-    val qualifiedView = coalesce(element_at(map(qmapEntries: _*), col("view")), col("view"))
-    Recommender.scripts(spark,
-      ranked.withColumn("view", qualifiedView),
-      resolved.map(_._2))
+    val qualified = resolved.map { case (v, q, _) => v.view -> q }.toMap
+    Recommender.frame(spark, advise(profiles, workloadOf(spark, vs, textStats), topN,
+      vs.map(_.view), vet = None, qualify = v => qualified.getOrElse(v, v)).recommendations)
   }
 
   /** Full run → one recommendation row per profiled view:
-    * (view, partition_spec, script).
+    * (view, partition_spec, script), a local frame.
     *
     * `timeFilter` (a SQL predicate over the query log, e.g.
     * `"ts >= '2026-08-01'"`) scopes the WORKLOAD side of the scoring to a
     * log window — the same filter `ReportExporter.export` applies to the
     * dashboard artifacts, so `Main --time-filter` produces
     * recommendations and artifacts from the SAME window rather than
-    * silently scoring the whole history. Profiles are data-side statistics
-    * and stay unfiltered (and memoized); a filtered run bypasses the
+    * silently scoring the whole history. A filtered run bypasses the
     * per-sfDir workload memo, which is keyed for the unfiltered log. */
   def run(spark: SparkSession, sfDir: String, approxCardinality: Boolean = false,
-      topN: Int = 3, timeFilter: Option[String] = None): DataFrame = {
-    val ranked = timeFilter match {
-      case None =>
-        Scoring.topNPerView(scores(spark, sfDir, approxCardinality), topN)
-      case Some(f) =>
-        val vs = views(spark, sfDir)
-        val workload = computeWorkload(spark, vs,
-          TableRegistry.queryLog(spark, sfDir).where(expr(f)))
-        val profiles = profilesFor(spark, sfDir, approxCardinality)
-        Scoring.topNPerView(assembleScores(spark, profiles, workload), topN)
-    }
-    Recommender.scripts(spark, ranked, TableRegistry.profiledTables)
-  }
+      topN: Int = 3, timeFilter: Option[String] = None): DataFrame =
+    Recommender.frame(spark,
+      adviceFor(spark, sfDir, approxCardinality, topN, timeFilter).recommendations)
 
   /** [[run]] with the advisor loop CLOSED through its own what-if balance
-    * evidence: every ranked candidate's selected transform is evaluated
-    * against the actual table (`Balance.evidence` — the
-    * `partition_size_report` shape), and candidates whose max/mean skew
-    * exceeds `maxSkew` (or that collapse to a single partition) are DEMOTED
-    * before script assembly. A view whose candidates are all demoted gets
-    * the reference's "no suitable columns" comment — a recommendation that
-    * cannot produce balanced partitions is not a recommendation.
+    * evidence (see [[advise]]): a view whose candidates are all demoted
+    * gets the reference's "no suitable columns" comment.
     *
     * @return (recommendations — same shape as [[run]], demoted candidates
     *         excluded; evidence — one row per vetted candidate with its
     *         balance numbers and accept/demote decision)
     */
   def runVetted(spark: SparkSession, sfDir: String, maxSkew: Double = 8.0,
-      approxCardinality: Boolean = false, topN: Int = 3): (DataFrame, DataFrame) = {
-    val ranked = Scoring.topNPerView(scores(spark, sfDir, approxCardinality), topN)
-    vetAndScript(spark, sfDir, ranked, maxSkew)
-  }
+      approxCardinality: Boolean = false, topN: Int = 3,
+      timeFilter: Option[String] = None): (DataFrame, DataFrame) =
+    vetted(spark, adviceFor(spark, sfDir, approxCardinality, topN, timeFilter,
+      maxSkew = Some(maxSkew)))
 
   /** [[runVetted]] over maintained per-text workload state
     * ([[textStatsOf]] shape — e.g. a [[graft.streaming.StreamingAdvisor]]
@@ -303,36 +291,14 @@ object AnalysisPipeline {
     * re-analysis path ([[graft.streaming.DriftReanalysis]]), where the
     * advisor's accumulated workload is re-scored and balance-vetted
     * because the data distribution moved, not because the log did.
-    * Profiles re-read the advised tables (current contents are what a
-    * re-analysis must reflect); equivalence with the batch scoring is by
-    * construction — both funnel through [[computeWorkloadFromStats]]. */
+    * Profiles re-read the advised tables when their files change (current
+    * contents are what a re-analysis must reflect). */
   def runVettedFromStats(spark: SparkSession, sfDir: String,
       textStats: DataFrame, maxSkew: Double = 8.0,
-      approxCardinality: Boolean = false, topN: Int = 3): (DataFrame, DataFrame) = {
-    val vs = views(spark, sfDir)
-    val workload = computeWorkloadFromStats(spark, vs, textStats)
-    val profiles = profilesFor(spark, sfDir, approxCardinality)
-    val ranked = Scoring.topNPerView(assembleScores(spark, profiles, workload), topN)
-    vetAndScript(spark, sfDir, ranked, maxSkew)
-  }
+      approxCardinality: Boolean = false, topN: Int = 3): (DataFrame, DataFrame) =
+    vetted(spark, adviceFor(spark, sfDir, approxCardinality, topN,
+      textStats = Some(textStats), maxSkew = Some(maxSkew)))
 
-  /** Shared tail of the vetted paths: what-if balance evidence per ranked
-    * candidate, demotion, script assembly. */
-  private def vetAndScript(spark: SparkSession, sfDir: String,
-      ranked: DataFrame, maxSkew: Double): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    // candidate list is topN × views — metadata-sized, like the profile rows
-    val candidates = Recommender.withSelectedSpec(ranked)
-      .select(col("view"), col("column"), col("rank").cast("long"), col("spec"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3))).toSeq
-    val vetted = Balance.vet(candidates,
-      name => TableRegistry.table(spark, sfDir, name), maxSkew)
-    val evidence = vetted.toDF()
-    val demoted = vetted.filter(!_.accepted).map(v => (v.view, v.column)).toDF("view", "column")
-    // drop demoted candidates by identity; broadcast — the demotion list is
-    // at most topN × views rows
-    val kept = ranked.join(broadcast(demoted), Seq("view", "column"), "left_anti")
-    (Recommender.scripts(spark, kept, TableRegistry.profiledTables), evidence)
-  }
+  private def vetted(spark: SparkSession, a: Advice): (DataFrame, DataFrame) =
+    (Recommender.frame(spark, a.recommendations), spark.createDataFrame(a.evidence))
 }

@@ -26,12 +26,6 @@ object Balance {
   final case class Evidence(
       nPartitions: Long, nRows: Long, maxRows: Long, skew: Double)
 
-  /** Evaluate one fragment (`month(c)`, `bucket(8, c)`, `truncate(c, w)`,
-    * bare `c`) against its table. Single-fragment convenience over
-    * [[evidenceAll]]. */
-  def evidence(df: DataFrame, fragment: String): Evidence =
-    evidenceAll(df, Seq(fragment))(fragment)
-
   /** Grouping-set columns carry a long grouping_id; stay WELL below any
     * engine bit-width concern and keep the Expand factor bounded. */
   private val maxSetsPerPass = 30

@@ -67,19 +67,20 @@ object Transforms {
       dateGranularity: Option[String])
 
   /** T4: transform-selection rules, branch-for-branch with
-    * iceberg_utils.py:1-46 mapped onto Spark types:
+    * iceberg_utils.py:1-46, keyed on the type name the profiler records
+    * (`DataType.simpleString`):
     *   date/timestamp → granularity-driven day|month|year (default month)
     *   string         → bucket(16) if cardinality > 10000 else identity
     *   int/bigint     → bucket(clamp(card/500, 4, 32)) if card > 1000;
     *                    else truncate(100) if range > 10000; else identity
     *   anything else  → identity
     */
-  def select(dataType: DataType, stats: ColStats): PartitionTransform = dataType match {
-    case _: DateType | _: TimestampType | _: TimestampNTZType =>
+  def select(dataType: String, stats: ColStats): PartitionTransform = dataType match {
+    case "date" | "timestamp" | "timestamp_ntz" =>
       DateTransform(stats.dateGranularity.getOrElse("month"))
-    case _: StringType =>
+    case "string" =>
       if (stats.cardinality > 10000) BucketTransform(16) else IdentityTransform
-    case _: IntegerType | _: LongType =>
+    case "int" | "bigint" =>
       if (stats.cardinality > 1000) {
         // clamp on LONG before narrowing: (card/500).toInt wraps negative
         // past card ~ 1.07e12, silently selecting bucket(4) instead of the
@@ -89,25 +90,5 @@ object Transforms {
       } else if (stats.valueRange.exists(_ > 10000)) TruncateTransform(100)
       else IdentityTransform
     case _ => IdentityTransform
-  }
-
-  /** Same selection, as SQL-expressible column logic over a profile row
-    * (dataType simpleString, cardinality, valueRange, dateGranularity) —
-    * renders the spec fragment. Kept semantically identical to [[select]];
-    * used where selection must stay distributed (and by the DuckDB oracle,
-    * which mirrors this CASE shape). */
-  def selectExpr(dataType: Column, column: Column, card: Column, range: Column, gran: Column): Column = {
-    // clamp as LONG, cast int only after: the int cast of card/500
-    // overflows under ANSI (run killed) for warehouse-scale cardinalities
-    val bucketN = least(greatest((card.cast("long") / 500).cast("long"), lit(4L)), lit(32L)).cast("int")
-    when(dataType.isin("date", "timestamp", "timestamp_ntz"),
-      concat(coalesce(gran, lit("month")), lit("("), column, lit(")")))
-      .when(dataType === "string",
-        when(card > 10000, concat(lit("bucket(16, "), column, lit(")"))).otherwise(column))
-      .when(dataType.isin("int", "bigint"),
-        when(card > 1000, concat(lit("bucket("), bucketN.cast("string"), lit(", "), column, lit(")")))
-          .when(coalesce(range, lit(0.0)) > 10000, concat(lit("truncate("), column, lit(", 100)")))
-          .otherwise(column))
-      .otherwise(column)
   }
 }

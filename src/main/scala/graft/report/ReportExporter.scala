@@ -2,6 +2,7 @@ package graft.report
 
 import graft.catalog.TableRegistry
 import graft.pipeline.AnalysisPipeline
+import graft.recommend.Recommender
 import graft.score.Scoring
 import graft.usage.Usage
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,17 +27,20 @@ object ReportExporter {
     import spark.implicits._
 
     val vs = AnalysisPipeline.views(spark, sfDir)
-    // scores() FIRST: its workload derivation caches-and-unpersists the raw
-    // query-log plan internally, and Spark's CacheManager keys by logical
-    // plan — caching our log before that would get collaterally unpersisted
-    // (timeFilter=None shares the plan). Running scores() eagerly before we
-    // cache anything also means a scoring failure leaks no cache entries.
-    val scores = AnalysisPipeline.scores(spark, sfDir).cache()
+    // the advice FIRST, under the same filter as every other artifact: its
+    // workload derivation caches-and-unpersists the per-text state of the
+    // log internally, and Spark's CacheManager keys by logical plan —
+    // caching our log before that could get collaterally unpersisted.
+    // Running it before we cache anything also means a scoring failure
+    // leaks no cache entries.
+    val advice = AnalysisPipeline.adviceFor(spark, sfDir, timeFilter = timeFilter)
     val log0 = TableRegistry.queryLog(spark, sfDir)
     val log = timeFilter.fold(log0)(f => log0.where(expr(f))).cache()
     try {
     // global_stats.csv — A1 weighted frequency
-    Usage.weightedFrequency(spark, vs, log)
+    val stats = AnalysisPipeline.textStatsOf(log)
+    Usage.weightedFrequencyFromStats(spark, vs, stats,
+        AnalysisPipeline.parsedWorkload(spark, stats))
       .coalesce(1).write.mode("overwrite").option("header", "true")
       .csv(s"$outDir/global_stats")
 
@@ -45,6 +49,7 @@ object ReportExporter {
       .coalesce(1).write.mode("overwrite").json(s"$outDir/view_data")
 
     // column_scores.json + cardinality_stats.json — from the scored profiles
+    val scores = Scoring.scoresFrame(spark, advice.scored)
     scores.select(col("view"), col("column"), round(col("score"), 6).as("score"))
       .coalesce(1).write.mode("overwrite").json(s"$outDir/column_scores")
     scores.select(col("view"), col("column"), col("cardinality"))
@@ -52,7 +57,7 @@ object ReportExporter {
 
     // recommendations.json — scripts + real partition keys (not the
     // reference's always-empty extraction)
-    AnalysisPipeline.run(spark, sfDir)
+    Recommender.frame(spark, advice.recommendations)
       .coalesce(1).write.mode("overwrite").json(s"$outDir/recommendations")
 
     // resource_metrics.json — C5 per-query scores
@@ -81,7 +86,6 @@ object ReportExporter {
       // release the export-scoped caches even when a write fails, so a
       // long-lived session (repeated exports, different time filters)
       // doesn't accumulate block storage
-      scores.unpersist()
       log.unpersist()
     }
   }

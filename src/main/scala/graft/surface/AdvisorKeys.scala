@@ -6,7 +6,7 @@ import graft.ext.ExactMath
 import graft.pipeline.AnalysisPipeline
 import graft.score.Scoring
 import graft.usage.Usage
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The advisor's own stages as declared keys: catalog discovery and column
@@ -16,6 +16,15 @@ import org.apache.spark.sql.functions._
   * DuckDB oracles, and the what-if partition balance check.
   */
 object AdvisorKeys {
+
+  /** The log's workload statistics the advisor derives: (tableTotals,
+    * columnWeights) of Scoring.performanceMetricsFromStats over the
+    * per-text state of the fixture log. */
+  private def performanceMetrics(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val stats = AnalysisPipeline.textStatsOf(TableRegistry.queryLog(s, dir))
+    Scoring.performanceMetricsFromStats(stats,
+      Scoring.parsedRefsFrom(s, AnalysisPipeline.parsedWorkload(s, stats)))
+  }
 
   private def withQlog(body: String): String =
     s"WITH qlog AS (\n${TableRegistry.queryLogOracleCte}\n)\n$body"
@@ -115,7 +124,7 @@ object AdvisorKeys {
   /** The scored CTE chain shared by score_partition and
     * emit_partition_scripts — the DuckDB twin of
     * AnalysisPipeline.scores(…): usage + banding + perf weights +
-    * interactive priority + skew/density terms (Scoring.partitionScores). */
+    * interactive priority + skew/density terms (Scoring.score). */
   private def scoredCtes: String =
     s"""WITH qlog AS (
        |${TableRegistry.queryLogOracleCte}
@@ -312,7 +321,7 @@ object AdvisorKeys {
     QSpec("agg_table_rollup",
       // A8: per-table execution totals from the workload (J3 join, no loop)
       (s, dir) => {
-        val (totals, _) = Scoring.performanceMetrics(s, TableRegistry.queryLog(s, dir))
+        val (totals, _) = performanceMetrics(s, dir)
         totals.select(col("table"), col("execution_time"), col("query_count"))
           .orderBy("table")
       },
@@ -326,7 +335,7 @@ object AdvisorKeys {
     QSpec("agg_column_weight",
       // A9: per-(table, column) execution-time weights
       (s, dir) => {
-        val (_, weights) = Scoring.performanceMetrics(s, TableRegistry.queryLog(s, dir))
+        val (_, weights) = performanceMetrics(s, dir)
         weights.orderBy("table", "column")
       },
       Some(withQlog(
@@ -355,8 +364,11 @@ object AdvisorKeys {
     QSpec("agg_weighted_frequency",
       // A1: the reference's aggregate_column_usage Counter as a distributed
       // union → groupBy → sum (partitioning.py:68-100).
-      (s, dir) => Usage.weightedFrequency(s,
-        AnalysisPipeline.views(s, dir), TableRegistry.queryLog(s, dir)),
+      (s, dir) => {
+        val stats = AnalysisPipeline.textStatsOf(TableRegistry.queryLog(s, dir))
+        Usage.weightedFrequencyFromStats(s, AnalysisPipeline.views(s, dir), stats,
+          AnalysisPipeline.parsedWorkload(s, stats))
+      },
       Some {
         val metaRows = (TableRegistry.profiledTables.flatMap(tb =>
           TableRegistry.profiledColumns(tb).map(c => s"('$c', 1)")) ++

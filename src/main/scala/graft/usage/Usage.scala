@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: SQL texts are parsed once per *distinct* text on the
   * driver (workload-proportional, never data-proportional), then joined back
-  * to the log as a broadcast map — the log itself is only scanned, grouped
-  * and summed distributively.
+  * to the per-text state as a broadcast map — the log itself is only
+  * scanned, grouped and summed distributively.
   */
 object Usage {
 
@@ -32,54 +32,16 @@ object Usage {
       fromCols ++ fromDdl
     }
 
-  /** Map of distinct query text → referenced table names (with multiplicity),
-    * parsed once on the driver (partitioning.py:87-97 parses per log row;
-    * we parse per distinct text, capped at the most frequent
-    * [[QueryIntrospector.maxWorkloadTexts]]). Unparseable texts contribute
-    * nothing. */
-  def tableRefsByQuery(spark: SparkSession, queryLog: DataFrame): Seq[(String, Seq[String])] =
-    QueryIntrospector.parseAll(spark, QueryIntrospector.workloadTexts(queryLog))
-      .map { case (t, refs) => t -> refs.map(_.tables).getOrElse(Seq.empty) }
-
-  /** A1 weighted frequency: union of all three contribution sources →
-    * groupBy(name) sum(weight) → sorted. Output schema:
-    * (name string, weighted_frequency bigint).
-    *
-    * @param parsed optional pre-parsed (text → refs) map from
-    *   QueryIntrospector.parseAll, so callers that also need performance /
-    *   priority derivations parse the workload exactly once. */
-  def weightedFrequency(
-      spark: SparkSession,
-      views: Seq[ViewMeta],
-      queryLog: DataFrame,
-      parsed: Option[Seq[(String, Option[QueryIntrospector.SqlRefs])]] = None): DataFrame = {
-    import spark.implicits._
-    val metaDf = viewContributions(spark, views).toDF("name", "weight")
-
-    val byQuery = parsed match {
-      case Some(p) => p.map { case (t, r) => t -> r.map(_.tables).getOrElse(Seq.empty) }
-      case None    => tableRefsByQuery(spark, queryLog)
-    }
-    val refs = byQuery.flatMap { case (q, ts) => ts.map(q -> _) }
-    val refsDf = refs.toDF("query", "ref_table")
-    // join the (distinct-text → table) map back onto the full log so each log
-    // row contributes one count per referenced table; broadcast: the distinct
-    // workload texts are small by construction.
-    val logDf = queryLog.join(broadcast(refsDf), Seq("query"))
-      .select(col("ref_table").as("name"), lit(1L).as("weight"))
-
-    metaDf.unionByName(logDf)
-      .groupBy("name").agg(sum("weight").as("weighted_frequency"))
-      .orderBy(desc("weighted_frequency"), asc("name"))
-  }
-
-  /** [[weightedFrequency]] over per-text aggregate state instead of the raw
-    * log. `textStats` rows are (query, cnt, …) — see
-    * [[graft.pipeline.AnalysisPipeline.textStatsOf]]. Each log row with text
-    * q contributed 1 per referenced-table occurrence, so the total is
-    * Σ_texts cnt(q)·multiplicity — linear in the per-text counts, hence
-    * EXACTLY the raw-log result, which is what lets the streaming advisor
-    * maintain only the per-text state between batches. */
+  /** A1 weighted frequency over per-text aggregate state: union of all
+    * three contribution sources → groupBy(name) sum(weight) → sorted.
+    * `textStats` rows are (query, cnt, …) — see
+    * [[graft.pipeline.AnalysisPipeline.textStatsOf]]; `parsed` is the
+    * (text → refs) map of the texts kept for parsing. Each log row with
+    * text q contributes 1 per referenced-table occurrence, so the total is
+    * Σ_texts cnt(q)·multiplicity — linear in the per-text counts, which is
+    * what lets the streaming advisor maintain only the per-text state
+    * between batches. Output schema: (name string, weighted_frequency
+    * bigint). */
   def weightedFrequencyFromStats(
       spark: SparkSession,
       views: Seq[ViewMeta],
@@ -91,6 +53,7 @@ object Usage {
       r.map(_.tables).getOrElse(Seq.empty).map(q -> _)
     }
     val refsDf = refs.toDF("query", "ref_table")
+    // broadcast: the parsed workload texts are few by construction
     val logDf = textStats.join(broadcast(refsDf), Seq("query"))
       .select(col("ref_table").as("name"), col("cnt").as("weight"))
     metaDf.unionByName(logDf)

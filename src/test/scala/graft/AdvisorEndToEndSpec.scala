@@ -339,4 +339,54 @@ class AdvisorEndToEndSpec extends SparkSpec {
       spark.sql("DROP DATABASE IF EXISTS advdb")
     }
   }
+
+  test("a second advise of an unchanged fixture launches no Spark job") {
+    // profiles and workload statistics are memoized; score, rank, transform
+    // choice and scripts are plain Scala over them
+    val dir = copyFixtures("graft_rerun")
+    val first = AnalysisPipeline.run(spark, dir).collect()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val again = AnalysisPipeline.run(spark, dir).collect()
+      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+      assert(jobs.get == 0, s"re-advising an unchanged fixture ran ${jobs.get} Spark jobs")
+      assert(again.toSeq == first.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("Main prints and applies only balance-vetted advice") {
+    // lineitem's top candidate becomes l_quantity = 1.0 on ~99% of rows:
+    // still ranked first (its cardinality band and workload weight are
+    // unchanged), but its identity partitions are grossly unbalanced
+    val dir = copyFixtures("graft_main_vet")
+    val li = TableRegistry.path(dir, "lineitem")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(li))
+    spark.read.parquet(TableRegistry.path(sfDir, "lineitem"))
+      .withColumn("l_quantity", when(col("l_orderkey") % 100 =!= 0, lit(1.0))
+        .otherwise((col("l_partkey") % 40).cast("double")))
+      .write.parquet(li)
+    def firstFragment(spec: String) = graft.catalog.IcebergMeta.splitFragments(spec).head
+    val unvetted = AnalysisPipeline.run(spark, dir).where(col("view") === "lineitem")
+      .head().getAs[String]("partition_spec")
+    assert(firstFragment(unvetted) == "l_quantity", unvetted)
+
+    val out = java.nio.file.Files.createTempDirectory("graft_main_vet_out").toString
+    val printed = new java.io.ByteArrayOutputStream()
+    Console.withOut(printed) {
+      Main.advise(spark, dir, out, timeFilter = None, execute = true, catalog = None,
+        namespace = "default")
+    }
+    val text = printed.toString("UTF-8")
+    assert(text.contains("ALTER TABLE lineitem"), text)
+    assert(!text.contains("l_quantity"), s"the demoted candidate was printed:\n$text")
+    val layout = new java.io.File(s"$out/partitioned/lineitem").list().toSeq
+    assert(layout.nonEmpty && !layout.exists(_.startsWith("__p_l_quantity=")),
+      s"the demoted candidate was applied: $layout")
+  }
 }

@@ -114,7 +114,7 @@ class ListenerSpec extends SparkSpec {
       // the EVAL set only — the same tiny-by-contract side that broadcasts;
       // bounded by w-1 integers regardless of corpus size
       "Curation.scala",
-      // Balance.evidence collects ONE stats row per what-if job (the
+      // Balance.evidenceAll collects ONE stats row per what-if job (the
       // grouped counts collapse to a single aggregate before collect);
       // candidate lists are topN × views — catalog-bounded, never data
       "Balance.scala",
@@ -142,6 +142,13 @@ class ListenerSpec extends SparkSpec {
       // m=16384) regardless of batch or stream size; the order stream
       // itself is never retained (X78 scale note)
       "StreamingIndex.scala",
+      // Scoring.partitionScores / topNPerView collect catalog-sized
+      // frames: profile rows (views × columns), the workload rows keyed on
+      // them, and the scored rows they rank
+      "Scoring.scala",
+      // Recommender.scripts / withSelectedSpec collect the ranked
+      // candidates — topN × views rows
+      "Recommender.scala",
       // TimeMultimodal is a dev-only timing harness (never on a query
       // path); its collects are single-row scalar aggregates (sum of
       // lengths) used to force the scan stage for isolated timing
@@ -248,8 +255,6 @@ class ListenerSpec extends SparkSpec {
       // runs over the coarse-group subtotal frame (distinctKeys/groupWidth
       // rows)
       "Layout.scala" -> 1,
-      // top-N per view — table-count-sized
-      "Scoring.scala" -> 1,
       // sessionize twin (entity) + LSH flags (micro-batch)
       "StreamingUsage.scala" -> 2,
       // as-of running-last (2) — per-key ordered history

@@ -56,4 +56,17 @@ class ReportSpec extends SparkSpec {
     assert(qm.count() > 0)
     assert(qm.agg(min("execution_time_ms")).collect()(0).getLong(0) > 15000)
   }
+
+  test("time filter scopes the exported recommendations like the printed ones") {
+    import graft.pipeline.AnalysisPipeline
+    val f = "execution_time_ms > 15000"
+    def recs(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
+      (r.getAs[String]("view"), r.getAs[String]("partition_spec"), r.getAs[String]("script"))).toSet
+    val want = recs(AnalysisPipeline.run(spark, sfDir, timeFilter = Some(f)).collect())
+    // the filter must move the advice for this to tell anything
+    assert(want != recs(AnalysisPipeline.run(spark, sfDir).collect()))
+    val out = java.nio.file.Files.createTempDirectory("graft_report_tf_recs").toString
+    ReportExporter.export(spark, sfDir, out, timeFilter = Some(f))
+    assert(recs(spark.read.json(s"$out/recommendations").collect()) == want)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.catalog.TableRegistry
+import graft.pipeline.AnalysisPipeline
 import graft.score.Scoring
 import org.apache.spark.sql.functions._
 
@@ -40,14 +41,14 @@ class ScoringSpec extends SparkSpec {
   }
 
   test("cardinality banding edges 10/100/1000/10000 (E5)") {
-    import spark.implicits._
-    val got = Seq(9L, 10L, 99L, 100L, 999L, 1000L, 9999L, 10000L).toDF("card")
-      .select(Scoring.cardinalityBand(col("card")).as("pts")).as[Double].collect().toSeq
+    val got = Seq(9L, 10L, 99L, 100L, 999L, 1000L, 9999L, 10000L).map(Scoring.cardinalityBand)
     assert(got == Seq(5.0, 10.0, 10.0, 8.0, 8.0, 5.0, 5.0, 1.0))
   }
 
   test("performance metrics: weights follow exec-time × column multiplicity") {
-    val (totals, weights) = Scoring.performanceMetrics(spark, log)
+    val stats = AnalysisPipeline.textStatsOf(log)
+    val (totals, weights) = Scoring.performanceMetricsFromStats(stats,
+      Scoring.parsedRefsFrom(spark, AnalysisPipeline.parsedWorkload(spark, stats)))
     // every canned-workload table present
     assert(totals.select("table").collect().map(_.getString(0)).toSet ==
       Set("lineitem", "orders", "customer", "supplier", "nation"))

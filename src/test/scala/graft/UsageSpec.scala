@@ -25,16 +25,24 @@ class UsageSpec extends SparkSpec {
 
   test("unparseable query texts contribute no table references") {
     import spark.implicits._
-    val log = Seq(("1", "SELEKT nope"), ("2", "SELECT 1 FROM lineitem"))
-      .toDF("query_id", "query")
-    val refs = Usage.tableRefsByQuery(spark, log).toMap
+    val log = Seq(("1", "SELEKT nope", 5L), ("2", "SELECT 1 FROM lineitem", 5L))
+      .toDF("query_id", "query", "execution_time_ms")
+    val stats = AnalysisPipeline.textStatsOf(log)
+    val parsed = AnalysisPipeline.parsedWorkload(spark, stats)
+    val refs = parsed.toMap.map { case (t, r) => t -> r.map(_.tables).getOrElse(Seq.empty) }
     assert(refs("SELEKT nope").isEmpty)
     assert(refs("SELECT 1 FROM lineitem") == Seq("lineitem"))
+    // and the usage counter sees only the parsed reference
+    val wf = Usage.weightedFrequencyFromStats(spark, Nil, stats, parsed)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(wf == Map("lineitem" -> 1L))
   }
 
   test("weighted frequency ranks log-referenced tables above single-view columns") {
     val vs = AnalysisPipeline.views(spark, sfDir)
-    val wf = Usage.weightedFrequency(spark, vs, TableRegistry.queryLog(spark, sfDir))
+    val stats = AnalysisPipeline.textStatsOf(TableRegistry.queryLog(spark, sfDir))
+    val wf = Usage.weightedFrequencyFromStats(spark, vs, stats,
+        AnalysisPipeline.parsedWorkload(spark, stats))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // lineitem is referenced by 2 of 5 canned texts → weight ≈ 2/5 of the
     // log size, far above any metadata-only column weight
