@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.AnalysisPipeline
+import graft.recommend.Recommender
 import graft.report.ReportExporter
 import org.apache.spark.sql.SparkSession
 
@@ -83,16 +84,16 @@ object Main {
   private[graft] def advise(spark: SparkSession, sfDir: String, outDir: String,
       timeFilter: Option[String], execute: Boolean, catalog: Option[String],
       namespace: String): Unit = {
-    // the SAME timeFilter scopes the recommendations AND the exported
-    // artifacts — a filtered dashboard next to whole-history scripts
-    // would silently mislead. What is printed is what --execute applies:
-    // the balance-vetted advice, demoted candidates excluded
-    val recs = AnalysisPipeline.runVetted(spark, sfDir, timeFilter = timeFilter)._1.collect()
-    recs.foreach { r =>
-      println(r.getAs[String]("script"))
-    }
+    // ONE balance-vetted advice, under the same timeFilter, is what is
+    // printed, exported and applied — a filtered dashboard next to
+    // whole-history scripts, or exported candidates --execute would not
+    // apply, would silently mislead; demoted candidates are excluded
+    val advice = AnalysisPipeline.adviceFor(spark, sfDir, timeFilter = timeFilter,
+      maxSkew = Some(AnalysisPipeline.defaultMaxSkew))
+    val recs = advice.recommendations
+    recs.foreach(r => println(r.script))
 
-    ReportExporter.export(spark, sfDir, outDir, timeFilter)
+    ReportExporter.export(spark, sfDir, outDir, advice, timeFilter)
     println(s"artifacts exported to $outDir/")
 
     // `--catalog rest:<url>` routes commits through the Iceberg REST
@@ -106,9 +107,7 @@ object Main {
       graft.catalog.IcebergHms.parseUri(c.stripPrefix("hms:")))
 
     if (execute) {
-      recs.filter(r => r.getAs[String]("partition_spec") != null).foreach { r =>
-        val view = r.getAs[String]("view")
-        val spec = r.getAs[String]("partition_spec")
+      for (Recommender.Recommendation(view, Some(spec), _) <- recs) {
         val tableDir = s"$sfDir/$view"
         if (restCat.exists(c => graft.catalog.IcebergRest.isIcebergTable(c, view))) {
           try {

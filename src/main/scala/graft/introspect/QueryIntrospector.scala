@@ -316,17 +316,22 @@ object QueryIntrospector {
     * paths select texts by ONE rule (count desc, text asc, warn-on-drop)
     * and can never drift. */
   def topTextsByCount(counts: org.apache.spark.sql.DataFrame,
-      cap: Int = maxWorkloadTexts): Seq[String] = {
-    import org.apache.spark.sql.functions.{asc, col, desc}
-    val rows = counts.select(col("query"), col("cnt"))
-      .orderBy(desc("cnt"), asc("query"))
-      .limit(cap + 1)
-      .collect()
-    if (rows.length > cap)
+      cap: Int = maxWorkloadTexts): Seq[String] =
+    topRowsByCount(counts.select("query", "cnt"), cap).map(_.getString(0))
+
+  /** The rows behind [[topTextsByCount]]: the `cap` rows of `rows` (which
+    * carries `query` and `cnt` among its columns) with the highest `cnt`,
+    * ties broken by text, in that order — one capped collect of at most
+    * `cap + 1` rows, the extra one only to detect (and log) a drop. */
+  def topRowsByCount(rows: org.apache.spark.sql.DataFrame,
+      cap: Int = maxWorkloadTexts): Seq[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.functions.{asc, desc}
+    val top = rows.orderBy(desc("cnt"), asc("query")).limit(cap + 1).collect()
+    if (top.length > cap)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"workload has more than $cap distinct query texts; " +
           "parsing only the most frequent ones (statistics cover the dominant workload)")
-    rows.take(cap).map(_.getString(0)).toSeq
+    top.take(cap).toSeq
   }
 
   /** Parse each distinct text once. The workload's distinct-text set is

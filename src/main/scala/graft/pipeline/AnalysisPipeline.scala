@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.catalog.{TableRegistry, ViewMeta}
+import graft.introspect.QueryIntrospector
 import graft.profile.Profiler
 import graft.recommend.{Balance, Recommender}
 import graft.score.Scoring
@@ -41,31 +42,26 @@ object AnalysisPipeline {
   private def computeProfiles(spark: SparkSession, vs: Seq[ViewMeta],
       tableFor: String => DataFrame,
       approxCardinality: Boolean): Seq[Profiler.ColumnProfile] = {
-    // Each per-table profile is two single-row aggregate jobs whose task
-    // count is bounded by the table's partition count — far below a big
-    // executor's slot count. With spare slots (≥16) submit the per-table
-    // jobs concurrently so the scheduler interleaves them (the 1000-
-    // executor posture: profiling N tables costs ~the largest table's
-    // scan, not the sum). On small executors (local[4]) concurrent jobs
-    // oversubscribe and measure ~3× slower — stay serial there.
-    if (spark.sparkContext.defaultParallelism >= 16 && vs.size > 1) {
-      // cap the submission pool: threads mostly block on job completion, but
-      // one-per-table is unbounded against a warehouse-scale catalog (500
-      // tables = 500 driver threads); 32 in-flight jobs saturates any
-      // scheduler while keeping the driver's thread count fixed. Composed
-      // bound: Profiler.profile caps its own per-column pool at 32 too, so
-      // the worst case is 32 × 32 ≈ 1k mostly-blocked driver threads — high
-      // but fixed, independent of catalog width
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(vs.size, 32))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try {
-        val fs = vs.map(v => Future(Profiler.profile(spark, v.view,
-          tableFor(v.view), approxCardinality)))
-        Await.result(Future.sequence(fs), Duration.Inf).flatten
-      } finally pool.shutdown()
-    } else
-      vs.flatMap(v => Profiler.profile(spark, v.view,
-        tableFor(v.view), approxCardinality))
+    // Each per-table profile is a few single-row aggregate jobs whose task
+    // count is bounded by the table's partition count — below the slot
+    // count of any executor, local[4] included — so the per-table jobs are
+    // submitted concurrently and the scheduler fills the idle slots:
+    // profiling N tables costs about the largest table's jobs, not the sum.
+    // Measured at local[4] on a 4-core host, perfbench's advise workload
+    // (sf0.01, 5 tables), ten alternating pairs: a warm pass median 5.83 s
+    // serial → 4.14 s with this and the plain-Scala workload derivation,
+    // faster in every pair (SCALE.md). The pool is capped at 32 threads
+    // (they mostly block on job completion, and a warehouse-scale catalog
+    // must not mean one driver thread per table); Profiler.profile caps its
+    // own per-column pool at 32 too, so the worst case is a fixed ~1k
+    // mostly-blocked driver threads, independent of catalog width.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, math.min(vs.size, 32)))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val fs = vs.map(v => Future(Profiler.profile(spark, v.view,
+        tableFor(v.view), approxCardinality)))
+      Await.result(Future.sequence(fs), Duration.Inf).flatten
+    } finally pool.shutdown()
   }
 
   def views(spark: SparkSession, sfDir: String): Seq[ViewMeta] =
@@ -78,9 +74,8 @@ object AnalysisPipeline {
   /** Cap on distinct workload texts parsed driver-side per analysis — keeps
     * the driver's footprint metadata-sized against a warehouse-scale query
     * log (texts beyond the N most frequent are dropped with a warning).
-    * One shared constant: [[graft.introspect.QueryIntrospector.maxWorkloadTexts]]. */
-  val maxWorkloadTexts: Int =
-    graft.introspect.QueryIntrospector.maxWorkloadTexts
+    * One shared constant: [[QueryIntrospector.maxWorkloadTexts]]. */
+  val maxWorkloadTexts: Int = QueryIntrospector.maxWorkloadTexts
 
   /** Workload-derived statistics (usage frequencies, per-column exec-time
     * weights, per-view priorities) are metadata-sized and deterministic per
@@ -97,10 +92,10 @@ object AnalysisPipeline {
   /** The per-distinct-text aggregate STATE every log-derived statistic is
     * linear in: (query, cnt, sum_exec, sum_priority). One scan of the log
     * produces it; usage frequencies, column weights and view priorities are
-    * all exact functions of it (see the *FromStats derivations in Usage /
-    * Scoring). Because the columns are sums and counts, the state is
-    * MERGEABLE: stats(log₁ ∪ log₂) = re-aggregate(stats(log₁) ∪ stats(log₂))
-    * — the property the incremental streaming advisor is built on, and the
+    * all exact functions of it (see [[Scoring.workloadFrom]]). Because the
+    * columns are sums and counts, the state is MERGEABLE:
+    * stats(log₁ ∪ log₂) = re-aggregate(stats(log₁) ∪ stats(log₂)) — the
+    * property the incremental streaming advisor is built on, and the
     * same shape as the count-min cells in [[graft.ext.Sketches.cmsCells]]. */
   def textStatsOf(queryLog: DataFrame): DataFrame =
     queryLog.where(col("query").isNotNull)
@@ -114,38 +109,35 @@ object AnalysisPipeline {
     * texts of the per-text state (anything dropped is logged, never
     * silent) — parsed once on the driver, for every derivation to share. */
   def parsedWorkload(spark: SparkSession, textStats: DataFrame)
-      : Seq[(String, Option[graft.introspect.QueryIntrospector.SqlRefs])] =
-    graft.introspect.QueryIntrospector.parseAll(spark,
-      graft.introspect.QueryIntrospector.topTextsByCount(textStats, maxWorkloadTexts))
+      : Seq[(String, Option[QueryIntrospector.SqlRefs])] =
+    QueryIntrospector.parseAll(spark,
+      QueryIntrospector.topTextsByCount(textStats, maxWorkloadTexts))
 
   /** Workload statistics from per-text aggregate state ([[textStatsOf]]) —
     * the one derivation behind the batch, filtered, catalog and streaming
     * paths.
     *
     * 100 TB posture: the state DataFrame is one row per distinct text
-    * (distributed, never collected whole); only the maxWorkloadTexts
-    * most-frequent texts ship to the driver for parsing (heavy-hitter
-    * coverage — the advisor's scores are frequency-weighted, so the dropped
-    * tail moves them least), and the three derivations are joins against the
-    * cached state, not rescans of the log. */
+    * (distributed, never collected whole). Its [[maxWorkloadTexts]] most
+    * frequent rows ship to the driver in the one capped collect that also
+    * picks the texts to parse (heavy-hitter coverage — the advisor's scores
+    * are frequency-weighted, so the dropped tail moves them least); the
+    * weights are then [[Scoring.workloadFrom]] over those rows, as the
+    * reference computes them client-side. */
   private def workloadOf(spark: SparkSession, vs: Seq[ViewMeta],
       textStats: DataFrame): Scoring.Workload = {
-    val stats = textStats.cache()
-    try {
-      val parsed = parsedWorkload(spark, stats)
-      val refsDf = Scoring.parsedRefsFrom(spark, parsed).cache()
-      try {
-        Scoring.collectWorkload(Usage.weightedFrequencyFromStats(spark, vs, stats, parsed),
-          Scoring.performanceMetricsFromStats(stats, refsDf)._2,
-          Scoring.viewPrioritiesFromStats(stats, refsDf))
-      } finally refsDf.unpersist()
-    } finally stats.unpersist()
+    val stats = QueryIntrospector.topRowsByCount(
+      textStats.select(Scoring.TextStats.columns.map(col): _*), maxWorkloadTexts)
+      .map(Scoring.TextStats.of)
+    Scoring.workloadFrom(stats, QueryIntrospector.parseAll(spark, stats.map(_.query)),
+      Usage.viewContributions(spark, vs))._1
   }
 
-  /** Everything one advise pass produces: every scored (view, column), one
-    * recommendation per view, and — on a vetted pass — each ranked
-    * candidate's balance evidence. */
+  /** Everything one advise pass produces: the workload statistics it
+    * scored with, every scored (view, column), one recommendation per view,
+    * and — on a vetted pass — each ranked candidate's balance evidence. */
   final case class Advice(
+      workload: Scoring.Workload,
       scored: Seq[Scoring.Scored],
       recommendations: Seq[Recommender.Recommendation],
       evidence: Seq[Balance.VettedCandidate])
@@ -176,7 +168,7 @@ object AnalysisPipeline {
     val demoted = evidence.filterNot(_.accepted).map(v => (v.view, v.column)).toSet
     val kept = candidates.filterNot(c => demoted((c.view, c.column)))
       .map(c => c.copy(view = qualify(c.view)))
-    Advice(scored, Recommender.render(kept, vs.map(qualify)), evidence)
+    Advice(workload, scored, Recommender.render(kept, vs.map(qualify)), evidence)
   }
 
   /** [[advise]] over the fixture tables at `sfDir`. The workload is the
@@ -279,7 +271,7 @@ object AnalysisPipeline {
     *         excluded; evidence — one row per vetted candidate with its
     *         balance numbers and accept/demote decision)
     */
-  def runVetted(spark: SparkSession, sfDir: String, maxSkew: Double = 8.0,
+  def runVetted(spark: SparkSession, sfDir: String, maxSkew: Double = defaultMaxSkew,
       approxCardinality: Boolean = false, topN: Int = 3,
       timeFilter: Option[String] = None): (DataFrame, DataFrame) =
     vetted(spark, adviceFor(spark, sfDir, approxCardinality, topN, timeFilter,
@@ -294,10 +286,14 @@ object AnalysisPipeline {
     * Profiles re-read the advised tables when their files change (current
     * contents are what a re-analysis must reflect). */
   def runVettedFromStats(spark: SparkSession, sfDir: String,
-      textStats: DataFrame, maxSkew: Double = 8.0,
+      textStats: DataFrame, maxSkew: Double = defaultMaxSkew,
       approxCardinality: Boolean = false, topN: Int = 3): (DataFrame, DataFrame) =
     vetted(spark, adviceFor(spark, sfDir, approxCardinality, topN,
       textStats = Some(textStats), maxSkew = Some(maxSkew)))
+
+  /** The max/mean partition skew above which balance vetting demotes a
+    * candidate, unless the caller passes its own. */
+  val defaultMaxSkew: Double = 8.0
 
   private def vetted(spark: SparkSession, a: Advice): (DataFrame, DataFrame) =
     (Recommender.frame(spark, a.recommendations), spark.createDataFrame(a.evidence))

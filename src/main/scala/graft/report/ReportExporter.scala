@@ -4,8 +4,7 @@ import graft.catalog.TableRegistry
 import graft.pipeline.AnalysisPipeline
 import graft.recommend.Recommender
 import graft.score.Scoring
-import graft.usage.Usage
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** C11/S9/S10: the dashboard artifact set, same shape as the reference's
@@ -22,25 +21,26 @@ import org.apache.spark.sql.functions._
   */
 object ReportExporter {
 
+  /** The artifact set with the (unvetted) advice of `sfDir` under
+    * `timeFilter`. */
   def `export`(spark: SparkSession, sfDir: String, outDir: String,
-      timeFilter: Option[String] = None): Unit = {
+      timeFilter: Option[String] = None): Unit =
+    `export`(spark, sfDir, outDir,
+      AnalysisPipeline.adviceFor(spark, sfDir, timeFilter = timeFilter), timeFilter)
+
+  /** The artifact set with `advice` — which the caller derived under the
+    * same `timeFilter`, so every log-derived artifact covers one window —
+    * as its usage, scores and recommendations. */
+  def `export`(spark: SparkSession, sfDir: String, outDir: String,
+      advice: AnalysisPipeline.Advice, timeFilter: Option[String]): Unit = {
     import spark.implicits._
 
     val vs = AnalysisPipeline.views(spark, sfDir)
-    // the advice FIRST, under the same filter as every other artifact: its
-    // workload derivation caches-and-unpersists the per-text state of the
-    // log internally, and Spark's CacheManager keys by logical plan —
-    // caching our log before that could get collaterally unpersisted.
-    // Running it before we cache anything also means a scoring failure
-    // leaks no cache entries.
-    val advice = AnalysisPipeline.adviceFor(spark, sfDir, timeFilter = timeFilter)
     val log0 = TableRegistry.queryLog(spark, sfDir)
     val log = timeFilter.fold(log0)(f => log0.where(expr(f))).cache()
     try {
-    // global_stats.csv — A1 weighted frequency
-    val stats = AnalysisPipeline.textStatsOf(log)
-    Usage.weightedFrequencyFromStats(spark, vs, stats,
-        AnalysisPipeline.parsedWorkload(spark, stats))
+    // global_stats.csv — A1 weighted frequency, the advice's own
+    advice.workload.usage.toDF("name", "weighted_frequency")
       .coalesce(1).write.mode("overwrite").option("header", "true")
       .csv(s"$outDir/global_stats")
 

@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * the reference's analyze_query_resource_metrics (partitioning.py:123-168),
   * analyze_query_types (205-238), analyze_query_performance (170-203) and
   * calculate_partition_score (294-325). The log-proportional parts
-  * (resource and type scores, the per-text joins) run in Spark; the score,
-  * its terms and the top-N rank are catalog-sized and plain Scala.
+  * (resource and type scores, the per-text state) run in Spark; the
+  * workload weights, the score, its terms and the top-N rank are
+  * catalog-sized and plain Scala.
   */
 object Scoring {
 
@@ -55,8 +56,8 @@ object Scoring {
         when(col("is_interactive"), lit(2.0)).otherwise(lit(1.0)))
 
   /** Distinct query text → (tables, all referenced columns) from a
-    * pre-parsed (text → refs) map, as a DataFrame keyed by text for joining
-    * onto the per-text workload state. Schema: (query, ref_table,
+    * pre-parsed (text → refs) map, as a DataFrame keyed by text — the
+    * `refs` argument of the *FromStats adapters. Schema: (query, ref_table,
     * ref_column nullable, col_count). A row with null ref_column carries the
     * table-level reference. */
   def parsedRefsFrom(spark: SparkSession,
@@ -75,45 +76,114 @@ object Scoring {
 
   /** J3 + A8/A9: per-table execution totals and per-(table,column)
     * execution-time weights — the reference's analyze_query_performance
-    * rewritten from an O(log-rows) point-query loop (partitioning.py:178-183)
-    * into one broadcast join + two aggregations over the per-text state.
-    * `textStats` rows are (query, cnt, sum_exec, sum_priority) — see
-    * [[graft.pipeline.AnalysisPipeline.textStatsOf]]. Both statistics are
-    * linear in the per-text partials (Σ_rows exec = Σ_texts sum_exec;
-    * COUNT(*) = Σ_texts cnt; Σ_rows exec·col_count = col_count·sum_exec), so
-    * they equal the per-log-row sums exactly — long sums are
-    * order-independent — which is what lets a streaming advisor maintain the
-    * state incrementally and re-derive per batch without rescanning history.
+    * (partitioning.py:170-203) over the per-text state, as [[workloadFrom]]
+    * computes them. `textStats` rows are (query, cnt, sum_exec,
+    * sum_priority) — see [[graft.pipeline.AnalysisPipeline.textStatsOf]];
+    * `refs` is [[parsedRefsFrom]]'s frame. Only the state rows of the texts
+    * in `refs` are collected (a broadcast semi-join).
     *
-    * Returns (tableTotals, columnWeights):
+    * Returns (tableTotals, columnWeights), local frames:
     *   tableTotals:  (table, execution_time, query_count)
     *   columnWeights:(table, column, weight)  — exec-time-weighted
     */
   def performanceMetricsFromStats(textStats: DataFrame, refs: DataFrame)
       : (DataFrame, DataFrame) = {
-    val joined = textStats.join(broadcast(refs), Seq("query"))
-    // coalesce: a text whose every log row has NULL execution time has
-    // sum_exec = NULL, and the pipeline's typed collect (getLong) would NPE
-    // on it — an all-null exec group means zero observed cost
-    val tableTotals = joined.where(col("ref_column").isNull)
-      .groupBy(col("ref_table").as("table"))
-      .agg(coalesce(sum("sum_exec"), lit(0L)).as("execution_time"),
-        sum("cnt").as("query_count"))
-    val columnWeights = joined.where(col("ref_column").isNotNull)
-      .groupBy(col("ref_table").as("table"), col("ref_column").as("column"))
-      .agg(coalesce(sum(col("sum_exec") * col("col_count")), lit(0L)).as("weight"))
-    (tableTotals, columnWeights)
+    val spark = textStats.sparkSession
+    val parsed = parsedOf(refs)
+    val (w, totals) = workloadFrom(statsOf(textStats, parsed.map(_._1)), parsed, Nil)
+    (localFrame(spark, "table STRING, execution_time BIGINT NOT NULL, query_count BIGINT", totals),
+      localFrame(spark, "table STRING, column STRING, weight BIGINT NOT NULL", w.weights))
   }
 
-  /** Per-view average partition priority from per-text aggregate state:
-    * avg over log rows = Σ sum_priority / Σ cnt per referencing table.
-    * Exact: priorities are 1.0/2.0, so every partial sum is an
-    * integer-valued double (< 2^53) and addition order cannot matter. */
-  def viewPrioritiesFromStats(textStats: DataFrame, refs: DataFrame): DataFrame =
-    textStats.join(broadcast(refs.where(col("ref_column").isNull)
-        .select(col("query"), col("ref_table"))), Seq("query"))
-      .groupBy(col("ref_table").as("table"))
-      .agg((sum("sum_priority") / sum("cnt")).as("avg_priority"))
+  /** Per-view average partition priority from per-text aggregate state —
+    * Σ sum_priority / Σ cnt per referencing table, as [[workloadFrom]]
+    * computes it; arguments as [[performanceMetricsFromStats]]. A local
+    * frame (table, avg_priority). */
+  def viewPrioritiesFromStats(textStats: DataFrame, refs: DataFrame): DataFrame = {
+    val parsed = parsedOf(refs)
+    localFrame(textStats.sparkSession, "table STRING, avg_priority DOUBLE",
+      workloadFrom(statsOf(textStats, parsed.map(_._1)), parsed, Nil)._1.priorities)
+  }
+
+  /** [[parsedRefsFrom]]'s rows back as (text → refs): the distinct tables
+    * and the column multiplicities each text references. */
+  private def parsedOf(refs: DataFrame): Seq[(String, Option[QueryIntrospector.SqlRefs])] =
+    refs.select("query", "ref_table", "ref_column", "col_count").collect().toSeq
+      .groupBy(_.getString(0)).toSeq.map { case (q, rows) =>
+        val (tables, columns) = rows.partition(_.isNullAt(2))
+        q -> Some(QueryIntrospector.SqlRefs(tables.map(_.getString(1)), Map.empty, Map.empty,
+          columns.map(r => r.getString(2) -> r.getLong(3).toInt).toMap))
+      }
+
+  /** One row of the per-text aggregate state
+    * ([[graft.pipeline.AnalysisPipeline.textStatsOf]]): the text, its log
+    * rows, their summed execution time (None when every one is NULL) and
+    * their summed partition priority. */
+  final case class TextStats(query: String, cnt: Long, sumExec: Option[Long], sumPriority: Double)
+
+  object TextStats {
+    /** The state columns, in the order [[of]] reads them. */
+    val columns: Seq[String] = Seq("query", "cnt", "sum_exec", "sum_priority")
+
+    def of(r: Row): TextStats = TextStats(r.getString(0), r.getLong(1),
+      if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getDouble(3))
+  }
+
+  /** The state rows of `texts` — a broadcast semi-join, so at most
+    * `texts.size` rows reach the driver. */
+  private[graft] def statsOf(textStats: DataFrame, texts: Seq[String]): Seq[TextStats] = {
+    val spark = textStats.sparkSession
+    import spark.implicits._
+    textStats.join(broadcast(texts.toDF("query")), Seq("query"), "left_semi")
+      .select(TextStats.columns.map(col): _*).collect().toSeq.map(TextStats.of)
+  }
+
+  /** THE workload derivation, in plain Scala over the collected state rows
+    * of the parsed texts — the reference's Counter-based client-side
+    * weights (partitioning.py:68-100, 170-203). Each log row with text q
+    * counts once per reference, so every statistic is linear in the
+    * per-text partials and equals the per-log-row sum exactly:
+    *   usage       — `viewContributions`, plus cnt(q) per entry of q's
+    *                 tables (a table named twice counts twice);
+    *   weights     — per distinct table of q × each column of q,
+    *                 sum_exec(q)·multiplicity (a NULL sum_exec adds 0);
+    *   priorities  — per distinct table, Σ sum_priority / Σ cnt;
+    *   tableTotals — per distinct table, (table, Σ sum_exec, Σ cnt).
+    * Texts absent from `stats` or unparsed contribute nothing. Long sums
+    * and products raise on overflow, as Spark's ANSI `sum` does; priority
+    * partials are integer-valued doubles, so their order cannot matter.
+    * Usage comes out weighted_frequency desc, name asc (as Spark orders
+    * strings); the rest sorted by key. */
+  def workloadFrom(stats: Seq[TextStats],
+      parsed: Seq[(String, Option[QueryIntrospector.SqlRefs])],
+      viewContributions: Seq[(String, Long)]): (Workload, Seq[(String, Long, Long)]) = {
+    val refsOf = parsed.collect { case (q, Some(r)) => q -> r }.toMap
+    val hits = stats.flatMap(s => refsOf.get(s.query).map(s -> _))
+    def sumBy[K](kvs: Seq[(K, Long)]): Map[K, Long] = kvs.groupMapReduce(_._1)(_._2)(Math.addExact)
+    def total(xs: Seq[Long]): Long = xs.foldLeft(0L)(Math.addExact)
+    val usage = sumBy(viewContributions ++
+      hits.flatMap { case (s, r) => r.tables.map(_ -> s.cnt) })
+    val perTable = hits.flatMap { case (s, r) => r.tables.distinct.map(t => (t, s, r)) }
+    val weights = sumBy(perTable.flatMap { case (t, s, r) =>
+      r.allColumns.toSeq.map { case (c, n) =>
+        (t, c) -> s.sumExec.fold(0L)(Math.multiplyExact(_, n.toLong))
+      }
+    })
+    val byTable = perTable.groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+    (Workload(
+      usage.toSeq.sortWith { case ((n1, f1), (n2, f2)) =>
+        f1 > f2 || (f1 == f2 && utf8Compare(n1, n2) < 0)
+      },
+      weights.toSeq.sorted.map { case ((t, c), w) => (t, c, w) },
+      byTable.map { case (t, ss) => t -> ss.map(_.sumPriority).sum / total(ss.map(_.cnt)) }),
+      byTable.map { case (t, ss) => (t, total(ss.flatMap(_.sumExec)), total(ss.map(_.cnt))) })
+  }
+
+  /** `rows` as a local frame of the DDL-described `schema`. */
+  private[graft] def localFrame(spark: SparkSession, schema: String,
+      rows: Seq[Product]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromTuple): _*),
+      org.apache.spark.sql.types.StructType.fromDDL(schema))
 
   /** E5 cardinality banding (partitioning.py:305-318). */
   def cardinalityBand(card: Long): Double =

@@ -2,8 +2,8 @@ package graft.usage
 
 import graft.catalog.ViewMeta
 import graft.introspect.QueryIntrospector
+import graft.score.Scoring
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Weighted column-usage aggregation — the reference's
   * `aggregate_column_usage` (partitioning.py:68-100): one Counter over
@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   * reference.
   *
   * Scale posture: SQL texts are parsed once per *distinct* text on the
-  * driver (workload-proportional, never data-proportional), then joined back
-  * to the per-text state as a broadcast map — the log itself is only
-  * scanned, grouped and summed distributively.
+  * driver (workload-proportional, never data-proportional); the log itself
+  * is only scanned, grouped and summed distributively, and only the state
+  * rows of the parsed texts reach the driver.
   */
 object Usage {
 
@@ -32,32 +32,20 @@ object Usage {
       fromCols ++ fromDdl
     }
 
-  /** A1 weighted frequency over per-text aggregate state: union of all
-    * three contribution sources → groupBy(name) sum(weight) → sorted.
-    * `textStats` rows are (query, cnt, …) — see
-    * [[graft.pipeline.AnalysisPipeline.textStatsOf]]; `parsed` is the
-    * (text → refs) map of the texts kept for parsing. Each log row with
-    * text q contributes 1 per referenced-table occurrence, so the total is
-    * Σ_texts cnt(q)·multiplicity — linear in the per-text counts, which is
-    * what lets the streaming advisor maintain only the per-text state
-    * between batches. Output schema: (name string, weighted_frequency
-    * bigint). */
+  /** A1 weighted frequency over per-text aggregate state, as
+    * [[graft.score.Scoring.workloadFrom]] computes it: the view
+    * contributions plus, per parsed text q, cnt(q) for each table q
+    * references. `textStats` rows are (query, cnt, sum_exec, sum_priority)
+    * — see [[graft.pipeline.AnalysisPipeline.textStatsOf]]; `parsed` is the
+    * (text → refs) map of the texts kept for parsing, and only their state
+    * rows are collected (a broadcast semi-join). A local frame (name string,
+    * weighted_frequency bigint), weighted_frequency desc, name asc. */
   def weightedFrequencyFromStats(
       spark: SparkSession,
       views: Seq[ViewMeta],
       textStats: DataFrame,
-      parsed: Seq[(String, Option[QueryIntrospector.SqlRefs])]): DataFrame = {
-    import spark.implicits._
-    val metaDf = viewContributions(spark, views).toDF("name", "weight")
-    val refs = parsed.flatMap { case (q, r) =>
-      r.map(_.tables).getOrElse(Seq.empty).map(q -> _)
-    }
-    val refsDf = refs.toDF("query", "ref_table")
-    // broadcast: the parsed workload texts are few by construction
-    val logDf = textStats.join(broadcast(refsDf), Seq("query"))
-      .select(col("ref_table").as("name"), col("cnt").as("weight"))
-    metaDf.unionByName(logDf)
-      .groupBy("name").agg(sum("weight").as("weighted_frequency"))
-      .orderBy(desc("weighted_frequency"), asc("name"))
-  }
+      parsed: Seq[(String, Option[QueryIntrospector.SqlRefs])]): DataFrame =
+    Scoring.localFrame(spark, "name STRING, weighted_frequency BIGINT",
+      Scoring.workloadFrom(Scoring.statsOf(textStats, parsed.map(_._1)), parsed,
+        viewContributions(spark, views))._1.usage)
 }

@@ -360,18 +360,25 @@ class AdvisorEndToEndSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("Main prints and applies only balance-vetted advice") {
-    // lineitem's top candidate becomes l_quantity = 1.0 on ~99% of rows:
-    // still ranked first (its cardinality band and workload weight are
-    // unchanged), but its identity partitions are grossly unbalanced
-    val dir = copyFixtures("graft_main_vet")
+  /** A fixture copy whose lineitem top candidate, l_quantity, is 1.0 on
+    * ~99% of rows: still ranked first (its cardinality band and workload
+    * weight are unchanged), but its identity partitions are grossly
+    * unbalanced, so balance vetting demotes it. */
+  private def skewedQuantityFixture(prefix: String): String = {
+    val dir = copyFixtures(prefix)
     val li = TableRegistry.path(dir, "lineitem")
     java.nio.file.Files.delete(java.nio.file.Paths.get(li))
     spark.read.parquet(TableRegistry.path(sfDir, "lineitem"))
       .withColumn("l_quantity", when(col("l_orderkey") % 100 =!= 0, lit(1.0))
         .otherwise((col("l_partkey") % 40).cast("double")))
       .write.parquet(li)
-    def firstFragment(spec: String) = graft.catalog.IcebergMeta.splitFragments(spec).head
+    dir
+  }
+
+  private def firstFragment(spec: String) = graft.catalog.IcebergMeta.splitFragments(spec).head
+
+  test("Main prints and applies only balance-vetted advice") {
+    val dir = skewedQuantityFixture("graft_main_vet")
     val unvetted = AnalysisPipeline.run(spark, dir).where(col("view") === "lineitem")
       .head().getAs[String]("partition_spec")
     assert(firstFragment(unvetted) == "l_quantity", unvetted)
@@ -388,5 +395,48 @@ class AdvisorEndToEndSpec extends SparkSpec {
     val layout = new java.io.File(s"$out/partitioned/lineitem").list().toSeq
     assert(layout.nonEmpty && !layout.exists(_.startsWith("__p_l_quantity=")),
       s"the demoted candidate was applied: $layout")
+  }
+
+  test("Main exports the balance-vetted advice it prints") {
+    val dir = skewedQuantityFixture("graft_main_vet_export")
+    val out = java.nio.file.Files.createTempDirectory("graft_main_vet_export_out").toString
+    val printed = new java.io.ByteArrayOutputStream()
+    Console.withOut(printed) {
+      Main.advise(spark, dir, out, timeFilter = None, execute = false, catalog = None,
+        namespace = "default")
+    }
+    val exported = spark.read.json(s"$out/recommendations").collect()
+      .map(r => r.getAs[String]("view") -> r.getAs[String]("script")).toMap
+    assert(printed.toString("UTF-8").contains(exported("lineitem")))
+    val spec = spark.read.json(s"$out/recommendations").where(col("view") === "lineitem")
+      .head().getAs[String]("partition_spec")
+    assert(firstFragment(spec) != "l_quantity", s"the demoted candidate was exported: $spec")
+  }
+
+  test("concurrent profiling equals serial Profiler.profile per view, in view order") {
+    val dir = copyFixtures("graft_profile_order")
+    val serial = AnalysisPipeline.views(spark, dir).flatMap(v =>
+      graft.profile.Profiler.profile(spark, v.view, TableRegistry.table(spark, dir, v.view)))
+    assert(AnalysisPipeline.profilesFor(spark, dir, approxCardinality = false) == serial)
+  }
+
+  test("a cold advise pass launches at most 33 Spark jobs") {
+    // 46 jobs, at this fixture's scale as in the sf0.01 benchmark pass,
+    // while the workload weights came from three broadcast joins over the
+    // cached per-text state; 33 since they are plain Scala over the
+    // collected heavy-hitter rows
+    val dir = copyFixtures("graft_cold_jobs")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      AnalysisPipeline.run(spark, dir).collect()
+      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+      assert(jobs.get <= 33, s"a cold advise pass ran ${jobs.get} Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

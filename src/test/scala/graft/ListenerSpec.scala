@@ -109,7 +109,11 @@ class ListenerSpec extends SparkSpec {
     val audited = Set(
       "Probe.scala", "Profiler.scala", "StreamingAdvisor.scala",
       "SimSearch.scala", "Multimodal.scala", "TableRegistry.scala",
-      "QueryIntrospector.scala", "Main.scala", "AnalysisPipeline.scala",
+      "Main.scala", "AnalysisPipeline.scala",
+      // QueryIntrospector.topRowsByCount is THE heavy-hitter cut: one
+      // collect of at most maxWorkloadTexts + 1 rows of the per-text state
+      // (the extra row only detects a drop)
+      "QueryIntrospector.scala",
       // contaminatedDocIds collects the distinct SHORT-doc token lengths of
       // the EVAL set only — the same tiny-by-contract side that broadcasts;
       // bounded by w-1 integers regardless of corpus size
@@ -144,7 +148,10 @@ class ListenerSpec extends SparkSpec {
       "StreamingIndex.scala",
       // Scoring.partitionScores / topNPerView collect catalog-sized
       // frames: profile rows (views × columns), the workload rows keyed on
-      // them, and the scored rows they rank
+      // them, and the scored rows they rank. Scoring.statsOf (behind the
+      // *FromStats adapters) collects the state rows of the parsed texts
+      // only — at most the parsed-text count, itself ≤ maxWorkloadTexts —
+      // and the adapters' parsedRefsFrom frame is local, parsed-text sized
       "Scoring.scala",
       // Recommender.scripts / withSelectedSpec collect the ranked
       // candidates — topN × views rows
