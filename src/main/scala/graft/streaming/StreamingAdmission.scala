@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.ext.TextAnalysis
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,10 +27,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * regardless of how the stream was micro-batched (the property the
   * batch-twin spec asserts across different splits).
   *
-  * Durability: versioned-by-batch-id text state beside the checkpoint —
-  * the [[StreamingDrift]] discipline verbatim (restart-survivable,
-  * replay-idempotent via strictly-below merge bases, batch-0 sweep for
-  * fresh lineages, [[StreamingDrift.retainVersions]]-deep retention).
+  * Durability: one text file per batch id beside the checkpoint, under
+  * the rules of [[VersionedState]].
   */
 object StreamingAdmission {
 
@@ -108,68 +105,30 @@ object StreamingAdmission {
     * irrelevant. */
   val Overflow = "__overflow"
 
-  private def writeState(fs: FileSystem, path: Path,
-      st: Map[String, Counts]): Unit = {
-    val out = fs.create(path, true)
-    try out.write(st.toSeq.sortBy(_._1).map { case (s, c) =>
-      s"$s ${c.nDocs} ${c.nRedactions} ${c.nQualityFail} ${c.nPiiHit} ${c.nAdmitted}"
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readState(fs: FileSystem, path: Path): Map[String, Counts] = {
-    val in = fs.open(path)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty)
-      .map { l =>
-        val a = l.split(" ")
-        a(0) -> Counts(a(1).toLong, a(2).toLong, a(3).toLong, a(4).toLong,
-          a(5).toLong)
-      }.toMap
-    finally in.close()
-  }
-
   /** Start the admission gate over a streaming (source, text, n_chars)
     * frame: per micro-batch, merge the batch's per-source counters into
     * the persisted capped state (versioned at `<checkpoint>_state/v<id>`)
     * and hand the post-merge snapshot to `onBatch`. */
   def monitor(docs: DataFrame, checkpoint: String, sourceCap: Int = 64)(
-      onBatch: (Long, Map[String, Counts]) => Unit): StreamingQuery = {
-    val stateRoot = new Path(checkpoint.stripSuffix("/") + "_state")
-    val fs = stateRoot.getFileSystem(
-      docs.sparkSession.sessionState.newHadoopConf())
-    docs.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: java.lang.Long) =>
-        // fresh-lineage sweep + strictly-below merge base: the
-        // StreamingDrift replay-idempotence discipline, see its scaladoc
-        if (id == 0L && fs.exists(stateRoot))
-          fs.listStatus(stateRoot).filter(_.getPath.getName.startsWith("v"))
-            .foreach(st => fs.delete(st.getPath, true))
-        val versions =
-          if (fs.exists(stateRoot))
-            fs.listStatus(stateRoot).map(_.getPath)
-              .filter(_.getName.startsWith("v"))
-              .sortBy(_.getName.drop(1).toLong)
-          else Array.empty[Path]
-        val prev = versions.filter(_.getName.drop(1).toLong < id)
-        val base = prev.lastOption.map(readState(fs, _))
-          .getOrElse(Map.empty[String, Counts])
-        val delta = perSourceStats(batch).collect().map { r =>
-          r.getString(0) -> Counts(r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), r.getLong(5))
-        }.toMap
-        val merged = capped(
-          (base.keySet ++ delta.keySet).iterator.map { s =>
-            s -> (base.getOrElse(s, Counts(0, 0, 0, 0, 0)) +
-              delta.getOrElse(s, Counts(0, 0, 0, 0, 0)))
-          }.toMap, sourceCap)
-        writeState(fs, new Path(stateRoot, s"v$id"), merged)
-        prev.dropRight(StreamingDrift.retainVersions - 1)
-          .foreach(fs.delete(_, true))
-        onBatch(id, merged)
-      }
-      .start()
-  }
+      onBatch: (Long, Map[String, Counts]) => Unit): StreamingQuery =
+    VersionedState.textLoop[Map[String, Counts]](docs, checkpoint)(
+      _.map { l =>
+        val a = l.split(" ")
+        a(0) -> Counts(a(1).toLong, a(2).toLong, a(3).toLong, a(4).toLong,
+          a(5).toLong)
+      }.toMap,
+      _.toSeq.sortBy(_._1).map { case (s, c) =>
+        s"$s ${c.nDocs} ${c.nRedactions} ${c.nQualityFail} ${c.nPiiHit} ${c.nAdmitted}"
+      }) { (baseOpt, batch) =>
+      val base = baseOpt.getOrElse(Map.empty[String, Counts])
+      val delta = perSourceStats(batch).collect().map { r =>
+        r.getString(0) -> Counts(r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5))
+      }.toMap
+      capped(
+        (base.keySet ++ delta.keySet).iterator.map { s =>
+          s -> (base.getOrElse(s, Counts(0, 0, 0, 0, 0)) +
+            delta.getOrElse(s, Counts(0, 0, 0, 0, 0)))
+        }.toMap, sourceCap)
+    } { (id, _, merged) => onBatch(id, merged) }
 }

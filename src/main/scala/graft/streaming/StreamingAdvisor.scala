@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.pipeline.AnalysisPipeline
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -30,11 +29,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Scale posture: the state is one parquet row per distinct query text —
   * workload-metadata-sized, distributed, never collected whole (the
   * advisor's heavy-hitter cap bounds what reaches the driver). Snapshots
-  * are metadata-sized (one row per profiled view). State versions live on
-  * whatever filesystem `logDir` resolves to (local, HDFS, S3 — all file
-  * operations go through the Hadoop FileSystem API, the same resolver the
-  * parquet writes use); steady state is two copies (current + the one a
-  * replayed batch would need).
+  * are metadata-sized (one row per profiled view). The state is versioned
+  * by batch id as parquet directories `<logDir>_state/v<id>` under the
+  * rules of [[VersionedState]], keeping two versions (current + the one a
+  * replayed batch merges from).
   */
 object StreamingAdvisor {
 
@@ -50,15 +48,13 @@ object StreamingAdvisor {
     * and pushes one Snapshot with the recommendations derived from
     * everything observed so far.
     *
-    * Replay-idempotent: state versions are named by batchId and a replayed
-    * batch merges against versions STRICTLY BELOW its own id, so
-    * re-processing after a failure overwrites rather than double-counts
-    * (the archival append may duplicate on replay — it is audit data, never
-    * advisor input). For that to survive a PROCESS restart, batchIds must
-    * continue rather than reset: pass `checkpointDir` (or set
-    * `spark.sql.streaming.checkpointLocation`) in any deployment that
-    * restarts — with the default per-run temp checkpoint, a restarted query
-    * renumbers from batch 0 and starts a fresh state lineage.
+    * Restart, replay and retention follow [[VersionedState]]. Batch ids
+    * must continue across a PROCESS restart for the state to survive it:
+    * pass `checkpointDir` (or set `spark.sql.streaming.checkpointLocation`)
+    * in any deployment that restarts — with the default per-run temp
+    * checkpoint, a restarted query renumbers from batch 0 and starts a
+    * fresh state lineage. The archival append may duplicate on replay; it
+    * is audit data, never advisor input.
     *
     * `stateCap` bounds the state over an unbounded stream lifetime: after
     * each merge only the `stateCap` most-frequent texts are kept (count
@@ -72,83 +68,23 @@ object StreamingAdvisor {
     * nothing has been pruned before the final merge (e.g. single-batch, or
     * state never exceeding the cap).
     *
-    * `durableTail` changes what saturation costs: when true, the FULL
-    * merged state is retained in the versioned parquet (saturation degrades
-    * to DISK instead of dropped counts — restart-surviving GIVEN a
-    * checkpoint, which durableTail therefore requires at start();
-    * a pruned-and-reappearing text can no longer restart from zero, so the
-    * lossy-counting caveat above vanishes and stream == batch equality is
-    * unconditional), while the per-batch ADVICE derivation still reads only
-    * the `stateCap` most-frequent texts, keeping the scorer's distributed
-    * work and the driver's parse load heavy-hitter-bounded on a keyspace
-    * far past the cap. The heavy-hitter head is materialized cap-sized
-    * (`h<batchId>` beside `v<batchId>`) from the same in-memory merge the
-    * state write consumes, so advising never re-sorts the on-disk tail:
-    * per-batch cost is ONE full-state pass (the merge itself — inherent to
-    * exact totals under versioned-state replay) plus O(batch + stateCap)
-    * advice work. The cost is state parquet sized by DISTINCT TEXTS
-    * ever seen (not history — rows stay one-per-text), the right trade on a
-    * long-lived 100× stream whose keyspace outgrows any in-memory cap.
-    *
-    * `compactEvery` amortizes the per-batch STATE WRITE (r10 verdict #3):
-    * the merge itself must read base + deltas every batch (inherent to
-    * exact totals under versioned-state replay), but rewriting the FULL
-    * state per batch is not. With compactEvery = N > 1, in-between batches
-    * persist ONLY their own per-text aggregates as a delta (`d<batchId>`,
-    * O(batch) rows), and every Nth batch compacts base + pending deltas
-    * into a fresh full version (`v<batchId>`). Per-batch IO is therefore
-    * O(batch + compacted-state) read + O(batch) write, with an O(state)
-    * write only at compactions. Replay stays idempotent: a replayed batch
-    * recomputes from versions AND deltas strictly below its own id and
-    * overwrites whichever file its first attempt wrote. One semantic
-    * shift in non-durable over-cap mode: the heavy-hitter PRUNE now lands
-    * at compactions instead of every batch (strictly FEWER prune points,
-    * so the lossy-counting error can only shrink); advice derivation is
-    * cap-bounded per batch either way. The default (1) preserves the
-    * compact-every-batch behavior exactly.
-    *
-    * ONE ADVISOR PER logDir: the versioned state root lives next to
-    * `logDir` and batch 0's fresh-lineage sweep deletes EVERY v-, d- and
-    * h-prefixed directory under it — two advisor queries sharing a logDir would
-    * destroy each other's live state on restart. Give each advisor its own
-    * logDir (and checkpointDir); there is no cross-query fencing. */
+    * ONE ADVISOR PER logDir (the fresh-lineage sweep): give each advisor
+    * its own logDir and checkpointDir; there is no cross-query fencing. */
   def start(spark: SparkSession, queryLogStream: DataFrame,
       nameFilter: String => Boolean, logDir: String,
       snapshots: java.util.concurrent.ConcurrentLinkedQueue[Snapshot],
       stateCap: Int = 10 * AnalysisPipeline.maxWorkloadTexts,
       checkpointDir: Option[String] = None,
-      approxCardinality: Boolean = false,
-      durableTail: Boolean = false,
-      compactEvery: Int = 1): StreamingQuery = {
-    require(compactEvery >= 1, s"compactEvery must be >= 1, got $compactEvery")
-    // durableTail's whole promise is restart-surviving counts — but a
-    // restart WITHOUT a checkpoint renumbers batches from 0, and batch 0's
-    // fresh-lineage sweep (below) deletes every retained state version.
-    // Refuse the contradiction up front rather than silently dropping the
-    // durable tail on the first restart.
-    require(!durableTail || checkpointDir.isDefined ||
-      spark.conf.getOption("spark.sql.streaming.checkpointLocation").isDefined,
-      "durableTail requires a checkpointDir (or " +
-        "spark.sql.streaming.checkpointLocation): without one a restart " +
-        "renumbers batches from 0 and the fresh-lineage sweep deletes the " +
-        "retained state — the exact loss durableTail exists to prevent")
-    // STABLE query name, derived from logDir (one advisor per logDir is
-    // already the documented contract). Without it the session-global
-    // spark.sql.streaming.checkpointLocation satisfies the require above but
-    // resolves to <location>/<random-UUID> per start() — a restart gets a
-    // FRESH checkpoint, batchIds renumber from 0, and the batch-0 sweep
-    // deletes every retained state version: exactly the loss the guard's
-    // message says it prevents (r9 advice, medium). With a stable name the
-    // global conf resolves to <location>/<queryName> and genuinely resumes.
+      approxCardinality: Boolean = false): StreamingQuery = {
+    // STABLE query name, derived from logDir (one advisor per logDir). With
+    // only the session-global spark.sql.streaming.checkpointLocation set,
+    // the checkpoint resolves to <location>/<queryName>: an unnamed query
+    // would get a fresh <random-UUID> checkpoint per start(), renumber from
+    // batch 0, and the batch-0 sweep would delete the retained state.
     val stableName = "graft-advisor-" +
       logDir.replaceAll("[^A-Za-z0-9._-]", "-").takeRight(40) +
       "-" + Integer.toHexString(logDir.hashCode)
-    val stateRoot = new Path(logDir.stripSuffix("/") + "_state")
-    // resolve through the Hadoop FS of the state path itself — the SAME
-    // resolver the parquet reads/writes use, so listing/deleting versions
-    // works wherever the data lands (driver-local java.io.File would
-    // silently see nothing on a cluster whose default FS is remote)
-    val fs = stateRoot.getFileSystem(spark.sessionState.newHadoopConf())
+    val store = new VersionedState(logDir, spark.sessionState.newHadoopConf(), keep = 2)
     val writer = queryLogStream.writeStream.outputMode("append")
       .queryName(stableName)
     checkpointDir.foreach(d => writer.option("checkpointLocation", d))
@@ -166,193 +102,62 @@ object StreamingAdvisor {
         // cannot change them — long sums exactly, priority sums are
         // integer-valued doubles)
         val batchStats = AnalysisPipeline.textStatsOf(batch)
-        // FRESH LINEAGE on batch 0: a restart WITHOUT a checkpoint renumbers
-        // batches from 0 while the previous run's state versions survive on
-        // disk — left in place they'd re-enter prevVersions once this run's
-        // ids pass theirs, silently merging a dead lineage's aggregates
-        // (double-counted history). A checkpointed replay of batch 0 hits
-        // this too, harmlessly: it recomputes v0 from scratch anyway.
-        def listBy(prefix: String): Array[Path] =
-          if (fs.exists(stateRoot))
-            fs.listStatus(stateRoot)
-              .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-              .map(_.getPath).sortBy(_.getName.drop(1).toLong)
-          else Array.empty[Path]
-        if (batchId == 0L && fs.exists(stateRoot))
-          fs.listStatus(stateRoot)
-            .filter(st => st.isDirectory && "vdh".contains(st.getPath.getName.take(1)))
-            .foreach(st => fs.delete(st.getPath, true))
-        val prevVersions = listBy("v").filter(_.getName.drop(1).toLong < batchId)
-        val baseId = prevVersions.lastOption
-          .map(_.getName.drop(1).toLong).getOrElse(-1L)
-        // deltas pending since the base compaction — merge sources exactly
-        // like the base itself; a REPLAYED batch excludes its own first
-        // attempt's file (strictly-below filter), so replay overwrites
-        // instead of double-counting
-        val pendingDeltas = listBy("d").filter { p =>
-          val j = p.getName.drop(1).toLong; j > baseId && j < batchId
+        val merged = store.mergeBase(batchId) match {
+          case None => batchStats
+          case Some(base) =>
+            spark.read.parquet(base.toString).unionByName(batchStats)
+              .groupBy("query")
+              .agg(sum("cnt").as("cnt"), sum("sum_exec").as("sum_exec"),
+                sum("sum_priority").as("sum_priority"))
         }
-        val mergeSources =
-          prevVersions.lastOption.map(p => spark.read.parquet(p.toString)).toSeq ++
-            pendingDeltas.map(p => spark.read.parquet(p.toString)) :+ batchStats
-        val merged =
-          if (mergeSources.sizeIs == 1) batchStats
-          else mergeSources.reduce(_ unionByName _)
-            .groupBy("query")
-            .agg(sum("cnt").as("cnt"), sum("sum_exec").as("sum_exec"),
-              sum("sum_priority").as("sum_priority"))
-        // bound the carried state: top-stateCap texts by frequency (state
-        // is metadata-sized, so the TakeOrdered is cheap; the count that
-        // detects overflow runs on the same cached frame)
+        val cur = store.version(batchId).toString
+        // bound the carried state: top-stateCap texts by frequency, count
+        // desc, text asc — the order the scaladoc pins as a contract. The
+        // count that detects overflow and the write share one cached merge.
         val mergedC = merged.cache()
-        val n = mergedC.count()
-        val overCap = n > stateCap
-        // THE heavy-hitter cap selector — count desc, text asc, the order
-        // the scaladoc pins as a contract. One definition serves the
-        // persisted bound, the head write, and the in-memory advice
-        // narrowing; editing the tie-break in one of three copies would
-        // silently diverge the persisted head from the advice ordering.
-        def topCap(df: DataFrame): DataFrame =
-          df.orderBy(desc("cnt"), asc("query")).limit(stateCap)
-        // compact when the delta window since the base is full (or there is
-        // no base yet — batch 0 always compacts so a base always exists)
-        val compacting = compactEvery <= 1 || baseId < 0 ||
-          (batchId - baseId) >= compactEvery
-        val cur = new Path(stateRoot, s"v$batchId")
-        if (compacting) {
+        try {
+          val n = mergedC.count()
           val bounded =
-            if (!overCap) mergedC
-            else if (durableTail) {
-              // spill tier: keep EVERYTHING on disk (one parquet row per
-              // distinct text — keyspace-sized, never history-sized); only
-              // the advice derivation below narrows to the heavy hitters
-              log.info(
-                s"advisor state has $n distinct texts (> stateCap=$stateCap); " +
-                  "durable-tail mode retains all on disk, advising from the " +
-                  s"$stateCap most frequent")
-              mergedC
-            } else {
+            if (n <= stateCap) mergedC
+            else {
               log.warn(
                 s"advisor state has $n distinct texts; keeping the $stateCap most frequent")
-              topCap(mergedC)
+              mergedC.orderBy(desc("cnt"), asc("query")).limit(stateCap)
             }
-          bounded.write.mode("overwrite").parquet(cur.toString)
-        } else {
-          // delta batch: ONLY this batch's own aggregates ride to disk —
-          // the O(batch) write the compaction schedule exists to buy. The
-          // full merged frame stays in memory (cached above) for the head
-          // and advice derivations below; the next batch re-derives it
-          // from v<base> + d* deltas.
-          if (overCap && !durableTail) {
-            // cap saturation detected mid-window must not be SILENT just
-            // because this batch defers the prune to the next compaction
-            // (the compacting branch warns; this one previously didn't)
-            log.warn(
-              s"advisor state has $n distinct texts (> stateCap=$stateCap); " +
-                s"prune deferred to the next compaction (base v$baseId, " +
-                s"every $compactEvery batches)")
-          }
-          batchStats.write.mode("overwrite")
-            .parquet(new Path(stateRoot, s"d$batchId").toString)
-        }
-        // HEAVY-HITTER HEAD, maintained alongside the tail (r9 verdict #7):
-        // when the durable tail outgrows the cap, the advice derivation must
-        // NOT re-sort the full on-disk keyspace every batch (an
-        // O(state·log cap) disk pass per trigger at 100× keyspace). The head
-        // is derived HERE, from the SAME cached in-memory merge the state
-        // write just consumed — one extra TakeOrdered reduction over a frame
-        // already resident, no second full-state disk scan — and persisted
-        // cap-sized as h<batchId>, so the advice path below reads O(stateCap)
-        // rows regardless of tail size. Per-batch cost decomposition: the
-        // full-state pass is the MERGE itself (read v<prev> + groupBy +
-        // write v<cur> — inherent to exact totals under the versioned-state
-        // replay contract); advice work on top of it is O(batch + stateCap).
-        // 'h' prefix, not 'v…_head': the version listing above parses
-        // getName.drop(1).toLong, which "3_head" would crash.
-        val headPath = new Path(stateRoot, s"h$batchId")
-        if (durableTail && overCap)
-          topCap(mergedC).write.mode("overwrite").parquet(headPath.toString)
+          bounded.write.mode("overwrite").parquet(cur)
+        } finally mergedC.unpersist()
         // re-derive ONLY the scores from the materialized state (profiles
         // re-read the advised tables, whose current contents are exactly
-        // what a fresh advisor run must reflect)
+        // what a fresh advisor run must reflect).
         // NOTE the per-batch profiling cost: every advised table is
         // re-profiled each micro-batch (table contents may change between
         // batches — profiles are intentionally not carried). At production
         // table sizes pass approxCardinality = true (the HLL/approx-
         // percentile path) or the per-batch scans will outrun the trigger.
-        // A batch whose ADVICE DERIVATION fails — catalog discovery
-        // matching zero tables (the require's IllegalArgumentException), a
-        // temp view dropped between listTables and spark.table
-        // (AnalysisException), or any other recoverable failure — must not
-        // kill the continuous-advice loop: the exception would propagate
-        // out of foreachBatch and terminate the StreamingQuery
-        // PERMANENTLY, where an empty advice snapshot is recoverable next
-        // batch. State was already merged above, so nothing is lost.
-        // NonFatal, not a narrower type: the first version caught only the
-        // require's IAE and the named dropped-view scenario (an
-        // AnalysisException) still escaped.
-        // durable-tail state may hold a keyspace far past the cap; the
-        // scorer reads the cap-sized head snapshot written above, so
-        // advice-side IO and the driver's parse load are O(stateCap) no
-        // matter how large the on-disk tail grows
-        // delta batches have no materialized full version to re-read; their
-        // advice derives from the SAME cached in-memory merge the persisted
-        // form reflects (cap-narrowed in non-durable over-cap mode, exactly
-        // like the persisted compaction would be)
-        // FINALLY, not sequential (r11 self-review): the NonFatal catch
-        // below keeps recoverable advice failures from killing the query,
-        // but a FATAL or interrupting error (query.stop() mid-collect)
-        // would otherwise skip the unpersist and leak the cached full
-        // state — keyspace-sized in durable-tail mode — into the shared
-        // session on every advisor stop/restart cycle
-        try {
-          // the parquet reads are INSIDE the recoverable block (r11
-          // self-review): a transient FS error reading the just-written
-          // head/version footers is as recoverable as a failed advice
-          // derivation — state is already merged, an empty snapshot
-          // self-heals next batch, and letting it escape would kill the
-          // StreamingQuery permanently
-          val recs =
-            try {
-              val adviceInput =
-                if (durableTail && overCap) spark.read.parquet(headPath.toString)
-                else if (compacting) spark.read.parquet(cur.toString)
-                else if (overCap) topCap(mergedC)
-                else mergedC
-              AnalysisPipeline.runFromCatalogStats(spark,
-                  adviceInput, nameFilter = nameFilter,
-                  approxCardinality = approxCardinality)
-                .collect()
-                .map(r => (r.getAs[String]("view"), r.getAs[String]("partition_spec")))
-                .toSeq
-            }
-            catch { case scala.util.control.NonFatal(e) =>
-              log.warn(s"advisor batch $batchId produced no advice: ${e.getMessage}")
-              Seq.empty
-            }
-          // replay-idempotent snapshot publication: a batch whose foreachBatch
-          // completed but whose streaming commit was lost is re-run with the
-          // SAME batchId — replace, never append, or consumers folding the
-          // queue see doubled entries for that batch
-          snapshots.removeIf(_.batchId == batchId)
-          snapshots.add(Snapshot(batchId, recs))
-          ()
-        } finally mergedC.unpersist()
-        // keep everything this batch merged FROM: if it crashes AFTER this
-        // point but BEFORE the streaming commit, the replay must still find
-        // v<base> and the pending deltas (a replay merges against files
-        // < batchId — deleting a merge source inside its consumer batch
-        // would lose all history in that window). Deletable: versions
-        // BEFORE the base, deltas already folded INTO the base, and stale
-        // heads (derivable, never merge sources). Steady state: two full
-        // versions + at most 2·compactEvery deltas on disk.
-        prevVersions.dropRight(1).foreach(p => fs.delete(p, true))
-        if (baseId >= 0)
-          listBy("d").filter(_.getName.drop(1).toLong <= baseId)
-            .foreach(p => fs.delete(p, true))
-        listBy("h").filter(_.getName.drop(1).toLong < batchId)
-          .foreach(p => fs.delete(p, true))
-        ()
+        // A batch whose advice derivation fails — catalog discovery
+        // matching zero tables, a temp view dropped between listTables and
+        // spark.table, a transient FS error reading v<id> back — must not
+        // kill the continuous-advice loop: the exception would terminate
+        // the StreamingQuery PERMANENTLY, where an empty snapshot is
+        // recoverable next batch. State was already merged above.
+        val recs =
+          try {
+            AnalysisPipeline.runFromCatalogStats(spark,
+                spark.read.parquet(cur), nameFilter = nameFilter,
+                approxCardinality = approxCardinality)
+              .collect()
+              .map(r => (r.getAs[String]("view"), r.getAs[String]("partition_spec")))
+              .toSeq
+          }
+          catch { case scala.util.control.NonFatal(e) =>
+            log.warn(s"advisor batch $batchId produced no advice: ${e.getMessage}")
+            Seq.empty
+          }
+        // replay-idempotent snapshot publication: a replayed batch
+        // replaces its snapshot, never appends
+        snapshots.removeIf(_.batchId == batchId)
+        snapshots.add(Snapshot(batchId, recs))
+        store.retire(batchId)
         } finally batch.unpersist()
       }
       .start()

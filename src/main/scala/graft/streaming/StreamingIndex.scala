@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -27,10 +26,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * identical state (the batch-twin property StreamingSpec asserts), and a
   * 1000-executor ingest can fold shard-local deltas in any order.
   *
-  * Durability: versioned-by-batch-id text state beside the checkpoint —
-  * the [[StreamingDrift]] discipline verbatim (restart-survivable,
-  * replay-idempotent via strictly-below merge bases, batch-0 sweep for
-  * fresh lineages, [[StreamingDrift.retainVersions]]-deep retention).
+  * Durability: one text file per batch id beside the checkpoint, under
+  * the rules of [[VersionedState]].
   */
 object StreamingIndex {
 
@@ -90,72 +87,27 @@ object StreamingIndex {
       (m, s.nRows, s.minVal, s.maxVal, s.bits.size.toLong)
     }
 
-  private def writeState(fs: FileSystem, path: Path,
-      st: Map[String, PartState]): Unit = {
-    val out = fs.create(path, true)
-    // doubles round-trip exactly through java.lang.Double.toString/parse
-    try out.write(st.toSeq.sortBy(_._1).map { case (m, s) =>
-      s"$m ${s.nRows} ${s.minVal} ${s.maxVal} ${s.bits.toSeq.sorted.mkString(",")}"
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readState(fs: FileSystem, path: Path): Map[String, PartState] = {
-    val in = fs.open(path)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty)
-      .map { l =>
-        val a = l.split(" ", 5)
-        val bits = if (a.length < 5 || a(4).isEmpty) Set.empty[Long]
-          else a(4).split(",").map(_.toLong).toSet
-        a(0) -> PartState(a(1).toLong, a(2).toDouble, a(3).toDouble, bits)
-      }.toMap
-    finally in.close()
-  }
-
   /** Start index maintenance over a streaming (o_orderdate, o_custkey,
     * o_totalprice) frame: per micro-batch, fold [[batchDelta]] into the
     * persisted state (versioned at `<checkpoint>_state/v<id>`) and hand
     * the post-merge snapshot to `onBatch`. */
   def monitor(orders: DataFrame, checkpoint: String, mBits: Long = 16384L,
       kHashes: Int = 3)(
-      onBatch: (Long, Map[String, PartState]) => Unit): StreamingQuery = {
-    val stateRoot = new Path(checkpoint.stripSuffix("/") + "_state")
-    val fs = stateRoot.getFileSystem(
-      orders.sparkSession.sessionState.newHadoopConf())
-    orders.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: java.lang.Long) =>
-        // fresh-lineage sweep + strictly-below merge base: the
-        // StreamingDrift replay-idempotence discipline, see its scaladoc
-        if (id == 0L && fs.exists(stateRoot))
-          fs.listStatus(stateRoot).filter(_.getPath.getName.startsWith("v"))
-            .foreach(st => fs.delete(st.getPath, true))
-        val versions =
-          if (fs.exists(stateRoot))
-            fs.listStatus(stateRoot).map(_.getPath)
-              .filter(_.getName.startsWith("v"))
-              .sortBy(_.getName.drop(1).toLong)
-          else Array.empty[Path]
-        val prev = versions.filter(_.getName.drop(1).toLong < id)
-        val base = prev.lastOption.map(readState(fs, _))
-          .getOrElse(Map.empty[String, PartState])
-        val delta = batchDelta(batch, mBits, kHashes)
-        val merged = (base.keySet ++ delta.keySet).iterator.map { m =>
-          val s = (base.get(m), delta.get(m)) match {
-            case (Some(x), Some(y)) => x + y
-            case (Some(x), None)    => x
-            case (None, Some(y))    => y
-            case (None, None)       => PartState(0L, 0.0, 0.0, Set.empty)
-          }
-          m -> s
-        }.toMap
-        writeState(fs, new Path(stateRoot, s"v$id"), merged)
-        prev.dropRight(StreamingDrift.retainVersions - 1)
-          .foreach(fs.delete(_, true))
-        onBatch(id, merged)
+      onBatch: (Long, Map[String, PartState]) => Unit): StreamingQuery =
+    VersionedState.textLoop[Map[String, PartState]](orders, checkpoint)(
+      _.map { l =>
+        val a = l.split(" ", 5)
+        val bits = if (a.length < 5 || a(4).isEmpty) Set.empty[Long]
+          else a(4).split(",").map(_.toLong).toSet
+        a(0) -> PartState(a(1).toLong, a(2).toDouble, a(3).toDouble, bits)
+      }.toMap,
+      // doubles round-trip exactly through java.lang.Double.toString/parse
+      _.toSeq.sortBy(_._1).map { case (m, s) =>
+        s"$m ${s.nRows} ${s.minVal} ${s.maxVal} ${s.bits.toSeq.sorted.mkString(",")}"
+      }) { (baseOpt, batch) =>
+      batchDelta(batch, mBits, kHashes).foldLeft(
+          baseOpt.getOrElse(Map.empty[String, PartState])) {
+        case (acc, (m, d)) => acc.updated(m, acc.get(m).fold(d)(_ + d))
       }
-      .start()
-  }
+    } { (id, _, merged) => onBatch(id, merged) }
 }

@@ -262,8 +262,8 @@ class ListenerSpec extends SparkSpec {
       // runs over the coarse-group subtotal frame (distinctKeys/groupWidth
       // rows)
       "Layout.scala" -> 1,
-      // sessionize twin (entity) + LSH flags (micro-batch)
-      "StreamingUsage.scala" -> 2,
+      // sessionize twin (entity)
+      "StreamingUsage.scala" -> 1,
       // as-of running-last (2) — per-key ordered history
       "Temporal.scala" -> 2,
       // packSequences two-level shard prefix (2)
@@ -286,6 +286,23 @@ class ListenerSpec extends SparkSpec {
     // the inventory must not go stale either — a converted site comes OFF it
     val stale = audited.filter { case (f, n) => sites.getOrElse(f, 0) < n }
     assert(stale.isEmpty, s"stale window-audit entries (file -> audited count): $stale")
+  }
+
+  test("grep gate: only graft.streaming.VersionedState lists or deletes streaming state") {
+    // the versioned-state rules (fresh-lineage sweep, merge base,
+    // retention) live in one file; a listStatus or delete in another
+    // streaming file is a new copy of them
+    val owner = "VersionedState.scala"
+    val dir = new java.io.File("src/main/scala/graft/streaming")
+    assume(dir.isDirectory, "run from repo root")
+    val files = dir.listFiles().filter(_.getName.endsWith(".scala")).toSeq
+    def uses(f: java.io.File) = {
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      src.contains("listStatus") || src.contains(".delete(")
+    }
+    val offenders = files.filter(uses).map(_.getName).toSet - owner
+    assert(offenders.isEmpty, s"versioned-state rules outside $owner: $offenders")
+    assert(files.exists(f => f.getName == owner && uses(f)), s"$owner no longer owns them")
   }
 
   test("self-hosted advisor: session serves the workload, then advises on it") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{StreamingAdvisor, StreamingDrift, StreamingUsage}
+import graft.streaming.{StreamingAdvisor, StreamingDrift, StreamingTestOps, StreamingUsage}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   *     sketch-BYTES-sized in DENSE mode and the 4-batch merge still equals
   *     the one-pass batch twin exactly.
   *   - StreamingAdvisor over a 15k-distinct-text synthesized workload
-  *     (one text per sf1 user), stateCap=2000 + durableTail — past
-  *     saturation, so the cap-sized head / durable-tail split is exercised
-  *     where it matters — with compactEvery=4 so the delta path runs too.
+  *     (one text per sf1 user), stateCap=2000 — past saturation, so every
+  *     batch prunes the merged state to the cap.
   *   - StreamingDrift.monitor over sf1 documents (50k rows) in 4 batches,
   *     final PSI checked EXACTLY against the batch histogram's PSI.
   *
@@ -88,7 +87,7 @@ object StreamStress {
         }
         val got = spark.table(qname)
           .collect().map(r => ((r.getLong(0), r.getString(1)), (r.getLong(2), r.getLong(3)))).toMap
-        val want = StreamingUsage.windowedDistinctUsersBatchTwin(events, "1 day")
+        val want = StreamingTestOps.windowedDistinctUsersBatchTwin(events, "1 day")
           .collect().map(r => ((r.getLong(0), r.getString(1)), (r.getLong(2), r.getLong(3)))).toMap
         require(want.nonEmpty && got.keySet == want.keySet,
           s"4-batch merge group set != batch twin (${got.size} vs ${want.size} rows)")
@@ -159,7 +158,7 @@ object StreamStress {
       } finally query.stop()
     }
 
-    // ---- leg 2: advisor past stateCap saturation, durable tail, deltas ---
+    // ---- leg 2: advisor past stateCap saturation -----------------------
     {
       graft.catalog.TableRegistry.table(spark, sf1, "supplier")
         .createOrReplaceTempView("supplier")
@@ -179,36 +178,24 @@ object StreamStress {
       val stateCap = 2000
       val query = StreamingAdvisor.start(spark, logStream, Set("supplier"),
         s"$root/log", snaps, stateCap = stateCap,
-        checkpointDir = Some(s"$root/ckpt"), approxCardinality = true,
-        durableTail = true, compactEvery = 4)
+        checkpointDir = Some(s"$root/ckpt"), approxCardinality = true)
       val batchSecs = scala.collection.mutable.ArrayBuffer[Double]()
       try {
-        // FIVE batches (ids 0–4) so a NON-batch-0 compaction actually fires
-        // at stress scale: batch 0 always compacts (no base), 1–3 ride the
-        // delta path, batch 4 hits batchId − baseId ≥ compactEvery and
-        // compacts base + 3 pending deltas — the exact path the r10
-        // verdict #3 work added. (4 batches with compactEvery=4 never
-        // recompacts, and the old gate read batch 0's state as "the tail",
-        // which only held the full keyspace by generator coincidence.)
+        // FIVE batches (ids 0–4): every batch after the first merges a
+        // saturated base
         logRows.grouped(logRows.size / 5 + 1).foreach { b =>
           val (_, s) = timed { stream.addData(b); query.processAllAvailable() }
           batchSecs += s
         }
         val stateRoot = new Path(s"$root/log_state")
         val fs = stateRoot.getFileSystem(spark.sessionState.newHadoopConf())
-        def dirsOf(prefix: String): Array[Path] = fs.listStatus(stateRoot)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-          .map(_.getPath).sortBy(_.getName.drop(1).toLong)
-        // the durable tail is the LATEST version — retention deliberately
-        // keeps the previous version too (replay source), so summing v*
-        // would double-count
-        val vLatest = dirsOf("v").last
-        val tailRows = spark.read.parquet(vLatest.toString).count()
-        val tailBytes = fs.getContentSummary(vLatest).getLength
-        val hLatest = dirsOf("h").last
-        val headRows = spark.read.parquet(hLatest.toString).count()
-        val headBytes = fs.getContentSummary(hLatest).getLength
-        val nDeltas = dirsOf("d").length
+        val versions = fs.listStatus(stateRoot).map(_.getPath)
+          .filter(_.getName.matches("v\\d+")).sortBy(_.getName.drop(1).toLong)
+        // the state is the LATEST version — retention keeps the previous
+        // one too (replay source), so summing v* would double-count
+        val vLatest = versions.last
+        val stateRows = spark.read.parquet(vLatest.toString).count()
+        val stateBytes = fs.getContentSummary(vLatest).getLength
         val distinctTexts = logRows.map(_._1).distinct.size
         val last = {
           import scala.jdk.CollectionConverters._
@@ -216,21 +203,17 @@ object StreamStress {
         }
         require(last.recs.map(_._1) == Seq("supplier") && last.recs.head._2.nonEmpty,
           s"final snapshot must advise supplier: ${last.recs}")
-        require(vLatest.getName == "v4",
-          s"batch 4 must have recompacted (base + 3 deltas): latest = ${vLatest.getName}")
-        require(tailRows == distinctTexts,
-          s"durable tail must retain the full keyspace: $tailRows != $distinctTexts")
-        require(headRows == stateCap,
-          s"advice head must be cap-sized: $headRows != $stateCap")
-        require(nDeltas >= 1, "delta path never exercised")
+        require(versions.map(_.getName).toSeq == Seq("v3", "v4"),
+          s"expected v3, v4 after five batches: ${versions.map(_.getName).mkString(",")}")
+        require(distinctTexts > stateCap && stateRows == stateCap,
+          s"saturated state must be cap-sized: $stateRows rows, cap $stateCap, " +
+            s"$distinctTexts distinct texts")
         out += "advisor" -> scala.collection.immutable.ListMap(
           "input_rows" -> logRows.size,
           "distinct_texts" -> distinctTexts,
           "state_cap" -> stateCap,
           "batches_sec" -> batchSecs.map(s => math.round(s * 100) / 100.0).toSeq,
-          "tail_state_rows" -> tailRows, "tail_state_bytes" -> tailBytes,
-          "head_rows" -> headRows, "head_bytes" -> headBytes,
-          "deltas_on_disk" -> nDeltas,
+          "state_rows" -> stateRows, "state_bytes" -> stateBytes,
           "snapshots" -> snaps.size)
       } finally query.stop()
     }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.catalog.TableRegistry
-import graft.streaming.StreamingUsage
+import graft.streaming.{StreamingTestOps, StreamingUsage}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -90,7 +90,7 @@ class StreamingSpec extends SparkSpec {
       val got = spark.table(qname)
         .orderBy("window_start", "event_type")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-      val want = StreamingUsage.windowedDistinctUsersBatchTwin(
+      val want = StreamingTestOps.windowedDistinctUsersBatchTwin(
         TableRegistry.table(spark, sfDir, "events"))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
       assert(got == want, "micro-batched sketch merge must equal the one-pass batch sketch")
@@ -138,7 +138,7 @@ class StreamingSpec extends SparkSpec {
       rows.grouped(4000).foreach { b => stream.addData(b); query.processAllAvailable() }
       val got = spark.table(qname)
         .collect().map(r => ((r.getLong(0), r.getString(1)), (r.getLong(2), r.getLong(3)))).toMap
-      val want = StreamingUsage.windowedDistinctUsersBatchTwin(batchDf)
+      val want = StreamingTestOps.windowedDistinctUsersBatchTwin(batchDf)
         .collect().map(r => ((r.getLong(0), r.getString(1)), (r.getLong(2), r.getLong(3)))).toMap
       assert(got.keySet == want.keySet && got.nonEmpty)
       want.foreach { case (k, (wApprox, wCnt)) =>
@@ -197,7 +197,7 @@ class StreamingSpec extends SparkSpec {
     val sentinel = (-1L, maxTs + 10L * 3600 * 1000000000L)
 
     val stream = MemoryStream[(Long, Long)]
-    val streamed = StreamingUsage.sessionizeStream(
+    val streamed = StreamingTestOps.sessionizeStream(
       stream.toDF().toDF("user_id", "ts"), gapMinutes = 30)
     val qname = s"sessions_${System.nanoTime()}"
     val query = streamed.writeStream
@@ -233,7 +233,7 @@ class StreamingSpec extends SparkSpec {
     val min5 = 5L * 60 * 1000000000L
     val min2 = 2L * 60 * 1000000000L
     val stream = MemoryStream[(Long, Long)]
-    val streamed = StreamingUsage.sessionizeStream(
+    val streamed = StreamingTestOps.sessionizeStream(
       stream.toDF().toDF("user_id", "ts"), gapMinutes = 30)
     val qname = s"sessions_late_${System.nanoTime()}"
     val query = streamed.writeStream
@@ -347,7 +347,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("tier", (col("user_id") % 3).cast("int"))
 
     val stream = MemoryStream[(Long, Double)]
-    val enriched = StreamingUsage.enrichStream(
+    val enriched = StreamingTestOps.enrichStream(
       stream.toDF().toDF("user_id", "value"), dim, "user_id")
     val qname = s"enrich_${System.nanoTime()}"
     val query = enriched.writeStream
@@ -380,7 +380,7 @@ class StreamingSpec extends SparkSpec {
       val (b1, b2) = events.splitAt(events.size / 2)
 
       val stream = MemoryStream[(Long, String)]
-      val streamed = StreamingUsage.runningDistinctTypes(
+      val streamed = StreamingTestOps.runningDistinctTypes(
         stream.toDF().toDF("user_id", "event_type"))
       val qname = s"tws_${System.nanoTime()}"
       val query = streamed.writeStream
@@ -417,7 +417,7 @@ class StreamingSpec extends SparkSpec {
     val (batch1, batch2) = all.splitAt(all.length / 2)
 
     val stream = MemoryStream[(Long, Double)]
-    val streamed = StreamingUsage.runningUserTotals(
+    val streamed = StreamingTestOps.runningUserTotals(
       stream.toDF().toDF("user_id", "value"))
     val qname = s"user_state_${System.nanoTime()}"
     val query = streamed.writeStream
@@ -563,8 +563,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming advisor survives a mid-batch crash: replay after a lost commit is idempotent") {
-    // THE fault StreamingAdvisor.start's version-retention comment
-    // (StreamingAdvisor.scala:131-138) exists for: the batch crashes AFTER
+    // THE fault the replay and retention rules of
+    // graft.streaming.VersionedState exist for: the batch crashes AFTER
     // its state version is written but BEFORE the streaming commit lands.
     // On restart Spark replays the batch; the replay must OVERWRITE the
     // half-committed state version (merge against versions < batchId), not
@@ -658,88 +658,6 @@ class StreamingSpec extends SparkSpec {
     assert(lastRecs == direct, s"stream $lastRecs vs batch $direct")
   }
 
-  test("advisor delta compaction writes O(batch) deltas between compactions, exact across replay") {
-    // r10 verdict #3: with compactEvery = N, only every Nth batch rewrites
-    // the full state; batches in between persist ONLY their own per-text
-    // aggregates as d<batchId>. Proven structurally (delta dirs exist where
-    // versions don't; the delta holds THAT batch's aggregates alone, not
-    // the accumulated keyspace) and semantically (a crash+replay at a DELTA
-    // batch still converges to the exact full-log aggregates).
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    TableRegistry.table(spark, sfDir, "supplier").createOrReplaceTempView("supplier")
-    val all = TableRegistry.table(spark, sfDir, "events")
-      .select(col("event_id"), col("ts"), col("value"))
-      .as[(Long, Long, Double)].collect().toSeq
-    val q = all.length / 4
-    val slices = Seq(all.slice(0, q), all.slice(q, 2 * q),
-      all.slice(2 * q, 3 * q), all.slice(3 * q, all.length))
-    assert(slices.forall(_.nonEmpty))
-
-    val stream = MemoryStream[(Long, Long, Double)]
-    val logStream = TableRegistry.queryLogFrom(
-      stream.toDF().toDF("event_id", "ts", "value"))
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_compact").toString
-    val logDir = s"$root/log"
-    val ckpt = s"$root/ckpt"
-    val snaps = new java.util.concurrent.ConcurrentLinkedQueue[
-      graft.streaming.StreamingAdvisor.Snapshot]()
-    def start() = graft.streaming.StreamingAdvisor.start(
-      spark, logStream, Set("supplier"), logDir, snaps,
-      checkpointDir = Some(ckpt), compactEvery = 3)
-
-    // --- batches 0,1,2: compact (no base yet), delta, delta ---
-    val q1 = start()
-    try slices.take(3).foreach { s => stream.addData(s); q1.processAllAvailable() }
-    finally q1.stop()
-    val st = s"$root/log_state"
-    assert(new java.io.File(s"$st/v0").isDirectory, "batch 0 must compact")
-    assert(!new java.io.File(s"$st/v1").exists && !new java.io.File(s"$st/v2").exists,
-      "delta batches must not rewrite the full state")
-    assert(new java.io.File(s"$st/d1").isDirectory && new java.io.File(s"$st/d2").isDirectory,
-      "delta batches must persist their own aggregates")
-    def stateRows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query", "cnt", "sum_exec", "sum_priority").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq.sorted
-    // the delta write is O(batch): exactly batch 1's own aggregates
-    val wantD1 = stateRows(graft.pipeline.AnalysisPipeline.textStatsOf(
-      TableRegistry.queryLogFrom(slices(1).toDF("event_id", "ts", "value"))))
-    assert(stateRows(spark.read.parquet(s"$st/d1")) == wantD1,
-      "d1 must hold batch 1's aggregates alone")
-
-    // --- crash at DELTA batch 2: d2 write survived, the commit is lost ---
-    val commit2 = new java.io.File(s"$ckpt/commits/2")
-    assert(commit2.isFile && commit2.delete())
-    val crc2 = new java.io.File(s"$ckpt/commits/.2.crc")
-    if (crc2.isFile) assert(crc2.delete())
-
-    // --- restart: replay batch 2 (overwrites d2), then batch 3 compacts
-    //     (batchId 3 - base 0 >= compactEvery 3) ---
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      stream.addData(slices(3))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    assert(new java.io.File(s"$st/v3").isDirectory, "batch 3 must compact")
-    val fullLog = TableRegistry.queryLogFrom(all.toDF("event_id", "ts", "value"))
-    val want = stateRows(graft.pipeline.AnalysisPipeline.textStatsOf(fullLog))
-    val got = stateRows(spark.read.parquet(s"$st/v3"))
-    assert(want.nonEmpty)
-    assert(got == want, s"compacted state drifted across replay:\n got=$got\nwant=$want")
-    // and the recommendations derived from the compacted lineage equal a
-    // direct batch run over everything streamed once
-    val direct = graft.pipeline.AnalysisPipeline.runFromCatalog(
-      spark, fullLog, nameFilter = Set("supplier"))
-      .collect().map(r => (r.getAs[String]("view"), r.getAs[String]("partition_spec"))).toSeq
-    val lastRecs = {
-      import scala.jdk.CollectionConverters._
-      snaps.asScala.toSeq.maxBy(_.batchId).recs
-    }
-    assert(lastRecs == direct, s"stream $lastRecs vs batch $direct")
-  }
-
   test("streaming minhash near-dup flags == batch LSH candidate flags across micro-batches") {
     // the near-dup complement of stream_dedup: (band,bucket) state carries
     // the min doc_id per occupied bucket across micro-batches; a doc is
@@ -770,7 +688,7 @@ class StreamingSpec extends SparkSpec {
         .select(col("doc_id"), (col("f") === 1).as("flagged"))
         .orderBy("doc_id")
         .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
-      val want = StreamingUsage.nearDupFlagsBatch(docsDf)
+      val want = StreamingTestOps.nearDupFlagsBatch(docsDf)
         .orderBy("doc_id")
         .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
       assert(want.exists(_._2) && want.exists(!_._2), "fixture not discriminating")
@@ -823,82 +741,6 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("durable-tail advisor state exceeds stateCap and SURVIVES a restart with exact counts") {
-    // the spill tier: stateCap=2 against 5 distinct canned texts, processed
-    // across two batches WITH A RESTART between them. With durableTail the
-    // saturated keyspace degrades to disk instead of drops: the final state
-    // must hold ALL distinct texts with counts exactly equal to a batch
-    // aggregation of everything ever streamed — no text pruned, no
-    // pruned-and-reappearing text restarting from zero, across the restart.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    TableRegistry.table(spark, sfDir, "supplier").createOrReplaceTempView("supplier")
-    val all = TableRegistry.table(spark, sfDir, "events")
-      .select(col("event_id"), col("ts"), col("value"))
-      .as[(Long, Long, Double)].collect().toSeq
-    val (batch1, batch2) = all.splitAt(all.length / 2)
-
-    val stream = MemoryStream[(Long, Long, Double)]
-    val logStream = TableRegistry.queryLogFrom(
-      stream.toDF().toDF("event_id", "ts", "value"))
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_durable").toString
-    val ckpt = s"$root/ckpt"
-    val snaps = new java.util.concurrent.ConcurrentLinkedQueue[
-      graft.streaming.StreamingAdvisor.Snapshot]()
-    val q1 = graft.streaming.StreamingAdvisor.start(
-      spark, logStream, Set("supplier"), s"$root/log", snaps,
-      stateCap = 2, checkpointDir = Some(ckpt), durableTail = true)
-    try {
-      stream.addData(batch1)
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // restart: the checkpoint continues batch numbering, the durable state
-    // (already past the cap) must carry through
-    val q2 = graft.streaming.StreamingAdvisor.start(
-      spark, logStream, Set("supplier"), s"$root/log", snaps,
-      stateCap = 2, checkpointDir = Some(ckpt), durableTail = true)
-    try {
-      stream.addData(batch2)
-      q2.processAllAvailable()
-    } finally q2.stop()
-
-    def stateRows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query", "cnt", "sum_exec", "sum_priority")
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq.sorted
-    val fullLog = TableRegistry.queryLogFrom(all.toDF("event_id", "ts", "value"))
-    val want = stateRows(graft.pipeline.AnalysisPipeline.textStatsOf(fullLog))
-    val got = stateRows(spark.read.parquet(s"$root/log_state/v1"))
-    assert(want.size > 2, s"fixture must exceed stateCap=2, got ${want.size} texts")
-    assert(got == want, s"durable state diverged:\n got $got\nwant $want")
-    // advice still derives from the heavy hitters only — same restricted-
-    // batch semantics as the lossy cap, now with exact underlying counts
-    val top2 = graft.pipeline.AnalysisPipeline.textStatsOf(fullLog)
-      .orderBy(desc("cnt"), asc("query")).limit(2)
-      .select("query").collect().map(_.getString(0)).toSeq
-    val direct = graft.pipeline.AnalysisPipeline.runFromCatalog(
-      spark, fullLog.where(col("query").isin(top2: _*)), nameFilter = Set("supplier"))
-      .collect().map(r => (r.getAs[String]("view"), r.getAs[String]("partition_spec"))).toSeq
-    val snapshots = {
-      import scala.jdk.CollectionConverters._
-      snaps.asScala.toSeq.sortBy(_.batchId)
-    }
-    assert(snapshots.map(_.batchId) == Seq(0L, 1L), snapshots.map(_.batchId).toString)
-    assert(snapshots.last.recs == direct,
-      s"durable-tail stream ${snapshots.last.recs} vs restricted batch $direct")
-    // HEAVY-HITTER HEAD (r9 verdict #7): advice over a saturated durable
-    // tail must read a cap-sized head snapshot, not re-sort the full
-    // on-disk keyspace per batch. h1 must exist, hold EXACTLY stateCap
-    // rows, and equal the true top-2 of the full state by the advisor's
-    // (cnt desc, query asc) heavy-hitter order — i.e. the incremental head
-    // is the head a full sort would have produced.
-    val headRows = stateRows(spark.read.parquet(s"$root/log_state/h1"))
-    assert(headRows.size == 2, s"head must be cap-sized, got ${headRows.size}")
-    val wantHead = stateRows(graft.pipeline.AnalysisPipeline.textStatsOf(fullLog)
-      .orderBy(desc("cnt"), asc("query")).limit(2))
-    assert(headRows == wantHead, s"head diverged:\n got $headRows\nwant $wantHead")
-  }
   test("streaming PSI monitor converges to the batch drift_psi total") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1263,5 +1105,141 @@ class StreamingSpec extends SparkSpec {
     // the identical state (all merges commutative: sum/min/max/union)
     assert(run(Seq(c, b, a)) == snap, "reversed arrival drifted")
     assert(run(Seq(rows)) == snap, "single-batch run drifted")
+  }
+
+  private def stateRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("query", "cnt", "sum_exec", "sum_priority").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq.sorted
+
+  /** The `v<id>` versions under a state root, in id order. */
+  private def versionsIn(stateRoot: String): Seq[String] =
+    Option(new java.io.File(stateRoot).list()).toSeq.flatten
+      .filter(_.matches("v\\d+")).sortBy(_.drop(1).toLong)
+
+  /** One loop that keeps versioned state: its state directory under a run
+    * root, the versions five batches leave, a dead lineage's `v3` in the
+    * loop's own format, and `run(root, n)`, which streams the loop's
+    * fixture in n micro-batches under `root` with no checkpoint history and
+    * returns the final state beside the batch twin of everything streamed. */
+  private case class StateLoop(name: String, stateDir: String,
+      retainedAfterFive: Seq[String], deadV3: String => Unit,
+      run: (String, Int) => (Any, Any))
+
+  private def stateLoops: Seq[StateLoop] = {
+    import graft.pipeline.AnalysisPipeline
+    import graft.streaming.{StreamingAdmission, StreamingAdvisor, StreamingDrift, StreamingIndex}
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def slices[T](xs: Seq[T], n: Int): Seq[Seq[T]] = {
+      val parts = (0 until n).map(i => xs.slice(i * xs.size / n, (i + 1) * xs.size / n))
+      assert(parts.forall(_.nonEmpty), s"fixture too small for $n batches")
+      parts
+    }
+    def streamAll[T](stream: MemoryStream[T],
+        q: org.apache.spark.sql.streaming.StreamingQuery, parts: Seq[Seq[T]]): Unit =
+      try parts.foreach { b => stream.addData(b); q.processAllAvailable() }
+      finally q.stop()
+    def writeLine(path: String, line: String): Unit = {
+      val f = new java.io.File(path)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, (line + "\n").getBytes("UTF-8"))
+      ()
+    }
+    val textRetained = Seq("v1", "v2", "v3", "v4")
+    Seq(
+      StateLoop("advisor", "log_state", Seq("v3", "v4"),
+        st => AnalysisPipeline.textStatsOf(TableRegistry.queryLog(spark, sfDir))
+          .write.parquet(s"$st/v3"),
+        (root, n) => {
+          TableRegistry.table(spark, sfDir, "supplier").createOrReplaceTempView("supplier")
+          val all = TableRegistry.table(spark, sfDir, "events")
+            .select(col("event_id"), col("ts"), col("value"))
+            .as[(Long, Long, Double)].collect().toSeq
+          val stream = MemoryStream[(Long, Long, Double)]
+          streamAll(stream, StreamingAdvisor.start(spark,
+            TableRegistry.queryLogFrom(stream.toDF().toDF("event_id", "ts", "value")),
+            Set("supplier"), s"$root/log",
+            new java.util.concurrent.ConcurrentLinkedQueue[StreamingAdvisor.Snapshot]()),
+            slices(all, n))
+          (stateRows(spark.read.parquet(s"$root/log_state/v${n - 1}")),
+            stateRows(AnalysisPipeline.textStatsOf(
+              TableRegistry.queryLogFrom(all.toDF("event_id", "ts", "value")))))
+        }),
+      StateLoop("drift", "ckpt_state", textRetained,
+        st => writeLine(s"$st/v3", "12 100000"),
+        (root, n) => {
+          val docs = TableRegistry.table(spark, sfDir, "documents")
+            .select(col("doc_id"), col("source"), col("n_chars"))
+          val isRef = substring(col("source"), 4, 10).cast("int") < 10
+          val ref = StreamingDrift.histogram(docs.where(isRef))
+          val all = docs.where(!isRef).select(col("doc_id"), col("n_chars"))
+            .as[(Long, Long)].collect().toSeq
+          val stream = MemoryStream[(Long, Long)]
+          @volatile var last = Double.NaN
+          streamAll(stream, StreamingDrift.monitor(
+            stream.toDF().toDF("doc_id", "n_chars"), ref, s"$root/ckpt") {
+            (_, p) => last = p
+          }, slices(all, n))
+          (last, StreamingDrift.psi(ref,
+            StreamingDrift.histogram(all.toDF("doc_id", "n_chars"))))
+        }),
+      StateLoop("admission", "ckpt_state", textRetained,
+        st => writeLine(s"$st/v3", "zzdead 9 9 9 9 9"),
+        (root, n) => {
+          val all = TableRegistry.table(spark, sfDir, "documents")
+            .select(col("source"), col("text"), col("n_chars"))
+            .as[(String, String, Long)].collect().toSeq
+          val stream = MemoryStream[(String, String, Long)]
+          @volatile var last = Map.empty[String, StreamingAdmission.Counts]
+          streamAll(stream, StreamingAdmission.monitor(
+            stream.toDF().toDF("source", "text", "n_chars"), s"$root/ckpt") {
+            (_, st) => last = st
+          }, slices(all, n))
+          (last, StreamingAdmission.perSourceStats(
+              all.toDF("source", "text", "n_chars")).collect()
+            .map(r => r.getString(0) -> StreamingAdmission.Counts(r.getLong(1),
+              r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap)
+        }),
+      StateLoop("index", "ckpt_state", textRetained,
+        st => writeLine(s"$st/v3", "1990-01 9 1.0 2.0 1,2,3"),
+        (root, n) => {
+          val all = TableRegistry.table(spark, sfDir, "orders")
+            .select(col("o_orderdate"), col("o_custkey"), col("o_totalprice"))
+            .as[(java.sql.Timestamp, Long, Double)].collect().toSeq
+          val stream = MemoryStream[(java.sql.Timestamp, Long, Double)]
+          @volatile var last = Map.empty[String, StreamingIndex.PartState]
+          streamAll(stream, StreamingIndex.monitor(
+            stream.toDF().toDF("o_orderdate", "o_custkey", "o_totalprice"),
+            s"$root/ckpt") {
+            (_, st) => last = st
+          }, slices(all, n))
+          (last, StreamingIndex.batchDelta(
+            all.toDF("o_orderdate", "o_custkey", "o_totalprice"), 16384L, 3))
+        }))
+  }
+
+  test("batch 0 sweeps a dead lineage's versions in every versioned-state loop") {
+    // a restart without a checkpoint renumbers from batch 0 while the old
+    // run's versions survive; batch 0 must delete them, so they can never
+    // become a later batch's merge base
+    stateLoops.foreach { l =>
+      val root = java.nio.file.Files.createTempDirectory(s"graft_sweep_${l.name}").toString
+      val st = s"$root/${l.stateDir}"
+      l.deadV3(st)
+      assert(versionsIn(st) == Seq("v3"), s"${l.name}: seed")
+      val (got, want) = l.run(root, 1)
+      assert(versionsIn(st) == Seq("v0"), s"${l.name}: the dead lineage survived batch 0")
+      assert(got == want, s"${l.name}: batch 0 state $got vs its batch twin $want")
+    }
+  }
+
+  test("versioned-state retention: the advisor keeps two versions, the text loops four") {
+    stateLoops.foreach { l =>
+      val root = java.nio.file.Files.createTempDirectory(s"graft_retain_${l.name}").toString
+      val (got, want) = l.run(root, 5)
+      assert(versionsIn(s"$root/${l.stateDir}") == l.retainedAfterFive, l.name)
+      assert(got == want, s"${l.name}: state after five batches $got vs batch twin $want")
+    }
   }
 }
