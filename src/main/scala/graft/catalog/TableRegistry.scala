@@ -180,21 +180,6 @@ object TableRegistry {
       floor(col("value") * 6e5).cast("long").as("peak_total_memory_bytes"))
   }
 
-  /** Typed row of [[queryLog]] (schema per reference trino_client.py:43-52). */
-  final case class QueryLogRow(
-      query_id: String, query: String, create_time: java.sql.Timestamp,
-      execution_time_ms: Long, cpu_time_ms: Long, scheduled_time_ms: Long,
-      input_bytes: Long, peak_memory_bytes: Long, peak_total_memory_bytes: Long)
-
-  /** Typed Dataset view of the query log — the case-class Encoder surface
-    * for callers that want compile-time row shape (SURVEY §1: typed
-    * Dataset[T] at the metadata boundary where positional row(i) access made
-    * the reference fragile). */
-  def queryLogDs(spark: SparkSession, sfDir: String): org.apache.spark.sql.Dataset[QueryLogRow] = {
-    import spark.implicits._
-    queryLog(spark, sfDir).as[QueryLogRow]
-  }
-
   /** DuckDB-side equivalent of [[queryLog]], usable as a CTE body in oracle
     * SQL. Kept adjacent to the Spark derivation so they never drift. */
   def queryLogOracleCte: String = {

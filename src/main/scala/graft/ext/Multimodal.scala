@@ -227,13 +227,6 @@ object Multimodal {
       }
   }
 
-  /** Batch resize over the corpus: same mapPartitions shape as
-    * [[extractFeatures]]. */
-  def resizeAll(media: Dataset[MediaRecord], w: Int, h: Int): Dataset[Thumbnail] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(resizeStub(_, w, h)))
-  }
-
   /** Frame sampling is a flatMap — one media row fans out to many frames;
     * downstream repartitioning (not here) controls frame-batch sizing. */
   def sampleAllFrames(media: Dataset[MediaRecord], everyN: Int): Dataset[Frame] = {

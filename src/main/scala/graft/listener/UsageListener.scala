@@ -127,12 +127,4 @@ object UsageListener {
     spark.listenerManager.register(r)
     r
   }
-
-  /** Recorded usage as a DataFrame compatible with Usage/Scoring
-    * aggregation ((kind, name, count, weight=duration ms)). */
-  def usageFrame(spark: SparkSession, r: Recorder) = {
-    import spark.implicits._
-    r.snapshot.map(e => (e.kind, e.name, e.count, e.totalDurationNs / 1000000L))
-      .toDF("kind", "name", "ref_count", "duration_ms")
-  }
 }

@@ -51,7 +51,26 @@ object Profiler {
     case _ => false
   }
 
-  /** Profile every column of `df` in one aggregate pass.
+  /** A column reference that takes `name` literally: backtick-quoted with
+    * embedded backticks doubled, so a profiled user table's `unit price`,
+    * `a.b` or ANSI-reserved column resolves instead of failing to parse. */
+  private def column(name: String): Column = col(s"`${name.replace("`", "``")}`")
+
+  /** Profile every column of `df`: one plain aggregate and one distinct
+    * count pass per table, collected together.
+    *
+    * Below 16 scheduler slots the distinct counts (each column's, plus the
+    * day, month and year of each date column; on the approx path only the
+    * date levels) run as ONE fixed-order plan, [[distinctCounts]], not as a
+    * multi-`countDistinct` aggregate: Spark's `RewriteDistinctAggregates`
+    * lays out its Expand in an order that follows expression-id hashes, so
+    * every fresh read of a table generated different Java and recompiled
+    * it — 43–55 Janino compilations per warm advise pass on perfbench's
+    * seed-1 fixture (SCALE.md). The fixed order makes a byte-identical table compile
+    * nothing new (ProfilerSpec pins the `CodegenMetrics` count), and
+    * tables with the same column type set share the aggregate classes.
+    * The plain aggregate's one row is unioned onto the per-expression
+    * counts, so a table is one `collect`.
     *
     * @param approxCardinality use HLL `approx_count_distinct` (the engine /
     *   100 TB path, matching the reference's approx_distinct) instead of the
@@ -83,52 +102,56 @@ object Profiler {
     // immediate neighborhood. (the agg_approx_distinct key runs its sketch
     // even tighter, rsd 0.01, because its within-5% band is HASH-asserted;
     // here 0.02 suffices for banding and halves the per-column state.)
+    def hll(c: String): Column = approx_count_distinct(column(c), 0.02)
     def card(c: String): Column =
-      if (approxCardinality) approx_count_distinct(col(c), 0.02) else countDistinct(col(c))
+      if (approxCardinality) hll(c) else countDistinct(column(c))
 
     // Distinct counts and everything else are separate passes. Mixing
-    // multi-DISTINCT aggregates (which plan as Expand ×(groups+1)) with
-    // imperative percentile buffers in ONE aggregate makes every buffer
-    // update pay the expand factor — measured 25× slower at sf0.1. Exact
-    // percentiles keep the verification path deterministic (the reference
-    // used approx_percentile — the approx twin is exposed via
-    // percentile_approx in the agg_percentile key).
-    val plainAggs = scala.collection.mutable.ArrayBuffer[Column](count(lit(1)).as("_total"))
+    // distinct counting (which expands every row once per counted
+    // expression) with imperative percentile buffers in ONE aggregate makes
+    // every buffer update pay the expand factor — measured 25× slower at
+    // sf0.1. Exact percentiles keep the verification path deterministic
+    // (the reference used approx_percentile — the approx twin is exposed
+    // via percentile_approx in the agg_percentile key). The plain
+    // aggregate's outputs are aliased by position (`_p<i>`, read back
+    // through `plainAt`), so no alias is built from a user column name.
+    val plainAggs = scala.collection.mutable.ArrayBuffer[(String, Column)](
+      "_total" -> count(lit(1)))
     fields.foreach { f =>
       val c = f.name
       if (isNumeric(f.dataType)) {
-        plainAggs += min(col(c)).cast("double").as(s"${c}__min")
-        plainAggs += max(col(c)).cast("double").as(s"${c}__max")
+        plainAggs += s"${c}__min" -> min(column(c)).cast("double")
+        plainAggs += s"${c}__max" -> max(column(c)).cast("double")
         if (distCols(c)) {
-          // backtick-quote (escaping embedded backticks): runFromCatalog
-          // profiles arbitrary user tables, and a column named 'unit price'
-          // or an ANSI-reserved word would otherwise kill the whole run at
-          // parse time — every other aggregate here goes through col(c)
-          plainAggs += expr(
+          // the SQL form needs the same literal quoting as `column`
+          plainAggs += s"${c}__pct" -> expr(
             s"percentile(`${c.replace("`", "``")}`, array(0.1D, 0.5D, 0.9D))")
-            .as(s"${c}__pct")
         }
       }
     }
     val dateFields = fields.filter(f => isDateLike(f.dataType)).map(_.name)
-    def dateAggs(c: String): Seq[Column] = Seq(
-      // two-level date-granularity aggregation (partitioning.py:380-408):
-      // count(distinct day-of-month / month / year values). Trino's day()
-      // IS day-of-month, so distinct "days" caps at 31 and the reference's
-      // `day_count > month_count * 20` verdict is reachable only for data
-      // inside a single calendar month — faithfully reproduced here,
-      // quirk included (the oracle and third-engine twins replay it).
-      countDistinct(dayofmonth(col(c))).as(s"${c}__days"),
-      countDistinct(month(col(c))).as(s"${c}__months"),
-      countDistinct(year(col(c))).as(s"${c}__years"))
+    // two-level date-granularity aggregation (partitioning.py:380-408):
+    // count(distinct day-of-month / month / year values). Trino's day()
+    // IS day-of-month, so distinct "days" caps at 31 and the reference's
+    // `day_count > month_count * 20` verdict is reachable only for data
+    // inside a single calendar month — faithfully reproduced here, quirk
+    // included (the oracle and third-engine twins replay it).
+    def dateLevels(c: String): Seq[Column] =
+      Seq(dayofmonth(column(c)), month(column(c)), year(column(c)))
+    def dateAggs(c: String): Seq[Column] = dateLevels(c).map(countDistinct(_))
+    def plain(extra: Seq[Column]): DataFrame = {
+      val aggs = (plainAggs.map(_._2) ++ extra).zipWithIndex.map { case (a, i) => a.as(s"_p$i") }
+      df.agg(aggs.head, aggs.tail.toSeq: _*)
+    }
 
     // With spare scheduler slots (≥16), each distinct count runs as its own
     // concurrent job: a per-column HashAggregate dedupes map-side BEFORE the
-    // shuffle, vs the combined form's Expand ×(columns+date-levels) pushing
-    // |rows|×groups through one partial aggregate (measured 3.4 s vs 0.7 s
-    // on sf0.1 lineitem). Column pruning makes each job read only its own
-    // parquet column, so total I/O matches the one-pass form. On small
-    // executors the jobs would queue — keep the single Expand pass there.
+    // shuffle, vs the combined form's expansion ×(columns+date-levels)
+    // pushing |rows|×groups through one partial aggregate (measured 3.4 s vs
+    // 0.7 s on sf0.1 lineitem). Column pruning makes each job read only its
+    // own parquet column, so total I/O matches the one-pass form. On small
+    // executors the jobs would queue — keep the single fixed-order pass
+    // there.
     val (plainRow, cardMap, dateMap) =
       if (spark.sparkContext.defaultParallelism >= 16) {
         import scala.concurrent.{Await, ExecutionContext, Future}
@@ -140,7 +163,7 @@ object Profiler {
           math.min(32, fields.size + dateFields.size + 1))
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
         try {
-          val plainF = Future(df.agg(plainAggs.head, plainAggs.tail.toSeq: _*).collect()(0))
+          val plainF = Future(plain(Nil).collect()(0))
           val cardFs = fields.map(f => Future(
             f.name -> df.agg(card(f.name)).collect()(0).getLong(0)))
           val dateFs = dateFields.map { c =>
@@ -155,26 +178,34 @@ object Profiler {
             Await.result(Future.sequence(dateFs), Duration.Inf).toMap)
         } finally pool.shutdown()
       } else {
-        val distinctAggs = fields.map(f => card(f.name).as(s"${f.name}__card")) ++
-          dateFields.flatMap(dateAggs)
-        val row = df.agg(plainAggs.head, plainAggs.tail.toSeq: _*)
-          .crossJoin(df.agg(distinctAggs.head, distinctAggs.tail: _*))
-          .collect()(0)
-        def lng(name: String): Long = {
-          val i = row.schema.fieldNames.indexOf(name)
-          row.getLong(i)
-        }
-        (row,
-          fields.map(f => f.name -> lng(s"${f.name}__card")).toMap,
-          dateFields.map(c =>
-            c -> (lng(s"${c}__days"), lng(s"${c}__months"), lng(s"${c}__years"))).toMap)
+        // exact: every column's distinct count goes through the fixed-order
+        // plan; approx: the HLL sketches are plain aggregates, and only the
+        // date levels need exact distinct counts
+        val hlls = if (approxCardinality) fields.map(f => hll(f.name)) else Nil
+        val cols = if (approxCardinality) Nil else fields.map(f => column(f.name) -> f.dataType)
+        val counted = cols ++ dateFields.flatMap(c => dateLevels(c).map(_ -> (IntegerType: DataType)))
+        val plainDf = plain(hlls).withColumn("_g", lit(-1))
+        val rows = (if (counted.isEmpty) plainDf
+          else plainDf.unionByName(distinctCounts(df, counted), allowMissingColumns = true))
+          .collect()
+        val gAt = plainAggs.size + hlls.size
+        val (plainRows, countRows) = rows.partition(_.getInt(gAt) < 0)
+        // an expression whose values are all null has no row: it counts 0
+        val n = countRows.map(r => r.getInt(gAt) -> r.getLong(gAt + 1)).toMap.withDefaultValue(0L)
+        val pr = plainRows.head
+        val d0 = cols.size
+        (pr,
+          fields.zipWithIndex.map { case (f, i) =>
+            f.name -> (if (approxCardinality) pr.getLong(plainAggs.size + i) else n(i))
+          }.toMap,
+          dateFields.zipWithIndex.map { case (c, j) =>
+            c -> (n(d0 + 3 * j), n(d0 + 3 * j + 1), n(d0 + 3 * j + 2))
+          }.toMap)
       }
 
-    def get[T](name: String): Option[T] = {
-      val names = plainRow.schema.fieldNames
-      val i = names.indexOf(name)
-      if (i < 0 || plainRow.isNullAt(i)) None else Some(plainRow.get(i).asInstanceOf[T])
-    }
+    val plainAt = plainAggs.map(_._1).zipWithIndex.toMap
+    def get[T](key: String): Option[T] =
+      plainAt.get(key).filterNot(plainRow.isNullAt).map(plainRow.get(_).asInstanceOf[T])
     val total = get[Long]("_total").getOrElse(0L)
 
     fields.map { f =>
@@ -216,6 +247,31 @@ object Profiler {
         dayCount = dCnt, monthCount = mCnt, yearCount = yCnt,
         dateGranularity = gran)
     }
+  }
+
+  /** `count(DISTINCT e)` for every `(e, type)` of `counted`, as one plan
+    * built in a fixed order: each row of `df` becomes one long row
+    * `(_g, s0 … sk)` per expression — `_g` is the expression's position and
+    * the value sits in the one slot of its type (one slot per data type,
+    * sorted by type name; the others are null) — rows whose value is null
+    * are dropped (`count(DISTINCT)` ignores nulls), then `distinct` and a
+    * count per `_g`. Returns `(_g, _n)`, with no row for an expression that
+    * is null everywhere. The generated code depends only on the
+    * expressions and their order, so the same schema always compiles to
+    * the same classes; `distinct` normalises NaN and −0.0 like any
+    * grouping key, as `countDistinct` does. */
+  private def distinctCounts(df: DataFrame, counted: Seq[(Column, DataType)]): DataFrame = {
+    val types = counted.map(_._2).distinct.sortBy(_.catalogString)
+    val slots = types.indices.map(i => s"s$i")
+    val long = counted.zipWithIndex.map { case ((e, t), g) =>
+      struct(lit(g).as("_g") +: types.zip(slots).map { case (u, s) =>
+        (if (u == t) e else lit(null).cast(u)).as(s)
+      }: _*)
+    }
+    df.select(explode(array(long: _*)).as("r")).select("r.*")
+      .where(slots.map(col(_).isNotNull).reduce(_ || _))
+      .distinct()
+      .groupBy("_g").agg(count(lit(1)).as("_n"))
   }
 
 }

@@ -105,6 +105,13 @@ object StreamingAdmission {
     * irrelevant. */
   val Overflow = "__overflow"
 
+  /** A source name as one state-line token: URL-encoded, so a name with a
+    * space, a newline or any other character round-trips through the
+    * space-separated, line-per-source state file. */
+  private def encodeSource(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
+
+  private def decodeSource(t: String): String = java.net.URLDecoder.decode(t, "UTF-8")
+
   /** Start the admission gate over a streaming (source, text, n_chars)
     * frame: per micro-batch, merge the batch's per-source counters into
     * the persisted capped state (versioned at `<checkpoint>_state/v<id>`)
@@ -114,11 +121,11 @@ object StreamingAdmission {
     VersionedState.textLoop[Map[String, Counts]](docs, checkpoint)(
       _.map { l =>
         val a = l.split(" ")
-        a(0) -> Counts(a(1).toLong, a(2).toLong, a(3).toLong, a(4).toLong,
-          a(5).toLong)
+        decodeSource(a(0)) -> Counts(a(1).toLong, a(2).toLong, a(3).toLong,
+          a(4).toLong, a(5).toLong)
       }.toMap,
       _.toSeq.sortBy(_._1).map { case (s, c) =>
-        s"$s ${c.nDocs} ${c.nRedactions} ${c.nQualityFail} ${c.nPiiHit} ${c.nAdmitted}"
+        s"${encodeSource(s)} ${c.nDocs} ${c.nRedactions} ${c.nQualityFail} ${c.nPiiHit} ${c.nAdmitted}"
       }) { (baseOpt, batch) =>
       val base = baseOpt.getOrElse(Map.empty[String, Counts])
       val delta = perSourceStats(batch).collect().map { r =>

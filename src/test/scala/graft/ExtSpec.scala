@@ -145,7 +145,7 @@ class ExtSpec extends SparkSpec {
 
   test("multimodal resize and frame sampling plumbing") {
     val media = Multimodal.mediaFromDocuments(spark, docs)
-    val thumbs = Multimodal.resizeAll(media, 64, 64).collect()
+    val thumbs = TestOps.resizeAll(media, 64, 64).collect()
     assert(thumbs.length == docs.count())
     assert(thumbs.forall(th => th.thumb.length <= 64 && th.thumb.nonEmpty))
     val frames = Multimodal.sampleAllFrames(media, everyN = 4).collect()

@@ -23,7 +23,7 @@ class ListenerSpec extends SparkSpec {
       assert(kinds.getOrElse("join_col", Set.empty).contains("o_custkey"), kinds.toString)
       assert(kinds.getOrElse("join_col", Set.empty).contains("c_custkey"), kinds.toString)
       assert(kinds.getOrElse("where_col", Set.empty).contains("o_totalprice"), kinds.toString)
-      val frame = UsageListener.usageFrame(spark, rec)
+      val frame = TestOps.usageFrame(spark, rec)
       assert(frame.where(col("kind") === "join_col").count() >= 2)
     } finally spark.listenerManager.unregister(rec)
   }

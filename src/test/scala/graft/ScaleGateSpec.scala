@@ -79,6 +79,10 @@ class ScaleGateSpec extends AnyFunSuite {
     val line = """{"metric":"per_query","total_sec":1.234,"unit":"sec","sf":"sf0.1","runs":2,"queries":{"q1_agg":0.12,"dedup_minhash":0.3}}"""
     assert(ScaleGate.parseQueries(line)
       == Map("q1_agg" -> 0.12, "dedup_minhash" -> 0.3))
+    // graft.Bench writes the per-key compile counts after the times
+    val withCompiles = line.stripSuffix("}") +
+      ""","codegen_compiles":{"q1_agg":[4,0],"dedup_minhash":[30,31]}}"""
+    assert(ScaleGate.parseQueries(withCompiles) == ScaleGate.parseQueries(line))
   }
 
   test("format drift in the queries map aborts instead of silently shrinking it") {

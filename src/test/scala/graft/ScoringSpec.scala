@@ -11,7 +11,7 @@ class ScoringSpec extends SparkSpec {
   private lazy val log = TableRegistry.queryLog(spark, sfDir).cache()
 
   test("typed Dataset[QueryLogRow] round-trips the log schema") {
-    val ds = TableRegistry.queryLogDs(spark, sfDir)
+    val ds = TestOps.queryLogDs(spark, sfDir)
     val first = ds.orderBy("query_id").head()
     assert(first.query != null && first.execution_time_ms >= 0)
     assert(ds.count() == log.count())

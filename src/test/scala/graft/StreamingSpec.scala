@@ -1057,6 +1057,29 @@ class StreamingSpec extends SparkSpec {
       s"overflow must hold s2's two docs + s3's one: ${one(StreamingAdmission.Overflow)}")
   }
 
+  test("admission gate state round-trips any source name across batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.StreamingAdmission
+    // the second batch merges from the first batch's state file, so every
+    // name must survive the write and the re-read
+    val names = Seq("web crawl", "line\nbreak", " lead", "tab\there", "100%+1", "", "plain")
+    val rows = names.map(s => (s, "mail bob@x.org now", 18L))
+    val stream = MemoryStream[(String, String, Long)]
+    val ckpt = java.nio.file.Files.createTempDirectory("admit_name_ckpt").toString
+    @volatile var last = Map.empty[String, StreamingAdmission.Counts]
+    val q = StreamingAdmission.monitor(
+      stream.toDF().toDF("source", "text", "n_chars"), ckpt) {
+      (_, st) => last = st
+    }
+    try {
+      Seq(rows, rows).foreach { b => stream.addData(b); q.processAllAvailable() }
+      assert(q.isActive, s"admission query died: ${q.exception}")
+      assert(last.keySet == names.toSet, last.keySet.toString)
+      assert(last.values.forall(_.nDocs == 2L), last.toString)
+    } finally q.stop()
+  }
+
   test("streaming index maintenance snapshot == the batch-built indexes across any micro-batch split") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
