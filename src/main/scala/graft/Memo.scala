@@ -1,28 +1,35 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
 
 /** The engine's one in-process memo registry. Everything computed once and
   * reused — table frames, column profiles, workload statistics, index
   * parameters, trained models, persisted sketch intermediates — is one entry
-  * here, keyed by (session, key). This module alone decides how long an
-  * entry lives and when it is stale; call sites only name what they build.
+  * here. This module alone decides what identifies an entry, how long it
+  * lives and when it is stale; call sites only name what they build and
+  * hand over what it reads.
   *
-  * Keys: each call site prefixes its key with its own tag (`table:`,
-  * `profiles:`, `pca:`, a frame's operator tag …) and the rest of the key
-  * must identify the INPUT DATA plus every parameter the result depends on —
-  * the registry never inspects what it memoizes, so two inputs under one key
-  * would silently share the first one's result. Fixture call sites key by
-  * the corpus directory.
+  * Keys: one rule. An entry is (session, tag, inputs). The tag names the
+  * computation and every parameter it takes (`table:`, `profiles:`,
+  * `minhash_sh:3:20` …); the inputs are what it reads — file paths, or
+  * DataFrames. A path is its own identity. A DataFrame is identified by its
+  * canonicalized analyzed plan, the plan equality Spark's CacheManager
+  * matches cached data on: two builds of the same plan over the same files
+  * (`InMemoryFileIndex` equality is its root paths) are one input, two
+  * different filters of one table are two. So two inputs never share an
+  * entry however a call site names them.
   *
-  * Freshness: an entry built from fixture files names them in `inputs`; the
-  * registry records their [[snapshot]] (path, length, mtime) and a later
-  * lookup that finds a different snapshot rebuilds the entry and replaces it
-  * (unpersisting a frame it replaces). A table rewritten under the same path
-  * therefore never serves its old frame, profile or workload statistics.
-  * Entries without inputs (operator frames keyed by directory) rely on the
-  * key-names-immutable-input contract above.
+  * Freshness: one rule. The registry records the [[snapshot]] (path,
+  * length, mtime) of the files an entry reads — the paths it was given, or
+  * the root paths of its frames' file relations — and a lookup that finds
+  * a different snapshot rebuilds the entry and replaces it (unpersisting a
+  * frame it replaces). A corpus rewritten under the same path therefore
+  * never serves its old frame, sketch, profile or model. Frames over no
+  * files (in-memory data, checkpointed RDDs) are identified by their data
+  * and never go stale.
   *
   * Lifetime: entries live until [[clear]] for their session; entries whose
   * session's SparkContext has stopped are swept on every lookup (their
@@ -46,35 +53,32 @@ object Memo {
     *   compare-and-set on replacement must compare entries by identity. */
   private final class Entry(val value: Any, val snapshot: String, val persisted: Boolean)
 
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Entry]()
+  /** @param inputs path strings, or canonicalized plans */
+  private final case class Key(session: SparkSession, tag: String, inputs: Seq[Any])
 
-  /** The value memoized under `key` for `spark`, built by `build` on a miss
-    * or when the snapshot of `inputs` (fixture paths the value reads)
-    * changed since it was built. */
-  def apply[T](spark: SparkSession, key: String, inputs: Seq[String] = Nil)
-      (build: => T): T = acquire(spark, key, inputs, persisted = false)(build)
+  private val entries = new java.util.concurrent.ConcurrentHashMap[Key, Entry]()
 
-  /** A persisted (MEMORY_AND_DISK) intermediate frame — repeated builds of
-    * the same index or sketch (same session + tag + key) reuse ONE persisted
-    * DataFrame instead of stacking a new `.persist()` per call (r3's
-    * `simsearch_ivf` leak). The cached data lives in block storage, so
-    * memory pressure evicts blocks, never correctness. Callers without a
-    * stable key get the plain un-persisted plan.
-    *
-    * @param persistUnkeyed when true, a key-less call still persists the
-    *   built DataFrame (for sketches consumed by several branches of ONE
-    *   query, where inlining would recompute them per branch — Spark's
-    *   CacheManager dedups identical plans, so repeated key-less calls
-    *   share storage rather than stacking it) */
-  def frame(spark: SparkSession, cacheKey: Option[String], tag: String,
-      persistUnkeyed: Boolean = false)(build: => DataFrame): DataFrame =
-    cacheKey match {
-      case Some(k) => acquire(spark, s"$tag:$k", Nil, persisted = true)(
-        build.persist(StorageLevel.MEMORY_AND_DISK))
-      case None if persistUnkeyed => build.persist(StorageLevel.MEMORY_AND_DISK)
-      case None => build
-    }
+  /** The value `tag` names for `spark`, reading the files under `paths`. */
+  def apply[T](spark: SparkSession, tag: String, paths: Seq[String] = Nil)
+      (build: => T): T = acquire(Key(spark, tag, paths), paths, persisted = false)(build)
+
+  /** The value `tag` computes from `inputs`. */
+  def of[T](tag: String, inputs: DataFrame*)(build: => T): T = {
+    val (key, paths) = keyOf(tag, inputs)
+    acquire(key, paths, persisted = false)(build)
+  }
+
+  /** The frame `tag` builds from `inputs`, persisted (MEMORY_AND_DISK) — a
+    * sketch or index that feeds several branches of a plan, or several
+    * keys, is computed once instead of being inlined into every consumer,
+    * and repeated builds reuse ONE persisted DataFrame instead of stacking
+    * a `.persist()` per call (r3's `simsearch_ivf` leak). The cached data
+    * lives in block storage, so memory pressure evicts blocks, never
+    * correctness. */
+  def frame(tag: String, inputs: DataFrame*)(build: => DataFrame): DataFrame = {
+    val (key, paths) = keyOf(tag, inputs)
+    acquire(key, paths, persisted = true)(build.persist(StorageLevel.MEMORY_AND_DISK))
+  }
 
   /** Unpersist every frame the registry persisted for `spark` and drop all
     * of its entries. */
@@ -82,7 +86,7 @@ object Memo {
     val it = entries.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      if (e.getKey._1 eq spark) {
+      if (e.getKey.session eq spark) {
         release(e.getValue)
         it.remove()
       }
@@ -114,14 +118,25 @@ object Memo {
       }.mkString("|")
     }
 
+  /** The key of `tag` over `inputs`, and the root paths of the files they
+    * read (subqueries included). */
+  private def keyOf(tag: String, inputs: Seq[DataFrame]): (Key, Seq[String]) = {
+    require(inputs.nonEmpty, s"memo entry $tag names no input")
+    val spark = inputs.head.sparkSession
+    require(inputs.forall(_.sparkSession eq spark), s"memo entry $tag spans sessions")
+    val plans = inputs.map(_.queryExecution.analyzed)
+    val paths = plans.flatMap(_.collectWithSubqueries {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.rootPaths.map(_.toString)
+    }.flatten).distinct
+    (Key(spark, tag, plans.map(_.canonicalized: LogicalPlan)), paths)
+  }
+
   private def release(e: Entry): Unit =
     if (e.persisted) e.value.asInstanceOf[DataFrame].unpersist()
 
-  private def acquire[T](spark: SparkSession, key: String, inputs: Seq[String],
-      persisted: Boolean)(build: => T): T = {
-    entries.keySet().removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, key)
-    val snap = snapshot(spark, inputs)
+  private def acquire[T](k: Key, paths: Seq[String], persisted: Boolean)(build: => T): T = {
+    entries.keySet().removeIf(_.session.sparkContext.isStopped)
+    val snap = snapshot(k.session, paths)
     val existing = entries.get(k)
     if (existing != null && existing.snapshot == snap) existing.value.asInstanceOf[T]
     else {

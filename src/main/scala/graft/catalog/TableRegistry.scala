@@ -23,6 +23,10 @@ object TableRegistry {
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
+  /** `name` as one SQL identifier: backtick-quoted with embedded backticks
+    * doubled, so a name with a space, dot, dash or reserved word parses. */
+  def quote(name: String): String = "`" + name.replace("`", "``") + "`"
+
   /** The fixture table `name` — memoized per (session, path) so repeated
     * queries don't re-list files or re-read parquet footers, and rebuilt
     * when the file under the path changes ([[graft.Memo]] snapshot). */
@@ -117,12 +121,11 @@ object TableRegistry {
     // form here (rather than telling callers to re-quote) matters because
     // re-quoting from the joined label is LOSSY: a part containing a dot
     // cannot be re-split.
-    def q(part: String): String = "`" + part.replace("`", "``") + "`"
     tables.map { t =>
       val parts = Option(t.namespace).filter(_.nonEmpty)
         .map(_.toSeq :+ t.name).getOrElse(Seq(t.name))
       val qualified = parts.mkString(".")
-      val quoted = parts.map(q).mkString(".")
+      val quoted = parts.map(quote).mkString(".")
       val cols = spark.catalog.listColumns(quoted)
         .collect().map(_.name).toSeq
       // ddlFor defaults to the fixture registry: exact join-column usage

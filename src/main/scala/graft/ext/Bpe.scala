@@ -63,14 +63,13 @@ object Bpe {
     concat(lit(SEP),
       array_join(regexp_extract_all(p, lit("."), lit(0)), SEP2), lit(SEP))
 
-  /** (merge table, final (p, n_syms) vocabulary), memoized per (session,
-    * fixture, nMerges) — the training loop is a deterministic local
-    * fold over vocab-sized jobs, so the train key and the encode key (X63)
-    * share ONE run instead of each paying the full loop ([[Memo]]). */
-  private def trained(spark: SparkSession, docs: DataFrame, nMerges: Int,
-      cacheKey: Option[String]): (DataFrame, DataFrame) =
-    cacheKey.fold(trainLoop(spark, docs, nMerges))(k =>
-      Memo(spark, s"bpetrain:$k:$nMerges")(trainLoop(spark, docs, nMerges)))
+  /** (merge table, final (p, n_syms) vocabulary), memoized per (corpus,
+    * nMerges) — the training loop is a deterministic local fold over
+    * vocab-sized jobs, so the train key and the encode key (X63) share ONE
+    * run instead of each paying the full loop ([[Memo]]). */
+  private def trained(spark: SparkSession, docs: DataFrame, nMerges: Int)
+      : (DataFrame, DataFrame) =
+    Memo.of(s"bpetrain:$nMerges", docs)(trainLoop(spark, docs, nMerges))
 
   private def trainLoop(spark: SparkSession, docs: DataFrame, nMerges: Int)
       : (DataFrame, DataFrame) = {
@@ -137,9 +136,8 @@ object Bpe {
     * corpus_symbols is the frequency-weighted total symbol count AFTER
     * applying that round's merge — the compression trajectory a tokenizer
     * team actually reads off a training run. */
-  def trainMerges(spark: SparkSession, docs: DataFrame, nMerges: Int,
-      cacheKey: Option[String] = None): DataFrame =
-    trained(spark, docs, nMerges, cacheKey)._1
+  def trainMerges(spark: SparkSession, docs: DataFrame, nMerges: Int): DataFrame =
+    trained(spark, docs, nMerges)._1
 
   /** X63 — APPLY the trained vocabulary: per-source whitespace tokens,
     * ASCII pretokens, and the token count the `nMerges`-merge vocab
@@ -151,9 +149,8 @@ object Bpe {
     * only multiplies counts; one grouped rollup per side, one
     * vocab-keyed join. Sources whose every pretoken is non-ASCII (outside
     * the trained range) encode to zero, kept by the left join. */
-  def encodeFertility(spark: SparkSession, docs: DataFrame, nMerges: Int,
-      cacheKey: Option[String] = None): DataFrame = {
-    val vocabSyms = trained(spark, docs, nMerges, cacheKey)._2
+  def encodeFertility(spark: SparkSession, docs: DataFrame, nMerges: Int): DataFrame = {
+    val vocabSyms = trained(spark, docs, nMerges)._2
     val perSource = docs
       .select(col("source"), explode(
         regexp_extract_all(col("text"), lit(pretokenPattern), lit(0))).as("p"))
@@ -199,11 +196,11 @@ object Bpe {
     * oracles; docs with zero in-range pretokens keep the empty-fold seed 7
     * so they stay visible in the manifest. */
   def tokenizeShards(spark: SparkSession, docs: DataFrame, nMerges: Int,
-      nShards: Int, cacheKey: Option[String] = None): DataFrame = {
+      nShards: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val vocab = trained(spark, docs, nMerges, cacheKey)._2 // (p, s, n_syms)
+    val vocab = trained(spark, docs, nMerges)._2 // (p, s, n_syms)
     // the vocab-sized window is an index-build step, not a corpus window
-    val symIds = Memo.frame(spark, cacheKey, s"bpe_symids:$nMerges") {
+    val symIds = Memo.frame(s"bpe_symids:$nMerges", docs) {
       vocab.select(explode(symbols(col("s"))).as("sym")).distinct()
         .withColumn("tok_id",
           row_number().over(Window.orderBy("sym")).cast("long"))

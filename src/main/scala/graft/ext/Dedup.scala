@@ -43,23 +43,11 @@ object Dedup {
     * conf, default false) — set it on any cluster running deep clustering
     * loops, or the ~log₂(n) per-loop round files accumulate in the
     * checkpoint dir until application exit. */
-  private[graft] def truncate(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    val dirSet = sess.sparkContext.getCheckpointDir.isDefined
-    val reliable =
-      sess.conf.get("spark.graft.iterative.reliableCheckpoint", "auto") match {
-        case "true"  =>
-          require(dirSet, "spark.graft.iterative.reliableCheckpoint=true " +
-            "requires sparkContext.setCheckpointDir")
-          true
-        case "false" => false
-        case _       => dirSet
-      }
-    if (reliable) {
+  private[graft] def truncate(df: DataFrame): DataFrame =
+    if (reliableCheckpoint(df.sparkSession)) {
       val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try cached.checkpoint(true) finally { cached.unpersist(); () }
     } else df.localCheckpoint(true)
-  }
 
   /** [[truncate]] for a frame whose caller runs an action on it
     * IMMEDIATELY (the iterative-loop convergence counts): on the local
@@ -70,16 +58,22 @@ object Dedup {
     * Reliable-checkpoint mode keeps the eager [[truncate]]: its
     * persist/checkpoint/unpersist lifecycle requires the materialization
     * to happen while the persist is live. */
-  private[graft] def truncateBeforeAction(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
+  private[graft] def truncateBeforeAction(df: DataFrame): DataFrame =
+    if (reliableCheckpoint(df.sparkSession)) truncate(df) else df.localCheckpoint(false)
+
+  /** Whether [[truncate]] writes rounds to the context's checkpoint dir:
+    * `spark.graft.iterative.reliableCheckpoint` = true (requires the dir),
+    * false, or auto (the default: reliable iff a dir is set). */
+  private def reliableCheckpoint(sess: SparkSession): Boolean = {
     val dirSet = sess.sparkContext.getCheckpointDir.isDefined
-    val reliable =
-      sess.conf.get("spark.graft.iterative.reliableCheckpoint", "auto") match {
-        case "true"  => true
-        case "false" => false
-        case _       => dirSet
-      }
-    if (reliable) truncate(df) else df.localCheckpoint(false)
+    sess.conf.get("spark.graft.iterative.reliableCheckpoint", "auto") match {
+      case "true"  =>
+        require(dirSet, "spark.graft.iterative.reliableCheckpoint=true " +
+          "requires sparkContext.setCheckpointDir")
+        true
+      case "false" => false
+      case _       => dirSet
+    }
   }
 
   /** Exact dedup keyed on content hash: keeps min(doc_id) per text. */
@@ -205,13 +199,11 @@ object Dedup {
     * signature projection typically feeds several branches (band self-join
     * sides, verification joins, recall audits); without materialization
     * Catalyst inlines it into each branch and recomputes it ~10× —
-    * measured 61 s vs 4 s on sf0.1. With a cacheKey, repeated builds over
-    * the same corpus share ONE persisted sketch; at cluster scale this is
-    * the classic "materialize the sketch pass" step. */
-  def memoizedSignatures(spark: SparkSession, docs: DataFrame, shingleW: Int,
-      k: Int, cacheKey: Option[String]): DataFrame =
-    Memo.frame(spark, cacheKey, s"minhash_sh:$shingleW:$k",
-      persistUnkeyed = true) {
+    * measured 61 s vs 4 s on sf0.1. Repeated builds over the same corpus
+    * share ONE persisted sketch; at cluster scale this is the classic
+    * "materialize the sketch pass" step. */
+  def memoizedSignatures(docs: DataFrame, shingleW: Int, k: Int): DataFrame =
+    Memo.frame(s"minhash_sh:$shingleW:$k", docs) {
       signatureFrame(docs, shingleW, k)
     }
 
@@ -239,11 +231,9 @@ object Dedup {
     * (min doc_id) per distinct set rides the banding; [[minhashNearDups]]
     * expands members arithmetically afterwards. Returns
     * (gkey, rid, gsz, sh, sig). */
-  def groupedSignatures(spark: SparkSession, docs: DataFrame, shingleW: Int,
-      k: Int, cacheKey: Option[String]): DataFrame =
-    Memo.frame(spark, cacheKey, s"minhash_grp:$shingleW:$k",
-      persistUnkeyed = true) {
-      memoizedSignatures(spark, docs, shingleW, k, cacheKey)
+  def groupedSignatures(docs: DataFrame, shingleW: Int, k: Int): DataFrame =
+    Memo.frame(s"minhash_grp:$shingleW:$k", docs) {
+      memoizedSignatures(docs, shingleW, k)
         .withColumn("gkey", shingleSetKey(col("sh")))
         .groupBy("gkey")
         // sh/sig are group-constant (identical arrays), so first() is
@@ -253,11 +243,9 @@ object Dedup {
     }
 
   /** (doc_id, gkey) membership of [[groupedSignatures]]'s groups. */
-  def signatureMembers(spark: SparkSession, docs: DataFrame, shingleW: Int,
-      k: Int, cacheKey: Option[String]): DataFrame =
-    Memo.frame(spark, cacheKey, s"minhash_mem:$shingleW:$k",
-      persistUnkeyed = true) {
-      memoizedSignatures(spark, docs, shingleW, k, cacheKey)
+  def signatureMembers(docs: DataFrame, shingleW: Int, k: Int): DataFrame =
+    Memo.frame(s"minhash_mem:$shingleW:$k", docs) {
+      memoizedSignatures(docs, shingleW, k)
         .select(col("doc_id"), shingleSetKey(col("sh")).as("gkey"))
     }
 
@@ -268,10 +256,9 @@ object Dedup {
     * [[minhashNearDups]] (which expands to the full pair list — the pair
     * LIST is that key's output) and the cluster key (which only needs
     * connectivity and expands to rep→member star edges instead). */
-  def minhashRepPairs(spark: SparkSession, docs: DataFrame, shingleW: Int,
-      k: Int, rows: Int, threshold: Double,
-      cacheKey: Option[String]): DataFrame = {
-    val grp = groupedSignatures(spark, docs, shingleW, k, cacheKey)
+  def minhashRepPairs(docs: DataFrame, shingleW: Int, k: Int, rows: Int,
+      threshold: Double): DataFrame = {
+    val grp = groupedSignatures(docs, shingleW, k)
     val repSh = grp.select(col("rid").as("doc_id"), col("sh"), col("sig"))
     // band join carries only (band, bucket, slice, rep_id) — shingle arrays
     // would multiply the shuffle by the document size; they're joined back
@@ -301,10 +288,9 @@ object Dedup {
     * a band slice (signatures are group-level facts) and carries the reps'
     * Jaccard verbatim. */
   def minhashNearDups(spark: SparkSession, docs: DataFrame, shingleW: Int = 3,
-      k: Int = 20, rows: Int = 4, threshold: Double = 0.7,
-      cacheKey: Option[String] = None): DataFrame = {
-    val mem = signatureMembers(spark, docs, shingleW, k, cacheKey)
-    val cross = minhashRepPairs(spark, docs, shingleW, k, rows, threshold, cacheKey)
+      k: Int = 20, rows: Int = 4, threshold: Double = 0.7): DataFrame = {
+    val mem = signatureMembers(docs, shingleW, k)
+    val cross = minhashRepPairs(docs, shingleW, k, rows, threshold)
       .select("ga", "gb", "jaccard")
       .join(mem.select(col("gkey").as("ga"), col("doc_id").as("x")), Seq("ga"))
       .join(mem.select(col("gkey").as("gb"), col("doc_id").as("y")), Seq("gb"))
@@ -339,14 +325,12 @@ object Dedup {
     * verdict arithmetically. Returns (doc_id, kept) for every new doc. */
   def minhashIncrementalKeepers(spark: SparkSession, newDocs: DataFrame,
       baseDocs: DataFrame, shingleW: Int = 3, k: Int = 20, rows: Int = 4,
-      threshold: Double = 0.7, cacheKey: Option[String] = None): DataFrame = {
-    val baseKey = cacheKey.map(_ + "#incbase")
-    val newKey = cacheKey.map(_ + "#incnew")
-    val bg = groupedSignatures(spark, baseDocs, shingleW, k, baseKey)
+      threshold: Double = 0.7): DataFrame = {
+    val bg = groupedSignatures(baseDocs, shingleW, k)
     // rep-level near-group adjacency, symmetrized: neighMin(g) = the
     // smallest member id (= rid) over groups verified near g
-    val rp = minhashRepPairs(spark, baseDocs, shingleW, k, rows, threshold,
-      baseKey).select("ga", "gb")
+    val rp = minhashRepPairs(baseDocs, shingleW, k, rows, threshold)
+      .select("ga", "gb")
     val adj = rp.select(col("ga").as("g"), col("gb").as("o"))
       .unionAll(rp.select(col("gb").as("g"), col("ga").as("o")))
       .join(bg.select(col("gkey").as("o"), col("rid").as("orid")), Seq("o"))
@@ -354,7 +338,7 @@ object Dedup {
     val keptBase = bg.join(adj.withColumnRenamed("g", "gkey"), Seq("gkey"), "left")
       .where(col("neigh_min").isNull || col("neigh_min") > col("rid"))
       .select(col("rid").as("doc_id"), col("sh"), col("sig"))
-    val ng = groupedSignatures(spark, newDocs, shingleW, k, newKey)
+    val ng = groupedSignatures(newDocs, shingleW, k)
     val nReps = ng.select(col("rid").as("doc_id"), col("sig"))
     val a = bandedBuckets(nReps, k, rows).select(col("band"), col("bucket"),
       col("doc_id").as("n_id"), col("bslice").as("sa"))
@@ -375,12 +359,22 @@ object Dedup {
       .where(round(col("inter") /
         (size(col("shn")) + size(col("shk")) - col("inter")), 6) >= threshold)
       .select("gkey").distinct()
-    signatureMembers(spark, newDocs, shingleW, k, newKey)
+    signatureMembers(newDocs, shingleW, k)
       .join(hits.withColumn("hit", lit(1)), Seq("gkey"), "left")
       .select(col("doc_id"),
         when(col("hit").isNull, 1).otherwise(0).cast("int").as("kept"))
       .orderBy("doc_id")
   }
+
+  /** (doc_id, sh, n): the distinct w-shingles of every doc below `idCap`
+    * and their count, persisted once per corpus for [[exactJaccard]] and
+    * [[exactContainment]]. */
+  private def cappedShingles(docs: DataFrame, shingleW: Int, idCap: Long): DataFrame =
+    Memo.frame(s"jaccard_sh:$shingleW:$idCap", docs) {
+      docs.where(col("doc_id") < idCap)
+        .select(col("doc_id"), distinctShingles(col("text"), shingleW).as("sh"))
+        .withColumn("n", size(col("sh")))
+    }
 
   /** Exact n-gram Jaccard self-join via an inverted index: explode to
     * (shingle, doc_id), equi-join on the shingle, and count co-occurrences
@@ -391,14 +385,9 @@ object Dedup {
     * (the id cap bounds the verified region at any sf; the oracle twin
     * stays the declarative set-intersect form). */
   def exactJaccard(spark: SparkSession, docs: DataFrame, shingleW: Int,
-      threshold: Double, idCap: Long, cacheKey: Option[String] = None): DataFrame = {
-    val sh = Memo.frame(spark, cacheKey, s"jaccard_sh:$shingleW:$idCap",
-      persistUnkeyed = true) {
-      docs.where(col("doc_id") < idCap)
-        .select(col("doc_id"), distinctShingles(col("text"), shingleW).as("sh"))
-        .withColumn("n", size(col("sh")))
-    }
-    val inv = sh.select(col("doc_id"), col("n"), explode(col("sh")).as("g"))
+      threshold: Double, idCap: Long): DataFrame = {
+    val inv = cappedShingles(docs, shingleW, idCap)
+      .select(col("doc_id"), col("n"), explode(col("sh")).as("g"))
     val a = inv.select(col("g"), col("doc_id").as("a_id"), col("n").as("na"))
     val b = inv.select(col("g"), col("doc_id").as("b_id"), col("n").as("nb"))
     val out = a.join(b, Seq("g"))
@@ -418,22 +407,17 @@ object Dedup {
     * where Jaccard divides by the union and under-reads it (the fixture's
     * prefix-truncated near-dups: containment 1.0 vs jaccard ≈0.97; a
     * 10%-prefix quote: ≈1.0 vs ≈0.1). Candidate generation is the same
-    * inverted-index equi-join as [[exactJaccard]] — never all-pairs — and
-    * deliberately shares its Memo.frame key, so a pipeline running both
-    * metrics pays for ONE shingle pass. Unlike the irrational cosines,
+    * inverted-index equi-join as [[exactJaccard]] — never all-pairs — over
+    * the same [[cappedShingles]] frame, so a pipeline running both metrics
+    * pays for ONE shingle pass. Unlike the irrational cosines,
     * count/min(count) is a rational that can sit exactly on a rounding
     * half-boundary, so the ratio goes through [[ExactMath.ratioRounded]],
     * not float round. Same id-cap bounded-verification contract as
     * [[exactJaccard]]. */
   def exactContainment(spark: SparkSession, docs: DataFrame, shingleW: Int,
-      threshold: Double, idCap: Long, cacheKey: Option[String] = None): DataFrame = {
-    val sh = Memo.frame(spark, cacheKey, s"jaccard_sh:$shingleW:$idCap",
-      persistUnkeyed = true) {
-      docs.where(col("doc_id") < idCap)
-        .select(col("doc_id"), distinctShingles(col("text"), shingleW).as("sh"))
-        .withColumn("n", size(col("sh")))
-    }
-    val inv = sh.select(col("doc_id"), col("n"), explode(col("sh")).as("g"))
+      threshold: Double, idCap: Long): DataFrame = {
+    val inv = cappedShingles(docs, shingleW, idCap)
+      .select(col("doc_id"), col("n"), explode(col("sh")).as("g"))
     val a = inv.select(col("g"), col("doc_id").as("a_id"), col("n").as("na"))
     val b = inv.select(col("g"), col("doc_id").as("b_id"), col("n").as("nb"))
     a.join(b, Seq("g"))
@@ -461,6 +445,20 @@ object Dedup {
       .orderBy("vec_id")
   }
 
+  /** The (doc_id, cluster_id, cluster_size) labels of the capped
+    * n-gram-Jaccard near-dup graph (shingleW 3, threshold 0.2, id < 500 —
+    * dedup_ngram_jaccard's parameters), memoized per corpus:
+    * `dedup_cluster` surfaces it directly and `cluster_keep_policy` ranks
+    * within it, so ONE iterative star-contraction pass serves both keys. */
+  def jaccardClustersMemo(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.catalog.TableRegistry.table(spark, dir, "documents")
+    Memo.frame("jaccclusters", docs) {
+      val pairs = exactJaccard(spark, docs, shingleW = 3, threshold = 0.2, idCap = 500)
+        .select("a_id", "b_id")
+      clusters(spark, docs.where(col("doc_id") < 500), pairs)
+    }
+  }
+
   /** Connected components over a near-dup pair list: every document gets the
     * minimum doc_id reachable through dup edges as its `cluster_id` (the
     * canonical representative a corpus-dedup pass would keep), plus the
@@ -476,19 +474,6 @@ object Dedup {
     * grouped-min aggregations + two equi-joins over the CURRENT edge set
     * (which only shrinks toward a star forest); edges/labels live in
     * executors, the driver sees only convergence metadata. */
-  /** The (doc_id, cluster_id, cluster_size) labels of the capped
-    * n-gram-Jaccard near-dup graph (shingleW 3, threshold 0.2, id < 500 —
-    * dedup_ngram_jaccard's parameters), memoized per (session, dir):
-    * `dedup_cluster` surfaces it directly and `cluster_keep_policy` ranks
-    * within it, so ONE iterative star-contraction pass serves both keys. */
-  def jaccardClustersMemo(spark: SparkSession, dir: String): DataFrame =
-    Memo.frame(spark, Some(dir), "jaccclusters") {
-      val docs = graft.catalog.TableRegistry.table(spark, dir, "documents")
-      val pairs = exactJaccard(spark, docs, shingleW = 3,
-        threshold = 0.2, idCap = 500, cacheKey = Some(dir)).select("a_id", "b_id")
-      clusters(spark, docs.where(col("doc_id") < 500), pairs)
-    }
-
   def clusters(spark: SparkSession, nodes: DataFrame, pairs: DataFrame,
       maxIters: Int = 50): DataFrame = {
     val (labels, rounds, converged) = starContractionLabels(nodes, pairs, maxIters)
@@ -677,9 +662,8 @@ object Dedup {
     * band by pigeonhole, so the band filter never rejects a true pair —
     * the output is exactly {pairs with hamming ≤ maxDist}, which is what
     * the DuckDB oracle (still the raw-doc banding form) computes. */
-  def simhashNearDups(spark: SparkSession, docs: DataFrame, maxDist: Int = 3,
-      cacheKey: Option[String] = None): DataFrame = {
-    val sigs = Memo.frame(spark, cacheKey, "simhash_sigs", persistUnkeyed = true) {
+  def simhashNearDups(spark: SparkSession, docs: DataFrame, maxDist: Int = 3): DataFrame = {
+    val sigs = Memo.frame("simhash_sigs", docs) {
       docs
         .select(col("doc_id"), tokenHashes61(split(col("text"), " ")).as("hashes"))
         .select(col("doc_id"), simhashFromHashes(col("hashes")).as("sig"))

@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object ExactMath {
 
-  private def ldiv(a: Column, b: Column): Column = {
+  /** Integer division (`div`) as a Column — IntegralDivide isn't in the
+    * functions API. */
+  private[graft] def ldiv(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(
       new org.apache.spark.sql.catalyst.expressions.IntegralDivide(

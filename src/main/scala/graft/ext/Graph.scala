@@ -21,32 +21,15 @@ object Graph {
     * `pairs` are undirected (a_id, b_id) rows; isolated nodes don't appear.
     * Each iteration is one shuffle join on the src id + one grouped sum —
     * the classic distributed PageRank shape; the rank state is O(nodes),
-    * never materialized on the driver. Returns (vec_id, deg, rank).
-    *
-    * `cacheKey`, when set, memoizes the DEGREE table under it — it must
-    * therefore uniquely identify the `pairs` INPUT, not just the calling
-    * site: two callers passing different edge sets under one key would
-    * silently share the first graph's degrees. `pairsTag` folds an extra
-    * discriminator into the memo tag for callers that derive several edge
-    * sets from one corpus key. */
-  def pagerankFixedPoint(spark: SparkSession, pairs: DataFrame, iters: Int = 5,
-      cacheKey: Option[String] = None, pairsTag: String = ""): DataFrame = {
+    * never materialized on the driver. Returns (vec_id, deg, rank). */
+  def pagerankFixedPoint(spark: SparkSession, pairs: DataFrame, iters: Int = 5): DataFrame = {
     val edges = pairs.select(col("a_id").as("s"), col("b_id").as("d"))
       .unionAll(pairs.select(col("b_id").as("s"), col("a_id").as("d")))
     // the degree table is referenced by every iteration's subtree: without
     // materialization the lazy chain re-aggregates the edge list per
     // iteration — 2×iters full passes at scale for a node-sized table
-    // Unkeyed calls materialize the degree table by EAGER lineage
-    // truncation (RDD-level blocks, GC-reclaimed when the result frame is
-    // dropped) instead of persistUnkeyed: a CacheManager persist here is
-    // keyed by LOGICAL PLAN, so unpersisting it at the end of an unkeyed
-    // call could evict a KEYED call's identical shared entry (the exact
-    // cross-eviction hazard Memo documents for the putIfAbsent loser) —
-    // and never unpersisting it leaked one entry per call (r8s3 review).
-    val degPlan = edges.groupBy("s").agg(count(lit(1)).as("deg"))
-    val deg = cacheKey match {
-      case Some(_) => Memo.frame(spark, cacheKey, s"prdeg$pairsTag")(degPlan)
-      case None => Dedup.truncate(degPlan)
+    val deg = Memo.frame("prdeg", pairs) {
+      edges.groupBy("s").agg(count(lit(1)).as("deg"))
     }
     var rank = deg.select(col("s").as("id"), col("deg"), lit(1000000L).as("rank"))
     for (i <- 1 to iters) {

@@ -87,6 +87,20 @@ object Layout {
     spark.read.parquet(outDir)
   }
 
+  private val BloomP = 1000000007L
+
+  /** Bloom bit `i` (1-based) of `key` in an `mBits`-bit filter — the
+    * family [[bloomPartitionIndex]] documents; the streamed index
+    * (graft.streaming.StreamingIndex) sets the same bits. */
+  private[graft] def bloomBit(i: Column, key: Column, mBits: Long): Column =
+    ((((i * lit(2654435761L)) % BloomP) * key + (i * lit(40503L) + 17L) % BloomP) % BloomP) % mBits
+
+  /** The distinct [[bloomBit]]s 1..kHashes of a literal key. */
+  private[graft] def bloomBits(key: Long, mBits: Long, kHashes: Int): Seq[Long] =
+    (1 to kHashes).map { i =>
+      ((((i * 2654435761L) % BloomP) * key + (i * 40503L + 17L) % BloomP) % BloomP) % mBits
+    }.distinct
+
   /** Partition-level Bloom data-skipping index (X71): per month-partition
     * of `orders`, the k-hash Bloom bit set over the join key plus a probe
     * report (would the index admit `probeKey`? is it actually there?) —
@@ -102,12 +116,7 @@ object Layout {
     * OR) so 1000 executors build shard blooms independently. */
   private[graft] def bloomPartitionIndex(orders: DataFrame, mBits: Long,
       kHashes: Int, probeKey: Long): DataFrame = {
-    val P = 1000000007L
-    def bitOf(i: Column, key: Column) =
-      ((((i * lit(2654435761L)) % P) * key + (i * lit(40503L) + 17L) % P) % P) % mBits
-    val probeBits = (1 to kHashes).map { i =>
-      ((((i * 2654435761L) % P) * probeKey + (i * 40503L + 17L) % P) % P) % mBits
-    }.distinct
+    val probeBits = bloomBits(probeKey, mBits, kHashes)
     // ONE scan, one (month, key) shuffle, one month rollup: the ×k bit
     // explode rides the already-distinct key rows, so every per-month stat
     // (rows via Σnr/k — each key row appears k times — distinct keys,
@@ -120,7 +129,7 @@ object Layout {
       .select(col("month"), col("o_custkey"), col("nr"),
         explode(sequence(lit(1), lit(kHashes))).as("i"))
       .select(col("month"), col("o_custkey"), col("nr"),
-        bitOf(col("i"), col("o_custkey")).as("bit"))
+        bloomBit(col("i"), col("o_custkey"), mBits).as("bit"))
       .groupBy("month").agg(
         expr(s"sum(nr) div $kHashes").as("n_rows"),
         countDistinct("o_custkey").as("n_keys"),
@@ -343,9 +352,6 @@ object Layout {
     * probes broadcast into every join. */
   private[graft] def bloomIndexFpr(orders: DataFrame, mBits: Long,
       kHashes: Int, nProbes: Int): DataFrame = {
-    val P = 1000000007L
-    def bitOf(i: Column, key: Column) =
-      ((((i * lit(2654435761L)) % P) * key + (i * lit(40503L) + 17L) % P) % P) % mBits
     val mk = Dedup.truncate(orders.select(
       date_format(col("o_orderdate"), "yyyy-MM").as("month"),
       col("o_custkey").as("k")).distinct())
@@ -359,7 +365,7 @@ object Layout {
     val probeBits = probes
       .select(col("k"), col("probe_class"),
         explode(sequence(lit(1), lit(kHashes))).as("i"))
-      .select(col("k"), col("probe_class"), bitOf(col("i"), col("k")).as("bit"))
+      .select(col("k"), col("probe_class"), bloomBit(col("i"), col("k"), mBits).as("bit"))
       .distinct()
     val probeN = probeBits.groupBy("k", "probe_class")
       .agg(count(lit(1)).as("nb"))
@@ -374,7 +380,7 @@ object Layout {
     val monthBits = mk
       .select(col("month"), explode(sequence(lit(1), lit(kHashes))).as("i"),
         col("k"))
-      .select(col("month"), bitOf(col("i"), col("k")).as("bit"))
+      .select(col("month"), bloomBit(col("i"), col("k"), mBits).as("bit"))
     val hits = monthBits.join(broadcast(probeBits), Seq("bit"))
       .groupBy("month", "k").agg(countDistinct("bit").as("nh"))
     val pairs = mk.select("month").distinct()

@@ -498,19 +498,6 @@ object Multimodal {
 
     private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-    /** Per-(fixtureKey, docs plan, input-file signature) memo of the
-      * population manifest, so a cache-hit `ensure` call runs no Spark job
-      * at all (pre-r8 it re-ran the count/min/max aggregation on every call
-      * just to build the tag). The key combines the analyzed plan's
-      * semantic hash with each input file's (path, length, mtime): a
-      * fixture REGENERATED AT THE SAME PATH within one JVM changes the
-      * signature and misses the memo — preserving the stale-corpus guard
-      * the manifest exists for (the events.ts precedent), which a
-      * plan-hash-only key would have silently defeated (r8 review
-      * finding). Plans with no resolvable input files (in-memory frames)
-      * skip the memo and always re-count. */
-    private val manifestCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
     /** Materialize (once per fixture dir per JVM) the PNG corpus for `docs`
       * and return its directory — the input to [[mediaFromBinaryFiles]].
       *
@@ -520,21 +507,15 @@ object Multimodal {
       * regenerated fixture set (the events.ts precedent) lands in a fresh
       * dir instead of silently joining against a stale corpus. */
     def ensure(docs: DataFrame, fixtureKey: String): String = {
-      def computeManifest(): String = {
+      // memoized on the docs frame, so a cache-hit call runs no Spark job,
+      // and recounted when its files change: a fixture regenerated at the
+      // same path gets a new population, hence a fresh dir
+      val manifest = Memo.of("pngmanifest", docs) {
         val pop = docs.agg(count(lit(1)),
             coalesce(min(col("doc_id")), lit(0L)), coalesce(max(col("doc_id")), lit(0L)))
           .collect()(0)
         s"${pop.getLong(0)}_${pop.getLong(1)}_${pop.getLong(2)}"
       }
-      val files = docs.inputFiles
-      val manifest =
-        if (files.isEmpty) computeManifest()
-        else {
-          val sig = Memo.snapshot(docs.sparkSession, files.toSeq).hashCode
-          val manifestKey =
-            s"$fixtureKey#${docs.queryExecution.analyzed.semanticHash()}#$sig"
-          manifestCache.computeIfAbsent(manifestKey, _ => computeManifest())
-        }
       val tag = s"${fixtureKey.replaceAll("[^A-Za-z0-9._-]", "_")}_$manifest"
       cache.computeIfAbsent(tag, { _ =>
         // executors write into executor-local java.io.tmpdir and the driver

@@ -68,13 +68,12 @@ object QualityModel {
     col("x0") * w(0) + col("x1") * w(1) + col("x2") * w(2) + col("x3") * w(3)
   }
 
-  /** [[train]] memoized per (session, corpus key, schedule) — the two
-    * declared surface keys (doc_quality_logreg, quality_calibration) share
-    * one model per corpus, so the 12-job gradient descent runs once, not
-    * once per key ([[Memo]]'s key-names-immutable-input contract). */
-  def trainCached(spark: org.apache.spark.sql.SparkSession, corpusKey: String,
-      feat: DataFrame, steps: Int, eta: Double): Array[Double] =
-    Memo(spark, s"logreg:$corpusKey:$steps:$eta")(train(feat, steps, eta))
+  /** [[train]] memoized per (feature frame, schedule) — the two declared
+    * surface keys (doc_quality_logreg, quality_calibration) share one model
+    * per corpus, so the 12-job gradient descent runs once, not once per
+    * key ([[Memo]]). */
+  def trainCached(feat: DataFrame, steps: Int, eta: Double): Array[Double] =
+    Memo.of(s"logreg:$steps:$eta", feat)(train(feat, steps, eta))
 
   /** Train `steps` full-batch gradient steps at rate `eta` from w = 0:
     * wⱼ += η · avg((y − σ(w·x)) · xⱼ). Deterministic given the corpus. */

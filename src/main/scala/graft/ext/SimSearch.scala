@@ -132,8 +132,8 @@ object SimSearch {
     * The 30-plane cap keeps band buckets in INT range; past n ≈ 8·2^30
     * vectors bucket population starts growing again — at that scale the
     * band id becomes a BIGINT and the cap lifts. */
-  def scaledPlanes(emb: DataFrame, cacheKey: Option[String] = None): Int = {
-    val n = corpusSize(emb, cacheKey)
+  def scaledPlanes(emb: DataFrame): Int = {
+    val n = corpusSize(emb)
     val target = math.max(1L, (n + 7L) / 8L)
     val ceilLog2 = if (target <= 1L) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(target - 1L)
@@ -141,13 +141,13 @@ object SimSearch {
   }
 
   /** The ANN pair set of the fixture embeddings table, materialized once
-    * per (session, dir) — consumed by simjoin_ann's downstream keys (the
+    * per corpus — consumed by simjoin_ann's downstream keys (the
     * PageRank recurrence references it in every iteration's subtree) and
     * warmed untimed by Bench like the pipeline's profile caches. Single
     * definition so call sites can't drift on the LSH parameters. */
-  def annPairsMemo(spark: SparkSession, dir: String): DataFrame =
-    Memo.frame(spark, Some(dir), "annpairs") {
-      val emb = graft.catalog.TableRegistry.table(spark, dir, "embeddings")
+  def annPairsMemo(spark: SparkSession, dir: String): DataFrame = {
+    val emb = graft.catalog.TableRegistry.table(spark, dir, "embeddings")
+    Memo.frame("annpairs", emb) {
       // truncate lineage, not just persist: the banded projection's LOGICAL
       // plan carries nBands·r 64-literal weight arrays, and the PageRank
       // recurrence re-analyzes the pair frame's plan ~2 trees per iteration
@@ -156,10 +156,10 @@ object SimSearch {
       // consumer-visible plan to a flat scan; the cached data is identical.
       Dedup.truncate(
         annSelfJoin(spark, emb, dim = 64,
-          rPlanes = scaledPlanes(emb, Some(dir)), nBands = annBands,
-          threshold = 0.25, cacheKey = Some(dir))
+          rPlanes = scaledPlanes(emb), nBands = annBands, threshold = 0.25)
           .select("a_id", "b_id"))
     }
+  }
 
   /** Banded random-hyperplane ANN self-join: pairs (a < b) with cosine ≥
     * threshold, candidates restricted to pairs agreeing on all `rPlanes`
@@ -178,14 +178,13 @@ object SimSearch {
     *    band-bucket collision (the r12 form shuffled both vectors through
     *    the join and materialized them per candidate row).
     * The banded projection (nBands · rPlanes codegen VectorDots) feeds both
-    * join sides — pass `cacheKey` to materialize it once. */
+    * join sides, so it is materialized once per corpus. */
   def annSelfJoin(spark: SparkSession, emb: DataFrame, dim: Int,
-      rPlanes: Int, nBands: Int, threshold: Double,
-      cacheKey: Option[String] = None): DataFrame = {
-    val e = Memo.frame(spark, cacheKey, s"ann:$dim:$rPlanes:$nBands") {
+      rPlanes: Int, nBands: Int, threshold: Double): DataFrame = {
+    val e = Memo.frame(s"ann:$dim:$rPlanes:$nBands", emb) {
       withNorm(emb)
     }
-    val banded = Memo.frame(spark, cacheKey, s"annbands:$dim:$rPlanes:$nBands") {
+    val banded = Memo.frame(s"annbands:$dim:$rPlanes:$nBands", emb) {
       e.select(col("vec_id"),
         explode(array((0 until nBands).map(b =>
           struct(lit(b).as("band"),
@@ -215,18 +214,16 @@ object SimSearch {
     * corpus grows, so within-cluster pairwise work stays O(n · 256), never
     * O(n² / k) with a stale fixed k. The count is a build-time driver
     * action by necessity (k shapes the plan's literal centroid set,
-    * exactly like [[seedCentroids]]'s collect) — memoized per (session,
-    * corpus) so repeated builds over one fixture cost one metadata-sized
-    * job total. */
-  def scaledK(emb: DataFrame, cacheKey: Option[String] = None): Int =
-    math.max(8L, corpusSize(emb, cacheKey) / 256L).toInt
+    * exactly like [[seedCentroids]]'s collect) — memoized per corpus so
+    * repeated builds over one fixture cost one metadata-sized job total. */
+  def scaledK(emb: DataFrame): Int =
+    math.max(8L, corpusSize(emb) / 256L).toInt
 
   /** Corpus row count backing every corpus-scaled index parameter
-    * ([[scaledK]], [[scaledPlanes]]) — memoized per (session, corpus) so
-    * repeated index builds over one fixture cost one metadata-sized job. */
-  def corpusSize(emb: DataFrame, cacheKey: Option[String] = None): Long =
-    cacheKey.fold(emb.count())(k =>
-      Memo(emb.sparkSession, s"corpussize:$k")(emb.count()))
+    * ([[scaledK]], [[scaledPlanes]]) — memoized per corpus so repeated
+    * index builds over one fixture cost one metadata-sized job. */
+  def corpusSize(emb: DataFrame): Long =
+    Memo.of("corpussize", emb)(emb.count())
 
   /** (ci, cv, c2) centroid index frame for the corpus-scaled assignment:
     * the first `k` nonzero-norm vectors by vec_id, indexed 0..k−1 in
@@ -239,10 +236,9 @@ object SimSearch {
     * — a k-row index-build step (one TakeOrdered task), not a corpus
     * window; at extreme scale the centroid index is an offline artifact
     * built once, exactly like an IVF codebook. */
-  def centroidFrame(emb: DataFrame, k: Int,
-      cacheKey: Option[String] = None): DataFrame = {
+  def centroidFrame(emb: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    Memo.frame(emb.sparkSession, cacheKey.map(ck => s"$ck:k$k"), "centroidframe") {
+    Memo.frame(s"centroidframe:$k", emb) {
       withNorm(emb).orderBy("vec_id").limit(k)
         .withColumn("ci",
           (row_number().over(Window.orderBy("vec_id")) - 1).cast("int"))
@@ -307,15 +303,14 @@ object SimSearch {
     * intrinsic to exact argmin over a corpus-scaled codebook — but the
     * plan no longer bakes k into its SIZE: codegen is k-independent, and
     * centroids transit as broadcast data, not literals. */
-  def assignClusters(emb: DataFrame, k: Int,
-      cacheKey: Option[String] = None): DataFrame = {
+  def assignClusters(emb: DataFrame, k: Int): DataFrame = {
     // memoized + persisted per (corpus, k): the SemDeDup pair join reads
     // this frame from BOTH sides and the stats key reads it again — one
     // k-literal projection pass serves all of them (at 100 TB the
     // equivalent is materializing the assignment once at index-build time)
-    Memo.frame(emb.sparkSession, cacheKey.map(ck => s"$ck:k$k"), "clusterassign") {
+    Memo.frame(s"clusterassign:$k", emb) {
       val e = withNorm(emb).select(col("vec_id"), col("v"))
-      e.join(argminAssign(e, centroidFrame(emb, k, cacheKey)), Seq("vec_id"))
+      e.join(argminAssign(e, centroidFrame(emb, k)), Seq("vec_id"))
         .select(col("vec_id"), col("v"), col("cluster"), col("m"))
     }
   }
@@ -392,9 +387,8 @@ object SimSearch {
   }
 
   def semanticDedup(emb: DataFrame, k: Int, threshold: Double,
-      cacheKey: Option[String] = None,
       maxSide: Int = maxClusterSide): DataFrame = {
-    val e = assignClusters(emb, k, cacheKey)
+    val e = assignClusters(emb, k)
     e.join(semanticDups(e, threshold, maxSide),
         col("vec_id") === col("b_id"), "left_outer")
       .groupBy("cluster")
@@ -415,9 +409,8 @@ object SimSearch {
     * anti-join-on-ingest consumes. Same memoized assignment + dup frame
     * as the stats key — emitting costs one extra left join. */
   def semanticKeepers(emb: DataFrame, k: Int, threshold: Double,
-      cacheKey: Option[String] = None,
       maxSide: Int = maxClusterSide): DataFrame = {
-    val e = assignClusters(emb, k, cacheKey)
+    val e = assignClusters(emb, k)
     e.join(semanticDups(e, threshold, maxSide),
         col("vec_id") === col("b_id"), "left_outer")
       .select(col("vec_id"), col("cluster"),
@@ -427,16 +420,15 @@ object SimSearch {
 
   /** Assign a NEW embedding batch to an EXISTING corpus's centroid frame —
     * the ingest-time face of [[assignClusters]]: the centroid index comes
-    * from `baseEmb` (memoized per cacheKey, so repeated ingests share the
-    * one index build), while the argmin runs over `newEmb` only. This is
+    * from `baseEmb` (memoized per base corpus, so repeated ingests share
+    * the one index build), while the argmin runs over `newEmb` only. This is
     * the shape a 100 TB pipeline actually runs per arriving batch: the
     * index is a fixed offline artifact, re-clustering never happens on
     * ingest. Same (vec_id, v, cluster, m) contract as [[assignClusters]].
     */
-  def assignToExisting(newEmb: DataFrame, baseEmb: DataFrame, k: Int,
-      cacheKey: Option[String] = None): DataFrame = {
+  def assignToExisting(newEmb: DataFrame, baseEmb: DataFrame, k: Int): DataFrame = {
     val e = withNorm(newEmb).select(col("vec_id"), col("v"))
-    e.join(argminAssign(e, centroidFrame(baseEmb, k, cacheKey)), Seq("vec_id"))
+    e.join(argminAssign(e, centroidFrame(baseEmb, k)), Seq("vec_id"))
       .select(col("vec_id"), col("v"), col("cluster"), col("m"))
   }
 
@@ -460,13 +452,13 @@ object SimSearch {
     * expected-cluster-size. Output: (vec_id, cluster, kept) for the new
     * batch — the manifest rows an ingest job appends. */
   def incrementalKeepers(newEmb: DataFrame, baseEmb: DataFrame, k: Int,
-      threshold: Double, cacheKey: Option[String] = None): DataFrame = {
-    val base = assignClusters(baseEmb, k, cacheKey)
+      threshold: Double): DataFrame = {
+    val base = assignClusters(baseEmb, k)
     val keptVecs = base
-      .join(semanticKeepers(baseEmb, k, threshold, cacheKey)
+      .join(semanticKeepers(baseEmb, k, threshold)
         .where(col("kept") === 1).select("vec_id"), Seq("vec_id"))
       .select(col("cluster"), col("vec_id").as("b_id"), col("v").as("bv"))
-    val newAsg = assignToExisting(newEmb, baseEmb, k, cacheKey)
+    val newAsg = assignToExisting(newEmb, baseEmb, k)
     val dup = newAsg
       .select(col("cluster"), col("vec_id").as("a_id"), col("v").as("av"))
       .join(keptVecs, Seq("cluster"))
@@ -484,16 +476,14 @@ object SimSearch {
     * against one query), the PQ codebook (n = 4 slices), and the k-means
     * seed matrix; corpus-side assignment always goes through the broadcast
     * [[argminAssign]], never through literals built from this. Memoized
-    * per (session, cacheKey, n), so repeated index builds over one fixture
-    * (ivfTopK + kmeans) share one matrix instead of re-running the scan. */
-  def seedCentroids(emb: DataFrame, n: Int, cacheKey: Option[String] = None)
-      : Array[(Int, Array[Double])] = {
-    def compute: Array[(Int, Array[Double])] =
+    * per (corpus, n), so repeated index builds over one fixture (ivfTopK +
+    * kmeans) share one matrix instead of re-running the scan. */
+  def seedCentroids(emb: DataFrame, n: Int): Array[(Int, Array[Double])] =
+    Memo.of(s"centroids:$n", emb) {
       withNorm(emb).orderBy("vec_id").limit(n).collect()
         .zipWithIndex
         .map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
-    cacheKey.fold(compute)(k => Memo(emb.sparkSession, s"centroids:$k:$n")(compute))
-  }
+    }
 
   /** One full k-means iteration over the corpus: E-step assigns every
     * vector to its nearest seed centroid via [[argminAssign]] (broadcast
@@ -504,9 +494,8 @@ object SimSearch {
     * plus a metadata-sized exchange, which is exactly how distributed
     * k-means should look. Output (cluster, pos, centroid, n) with n =
     * cluster population. */
-  def kmeansIterate(spark: SparkSession, emb: DataFrame, k: Int,
-      cacheKey: Option[String] = None): DataFrame =
-    assignClusters(emb, k, cacheKey)
+  def kmeansIterate(spark: SparkSession, emb: DataFrame, k: Int): DataFrame =
+    assignClusters(emb, k)
       .select(col("cluster"), posexplode(col("v")))
       .groupBy(col("cluster"), (col("pos") + 1).cast("int").as("pos"))
       .agg(round(avg("col"), 6).as("centroid"), count(lit(1)).as("n"))
@@ -577,21 +566,20 @@ object SimSearch {
     * matrix's null space despite real variance (probability-simplex
     * embeddings make v₀ = uniform exactly that) triggers one deterministic
     * deflected restart on the max-scatter axis — see the in-loop proof. */
-  def pcaTopComponent(spark: SparkSession, emb: DataFrame, iters: Int = 3,
-      cacheKey: Option[String] = None): (Array[Double], Double) = {
-    val (v, lam, _) = pcaTop(spark, emb, iters, cacheKey)
+  def pcaTopComponent(spark: SparkSession, emb: DataFrame,
+      iters: Int = 3): (Array[Double], Double) = {
+    val (v, lam, _) = pcaTop(spark, emb, iters)
     (v, lam)
   }
 
   /** [[pcaTopComponent]] plus the corpus mean it already computed — the
     * internal form [[abttTopK]] builds on (ABTT needs μ for the centering,
-    * and recomputing it would be a redundant pass). Memoized per (session,
-    * cacheKey, iters): embedding_pca_power and embedding_abtt share ONE
-    * power iteration instead of each paying the full chain. */
-  private[graft] def pcaTop(spark: SparkSession, emb: DataFrame, iters: Int = 3,
-      cacheKey: Option[String] = None): (Array[Double], Double, Array[Double]) =
-    cacheKey.fold(pcaTopCompute(spark, emb, iters))(k =>
-      Memo(spark, s"pca:$k:$iters")(pcaTopCompute(spark, emb, iters)))
+    * and recomputing it would be a redundant pass). Memoized per (corpus,
+    * iters): embedding_pca_power and embedding_abtt share ONE power
+    * iteration instead of each paying the full chain. */
+  private[graft] def pcaTop(spark: SparkSession, emb: DataFrame,
+      iters: Int = 3): (Array[Double], Double, Array[Double]) =
+    Memo.of(s"pca:$iters", emb)(pcaTopCompute(spark, emb, iters))
 
   private def pcaTopCompute(spark: SparkSession, emb: DataFrame, iters: Int)
       : (Array[Double], Double, Array[Double]) = {
@@ -665,8 +653,8 @@ object SimSearch {
     * AFTER the transform (vectors that were pure mean + top-direction) are
     * excluded like [[withNorm]] does for raw zero vectors. */
   def abttTopK(spark: SparkSession, emb: DataFrame, queryVecId: Long, k: Int,
-      iters: Int = 3, cacheKey: Option[String] = None): DataFrame = {
-    val (pc, _, mu) = pcaTop(spark, emb, iters, cacheKey)
+      iters: Int = 3): DataFrame = {
+    val (pc, _, mu) = pcaTop(spark, emb, iters)
     val vLit = array(pc.toIndexedSeq.map(lit): _*)
     val vDotMu = pc.zip(mu).map { case (a, b) => a * b }.sum
     // the per-row transform runs as the CenterDeflect codegen kernel (r13):
@@ -706,8 +694,8 @@ object SimSearch {
     * the per-cluster layout would be a partitionBy("cluster") write.
     */
   def ivfTopK(spark: SparkSession, emb: DataFrame, queryVecId: Long, k: Int,
-      nCentroids: Int = 16, nProbe: Int = 4, cacheKey: Option[String] = None): DataFrame = {
-    val centroids = seedCentroids(emb, nCentroids, cacheKey)
+      nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
+    val centroids = seedCentroids(emb, nCentroids)
     // driver-side: the query vector + norm (one pushdown point-lookup — the
     // r3 form collected it from the full cluster-assignment projection,
     // forcing a whole assignment pass just to read one row)
@@ -724,14 +712,14 @@ object SimSearch {
     // literal-unrolled projection here was the one surviving instance of
     // the r12 scale-killer shape — fine at fixed k = 16, but nothing
     // stopped a future corpus-scaled caller), memoized + persisted per
-    // (cacheKey, k) so repeated probes AND the recall-curve key share one
+    // (corpus, k) so repeated probes AND the recall-curve key share one
     // index build. The norm is recomputed from the assigned v (same
     // codegen fold withNorm ran — bit-identical), cheaper than carrying a
     // second persisted frame. The query vector stays a plan-time literal —
     // one vector, no broadcast join needed, and dot(v, lit(qv)) folds
     // ascending exactly like the former column form, so cosines are
     // bit-identical to the joined variant.
-    val assigned = assignClusters(emb, nCentroids, cacheKey)
+    val assigned = assignClusters(emb, nCentroids)
       .withColumn("nrm", norm(col("v")))
     val qvLit = array(qv.toIndexedSeq.map(lit): _*)
     assigned
@@ -861,10 +849,10 @@ object SimSearch {
     * accumulation is exact long addition; floats re-enter only in the
     * final score = (Σqdot) / (√(Σ‖c‖²) · ‖q‖), an identical op sequence on
     * identical inputs. */
-  def pqTopK(spark: SparkSession, emb: DataFrame, queryVecId: Long, k: Int,
-      cacheKey: Option[String] = None): DataFrame = {
+  def pqTopK(spark: SparkSession, emb: DataFrame, queryVecId: Long,
+      k: Int): DataFrame = {
     val nSub = 8; val dSub = 8; val nCodes = 4
-    val seeds = seedCentroids(emb, nCodes, cacheKey)
+    val seeds = seedCentroids(emb, nCodes)
     require(seeds.length == nCodes, s"corpus has < $nCodes nonzero vectors")
     // sub-centroids [s][c] and their ‖c‖² (ascending-fold sums)
     val subC = Array.tabulate(nSub, nCodes) { (s, c) =>

@@ -126,10 +126,9 @@ object Temporal {
         "— rename them on one input before joining")
     // integer division (div), NOT `/`: epoch-nano longs exceed 2^53, so a
     // double-typed quotient would lose the low bits of the bucket id.
-    // Identifiers are backtick-quoted (with embedded backticks doubled) so
-    // names with spaces/dots/reserved words parse instead of breaking.
-    def q(name: String): String = "`" + name.replace("`", "``") + "`"
-    def bkt(name: String): Column = expr(s"${q(name)} div $bucketWidth")
+    // Identifiers are quoted so names with spaces/dots/reserved words parse.
+    def bkt(name: String): Column =
+      expr(s"${graft.catalog.TableRegistry.quote(name)} div $bucketWidth")
     val bucketed = fact.withColumn("_bkt", bkt(tsCol))
     val expanded = intervals.withColumn("_bkt",
       explode(sequence(bkt(loCol), bkt(hiCol))))

@@ -27,15 +27,6 @@ object TextAnalysis {
     aggregate(tokens(text), lit(0),
       (acc, t) => acc + lit(1) + floor(greatest(length(t) - 1, lit(0)) / 4).cast("int"))
 
-  /** Long integer division (`div`) as a Column — IntegralDivide isn't in
-    * the functions API. */
-  private def ldiv(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
-  }
-
   /** Quality composite ∈ [0,1]: 0.4·min(n_tokens/100,1) +
     * 0.3·stopword_ratio + 0.3·min(avg_token_len/10,1), rounded HALF_UP to
     * 6 decimals — in EXACT INTEGER arithmetic. The fp formulation hit a
@@ -63,7 +54,7 @@ object TextAnalysis {
     val num = lit(4L) * least(n, lit(100L)) * n + lit(300L) * stop +
       lit(30L) * least(sumLen, lit(10L) * n)
     val den = lit(1000L) * n
-    ldiv(lit(2000000L) * num + den, lit(2L) * den)
+    ExactMath.ldiv(lit(2000000L) * num + den, lit(2L) * den)
   }
 
   /** DuckDB twin of [[qualityMicros]] (stopwords fixed to the engine-wide

@@ -34,14 +34,13 @@ object Winnow {
       .distinct()
   }
 
-  /** [[fingerprintFrame]] materialized through Memo.frame keyed by the corpus
-    * dir: the index feeds BOTH `fingerprint_winnowing` (the audit rollup)
+  /** [[fingerprintFrame]] materialized once per corpus through Memo.frame:
+    * the index feeds BOTH `fingerprint_winnowing` (the audit rollup)
     * and [[matchSpans]] (candidate pairs) — without the memo each key
     * re-runs the shingle+winnow pass over the full corpus (the
     * shared-frame discipline of Dedup.memoizedSignatures). */
-  def fingerprintFrameMemo(spark: org.apache.spark.sql.SparkSession,
-      dir: String, docs: DataFrame, k: Int = 4, w: Int = 4): DataFrame =
-    Memo.frame(spark, Some(dir), s"winnow_fp:$k:$w") {
+  def fingerprintFrameMemo(docs: DataFrame, k: Int = 4, w: Int = 4): DataFrame =
+    Memo.frame(s"winnow_fp:$k:$w", docs) {
       fingerprintFrame(docs, k, w)
     }
 
@@ -51,14 +50,12 @@ object Winnow {
     * Returns one row (a_id, b_id, a_start, b_start, run_tokens) per
     * maximal shared run of ≥ `minRun` tokens between docs sharing a
     * winnowed fingerprint with document frequency in [2, dfCap], with
-    * a_id < b_id; UNORDERED (declared keys sort). Memoized per
-    * (session, dir) — the span frame feeds both the audit key and the
-    * removal key. */
-  def matchSpans(spark: org.apache.spark.sql.SparkSession, dir: String,
-      docs: DataFrame, k: Int = 4, w: Int = 4, minRun: Int = 7,
+    * a_id < b_id; UNORDERED (declared keys sort). Memoized per corpus —
+    * the span frame feeds both the audit key and the removal key. */
+  def matchSpans(docs: DataFrame, k: Int = 4, w: Int = 4, minRun: Int = 7,
       dfCap: Int = 16): DataFrame =
-    Memo.frame(spark, Some(dir), s"winnow_spans:$k:$w:$minRun:$dfCap") {
-      val fp = fingerprintFrameMemo(spark, dir, docs, k, w)
+    Memo.frame(s"winnow_spans:$k:$w:$minRun:$dfCap", docs) {
+      val fp = fingerprintFrameMemo(docs, k, w)
         .select("doc_id", "fp")
       val fpOk = fp.groupBy("fp").agg(count(lit(1)).as("df"))
         .where(col("df") >= 2 && col("df") <= dfCap)
@@ -72,7 +69,7 @@ object Winnow {
       // sides (a and b) — unmaterialized, the shingle+hash pass runs
       // twice (the memoizedSignatures double-compute trap; measured 2×
       // the key at sf1); persisted once, both sides read it
-      val grams = Memo.frame(spark, Some(dir), s"winnow_grams:$k:$minRun") {
+      val grams = Memo.frame(s"winnow_grams:$k:$minRun", docs) {
         // opt-r15: positional per-window xxhash64 in ONE codegen pass —
         // the former shingles() + posexplode + xxhash64(g) materialized
         // every window string only to hash it (values bit-identical:
@@ -111,13 +108,12 @@ object Winnow {
     * the union over runs, so overlapping runs on different diagonals never
     * double-count a position. Shared by `dedup_span_removal` (attrition
     * accounting) and `dedup_span_clean` (cleaned-corpus emission);
-    * memoized so the explode+distinct runs once per (session, dir). The
-    * position explode is bounded by covered-token count ≤ doc length. */
-  def coveredPositions(spark: org.apache.spark.sql.SparkSession, dir: String,
-      docs: DataFrame, k: Int = 4, w: Int = 4, minRun: Int = 7,
+    * memoized so the explode+distinct runs once per corpus. The position
+    * explode is bounded by covered-token count ≤ doc length. */
+  def coveredPositions(docs: DataFrame, k: Int = 4, w: Int = 4, minRun: Int = 7,
       dfCap: Int = 16): DataFrame =
-    Memo.frame(spark, Some(dir), s"winnow_cov:$k:$w:$minRun:$dfCap") {
-      matchSpans(spark, dir, docs, k, w, minRun, dfCap)
+    Memo.frame(s"winnow_cov:$k:$w:$minRun:$dfCap", docs) {
+      matchSpans(docs, k, w, minRun, dfCap)
         .select(col("b_id").as("doc_id"),
           explode(sequence(col("b_start").cast("long"),
             col("b_start").cast("long") + col("run_tokens") - 1L)).as("pos"))

@@ -52,9 +52,9 @@ object AnalysisPipeline {
     // serial → 4.14 s with this and the plain-Scala workload derivation,
     // faster in every pair (SCALE.md). The pool is capped at 32 threads
     // (they mostly block on job completion, and a warehouse-scale catalog
-    // must not mean one driver thread per table); Profiler.profile caps its
-    // own per-column pool at 32 too, so the worst case is a fixed ~1k
-    // mostly-blocked driver threads, independent of catalog width.
+    // must not mean one driver thread per table); Profiler.profile runs on
+    // the calling thread, so the worst case is 32 mostly-blocked driver
+    // threads, independent of catalog width.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, math.min(vs.size, 32)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {

@@ -1,5 +1,6 @@
 package graft.profile
 
+import graft.catalog.TableRegistry
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -51,17 +52,17 @@ object Profiler {
     case _ => false
   }
 
-  /** A column reference that takes `name` literally: backtick-quoted with
-    * embedded backticks doubled, so a profiled user table's `unit price`,
-    * `a.b` or ANSI-reserved column resolves instead of failing to parse. */
-  private def column(name: String): Column = col(s"`${name.replace("`", "``")}`")
+  /** A column reference that takes `name` literally, so a profiled user
+    * table's `unit price`, `a.b` or ANSI-reserved column resolves instead
+    * of failing to parse. */
+  private def column(name: String): Column = col(TableRegistry.quote(name))
 
   /** Profile every column of `df`: one plain aggregate and one distinct
     * count pass per table, collected together.
     *
-    * Below 16 scheduler slots the distinct counts (each column's, plus the
-    * day, month and year of each date column; on the approx path only the
-    * date levels) run as ONE fixed-order plan, [[distinctCounts]], not as a
+    * The distinct counts (each column's, plus the day, month and year of
+    * each date column; on the approx path only the date levels) run as ONE
+    * fixed-order plan, [[distinctCounts]], not as a
     * multi-`countDistinct` aggregate: Spark's `RewriteDistinctAggregates`
     * lays out its Expand in an order that follows expression-id hashes, so
     * every fresh read of a table generated different Java and recompiled
@@ -103,8 +104,6 @@ object Profiler {
     // even tighter, rsd 0.01, because its within-5% band is HASH-asserted;
     // here 0.02 suffices for banding and halves the per-column state.)
     def hll(c: String): Column = approx_count_distinct(column(c), 0.02)
-    def card(c: String): Column =
-      if (approxCardinality) hll(c) else countDistinct(column(c))
 
     // Distinct counts and everything else are separate passes. Mixing
     // distinct counting (which expands every row once per counted
@@ -123,9 +122,8 @@ object Profiler {
         plainAggs += s"${c}__min" -> min(column(c)).cast("double")
         plainAggs += s"${c}__max" -> max(column(c)).cast("double")
         if (distCols(c)) {
-          // the SQL form needs the same literal quoting as `column`
           plainAggs += s"${c}__pct" -> expr(
-            s"percentile(`${c.replace("`", "``")}`, array(0.1D, 0.5D, 0.9D))")
+            s"percentile(${TableRegistry.quote(c)}, array(0.1D, 0.5D, 0.9D))")
         }
       }
     }
@@ -138,70 +136,33 @@ object Profiler {
     // included (the oracle and third-engine twins replay it).
     def dateLevels(c: String): Seq[Column] =
       Seq(dayofmonth(column(c)), month(column(c)), year(column(c)))
-    def dateAggs(c: String): Seq[Column] = dateLevels(c).map(countDistinct(_))
     def plain(extra: Seq[Column]): DataFrame = {
       val aggs = (plainAggs.map(_._2) ++ extra).zipWithIndex.map { case (a, i) => a.as(s"_p$i") }
       df.agg(aggs.head, aggs.tail.toSeq: _*)
     }
 
-    // With spare scheduler slots (≥16), each distinct count runs as its own
-    // concurrent job: a per-column HashAggregate dedupes map-side BEFORE the
-    // shuffle, vs the combined form's expansion ×(columns+date-levels)
-    // pushing |rows|×groups through one partial aggregate (measured 3.4 s vs
-    // 0.7 s on sf0.1 lineitem). Column pruning makes each job read only its
-    // own parquet column, so total I/O matches the one-pass form. On small
-    // executors the jobs would queue — keep the single fixed-order pass
-    // there.
-    val (plainRow, cardMap, dateMap) =
-      if (spark.sparkContext.defaultParallelism >= 16) {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        // capped like AnalysisPipeline's table pool (r8): one thread per
-        // column is a driver-thread bomb on wide warehouse tables — 32
-        // in-flight jobs already saturate the scheduler, the rest queue
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(32, fields.size + dateFields.size + 1))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-        try {
-          val plainF = Future(plain(Nil).collect()(0))
-          val cardFs = fields.map(f => Future(
-            f.name -> df.agg(card(f.name)).collect()(0).getLong(0)))
-          val dateFs = dateFields.map { c =>
-            Future {
-              val as = dateAggs(c)
-              val r = df.agg(as.head, as.tail: _*).collect()(0)
-              c -> (r.getLong(0), r.getLong(1), r.getLong(2))
-            }
-          }
-          (Await.result(plainF, Duration.Inf),
-            Await.result(Future.sequence(cardFs), Duration.Inf).toMap,
-            Await.result(Future.sequence(dateFs), Duration.Inf).toMap)
-        } finally pool.shutdown()
-      } else {
-        // exact: every column's distinct count goes through the fixed-order
-        // plan; approx: the HLL sketches are plain aggregates, and only the
-        // date levels need exact distinct counts
-        val hlls = if (approxCardinality) fields.map(f => hll(f.name)) else Nil
-        val cols = if (approxCardinality) Nil else fields.map(f => column(f.name) -> f.dataType)
-        val counted = cols ++ dateFields.flatMap(c => dateLevels(c).map(_ -> (IntegerType: DataType)))
-        val plainDf = plain(hlls).withColumn("_g", lit(-1))
-        val rows = (if (counted.isEmpty) plainDf
-          else plainDf.unionByName(distinctCounts(df, counted), allowMissingColumns = true))
-          .collect()
-        val gAt = plainAggs.size + hlls.size
-        val (plainRows, countRows) = rows.partition(_.getInt(gAt) < 0)
-        // an expression whose values are all null has no row: it counts 0
-        val n = countRows.map(r => r.getInt(gAt) -> r.getLong(gAt + 1)).toMap.withDefaultValue(0L)
-        val pr = plainRows.head
-        val d0 = cols.size
-        (pr,
-          fields.zipWithIndex.map { case (f, i) =>
-            f.name -> (if (approxCardinality) pr.getLong(plainAggs.size + i) else n(i))
-          }.toMap,
-          dateFields.zipWithIndex.map { case (c, j) =>
-            c -> (n(d0 + 3 * j), n(d0 + 3 * j + 1), n(d0 + 3 * j + 2))
-          }.toMap)
-      }
+    // exact: every column's distinct count goes through the fixed-order
+    // plan; approx: the HLL sketches are plain aggregates, and only the
+    // date levels need exact distinct counts
+    val hlls = if (approxCardinality) fields.map(f => hll(f.name)) else Nil
+    val cols = if (approxCardinality) Nil else fields.map(f => column(f.name) -> f.dataType)
+    val counted = cols ++ dateFields.flatMap(c => dateLevels(c).map(_ -> (IntegerType: DataType)))
+    val plainDf = plain(hlls).withColumn("_g", lit(-1))
+    val rows = (if (counted.isEmpty) plainDf
+      else plainDf.unionByName(distinctCounts(df, counted), allowMissingColumns = true))
+      .collect()
+    val gAt = plainAggs.size + hlls.size
+    val (plainRows, countRows) = rows.partition(_.getInt(gAt) < 0)
+    // an expression whose values are all null has no row: it counts 0
+    val n = countRows.map(r => r.getInt(gAt) -> r.getLong(gAt + 1)).toMap.withDefaultValue(0L)
+    val plainRow = plainRows.head
+    val d0 = cols.size
+    val cardMap = fields.zipWithIndex.map { case (f, i) =>
+      f.name -> (if (approxCardinality) plainRow.getLong(plainAggs.size + i) else n(i))
+    }.toMap
+    val dateMap = dateFields.zipWithIndex.map { case (c, j) =>
+      c -> (n(d0 + 3 * j), n(d0 + 3 * j + 1), n(d0 + 3 * j + 2))
+    }.toMap
 
     val plainAt = plainAggs.map(_._1).zipWithIndex.toMap
     def get[T](key: String): Option[T] =

@@ -38,16 +38,11 @@ object StreamingIndex {
       math.min(minVal, o.minVal), math.max(maxVal, o.maxVal), bits | o.bits)
   }
 
-  private val P = 1000000007L
-
-  /** The k Bloom bit positions of a key — MUST stay bit-identical to
-    * Layout.bloomPartitionIndex's column-level family (same affine
-    * constants, same mod order); the streamed and batch-built indexes are
-    * interchangeable only because of this. */
+  /** The k Bloom bit positions of a key — Layout.bloomPartitionIndex's
+    * family ([[graft.ext.Layout.bloomBits]]); the streamed and batch-built
+    * indexes are interchangeable only because both use it. */
   def bitsOfKey(key: Long, mBits: Long, kHashes: Int): Set[Long] =
-    (1 to kHashes).map { i =>
-      ((((i * 2654435761L) % P) * key + (i * 40503L + 17L) % P) % P) % mBits
-    }.toSet
+    graft.ext.Layout.bloomBits(key, mBits, kHashes).toSet
 
   /** One batch's per-month delta: the 3-scalar rollup plus the distinct
     * (month, bit) frame — the executor side does all data-proportional
@@ -64,12 +59,10 @@ object StreamingIndex {
       max("o_totalprice").as("max_val")).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2),
         r.getDouble(3)))).toMap
-    def bitOf(i: org.apache.spark.sql.Column, key: org.apache.spark.sql.Column) =
-      ((((i * lit(2654435761L)) % P) * key + (i * lit(40503L) + 17L) % P) % P) % mBits
     val bits = base.select(col("month"), col("o_custkey")).distinct()
       .select(col("month"),
         explode(sequence(lit(1), lit(kHashes))).as("i"), col("o_custkey"))
-      .select(col("month"), bitOf(col("i"), col("o_custkey")).as("bit"))
+      .select(col("month"), graft.ext.Layout.bloomBit(col("i"), col("o_custkey"), mBits).as("bit"))
       .distinct().collect()
       .groupBy(_.getString(0)).map { case (m, rs) =>
         m -> rs.map(_.getLong(1)).toSet

@@ -21,10 +21,10 @@ object DedupKeys {
   }
 
   /** The [[SimSearch.assignClusters]] frame at corpus-scaled k, memoized
-    * seeds per (session, fixture dir). */
+    * per corpus. */
   private def assigned(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    SimSearch.assignClusters(emb, SimSearch.scaledK(emb, Some(dir)), Some(dir))
+    SimSearch.assignClusters(emb, SimSearch.scaledK(emb))
   }
 
   /** Shared oracle CTE chain: nonzero-norm vectors, the scaled-k centroid
@@ -127,7 +127,7 @@ object DedupKeys {
       // polynomial mod 1e9+7, affine per-seed re-mix), the 5×4 banding
       // candidates (band-slice equality), and the Jaccard verification —
       // a full hash-compared check of the whole LSH pipeline.
-      (s, dir) => Dedup.minhashNearDups(s, t(s, dir, "documents"), cacheKey = Some(dir)),
+      (s, dir) => Dedup.minhashNearDups(s, t(s, dir, "documents")),
       Some(
         """WITH sh AS (
           |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
@@ -161,7 +161,7 @@ object DedupKeys {
       // X2 SimHash near-dups over 61-bit polynomial token hashes: the
       // oracle replays per-token hashing, the 61 bit-majority sums, the
       // four 16-bit LSH bands, and the hamming-distance filter.
-      (s, dir) => Dedup.simhashNearDups(s, t(s, dir, "documents"), cacheKey = Some(dir)),
+      (s, dir) => Dedup.simhashNearDups(s, t(s, dir, "documents")),
       Some(
         """WITH tok AS (
           |  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
@@ -189,7 +189,7 @@ object DedupKeys {
 
     QSpec("dedup_ngram_jaccard",
       (s, dir) => Dedup.exactJaccard(s, t(s, dir, "documents"),
-        shingleW = 3, threshold = 0.2, idCap = 500, cacheKey = Some(dir)),
+        shingleW = 3, threshold = 0.2, idCap = 500),
       Some(
         """WITH sh AS (
           |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
@@ -401,14 +401,14 @@ object DedupKeys {
         // inlines the explode+hash pass into each and computes it TWICE
         // (measured 2× the key at sf1); persisted once, both branches
         // read the materialized sketch (the memoizedSignatures discipline)
-        val sh = Memo.frame(s, Some(dir), "span_shh") {
+        val docs = t(s, dir, "documents")
+        val sh = Memo.frame("span_shh", docs) {
           // opt-r15: one-pass DistinctShingleHashes kernel — the former
           // explode(array_distinct(shingles)) + xxhash64(sh) built every
           // distinct window STRING only to hash it at the next projection;
           // values bit-identical (dedup on string identity, then xxhash64)
-          t(s, dir, "documents")
-            .select(col("doc_id"),
-              explode(Dedup.distinctShingleHashes(col("text"), 4)).as("shh"))
+          docs.select(col("doc_id"),
+            explode(Dedup.distinctShingleHashes(col("text"), 4)).as("shh"))
         }
         val df = sh.groupBy("shh").agg(count(lit(1)).as("ndocs"))
         sh.join(df, "shh")
@@ -570,9 +570,9 @@ object DedupKeys {
         import s.implicits._
         val docs = t(s, dir, "documents")
         val ex = Dedup.exactJaccard(s, docs, shingleW = 3, threshold = 0.05,
-          idCap = 500, cacheKey = Some(dir))
+          idCap = 500)
         val cand = Dedup.bandCandidates(Dedup.bandedBuckets(
-            Dedup.memoizedSignatures(s, docs, 3, 20, Some(dir))
+            Dedup.memoizedSignatures(docs, 3, 20)
               .where(col("doc_id") < 500), 20, 4))
           .withColumn("is_cand", lit(1L))
         val ths = Seq(0.05, 0.2, 0.7).toDF("thresh")
@@ -655,11 +655,11 @@ object DedupKeys {
         // and the oracle's pairs CTE now rounds identically (the
         // dedup_minhash oracle convention), so a borderline pair lands the
         // same side of the threshold on every engine by construction.
-        val grp = Dedup.groupedSignatures(s, docs, 3, 20, Some(dir))
-        val repPairs = Dedup.minhashRepPairs(s, docs, 3, 20, 4,
-            threshold = 0.2, cacheKey = Some(dir))
+        val grp = Dedup.groupedSignatures(docs, 3, 20)
+        val repPairs = Dedup.minhashRepPairs(docs, 3, 20, 4,
+            threshold = 0.2)
           .select("a_id", "b_id")
-        val starEdges = Dedup.signatureMembers(s, docs, 3, 20, Some(dir))
+        val starEdges = Dedup.signatureMembers(docs, 3, 20)
           .join(grp.select(col("gkey"), col("rid")), Seq("gkey"))
           .where(col("doc_id") =!= col("rid"))
           .select(col("rid").as("a_id"), col("doc_id").as("b_id"))
@@ -782,7 +782,7 @@ object DedupKeys {
       // ExactMath (count / min(count), a rational that CAN sit on a
       // rounding half-boundary, unlike irrational cosines).
       (s, dir) => Dedup.exactContainment(s, t(s, dir, "documents"),
-        shingleW = 3, threshold = 0.5, idCap = 500, cacheKey = Some(dir)),
+        shingleW = 3, threshold = 0.5, idCap = 500),
       Some(
         """WITH sh AS (
           |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
@@ -816,8 +816,8 @@ object DedupKeys {
       // planted-duplicate case.
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        SimSearch.semanticDedup(emb, SimSearch.scaledK(emb, Some(dir)),
-          threshold = 0.9, cacheKey = Some(dir))
+        SimSearch.semanticDedup(emb, SimSearch.scaledK(emb),
+          threshold = 0.9)
       },
       Some(
         s"""$assignCtes,
@@ -953,7 +953,7 @@ object DedupKeys {
         // k = 4-token shingles, w = 4-hash winnowing window (ext.Winnow
         // holds the selection core, shared with PropertySpec's randomized
         // guarantee sweep)
-        val fp = graft.ext.Winnow.fingerprintFrameMemo(s, dir, t(s, dir, "documents"))
+        val fp = graft.ext.Winnow.fingerprintFrameMemo(t(s, dir, "documents"))
         val fpStats = fp.groupBy("fp")
           .agg(min("doc_id").as("min_doc"), count(lit(1)).as("fp_df"))
         fp.join(fpStats, "fp")
@@ -1024,9 +1024,9 @@ object DedupKeys {
       // accepted doc-bounded window class. Docs shorter than 7 tokens are
       // dropped before the gram join (they cannot contain a 7-token run).
       // Implementation core shared with `dedup_span_removal` (X58):
-      // ext.Winnow.matchSpans, memoized per (session, dir).
+      // ext.Winnow.matchSpans, memoized per corpus.
       (s, dir) =>
-        graft.ext.Winnow.matchSpans(s, dir, t(s, dir, "documents"))
+        graft.ext.Winnow.matchSpans(t(s, dir, "documents"))
           .orderBy("a_id", "b_id", "a_start", "b_start"),
       Some(
         """WITH sp AS (SELECT doc_id, source, text, string_split(text, ' ') AS sp
@@ -1091,7 +1091,7 @@ object DedupKeys {
       // combine), and a left join back to the per-doc token counts.
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val covered = graft.ext.Winnow.coveredPositions(s, dir, docs)
+        val covered = graft.ext.Winnow.coveredPositions(docs)
           .groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
         docs.select(col("doc_id"),
             size(split(col("text"), " ")).cast("long").as("n_tok"))
@@ -1188,7 +1188,7 @@ object DedupKeys {
       // at distinct positions) are byte-identical to the filter form.
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val covArr = graft.ext.Winnow.coveredPositions(s, dir, docs)
+        val covArr = graft.ext.Winnow.coveredPositions(docs)
           .groupBy("doc_id")
           .agg(sort_array(collect_list(col("pos"))).as("cps"))
         docs.join(covArr, Seq("doc_id"), "left")
@@ -1277,8 +1277,8 @@ object DedupKeys {
       // path is pinned by Queries14Spec's planted duplicate).
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        SimSearch.semanticKeepers(emb, SimSearch.scaledK(emb, Some(dir)),
-          threshold = 0.9, cacheKey = Some(dir))
+        SimSearch.semanticKeepers(emb, SimSearch.scaledK(emb),
+          threshold = 0.9)
       },
       Some(
         s"""$assignCtes,
@@ -1308,8 +1308,8 @@ object DedupKeys {
         val b1 = emb.where(expr("vec_id % 10 < 7"))
         val b2 = emb.where(expr("vec_id % 10 >= 7"))
         SimSearch.incrementalKeepers(b2, b1,
-          SimSearch.scaledK(b1, Some(s"$dir#b1")),
-          threshold = 0.9, cacheKey = Some(s"$dir#b1"))
+          SimSearch.scaledK(b1),
+          threshold = 0.9)
       },
       Some(
         """WITH e AS (SELECT vec_id, v FROM (
@@ -1366,8 +1366,7 @@ object DedupKeys {
         val docs = t(s, dir, "documents")
         Dedup.minhashIncrementalKeepers(s,
           docs.where(expr("doc_id % 10 >= 7")),
-          docs.where(expr("doc_id % 10 < 7")),
-          cacheKey = Some(dir))
+          docs.where(expr("doc_id % 10 < 7")))
       },
       Some(
         """WITH sh0 AS (

@@ -170,9 +170,9 @@ object LayoutKeys {
       (s, dir) => {
         // bucketing is a ONE-TIME layout investment (exactly what the
         // advisor's scripts produce); materialize it once per (session,
-        // fixture dir) — same contract as Memo.frame's sketch passes — so the
-        // steady state this key measures is the exchange-free JOIN, not a
-        // repeated table rewrite. Switching dirs re-materializes.
+        // fixture dir) so the steady state this key measures is the
+        // exchange-free JOIN, not a repeated table rewrite. Switching dirs
+        // re-materializes.
         LayoutKeys.synchronized {
           if (bucketedJoinDir.get() != ((s, dir))) {
             s.sql("DROP TABLE IF EXISTS graft_bj_orders")

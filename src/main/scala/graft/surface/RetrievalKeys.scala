@@ -35,8 +35,8 @@ object RetrievalKeys {
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         SimSearch.annSelfJoin(s, emb, dim = 64,
-          rPlanes = SimSearch.scaledPlanes(emb, Some(dir)),
-          nBands = SimSearch.annBands, threshold = 0.25, cacheKey = Some(dir))
+          rPlanes = SimSearch.scaledPlanes(emb),
+          nBands = SimSearch.annBands, threshold = 0.25)
       },
       Some(
         """WITH params AS (SELECT GREATEST(8, LEAST(30, CAST(ceil(log2(GREATEST(CAST(ceil(count(*) / 8.0) AS BIGINT), 1))) AS INT))) AS r FROM embeddings),
@@ -77,7 +77,7 @@ object RetrievalKeys {
       // replayed by the oracle (assignment via ranked window, probes via
       // the same L2 ordering). Recall vs brute force asserted in ExtSpec.
       (s, dir) => SimSearch.ivfTopK(s, t(s, dir, "embeddings"),
-        queryVecId = 0, k = 10, nCentroids = 16, nProbe = 4, cacheKey = Some(dir)),
+        queryVecId = 0, k = 10, nCentroids = 16, nProbe = 4),
       Some(
         """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
           |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e),
@@ -178,8 +178,7 @@ object RetrievalKeys {
       // M-step: per-(cluster, dim) mean — shuffle carries O(k × dim)
       // partial sums whatever the corpus size). Oracle replays assignment
       // (same −2·v·c + ‖c‖² ranking, same tie-break) and the grouped mean.
-      (s, dir) => graft.ext.SimSearch.kmeansIterate(s, t(s, dir, "embeddings"), 8,
-        cacheKey = Some(dir)),
+      (s, dir) => graft.ext.SimSearch.kmeansIterate(s, t(s, dir, "embeddings"), 8),
       Some(
         """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           |    FROM embeddings),
@@ -276,8 +275,7 @@ object RetrievalKeys {
       // references the edge list in every iteration's subtree, and without
       // materialization Catalyst would re-run the ANN join ~2×iters times
       // inside the one final plan.
-      (s, dir) => Graph.pagerankFixedPoint(s, SimSearch.annPairsMemo(s, dir),
-        iters = 5, cacheKey = Some(dir)),
+      (s, dir) => Graph.pagerankFixedPoint(s, SimSearch.annPairsMemo(s, dir), iters = 5),
       Some {
         def step(prev: String): String =
           s"""(SELECT dg.s AS id, dg.deg,
@@ -378,8 +376,7 @@ object RetrievalKeys {
         val bruteIds = SimSearch.topK(s, emb, queryVecId = 0, k = 10)
           .select(col("vec_id")).withColumn("hit", lit(1L))
         Seq(2, 4).map { p =>
-          SimSearch.ivfTopK(s, emb, queryVecId = 0, k = 10, nCentroids = 16,
-              nProbe = p, cacheKey = Some(dir))
+          SimSearch.ivfTopK(s, emb, queryVecId = 0, k = 10, nCentroids = 16, nProbe = p)
             .select(lit(p).as("n_probe"), col("vec_id"))
         }.reduce(_ unionAll _)
           .join(broadcast(bruteIds), Seq("vec_id"), "left")
@@ -475,7 +472,7 @@ object RetrievalKeys {
       (s, dir) => {
         import s.implicits._
         val (v, lam) = graft.ext.SimSearch.pcaTopComponent(
-          s, t(s, dir, "embeddings"), iters = 3, cacheKey = Some(dir))
+          s, t(s, dir, "embeddings"), iters = 3)
         v.zipWithIndex.toSeq.map { case (x, i) => (i + 1, x, lam) }
           .toDF("pos", "loading_raw", "ev_raw")
           .select(col("pos"), round(col("loading_raw"), 6).as("loading"),
@@ -500,8 +497,7 @@ object RetrievalKeys {
       // replays the full chain: 3 PCA iterations, the projection removal,
       // and the cosine ranking.
       (s, dir) => graft.ext.SimSearch.abttTopK(
-        s, t(s, dir, "embeddings"), queryVecId = 0, k = 10,
-        cacheKey = Some(dir)),
+        s, t(s, dir, "embeddings"), queryVecId = 0, k = 10),
       Some(pcaOracleCtes +
         """,
           |vdm AS (SELECT SUM(v3.x * mu.m) AS s FROM v3 JOIN mu USING (j)),
@@ -558,7 +554,7 @@ object RetrievalKeys {
       // sub-assignment with the engine's own −2·v·c + ‖c‖² ranking and the
       // same micro-rounded tables.
       (s, dir) => SimSearch.pqTopK(s, t(s, dir, "embeddings"),
-        queryVecId = 0, k = 10, cacheKey = Some(dir)),
+        queryVecId = 0, k = 10),
       Some(
         """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
           |nz AS (SELECT vec_id, v FROM e WHERE list_sum(list_transform(v, x -> x*x)) > 0),

@@ -25,10 +25,9 @@ object TextKeys {
     * three consumers: the weights, the max scalar and the totals scalar. */
   private[graft] def mixtureAllocPlan(s: SparkSession, dir: String): DataFrame = {
     val d = "decimal(38,0)"
-    val ps = Memo.frame(s, Some(dir), "mixture_ps",
-      persistUnkeyed = true) {
-      t(s, dir, "documents")
-        .select(col("source"), size(split(col("text"), " ")).cast("long").as("n_tok"))
+    val docs = t(s, dir, "documents")
+    val ps = Memo.frame("mixture_ps", docs) {
+      docs.select(col("source"), size(split(col("text"), " ")).cast("long").as("n_tok"))
         .groupBy("source").agg(sum("n_tok").as("n_tokens"))
     }
     val mx = ps.agg(max("n_tokens").as("max_tokens"))
@@ -99,24 +98,32 @@ object TextKeys {
           .as("bytes_per_char"))
       .orderBy("lang")
 
-  /** The per-doc bigram explode (doc_id, bg), memoized per (session, dir):
+  /** The per-doc bigram explode (doc_id, bg), memoized per corpus:
     * it feeds doc_ppl_bigram's count chain (c12 → c1 → V, with c12 itself
     * read twice inside the weight frame) AND its doc-scoring probe join,
     * and heldout_ppl reuses the SAME frame (its is_train flag derives from
     * doc_id post-hoc). Unmaterialized, Catalyst inlined the corpus explode
     * three times per plan — measured 4.5 s → 1.0 s at sf1 for
     * doc_ppl_bigram alone (the memoizedSignatures double-compute class). */
-  private def pplBigramsMemo(s: SparkSession, dir: String): DataFrame =
-    Memo.frame(s, Some(dir), "ppl_bigrams") {
+  private def pplBigramsMemo(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    Memo.frame("ppl_bigrams", docs) {
       // opt-r15: word bigrams ARE the 2-shingle kernel output for docs of
       // ≥ 2 tokens (the guard excludes the kernel's whole-text collapse),
       // so the interpreted transform+concat runs as one codegen pass
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("text"), split(col("text"), " ").as("toks"))
+      docs.select(col("doc_id"), col("text"), split(col("text"), " ").as("toks"))
         .where(size(col("toks")) >= 2)
         .select(col("doc_id"),
           explode(graft.ext.Dedup.shingles(col("text"), 2)).as("bg"))
     }
+  }
+
+  /** [[QualityModel.features]] of the corpus, persisted: the training
+    * passes and the scoring pass of both logistic-regression keys read it. */
+  private def logregFeatures(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    Memo.frame("logreg_feat", docs)(QualityModel.features(docs))
+  }
 
   val specs: Seq[QSpec] = Seq(
 
@@ -991,12 +998,8 @@ object TextKeys {
       // embedding_pca_power replay discipline.
       (s, dir) => {
         import s.implicits._
-        val feat = Memo.frame(s, Some(dir), "logreg_feat",
-          persistUnkeyed = true) {
-          QualityModel.features(t(s, dir, "documents"))
-        }
-        val w = QualityModel.trainCached(s, dir, feat,
-          QualityModel.trainSteps, QualityModel.trainEta)
+        val feat = logregFeatures(s, dir)
+        val w = QualityModel.trainCached(feat, QualityModel.trainSteps, QualityModel.trainEta)
         val acc = feat
           .select(when((round(QualityModel.margin(w), 6) > 0) ===
             (col("y") === 1.0d), 1L).otherwise(0L).as("ok"))
@@ -1088,12 +1091,8 @@ object TextKeys {
       // renderer, the pcaOracleCtes discipline). One grouped aggregation
       // over O(bins) groups; pos_rate integer-exact through ExactMath.
       (s, dir) => {
-        val feat = Memo.frame(s, Some(dir), "logreg_feat",
-          persistUnkeyed = true) {
-          QualityModel.features(t(s, dir, "documents"))
-        }
-        val w = QualityModel.trainCached(s, dir, feat,
-          QualityModel.trainSteps, QualityModel.trainEta)
+        val feat = logregFeatures(s, dir)
+        val w = QualityModel.trainCached(feat, QualityModel.trainSteps, QualityModel.trainEta)
         val p = round(lit(1.0d) / (lit(1.0d) + exp(-QualityModel.margin(w))), 6)
         feat.select(col("y"), p.as("p"))
           .withColumn("bucket", least(floor(col("p") * 5).cast("int"), lit(4)))
@@ -1316,7 +1315,7 @@ object TextKeys {
         // memoized + persisted: the totals scalar and the weight frame
         // both derive from this vocabulary-sized count — without the cache
         // AQE may or may not reuse the underlying corpus scan between them
-        val tc = Memo.frame(s, Some(dir), "dsirtc") {
+        val tc = Memo.frame("dsirtc", toks) {
           toks.groupBy("tok").agg(
             sum(when(col("is_ref"), 1L).otherwise(0L)).as("ct"),
             sum(when(!col("is_ref"), 1L).otherwise(0L)).as("cc"))
@@ -1372,7 +1371,7 @@ object TextKeys {
       // bigram string key.
       (s, dir) => {
         val bi = pplBigramsMemo(s, dir)
-        val c12 = Memo.frame(s, Some(dir), "ppl_bigram_types") {
+        val c12 = Memo.frame("ppl_bigram_types", bi) {
           bi.groupBy("bg").agg(count(lit(1)).as("c12"))
         }
         val c1 = c12.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
@@ -1549,9 +1548,9 @@ object TextKeys {
       (s, dir) => {
         // memoized + persisted: three consumers below (per-source totals,
         // corpus counts, the scored join) read this vocabulary-sized frame
-        val cst = Memo.frame(s, Some(dir), "srctokcnt") {
-          t(s, dir, "documents")
-            .select(col("source"), explode(split(col("text"), " ")).as("tok"))
+        val docs = t(s, dir, "documents")
+        val cst = Memo.frame("srctokcnt", docs) {
+          docs.select(col("source"), explode(split(col("text"), " ")).as("tok"))
             .groupBy("source", "tok").agg(count(lit(1)).as("c"))
         }
         val totals = cst.groupBy("source").agg(sum("c").as("n_s"),
@@ -1611,13 +1610,13 @@ object TextKeys {
       (s, dir) => {
         // memoized + persisted: the per-source sizes and BOTH sides of the
         // inverted-index self-join read this distinct-shingle frame
-        val sh = Memo.frame(s, Some(dir), "srcshingle") {
+        val docs = t(s, dir, "documents")
+        val sh = Memo.frame("srcshingle", docs) {
           // opt-r15: one-pass DistinctShingleHashes kernel (no shingle
           // strings materialize; values bit-identical — see DedupKeys'
           // span_dup_fraction span_shh note)
-          t(s, dir, "documents")
-            .select(col("source"),
-              explode(graft.ext.Dedup.distinctShingleHashes(col("text"), 3)).as("shh"))
+          docs.select(col("source"),
+            explode(graft.ext.Dedup.distinctShingleHashes(col("text"), 3)).as("shh"))
             .distinct()
         }
         val perSrc = sh.groupBy("source").agg(count(lit(1)).as("n_sh"))
@@ -2107,7 +2106,7 @@ object TextKeys {
       // merges are real (whole high-frequency words assemble within 10
       // rounds) and the compression trajectory is strictly decreasing.
       (s, dir) => graft.ext.Bpe.trainMerges(s, t(s, dir, "documents"),
-        nMerges = 10, cacheKey = Some(dir)),
+        nMerges = 10),
       Some(graft.ext.Bpe.trainMergesOracleSql(10))),
 
     QSpec("bpe_encode_fertility",
@@ -2119,7 +2118,7 @@ object TextKeys {
       // vocabulary-sized (pretoken, n_syms) frame and multiply. Shares the
       // memoized training run with bpe_train_merges.
       (s, dir) => graft.ext.Bpe.encodeFertility(s, t(s, dir, "documents"),
-        nMerges = 10, cacheKey = Some(dir)),
+        nMerges = 10),
       Some(graft.ext.Bpe.encodeFertilityOracleSql(10))),
 
     QSpec("pii_redact_clean",
@@ -2158,6 +2157,6 @@ object TextKeys {
       // bpe_encode_fertility; tokenization itself is lookup-only (the
       // final vocab already carries each pretoken's merged symbols).
       (s, dir) => Bpe.tokenizeShards(s, t(s, dir, "documents"),
-        nMerges = 10, nShards = 16, cacheKey = Some(dir)),
+        nMerges = 10, nShards = 16),
       Some(Bpe.tokenizeShardsOracleSql(10, 16))))
 }

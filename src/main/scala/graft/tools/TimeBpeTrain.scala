@@ -1,6 +1,6 @@
 package graft.tools
 
-/** Dev tool: time a COLD BPE training run (no memo) — the number behind
+/** Dev tool: time a COLD BPE training run (memo cleared per rep) — the number behind
   * the r14 verdict item "fold corpus_symbols into the pair aggregation"
   * (bpe_train_merges' first build was the most expensive new-key cost at
   * sf0.1). Run: `sbt "runMain graft.tools.TimeBpeTrain [sfDir] [reps]"`.
@@ -17,6 +17,7 @@ object TimeBpeTrain {
     // timed reps measure the training loop, not session startup
     graft.ext.Bpe.trainMerges(spark, docs, nMerges = 10).count()
     val times = (1 to reps).map { _ =>
+      graft.Memo.clear(spark)
       val t0 = System.nanoTime()
       graft.ext.Bpe.trainMerges(spark, docs, nMerges = 10).count()
       (System.nanoTime() - t0) / 1e9

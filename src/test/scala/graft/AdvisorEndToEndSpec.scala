@@ -244,24 +244,9 @@ class AdvisorEndToEndSpec extends SparkSpec {
   test("tables rewritten under the same path are re-profiled, re-scored and re-vetted") {
     // `dir` is advised before and after every rewrite; the oracle for each
     // step is the same call on a never-advised copy of `dir`
-    import java.nio.file.{Files, Paths}
     val dir = copyFixtures("graft_stale")
-    def rewrite(name: String)(f: DataFrame => DataFrame): Unit = {
-      val p = Paths.get(TableRegistry.path(dir, name))
-      val staged = s"$p.staged"
-      f(spark.read.parquet(p.toString)).coalesce(1).write.parquet(staged)
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
-      Files.move(Paths.get(staged), p)
-    }
-    def fresh(): String = {
-      val src = Paths.get(dir)
-      val out = Files.createTempDirectory("graft_stale_fresh")
-      Files.walk(src).forEach { f =>
-        val to = out.resolve(src.relativize(f).toString)
-        if (Files.isDirectory(f)) Files.createDirectories(to) else Files.copy(f, to)
-      }
-      out.toString
-    }
+    def rewrite(name: String)(f: DataFrame => DataFrame): Unit = rewriteTable(dir, name)(f)
+    def fresh(): String = copyDir(dir, "graft_stale_fresh")
     def profiles(d: String) =
       AnalysisPipeline.profilesFor(spark, d, approxCardinality = false).filter(_.view == "lineitem")
     def advice(df: DataFrame) = df.collect()

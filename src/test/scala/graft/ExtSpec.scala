@@ -387,18 +387,19 @@ class ExtSpec extends SparkSpec {
     // the old computeIfAbsent form died with "Recursive update" whenever a
     // nested key landed in the outer key's hash bin (intermittent — bins
     // depend on the session's identity hash); 64 nested keys make a bin
-    // collision near-certain, so this test is deterministic in practice
-    val out = Memo.frame(spark, Some("reentrant-outer"), "memo-test") {
+    // collision near-certain, so this test is deterministic in practice.
+    // A local frame's identity is its rows, so each Seq is its own input.
+    val out = Memo.frame("memo-test", Seq(-1).toDF("v")) {
       val inners = (0 until 64).map { i =>
-        Memo.frame(spark, Some(s"reentrant-inner-$i"), "memo-test") {
+        Memo.frame("memo-test", Seq(i).toDF("v")) {
           Seq(i).toDF("v")
         }
       }
       inners.reduce(_ unionAll _)
     }
     assert(out.count() == 64)
-    // and the memo actually memoizes: same handle back
-    val again = Memo.frame(spark, Some("reentrant-outer"), "memo-test") {
+    // and the memo actually memoizes: an equal input gets the same handle back
+    val again = Memo.frame("memo-test", Seq(-1).toDF("v")) {
       fail("must not rebuild"); null
     }
     assert(again eq out)
@@ -422,19 +423,21 @@ class ExtSpec extends SparkSpec {
     val child = spark.newSession()
     def cached(f: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
       .lookupCachedData(f.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
-    val parentFrame = Memo.frame(spark, Some("clear-scope-parent"), "memo-test") {
+    val parentFrame = Memo.frame("memo-clear-scope", Seq(-1).toDF("v")) {
       Seq(-1).toDF("v")
     }
-    // distinct data per frame: CacheManager keys cached data by plan
+    // distinct data per frame: CacheManager keys cached data by plan; a
+    // frame's entry belongs to the session of its input
     val childFrames = (0 until 3).map { i =>
-      Memo.frame(child, Some(s"clear-scope-child-$i"), "memo-test") { Seq(i).toDF("v") }
+      val in = child.createDataFrame(Seq(Tuple1(i))).toDF("v")
+      Memo.frame("memo-clear-scope", in)(in)
     }
     (parentFrame +: childFrames).foreach(_.count())
     childFrames.foreach(f => assert(cached(f)))
     Memo.clear(child)
     childFrames.foreach(f => assert(!cached(f), "child frame still cached"))
     assert(cached(parentFrame), "parent frame was unpersisted")
-    assert(Memo.frame(spark, Some("clear-scope-parent"), "memo-test") {
+    assert(Memo.frame("memo-clear-scope", Seq(-1).toDF("v")) {
       fail("parent entry was dropped"); null
     } eq parentFrame)
     parentFrame.unpersist()

@@ -187,9 +187,9 @@ class ListenerSpec extends SparkSpec {
       "Memo.scala" -> Set("entries"), // the memo registry itself
       // an accumulator of observed references, not a memo
       "UsageListener.scala" -> Set("stats"),
-      // PngFixtures: the rendered on-disk PNG corpus and its population
-      // manifest outlive sessions (a directory per population)
-      "Multimodal.scala" -> Set("cache", "manifestCache"),
+      // PngFixtures: the rendered on-disk PNG corpus outlives sessions (a
+      // directory per population)
+      "Multimodal.scala" -> Set("cache"),
       // a write guard: which dir's bucketed-join tables are on disk
       "LayoutKeys.scala" -> Set("bucketedJoinDir"))
     val root = new java.io.File("src/main/scala")
@@ -222,6 +222,69 @@ class ListenerSpec extends SparkSpec {
     // the allowlist must not go stale either
     val stale = allowed.toSeq.flatMap { case (f, ns) => ns.map(f -> _) }.toSet -- declared
     assert(stale.isEmpty, s"stale allowlist entries: $stale")
+  }
+
+  test("grep gate: .persist( / .cache() only in graft.Memo or the allowlist") {
+    // graft.Memo owns persisted frames: it keys them on their inputs,
+    // rebuilds them when those files change and unpersists them on clear.
+    // A persist elsewhere is a cache nothing invalidates unless it is
+    // listed here, per enclosing def, with the reason it is not one
+    val allowed = Map(
+      // reliable checkpointing: persisted only while the eager checkpoint
+      // writes the round, unpersisted in the same call
+      "Dedup.scala" -> Set("truncate"),
+      // the corpus projection every Lloyd iteration scans, and the one
+      // every power-iteration round scans; both unpersisted before return
+      "SimSearch.scala" -> Set("kmeansRun", "pcaTopCompute"),
+      // one micro-batch and the merged state it folds into, unpersisted
+      // when the batch ends
+      "StreamingAdvisor.scala" -> Set("start"),
+      // the filtered query log the export's artifacts all read, unpersisted
+      // when the export ends
+      "ReportExporter.scala" -> Set("export"))
+    val root = new java.io.File("src/main/scala")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    assume(root.isDirectory, "run from repo root")
+    val found = walk(root).filter(_.getName != "Memo.scala").flatMap { f =>
+      persistSites(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+        .map(f.getName -> _)
+    }.toSet
+    val offenders = found.filterNot { case (file, d) =>
+      allowed.getOrElse(file, Set.empty[String]).contains(d) }
+    assert(offenders.isEmpty, s"persist/cache outside graft.Memo: $offenders")
+    val stale = allowed.toSeq.flatMap { case (f, ds) => ds.map(f -> _) }.toSet -- found
+    assert(stale.isEmpty, s"stale allowlist entries: $stale")
+  }
+
+  test("the persist gate names the enclosing def of an added persist") {
+    val src = """object X {
+      |  // a comment's .persist( does not count
+      |  def `export`(df: DataFrame): Unit = df.cache()
+      |  def keep(df: DataFrame) = {
+      |    val y = 1
+      |    df.persist(StorageLevel.MEMORY_ONLY)
+      |  }
+      |}""".stripMargin
+    assert(persistSites(src) == Seq("export", "keep"))
+  }
+
+  /** The enclosing def of every `.persist(` / `.cache()` in `code`, comments
+    * and scaladoc excluded. */
+  private def persistSites(code: String): Seq[String] = {
+    val lines = code.linesIterator
+      .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("/*"))
+      .map(l => l.indexOf("//") match { case -1 => l; case i => l.substring(0, i) })
+      .mkString("\n")
+    val site = java.util.regex.Pattern.compile("""\.persist\(|\.cache\(\)""").matcher(lines)
+    val defn = java.util.regex.Pattern.compile("""\bdef\s+`?(\w+)`?""")
+    Iterator.continually(site).takeWhile(_.find()).map { hit =>
+      val dm = defn.matcher(lines.substring(0, hit.start()))
+      var name = "<none>"
+      while (dm.find()) name = dm.group(1)
+      name
+    }.toSeq
   }
 
   test("grep gate: every Window.partitionBy file is in the audited window inventory") {

@@ -426,8 +426,11 @@ class PlanSpec extends SparkSpec {
     df.collect()
     val plan = planOf(df)
     // scope to the final adaptive plan when present (the initial plan
-    // would show the join even if AQE had deleted it at runtime)
-    val finalPlan = plan.split("== Initial Plan ==").head
+    // would show the join even if AQE had deleted it at runtime); split at
+    // the TOP-LEVEL marker: the memoized assignment prints as an
+    // InMemoryRelation whose own adaptive plan, initial plan included,
+    // sits inside the final plan
+    val finalPlan = plan.split("(?m)^\\+- == Initial Plan ==").head
     assert(!finalPlan.contains("CartesianProduct"), finalPlan)
     // the pair join itself: a hash/merge EQUI join keyed on the cluster id
     assert(finalPlan.linesIterator.exists(l =>

@@ -51,11 +51,9 @@ class Queries15Spec extends SparkSpec {
     // count the same quantity through different plans (per-doc lookup
     // stream vs per-source count×n_syms products)
     val docs = graft.catalog.TableRegistry.table(spark, sfDir, "documents")
-    val tok = graft.ext.Bpe.tokenizeShards(spark, docs, nMerges = 10,
-      nShards = 16, cacheKey = Some(sfDir))
+    val tok = graft.ext.Bpe.tokenizeShards(spark, docs, nMerges = 10, nShards = 16)
       .agg(sum("n_tokens")).head().getLong(0)
-    val enc = graft.ext.Bpe.encodeFertility(spark, docs, nMerges = 10,
-      cacheKey = Some(sfDir))
+    val enc = graft.ext.Bpe.encodeFertility(spark, docs, nMerges = 10)
       .agg(sum("encoded_tokens")).head().getLong(0)
     assert(tok == enc, s"tokenizer total $tok vs fertility total $enc")
   }

@@ -27,6 +27,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.toString
   }
 
+  /** Rewrite the fixture table `name` under `dir` in place with `f` of its
+    * rows: the new files are staged beside it, then swapped in. */
+  def rewriteTable(dir: String, name: String)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+    import java.nio.file.{Files, Paths}
+    val p = Paths.get(graft.catalog.TableRegistry.path(dir, name))
+    val staged = s"$p.staged"
+    f(spark.read.parquet(p.toString)).coalesce(1).write.parquet(staged)
+    Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    Files.move(Paths.get(staged), p)
+  }
+
+  /** A copy of everything under `dir` in a fresh temp dir. */
+  def copyDir(dir: String, prefix: String): String = {
+    import java.nio.file.Files
+    val src = java.nio.file.Paths.get(dir)
+    val out = Files.createTempDirectory(prefix)
+    Files.walk(src).forEach { f =>
+      val to = out.resolve(src.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(to) else Files.copy(f, to)
+    }
+    out.toString
+  }
+
   override def afterAll(): Unit = {
     // keep the session alive across suites in the same JVM (getOrCreate
     // returns the shared one); SBT forks one JVM for all tests.
