@@ -111,20 +111,31 @@ object Bench {
       case None => SparkEntry.queries
     }
     // each key's run also counts the Janino compilations it caused (the
-    // CodegenMetrics count delta around it; the timed runs are serial, so
-    // the delta is the key's own), reported per run: a key that generates
-    // new code on every run compiles in each. Spark's generated-class
-    // cache holds 100 classes, so in a full sweep a key's classes are
-    // evicted before its next run; SPARK_GRAFT_ONLY runs of a few keys
-    // keep most of them, so there a key whose second run compiles as much
-    // as its first regenerates its code.
+    // CodegenMetrics count delta around it) and the Spark jobs it started
+    // (a job-start listener, read on a drained bus); the timed runs are
+    // serial, so each delta is the key's own. Both are reported per run:
+    // a key that generates new code on every run compiles in each. Spark's
+    // generated-class cache holds 100 classes, so in a full sweep a key's
+    // classes are evicted before its next run; SPARK_GRAFT_ONLY runs of a
+    // few keys keep most of them, so there a key whose second run compiles
+    // as much as its first regenerates its code.
     def compiles(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def timedPass(): Map[String, (Double, Boolean, Long)] = timedQueries.map { case (name, fn) =>
-      val c0 = compiles()
+    val jobsStarted = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobsStarted.incrementAndGet(): Unit
+    })
+    def jobs(): Long = {
+      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+      jobsStarted.get
+    }
+    def timedPass(): Map[String, (Double, Boolean, Long, Long)] = timedQueries.map { case (name, fn) =>
+      val (c0, j0) = (compiles(), jobs())
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      name -> (((System.nanoTime() - t0) / 1e9, ok, compiles() - c0))
+      val s = (System.nanoTime() - t0) / 1e9
+      name -> ((s, ok, compiles() - c0, jobs() - j0))
     }
     val passes = (1 to benchRuns).map(_ => timedPass())
     val results = passes.head.map { case (name, _) =>
@@ -132,7 +143,9 @@ object Bench {
       val good = samples.filter(_._2).map(_._1)
       name -> (if (good.nonEmpty) good.min else samples.map(_._1).min)
     }
-    val keyCompiles = passes.head.keys.map(name => name -> passes.map(_(name)._3))
+    def perRun(count: ((Double, Boolean, Long, Long)) => Long) =
+      passes.head.keys.map(name => s"\"" + name + "\":" + passes.map(p => count(p(name))).mkString("[", ",", "]"))
+        .mkString("{", ",", "}")
     // keep the JSON line short (3-decimal times, basename sf): the driver
     // captures only the tail of the sbt log, and a >2 KB line gets truncated
     // past recognition (round-1 BENCH had parsed=null for exactly this reason)
@@ -141,8 +154,6 @@ object Bench {
     // the driver's tail-capture window (total keeps 3)
     def fmt2(v: Double): String = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt2(v) }
-      .mkString("{", ",", "}")
-    val cs = keyCompiles.map { case (k, ns) => s"\"" + k + "\":" + ns.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val sfName = new java.io.File(sfDir).getName
@@ -158,7 +169,7 @@ object Bench {
     val filteredField = if (only.isDefined) """"filtered":true,""" else ""
     val stampFields = s""""git_sha":"$gitSha","cpus":"$cpus","""
     val perQueryLine =
-      s"""{"metric":"per_query",$filteredField$stampFields"total_sec":${fmt(total)},"unit":"sec","sf":"$sfName","runs":$benchRuns,"queries":$qs,"codegen_compiles":$cs}"""
+      s"""{"metric":"per_query",$filteredField$stampFields"total_sec":${fmt(total)},"unit":"sec","sf":"$sfName","runs":$benchRuns,"queries":$qs,"codegen_compiles":${perRun(_._3)},"jobs":${perRun(_._4)}}"""
     // the full per-key map goes ONLY to the perkey file (below) — printed,
     // its >5 KB head was clipped by the driver's ~2 KB tail capture into
     // the dead "tail" fragment the r12 verdict flagged; with stdout kept to

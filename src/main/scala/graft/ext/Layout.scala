@@ -169,6 +169,29 @@ object Layout {
         col("probe_actual").cast("int"))
       .orderBy("month")
 
+  /** A (k, nr) histogram with its key-prefix group `grp = k div groupWidth`,
+    * the outer level of the X74 two-level cumsum. */
+  private def withGroup(histKNr: DataFrame, groupWidth: Long): DataFrame =
+    histKNr.withColumn("grp",
+      graft.ext.ExactMath.intDiv(col("k"), lit(groupWidth)))
+
+  /** Per key-prefix group of a [[withGroup]] histogram: its row count
+    * `gnr`, the rows of all earlier groups `goff`, the rows before the
+    * previous group `prev_goff`, and the total `tot`: one global window
+    * over a frame `distinctKeys / groupWidth` small, so the total costs no
+    * aggregate of its own. The null-key group sorts first: its rows shift
+    * every offset and count in the total, though it takes no bucket. */
+  private def groupOffsets(perKey: DataFrame): DataFrame = {
+    val byGrp = Window.orderBy("grp")
+    def upTo(end: Long) = sum("gnr").over(
+      byGrp.rowsBetween(Window.unboundedPreceding, end))
+    perKey.groupBy("grp").agg(sum("nr").as("gnr"))
+      .select(col("grp"), col("gnr"),
+        coalesce(upTo(-1), lit(0L)).as("goff"),
+        coalesce(upTo(-2), lit(0L)).as("prev_goff"),
+        upTo(Window.unboundedFollowing).as("tot"))
+  }
+
   /** Adaptive range-partition boundaries (X74): the balanced range layout
     * the reference's whole advisory loop exists to recommend — given a
     * target of `nBuckets` range partitions over a join/sort key, emit per
@@ -181,35 +204,25 @@ object Layout {
     * Scale shape — the global weighted cumsum is decomposed two-level so
     * NO single-partition window ever sees the key domain: keys group by a
     * coarse prefix (`key div groupWidth`); per-group subtotals (a frame
-    * `distinctKeys/groupWidth` small) take the only global window; the
-    * per-key cumsum runs partitionBy(group) — each window partition is ≤
-    * groupWidth keys — and the group offsets broadcast back. The DuckDB
-    * oracle computes the SAME boundaries with one naive global cumsum,
-    * certifying the decomposition exact. */
-  /** The X74 bounds arithmetic over an ALREADY-materialized (k, nr)
-    * histogram (callers pass a [[Dedup.truncate]]d frame so the offsets
-    * branch, the per-key cumsum, and the total all ride one computation).
-    * Factored out (opt-r15) so [[partitionBalanceReport]] can feed the
-    * base-epoch histogram from its single dual-count fact scan instead of
-    * scanning the fact table a second time. */
-  private[graft] def boundsFromHistogram(histKNr: DataFrame, nBuckets: Int,
-      groupWidth: Long): DataFrame = {
-    val perKey = histKNr
-      .withColumn("grp", graft.ext.ExactMath.intDiv(col("k"), lit(groupWidth)))
-    val grpOffsets = perKey.groupBy("grp").agg(sum("nr").as("gnr"))
-      .withColumn("goff", coalesce(sum("gnr").over(
-        Window.orderBy("grp").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-    // opt-r15: the total rides a broadcast scalar column instead of a
-    // driver .first() — one fewer action (and driver round-trip) per
-    // invocation; same exact-integer bucket arithmetic.
-    val total = perKey.agg(sum("nr").as("tot"))
+    * `distinctKeys/groupWidth` small) take the only global window
+    * ([[groupOffsets]], which also yields the total); the per-key cumsum
+    * runs partitionBy(group) — each window partition is ≤ groupWidth keys
+    * — and the group offsets broadcast back. The distinct-key histogram
+    * is materialized ONCE ([[Dedup.truncate]]: localCheckpoint on
+    * local[n], reliable checkpoint under a checkpoint dir), so the fact
+    * table is scanned exactly once however large it is. A null key takes
+    * no bucket. The DuckDB oracle computes the SAME boundaries with one
+    * naive global cumsum, certifying the decomposition exact. */
+  private[graft] def rangePartitionBounds(orders: DataFrame, keyCol: String,
+      nBuckets: Int, groupWidth: Long): DataFrame = {
+    val perKey = withGroup(Dedup.truncate(orders.groupBy(col(keyCol).as("k"))
+      .agg(count(lit(1)).as("nr"))), groupWidth)
     perKey
       .withColumn("woff", coalesce(sum("nr").over(
         Window.partitionBy("grp").orderBy("k")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .join(broadcast(grpOffsets.select("grp", "goff")), Seq("grp"))
-      .crossJoin(broadcast(total))
+      .join(broadcast(groupOffsets(perKey).select("grp", "goff", "tot")),
+        Seq("grp"))
       .withColumn("bucket", graft.ext.ExactMath.intDiv(
         (col("goff") + col("woff")) * nBuckets, col("tot")))
       .groupBy("bucket").agg(
@@ -217,17 +230,6 @@ object Layout {
         count(lit(1)).as("n_keys"), sum("nr").as("n_rows"))
       .orderBy("bucket")
   }
-
-  private[graft] def rangePartitionBounds(orders: DataFrame, keyCol: String,
-      nBuckets: Int, groupWidth: Long): DataFrame =
-    // The distinct-key histogram is materialized ONCE ([[Dedup.truncate]]:
-    // localCheckpoint on local[n], reliable checkpoint under a checkpoint
-    // dir) — the offsets branch, the per-key cumsum, and the total all ride
-    // it, so the fact table is scanned exactly once however large it is.
-    boundsFromHistogram(
-      Dedup.truncate(orders.groupBy(col(keyCol).as("k"))
-        .agg(count(lit(1)).as("nr"))),
-      nBuckets, groupWidth)
 
   /** Skew salting plan (X75): the per-key salt-factor head a skew-aware
     * join planner consumes — the `nBuckets`-relative weight of the top
@@ -409,51 +411,84 @@ object Layout {
     * layout was built on; this report re-evaluates those FROZEN bounds
     * against the data as it stands now and says whether the layout went
     * stale. Bounds come from the base epoch (orders before `baseCutoff`,
-    * through [[rangePartitionBounds]] unchanged); every current key is
-    * assigned by the step function "greatest lo_key ≤ key" (keys below
-    * the first bound fall to bucket 0); per bucket the report emits
-    * key/row counts, corpus share, load_ratio = share·B (1.0 = perfectly
-    * balanced) and the rebalance flag at rounded load_ratio ≥ 1.5 — the
-    * signal an adaptive layout manager acts on by re-running X74. Scale
-    * shape: the bounds frame is ≤ B rows and BROADCASTS into the
-    * assignment join; the current-key histogram is checkpointed once (the
-    * X74 discipline) and feeds both the assignment and the total; nothing
-    * data-proportional crosses the driver. */
+    * the X74 arithmetic of [[rangePartitionBounds]]); every current key is
+    * assigned by the step function "greatest lo_key ≤ key" (keys below the
+    * first bound, and a null key, fall to bucket 0); per bucket the report
+    * emits key/row counts, corpus share, load_ratio = share·B (1.0 =
+    * perfectly balanced) and the rebalance flag at rounded load_ratio ≥ 1.5
+    * — the signal an adaptive layout manager acts on by re-running X74.
+    * The key is integral (the X74 prefix is `key div groupWidth`).
+    *
+    * Scale shape: ONE fact scan and ONE checkpoint serve both epochs (the
+    * base-epoch count is a conditional count in the same grouped
+    * aggregation; keys absent before the cutoff drop out via
+    * nr_base > 0). The base epoch keeps the two-level cumsum: the group
+    * offsets take the only global window, and the per-key cumsum runs only
+    * in the at most 2·B groups that can hold a bound, on the driver (one
+    * action, ≤ (2·B + 1)·groupWidth rows). The ≤ B bounds (bucket =
+    * ⌊offset·B/N⌋ with offset < N) become a literal CASE, so the
+    * assignment needs no join and no regroup of the per-key frame, and one
+    * global aggregate yields the total with every bucket's counts. Nothing
+    * O(distinct keys) reaches the driver. */
   private[graft] def partitionBalanceReport(orders: DataFrame,
       baseCutoff: String, keyCol: String, nBuckets: Int,
       groupWidth: Long): DataFrame = {
-    // opt-r15: ONE fact scan + ONE checkpoint serve BOTH histograms. The
-    // former shape ran rangePartitionBounds on the filtered fact (scan +
-    // checkpoint #1) and built the current-epoch histogram from a second
-    // full scan (+ checkpoint #2); the base-epoch per-key counts are just
-    // a conditional count in the same grouped aggregation, and keys absent
-    // before the cutoff drop out via nr_base > 0 — row-identical to the
-    // filtered groupBy (plan evidence: plans/r15/partition_balance_report
-    // _before/_after.txt, 2 fact scans → 1).
     val hist = Dedup.truncate(orders.groupBy(col(keyCol).as("k"))
       .agg(count(lit(1)).as("nr"),
         count(when(col("o_orderdate") < lit(baseCutoff).cast("timestamp"), 1))
           .as("nr_base")))
-    val bounds = boundsFromHistogram(
-      hist.where(col("nr_base") > 0).select(col("k"), col("nr_base").as("nr")),
-      nBuckets, groupWidth).select("bucket", "lo_key")
-    val perKey = hist.select("k", "nr")
-    // opt-r15: total as a broadcast scalar column (one fewer driver
-    // action; the agg reads the checkpoint, not the fact)
-    val total = perKey.agg(sum("nr").as("tot"))
-    perKey
-      .join(broadcast(bounds), col("k") >= col("lo_key"), "left")
-      .groupBy("k", "nr").agg(coalesce(max("bucket"), lit(0L)).as("bucket"))
-      .groupBy("bucket").agg(
-        count(lit(1)).as("n_keys"), sum("nr").as("n_rows"))
-      .crossJoin(broadcast(total))
+    // The X74 bounds of the base epoch. Bucket b's lo_key is the first key
+    // whose start offset reaches T_b = ⌈b·tot/B⌉: a key of the group
+    // holding offset T_b, or the first key of the group after it. So only
+    // the groups whose offsets, with the previous group's, span a
+    // threshold (at most 2·B groups) need the per-key cumsum, and it runs
+    // on the driver over their keys.
+    val base = withGroup(hist.where(col("nr_base") > 0)
+      .select(col("k"), col("nr_base").as("nr")), groupWidth)
+    def bucketOf(off: Column) =
+      graft.ext.ExactMath.intDiv(off * nBuckets, col("tot"))
+    val spans = groupOffsets(base).where(col("grp").isNotNull &&
+      (col("prev_goff") === 0 || bucketOf(col("goff") + col("gnr") - 1) >
+        bucketOf(col("prev_goff") - 1)))
+    val keys = base.join(broadcast(spans.select("grp", "goff", "tot")), "grp")
+      .select(col("grp"), col("k").cast("long"), col("nr"), col("goff"),
+        col("tot")).collect()
+    // ≤ 2·B groups of ≤ groupWidth keys, but group 0 holds keys of both
+    // signs (the prefix truncates toward zero)
+    require(keys.length <= (2L * nBuckets + 1) * groupWidth,
+      s"${keys.length} keys in the threshold groups of $nBuckets buckets")
+    val loKey = keys.groupBy(_.getLong(0)).values.flatMap { g =>
+      val ks = g.sortBy(_.getLong(1))
+      ks.scanLeft(ks.head.getLong(3))(_ + _.getLong(2)).zip(ks).map {
+        case (off, r) => (BigInt(off) * nBuckets / r.getLong(4)).toLong -> r.getLong(1)
+      }
+    }.groupMapReduce(_._1)(_._2)(math.min)
+    require(loKey.size <= nBuckets,
+      s"${loKey.size} range bounds for $nBuckets buckets")
+    // the highest bucket whose lo_key the key reaches
+    val bucket = loKey.toSeq.sortBy(-_._1).foldLeft(Option.empty[Column]) {
+      case (acc, (b, lo)) =>
+        val (cond, v) = (col("k") >= lo, lit(b))
+        Some(acc.fold(when(cond, v))(_.when(cond, v)))
+    }.fold(lit(0L))(_.otherwise(lit(0L)))
+    // one global aggregate: the total plus a conditional key/row count
+    // per bucket, unpivoted to one row per non-empty bucket in bucket order
+    val buckets = (0L +: loKey.keys.toSeq).distinct.sorted
+    val in = (b: Long) => col("bucket") === b
+    hist.select(bucket.as("bucket"), col("nr"))
+      .agg(sum("nr").as("tot"), buckets.flatMap(b => Seq(
+        count(when(in(b), 1)).as(s"n_keys_$b"),
+        sum(when(in(b), col("nr"))).as(s"n_rows_$b"))): _*)
+      .select(col("tot"), inline(array(buckets.map(b => struct(
+        lit(b).as("bucket"), col(s"n_keys_$b").as("n_keys"),
+        col(s"n_rows_$b").as("n_rows"))): _*)))
+      .where(col("n_keys") > 0)
       .select(col("bucket"), col("n_keys"), col("n_rows"),
         graft.ext.ExactMath.ratioRounded(col("n_rows"), col("tot"), 6)
           .as("share"),
         graft.ext.ExactMath.ratioRounded(col("n_rows") * nBuckets, col("tot"), 6)
           .as("load_ratio"))
       .withColumn("rebalance", (col("load_ratio") >= 1.5).cast("int"))
-      .orderBy("bucket")
   }
 
   /** Workload pruning simulation (X80): the reference's whole advisory

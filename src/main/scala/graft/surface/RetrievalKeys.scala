@@ -2,6 +2,7 @@ package graft
 package surface
 
 import graft.ext.{ExactMath, Graph, SimSearch}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -601,34 +602,41 @@ object RetrievalKeys {
       // integer MICROS per term, summed exactly per doc; the top-20 ranks
       // on the integer micros (desc, doc_id) so order cannot jitter.
       // Decimal(38,0) products — no overflow cliff at 100 TB token counts.
-      // Scale shape: one token scan serves dl and tf (the tf branch is
-      // pre-filtered to the 3 query terms before its shuffle); df/idf and
-      // corpus stats are metadata-sized broadcasts; TakeOrdered head.
+      // Scale shape: ONE token scan and ONE per-doc aggregate carry dl
+      // and each query term's tf (a conditional count per term, so the
+      // tokens never shuffle, only one row per doc); nd, tt and the
+      // per-term df are one global row over that aggregate, broadcast;
+      // each doc's score is one expression summed over the terms; a doc
+      // with a null doc_id counts in nd, tt and df but is not ranked (the
+      // twin's USING join drops it); TakeOrdered head.
       (s, dir) => {
         val qTerms = Seq("join", "vector", "dup")
         val dec = "decimal(38,0)"
-        val toks = t(s, dir, "documents")
+        val tf = qTerms.indices.map(i => s"tf$i")
+        val docs = t(s, dir, "documents")
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-        val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-        val stats = dl.agg(count(lit(1)).as("nd"), sum("dl").as("tt"))
-        val tf = toks.where(col("tok").isin(qTerms: _*))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        val idf = tf.groupBy("tok").agg(count(lit(1)).as("df"))
+          .groupBy("doc_id").agg(count(lit(1)).as("dl"),
+            qTerms.zip(tf).map { case (q, c) =>
+              count(when(col("tok") === q, 1)).as(c) }: _*)
+        val stats = docs.agg(count(lit(1)).as("nd"), sum("dl").as("tt") +:
+          tf.map(c => count(when(col(c) > 0, 1)).as(s"df_$c")): _*)
+        def termMicros(c: String): Column = {
+          val idfMilli = round(log((col("nd") * 2 + 2).cast("double") /
+            (col(s"df_$c") * 2 + 1).cast("double")) * 1000.0, 0).cast("long")
+          val num = idfMilli.cast(dec) * 44 * col("tt").cast(dec) *
+            col(c).cast(dec) * 1000
+          val den = col(c).cast(dec) * 20 * col("tt").cast(dec) +
+            col("tt").cast(dec) * 6 + col("dl").cast(dec) * col("nd").cast(dec) * 18
+          when(col(c) > 0, ExactMath.ratioRounded(num, den, 0).cast("long"))
+            .otherwise(0L)
+        }
+        val nTerms = tf.map(c => (col(c) > 0).cast("long")).reduce(_ + _)
+        // one predicate over the aggregate, so the optimizer cannot push
+        // the id test below it and split the token scan in two
+        docs.where(when(col("doc_id").isNotNull, nTerms) > 0)
           .crossJoin(broadcast(stats))
-          .select(col("tok"),
-            round(log((col("nd") * 2 + 2).cast("double") /
-              (col("df") * 2 + 1).cast("double")) * 1000.0, 0)
-              .cast("long").as("idf_milli"))
-        val num = col("idf_milli").cast(dec) * 44 * col("tt").cast(dec) *
-          col("tf").cast(dec) * 1000
-        val den = col("tf").cast(dec) * 20 * col("tt").cast(dec) +
-          col("tt").cast(dec) * 6 + col("dl").cast(dec) * col("nd").cast(dec) * 18
-        tf.join(broadcast(idf), "tok").join(dl, "doc_id")
-          .crossJoin(broadcast(stats))
-          .select(col("doc_id"),
-            ExactMath.ratioRounded(num, den, 0).cast("long").as("sm"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_terms"), sum("sm").as("score_micros"))
+          .select(col("doc_id"), nTerms.as("n_terms"),
+            tf.map(termMicros).reduce(_ + _).as("score_micros"))
           .orderBy(col("score_micros").desc, col("doc_id")).limit(20)
           .select(col("doc_id"), col("n_terms"), col("score_micros"),
             ExactMath.ratioRounded(col("score_micros"), lit(1000000L), 6)

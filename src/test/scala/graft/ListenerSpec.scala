@@ -156,6 +156,11 @@ class ListenerSpec extends SparkSpec {
       // Recommender.scripts / withSelectedSpec collect the ranked
       // candidates — topN × views rows
       "Recommender.scala",
+      // Layout.partitionBalanceReport collects the keys of the at most
+      // 2·nBuckets key-prefix groups that can hold a range bound (a checked
+      // require: ≤ (2·nBuckets + 1)·groupWidth rows) and derives from them
+      // the ≤ nBuckets bounds (a second require), whatever the data size
+      "Layout.scala",
       // TimeMultimodal is a dev-only timing harness (never on a query
       // path); its collects are single-row scalar aggregates (sum of
       // lengths) used to force the scan stage for isolated timing

@@ -8,22 +8,6 @@ import org.apache.spark.sql.functions._
   * plan over its files, plus the snapshot of those files. */
 class MemoSpec extends SparkSpec {
 
-  /** Spark jobs launched by `body`, counted on a drained listener bus. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("an operator corpus rewritten in place is re-sketched: dedup_minhash matches a fresh copy") {
     val dir = copyFixtures("graft_memo_stale")
     def rows(d: String) = SparkEntry.queries("dedup_minhash")(spark, d).collect().toSeq

@@ -174,6 +174,37 @@ class Queries11Spec extends SparkSpec {
       r.getAs[Long]("n_terms") <= 3))
   }
 
+  test("bm25_topk scans documents once: one token scan feeds dl, tf and the corpus stats") {
+    // a fixture copy: a suite that caches `documents` would hand the key
+    // its in-memory table instead of the file scan
+    val dir = copyFixtures("bm25_scan")
+    val ops = operatorsOf(SparkEntry.queries("bm25_topk")(spark, dir).collect()).flatten
+    val scans = ops.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
+    }.flatten
+    assert(scans == Seq("documents.parquet"), scans.mkString(", "))
+  }
+
+  test("bm25_topk on degenerate corpora: empty, null texts, a null doc_id carrying query terms, no query term") {
+    import spark.implicits._
+    def top(docs: Seq[(Option[Long], Option[String])]) = {
+      val dir = java.nio.file.Files.createTempDirectory("bm25_degenerate").toString
+      docs.toDF("doc_id", "text").write.parquet(graft.catalog.TableRegistry.path(dir, "documents"))
+      SparkEntry.queries("bm25_topk")(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    }
+    assert(top(Nil).isEmpty)
+    // a null text has no tokens: it is no document of the corpus
+    assert(top(Seq(Some(1L) -> None, Some(2L) -> Some("join a b"), Some(3L) -> None,
+      Some(4L) -> Some("dup dup x"))) ==
+      Seq((4L, 1L, 952875L, 0.952875), (2L, 1L, 693000L, 0.693)))
+    // the two null-id docs are one document: they count in nd, tt and every
+    // term's df, but are not ranked (the twin's USING join drops them)
+    assert(top(Seq(None -> Some("dup vector join"), Some(1L) -> Some("join x"),
+      Some(2L) -> Some("a b"), None -> Some("dup"))) == Seq((1L, 1L, 523544L, 0.523544)))
+    assert(top(Seq(Some(1L) -> Some("a b c"), Some(2L) -> Some("x y"), Some(3L) -> Some("the"))).isEmpty)
+  }
+
   test("held-out ppl scores only test docs and exceeds in-corpus ppl") {
     val rows = SparkEntry.queries("heldout_ppl")(spark, sfDir).collect()
     assert(rows.nonEmpty)

@@ -257,6 +257,51 @@ class Queries16Spec extends SparkSpec {
       (2L, 2L, 2L, 0.333333, 0), (3L, 2L, 18L, 3.0, 1)), out.mkString(","))
   }
 
+  test("balance report scans orders once and joins no per-key frame against the bounds") {
+    // a fixture copy: a suite that caches `orders` would hand the key its
+    // in-memory table instead of the file scan
+    val dir = copyFixtures("balance_scan")
+    val ops = operatorsOf(SparkEntry.queries("partition_balance_report")(spark, dir).collect()).flatten
+    val scans = ops.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
+    }.flatten
+    assert(scans == Seq("orders.parquet"), scans.mkString(", "))
+    val loops = ops.collect { case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j }
+    assert(loops.isEmpty, loops.map(_.simpleString(200)).mkString("; "))
+  }
+
+  test("balance report on degenerate orders: empty, nothing before the cutoff, null keys") {
+    import spark.implicits._
+    def mk(mo: String, ks: Option[Long]*) =
+      ks.map(k => (java.sql.Timestamp.valueOf(s"$mo-01 00:00:00"), k))
+    def report(orders: Seq[(java.sql.Timestamp, Option[Long])]) =
+      graft.ext.Layout.partitionBalanceReport(orders.toDF("o_orderdate", "o_custkey"),
+        "1998-01-01", "o_custkey", 4, 2L).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4), r.getInt(5)))
+        .toSeq
+    assert(report(Nil).isEmpty)
+    // no bounds: every key falls to bucket 0
+    assert(report(mk("1999-03", Some(3L), Some(3L), Some(5L), Some(9L))) ==
+      Seq((0L, 3L, 4L, 1.0, 4.0, 1)))
+    // base bounds 1, 4, 7 (the null key's rows shift the offsets but take
+    // no bucket); the null key then falls to bucket 0, alone
+    assert(report(mk("1997-06", None, None, Some(1L), Some(2L), Some(2L), Some(4L), Some(7L)) ++
+      mk("1999-01", None, Some(7L), Some(7L), Some(8L))) == Seq(
+      (0L, 1L, 3L, 0.272727, 1.090909, 0), (1L, 2L, 3L, 0.272727, 1.090909, 0),
+      (2L, 1L, 1L, 0.090909, 0.363636, 0), (3L, 2L, 4L, 0.363636, 1.454545, 0)))
+  }
+
+  test("range bounds over null keys and a hot key keep their rows with the total taken from the group window") {
+    import spark.implicits._
+    def bounds(ks: Option[Long]*) =
+      graft.ext.Layout.rangePartitionBounds(ks.toDF("o_custkey"), "o_custkey", 4, 2L).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
+    assert(bounds(None +: Seq(1L, 2L, 2L, 2L, 2L, 2L, 2L, 3L, 6L, 7L, 9L, 10L, 10L, 13L).map(Some(_)): _*) ==
+      Seq((0L, 1L, 2L, 2L, 7L), (2L, 3L, 9L, 4L, 4L), (3L, 10L, 13L, 2L, 3L)))
+    assert(bounds(None, None, Some(1L), Some(2L), Some(2L), Some(4L), Some(7L), None, Some(7L),
+      Some(7L), Some(8L)) == Seq((1L, 1L, 2L, 2L, 3L), (2L, 4L, 7L, 2L, 4L), (3L, 8L, 8L, 1L, 1L)))
+  }
+
   test("pruning sim: date predicate prunes earlier months, price predicate prunes low-max months, non-orders query reads unsupported") {
     import spark.implicits._
     val qlog = Seq(

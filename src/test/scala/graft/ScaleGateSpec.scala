@@ -79,9 +79,10 @@ class ScaleGateSpec extends AnyFunSuite {
     val line = """{"metric":"per_query","total_sec":1.234,"unit":"sec","sf":"sf0.1","runs":2,"queries":{"q1_agg":0.12,"dedup_minhash":0.3}}"""
     assert(ScaleGate.parseQueries(line)
       == Map("q1_agg" -> 0.12, "dedup_minhash" -> 0.3))
-    // graft.Bench writes the per-key compile counts after the times
+    // graft.Bench writes the per-key compile and job counts after the times
     val withCompiles = line.stripSuffix("}") +
-      ""","codegen_compiles":{"q1_agg":[4,0],"dedup_minhash":[30,31]}}"""
+      ""","codegen_compiles":{"q1_agg":[4,0],"dedup_minhash":[30,31]},""" +
+      """"jobs":{"q1_agg":[3,3],"dedup_minhash":[12,11]}}"""
     assert(ScaleGate.parseQueries(withCompiles) == ScaleGate.parseQueries(line))
   }
 

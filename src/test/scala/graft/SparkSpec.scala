@@ -50,6 +50,44 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.toString
   }
 
+  /** Spark jobs launched by `body`, counted on a drained listener bus. */
+  def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The operators of every query `body` runs (collects and eager
+    * checkpoints alike), one sequence per query, read from the executed
+    * plans on a drained listener bus: adaptive query stages and subqueries
+    * are walked, a reused exchange is not walked twice. */
+  def operatorsOf(body: => Unit): Seq[Seq[org.apache.spark.sql.execution.SparkPlan]] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    object walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+      plans.toArray(Array.empty[SparkPlan]).toSeq
+        .map(p => walk.collectWithSubqueries(p) { case op => op })
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   override def afterAll(): Unit = {
     // keep the session alive across suites in the same JVM (getOrCreate
     // returns the shared one); SBT forks one JVM for all tests.
