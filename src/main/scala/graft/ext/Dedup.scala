@@ -287,7 +287,7 @@ object Dedup {
     * arithmetically; a cross-group pair is a candidate iff its REPS share
     * a band slice (signatures are group-level facts) and carries the reps'
     * Jaccard verbatim. */
-  def minhashNearDups(spark: SparkSession, docs: DataFrame, shingleW: Int = 3,
+  def minhashNearDups(docs: DataFrame, shingleW: Int = 3,
       k: Int = 20, rows: Int = 4, threshold: Double = 0.7): DataFrame = {
     val mem = signatureMembers(docs, shingleW, k)
     val cross = minhashRepPairs(docs, shingleW, k, rows, threshold)
@@ -323,7 +323,7 @@ object Dedup {
     * so the cross band join is ~|new distinct sets| × bucket occupancy; a
     * NEW-side clone mass verifies once per distinct set and expands its
     * verdict arithmetically. Returns (doc_id, kept) for every new doc. */
-  def minhashIncrementalKeepers(spark: SparkSession, newDocs: DataFrame,
+  def minhashIncrementalKeepers(newDocs: DataFrame,
       baseDocs: DataFrame, shingleW: Int = 3, k: Int = 20, rows: Int = 4,
       threshold: Double = 0.7): DataFrame = {
     val bg = groupedSignatures(baseDocs, shingleW, k)
@@ -384,7 +384,7 @@ object Dedup {
     * instead of materializing the O(n²) cross product — the 100 TB shape
     * (the id cap bounds the verified region at any sf; the oracle twin
     * stays the declarative set-intersect form). */
-  def exactJaccard(spark: SparkSession, docs: DataFrame, shingleW: Int,
+  def exactJaccard(docs: DataFrame, shingleW: Int,
       threshold: Double, idCap: Long): DataFrame = {
     val inv = cappedShingles(docs, shingleW, idCap)
       .select(col("doc_id"), col("n"), explode(col("sh")).as("g"))
@@ -414,7 +414,7 @@ object Dedup {
     * half-boundary, so the ratio goes through [[ExactMath.ratioRounded]],
     * not float round. Same id-cap bounded-verification contract as
     * [[exactJaccard]]. */
-  def exactContainment(spark: SparkSession, docs: DataFrame, shingleW: Int,
+  def exactContainment(docs: DataFrame, shingleW: Int,
       threshold: Double, idCap: Long): DataFrame = {
     val inv = cappedShingles(docs, shingleW, idCap)
       .select(col("doc_id"), col("n"), explode(col("sh")).as("g"))
@@ -453,7 +453,7 @@ object Dedup {
   def jaccardClustersMemo(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.catalog.TableRegistry.table(spark, dir, "documents")
     Memo.frame("jaccclusters", docs) {
-      val pairs = exactJaccard(spark, docs, shingleW = 3, threshold = 0.2, idCap = 500)
+      val pairs = exactJaccard(docs, shingleW = 3, threshold = 0.2, idCap = 500)
         .select("a_id", "b_id")
       clusters(spark, docs.where(col("doc_id") < 500), pairs)
     }
@@ -662,7 +662,7 @@ object Dedup {
     * band by pigeonhole, so the band filter never rejects a true pair —
     * the output is exactly {pairs with hamming ≤ maxDist}, which is what
     * the DuckDB oracle (still the raw-doc banding form) computes. */
-  def simhashNearDups(spark: SparkSession, docs: DataFrame, maxDist: Int = 3): DataFrame = {
+  def simhashNearDups(docs: DataFrame, maxDist: Int = 3): DataFrame = {
     val sigs = Memo.frame("simhash_sigs", docs) {
       docs
         .select(col("doc_id"), tokenHashes61(split(col("text"), " ")).as("hashes"))

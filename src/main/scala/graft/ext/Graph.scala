@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.Memo
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge DataFrames. Companion to
@@ -22,7 +22,7 @@ object Graph {
     * Each iteration is one shuffle join on the src id + one grouped sum —
     * the classic distributed PageRank shape; the rank state is O(nodes),
     * never materialized on the driver. Returns (vec_id, deg, rank). */
-  def pagerankFixedPoint(spark: SparkSession, pairs: DataFrame, iters: Int = 5): DataFrame = {
+  def pagerankFixedPoint(pairs: DataFrame, iters: Int = 5): DataFrame = {
     val edges = pairs.select(col("a_id").as("s"), col("b_id").as("d"))
       .unionAll(pairs.select(col("b_id").as("s"), col("a_id").as("d")))
     // the degree table is referenced by every iteration's subtree: without

@@ -205,9 +205,8 @@ object AnalysisPipeline {
     * pipeline against tables REGISTERED IN THE SESSION CATALOG — temp views,
     * a database, any catalog the session resolves — rather than the fixture
     * registry. `spark.table(name)` is the resolver, so Hive/temp/Iceberg
-    * tables all work; the query log is caller-supplied (at a real
-    * deployment it's the engine's own listener-captured log — see
-    * graft.listener.UsageListener).
+    * tables all work; the query log is caller-supplied (the engine's own
+    * log of a workload it served is [[SelfHosting.observedQueryLog]]).
     *
     * Not memoized: catalog contents are mutable session state with no
     * fixture files to snapshot. */

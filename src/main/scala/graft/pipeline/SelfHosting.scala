@@ -1,23 +1,21 @@
 package graft.pipeline
 
 import graft.catalog.TableRegistry
-import graft.listener.UsageListener
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The self-hosting loop (SURVEY §4's optional addition, made whole): run a
-  * workload through `spark.sql`, capture each executed query's plan-derived
-  * table/join/filter references with the UsageListener, and feed those
-  * observations back through the same usage aggregation the advisor scores
-  * from — no external query-log system required. This replaces the
-  * reference's dependency on Trino's `system.runtime.queries`
+  * workload through `spark.sql`, log each text with its wall duration in the
+  * reference's query-log schema, and feed that log through the same
+  * `textStatsOf` → `Scoring.workloadFrom` derivation every advisor entry
+  * point scores from — no external query-log system required. This replaces
+  * the reference's dependency on Trino's `system.runtime.queries`
   * (trino_client.py:38-63) with the engine observing itself.
   */
 object SelfHosting {
 
   /** Register the fixture tables as temp views named like the canned
     * workload expects. */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
+  private def registerViews(spark: SparkSession, sfDir: String): Unit =
     TableRegistry.tableNames.foreach { n =>
       TableRegistry.table(spark, sfDir, n).createOrReplaceTempView(n)
     }
@@ -26,77 +24,9 @@ object SelfHosting {
     * the driver: rows are consumed (and discarded) on the executors. The
     * observed workload is arbitrary user SQL — a `SELECT * FROM lineitem`
     * must not OOM the advisor's driver the way a driver-side collect would, while
-    * the listener still sees a complete, timed execution. */
+    * the run is still complete and timed. */
   private def forceExecute(spark: SparkSession, sql: String): Unit =
     spark.sql(sql).foreach(_ => ())
-
-  /** Listener callbacks are async. Two phases, both bounded by the
-    * deadline:
-    *  1. wait until at least `launched` callbacks arrived — the previous
-    *     "first ref appears + 200 ms" shape silently dropped every later
-    *     callback, nondeterministically undercounting the very workload
-    *     the advisor then scores;
-    *  2. then wait for QUIESCENCE (no new callback for `settleNanos`) —
-    *     the raw count alone is not a completion proof, because a failed
-    *     action fires onFailure (counted, though it launched "failed"),
-    *     a command-bearing text can fire more than one callback, and a
-    *     concurrent query on the same session increments the count too;
-    *     any of those could satisfy phase 1 while a real success callback
-    *     is still queued on the bus.
-    * An empty or all-failed workload (`launched` = 0) skips phase 1 and
-    * settles immediately once the bus is quiet. Returns the nanos waited
-    * (unit-testable without wall-clock assertions on the whole call,
-    * which host contention can break). */
-  private[graft] def awaitCallbacks(rec: UsageListener.Recorder, launched: Int,
-      deadlineNanos: Long = 30e9.toLong,
-      settleNanos: Long = 250e6.toLong): Long = {
-    val t0 = System.nanoTime()
-    val deadline = t0 + deadlineNanos
-    while (rec.completedQueries < launched && System.nanoTime() < deadline)
-      Thread.sleep(20)
-    var seen = rec.completedQueries
-    var stableSince = System.nanoTime()
-    while (System.nanoTime() - stableSince < settleNanos &&
-        System.nanoTime() < deadline) {
-      Thread.sleep(20)
-      val now = rec.completedQueries
-      if (now != seen) { seen = now; stableSince = System.nanoTime() }
-    }
-    System.nanoTime() - t0
-  }
-
-  /** Run each SQL text (executor-side execution force, never collecting
-    * results to the driver), capturing usage via the listener; returns the
-    * observed usage DataFrame (kind, name, weighted_frequency) where
-    * weight = times referenced.
-    *
-    * `stateCap` bounds the recorder's distinct (kind, name) keys; if the
-    * workload saturates it, the truncation is WARNED with the drop count
-    * (r8 review finding: a bounded recorder whose saturation no call site
-    * surfaces is silent truncation all over again) — raise the cap for
-    * catalogs wider than ~4k referenced names. */
-  def observeWorkload(spark: SparkSession, sfDir: String,
-      workload: Seq[String], stateCap: Int = 4096): DataFrame = {
-    registerViews(spark, sfDir)
-    val rec = UsageListener.install(spark, stateCap)
-    try {
-      var launched = 0
-      workload.foreach { sql =>
-        try { forceExecute(spark, sql); launched += 1 }
-        catch { case _: Exception => () } // malformed queries degrade to no usage
-      }
-      awaitCallbacks(rec, launched)
-      if (rec.droppedRefs > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"usage recorder saturated: ${rec.droppedRefs} references beyond " +
-            s"stateCap=$stateCap dropped — the usage profile is truncated; " +
-            "pass a larger stateCap to observeWorkload")
-      import spark.implicits._
-      rec.snapshot.map(s => (s.kind, s.name, s.count))
-        .toDF("kind", "name", "weighted_frequency")
-        .orderBy("kind", "name")
-    } finally spark.listenerManager.unregister(rec)
-  }
 
   /** The self-hosting loop closed END TO END: execute the workload texts
     * through `spark.sql` (measuring wall duration per text), synthesize the

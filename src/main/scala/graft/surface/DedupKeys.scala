@@ -127,7 +127,7 @@ object DedupKeys {
       // polynomial mod 1e9+7, affine per-seed re-mix), the 5×4 banding
       // candidates (band-slice equality), and the Jaccard verification —
       // a full hash-compared check of the whole LSH pipeline.
-      (s, dir) => Dedup.minhashNearDups(s, t(s, dir, "documents")),
+      (s, dir) => Dedup.minhashNearDups(t(s, dir, "documents")),
       Some(
         """WITH sh AS (
           |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
@@ -161,7 +161,7 @@ object DedupKeys {
       // X2 SimHash near-dups over 61-bit polynomial token hashes: the
       // oracle replays per-token hashing, the 61 bit-majority sums, the
       // four 16-bit LSH bands, and the hamming-distance filter.
-      (s, dir) => Dedup.simhashNearDups(s, t(s, dir, "documents")),
+      (s, dir) => Dedup.simhashNearDups(t(s, dir, "documents")),
       Some(
         """WITH tok AS (
           |  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
@@ -188,7 +188,7 @@ object DedupKeys {
           |WHERE dist <= 3 ORDER BY a_id, b_id""".stripMargin)),
 
     QSpec("dedup_ngram_jaccard",
-      (s, dir) => Dedup.exactJaccard(s, t(s, dir, "documents"),
+      (s, dir) => Dedup.exactJaccard(t(s, dir, "documents"),
         shingleW = 3, threshold = 0.2, idCap = 500),
       Some(
         """WITH sh AS (
@@ -569,7 +569,7 @@ object DedupKeys {
       (s, dir) => {
         import s.implicits._
         val docs = t(s, dir, "documents")
-        val ex = Dedup.exactJaccard(s, docs, shingleW = 3, threshold = 0.05,
+        val ex = Dedup.exactJaccard(docs, shingleW = 3, threshold = 0.05,
           idCap = 500)
         val cand = Dedup.bandCandidates(Dedup.bandedBuckets(
             Dedup.memoizedSignatures(docs, 3, 20)
@@ -781,7 +781,7 @@ object DedupKeys {
       // Memo-shared with it — and the ratio is integer-exact through
       // ExactMath (count / min(count), a rational that CAN sit on a
       // rounding half-boundary, unlike irrational cosines).
-      (s, dir) => Dedup.exactContainment(s, t(s, dir, "documents"),
+      (s, dir) => Dedup.exactContainment(t(s, dir, "documents"),
         shingleW = 3, threshold = 0.5, idCap = 500),
       Some(
         """WITH sh AS (
@@ -1364,7 +1364,7 @@ object DedupKeys {
       // rep-level derivation is a pure optimization.
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        Dedup.minhashIncrementalKeepers(s,
+        Dedup.minhashIncrementalKeepers(
           docs.where(expr("doc_id % 10 >= 7")),
           docs.where(expr("doc_id % 10 < 7")))
       },

@@ -276,7 +276,7 @@ object RetrievalKeys {
       // references the edge list in every iteration's subtree, and without
       // materialization Catalyst would re-run the ANN join ~2×iters times
       // inside the one final plan.
-      (s, dir) => Graph.pagerankFixedPoint(s, SimSearch.annPairsMemo(s, dir), iters = 5),
+      (s, dir) => Graph.pagerankFixedPoint(SimSearch.annPairsMemo(s, dir), iters = 5),
       Some {
         def step(prev: String): String =
           s"""(SELECT dg.s AS id, dg.deg,

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * properties, multimodal plumbing. */
 class ExtSpec extends SparkSpec {
 
-  private lazy val docs = TableRegistry.table(spark, sfDir, "documents").cache()
-  private lazy val emb = TableRegistry.table(spark, sfDir, "embeddings").cache()
+  private lazy val docs = TableRegistry.table(spark, sfDir, "documents")
+  private lazy val emb = TableRegistry.table(spark, sfDir, "embeddings")
 
   test("minhash LSH finds every exact-Jaccard pair above a high threshold") {
     // at threshold 0.7 with 5 bands × 4 rows, P(candidate) = 1-(1-s^4)^5
@@ -17,9 +17,9 @@ class ExtSpec extends SparkSpec {
     // but must agree largely with exact. Verify: every LSH pair IS an exact
     // pair (no false positives after verification — guaranteed by re-check)
     // and recall over exact pairs ≥ 0.5.
-    val lsh = Dedup.minhashNearDups(spark, docs, threshold = 0.5)
+    val lsh = Dedup.minhashNearDups(docs, threshold = 0.5)
       .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = Dedup.exactJaccard(spark, docs, shingleW = 3, threshold = 0.5, idCap = Long.MaxValue)
+    val exact = Dedup.exactJaccard(docs, shingleW = 3, threshold = 0.5, idCap = Long.MaxValue)
       .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh.subsetOf(exact), s"false positives: ${lsh.diff(exact)}")
     if (exact.nonEmpty) {
@@ -35,7 +35,7 @@ class ExtSpec extends SparkSpec {
       .orderBy("doc_id").collect().map(_.getLong(1))
     assert(sigs1.sameElements(sigs2))
     assert(sigs1.forall(_ >= 0L)) // 63-bit: never negative
-    val pairs = Dedup.simhashNearDups(spark, docs).collect()
+    val pairs = Dedup.simhashNearDups(docs).collect()
     assert(pairs.forall(r => r.getLong(0) < r.getLong(1)))
   }
 
@@ -44,10 +44,10 @@ class ExtSpec extends SparkSpec {
     val d = Seq((1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon zeta"),
       (3L, "totally different words entirely here now")).toDF("doc_id", "text")
-    val mh = Dedup.minhashNearDups(spark, d, threshold = 0.99)
+    val mh = Dedup.minhashNearDups(d, threshold = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(mh.toSeq == Seq((1L, 2L)))
-    val sh = Dedup.simhashNearDups(spark, d, maxDist = 0)
+    val sh = Dedup.simhashNearDups(d, maxDist = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(sh.toSeq == Seq((1L, 2L)))
   }

@@ -1,102 +1,19 @@
 package graft
 
-import graft.catalog.TableRegistry
-import graft.listener.UsageListener
-import org.apache.spark.sql.functions._
-
-/** §4 self-hosting usage capture: executed queries surface their
-  * table/join/filter references through the listener. */
+/** The `src/main` grep gates (driver collects, memo fields, persists,
+  * partitioned windows, streaming-state IO) and the self-hosted advisor
+  * end to end: the session serves a workload, then advises on it. */
 class ListenerSpec extends SparkSpec {
 
-  test("listener records table, join and filter references of executed queries") {
-    val rec = UsageListener.install(spark)
-    try {
-      TableRegistry.table(spark, sfDir, "orders")
-        .join(TableRegistry.table(spark, sfDir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .where(col("o_totalprice") > 100000)
-        .count()
-      // listener callbacks are async — poll until the events land
-      val deadline = System.nanoTime() + 10000000000L
-      while (rec.snapshot.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-      val kinds = rec.snapshot.groupBy(_.kind).view.mapValues(_.map(_.name).toSet).toMap
-      assert(kinds.getOrElse("join_col", Set.empty).contains("o_custkey"), kinds.toString)
-      assert(kinds.getOrElse("join_col", Set.empty).contains("c_custkey"), kinds.toString)
-      assert(kinds.getOrElse("where_col", Set.empty).contains("o_totalprice"), kinds.toString)
-      val frame = TestOps.usageFrame(spark, rec)
-      assert(frame.where(col("kind") === "join_col").count() >= 2)
-    } finally spark.listenerManager.unregister(rec)
-  }
-
-  test("self-hosting loop: canned workload observed through spark.sql") {
-    val usage = graft.pipeline.SelfHosting.observeWorkload(spark, sfDir,
-      graft.catalog.TableRegistry.cannedQueries)
-    val rows = usage.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val tables = rows.filter(_._1 == "table").map(t => t._2 -> t._3).toMap
-    // the canned workload references lineitem twice (q0, q1) and orders twice
-    assert(tables.getOrElse("lineitem", 0L) >= 2, tables.toString)
-    assert(tables.getOrElse("orders", 0L) >= 2, tables.toString)
-    val joins = rows.filter(_._1 == "join_col").map(_._2).toSet
-    assert(joins.contains("o_orderkey") && joins.contains("l_orderkey"), joins.toString)
-    val wheres = rows.filter(_._1 == "where_col").map(_._2).toSet
-    assert(wheres.contains("o_totalprice"), wheres.toString)
-  }
-
-  test("table aliases and derived-table aliases are NOT phantom table references") {
-    graft.pipeline.SelfHosting.registerViews(spark, sfDir)
-    val rec = UsageListener.install(spark)
-    try {
-      spark.sql("SELECT l.l_quantity FROM lineitem l WHERE l.l_quantity > 0").count()
-      spark.sql("SELECT d.q FROM (SELECT l_quantity AS q FROM lineitem) d").count()
-      val deadline = System.nanoTime() + 10000000000L
-      while (rec.completedQueries < 2 && System.nanoTime() < deadline) Thread.sleep(50)
-      val tables = rec.snapshot.filter(_.kind == "table").map(_.name).toSet
-      assert(tables.contains("lineitem"), tables.toString)
-      // the alias `l`, the derived-table alias `d` and the CTE-free
-      // subquery must not fabricate table rows (they burned stateCap
-      // slots and polluted the advisor's usage stats)
-      assert(!tables.contains("l") && !tables.contains("d"), tables.toString)
-    } finally spark.listenerManager.unregister(rec)
-  }
-
-  test("observeWorkload waits for ALL callbacks and returns fast on an empty workload") {
-    // The wait itself, unit-level (wall-clock assertions on the whole
-    // observeWorkload call proved flaky under suite/host contention):
-    // nothing launched → no wait at all; already-delivered callbacks →
-    // no wait; a pending callback waits only until it lands.
-    val rec = new UsageListener.Recorder()
-    assert(graft.pipeline.SelfHosting.awaitCallbacks(rec, 0) < 1e9.toLong)
-    rec.record("table", "x", 1L) // recorder usable, but no callbacks yet
-    assert(graft.pipeline.SelfHosting.awaitCallbacks(rec, 0) < 1e9.toLong)
-    // a short deadline bounds a genuinely-pending wait
-    val waited = graft.pipeline.SelfHosting.awaitCallbacks(rec, 1,
-      deadlineNanos = 200000000L)
-    assert(waited >= 200000000L && waited < 5e9.toLong, waited.toString)
-    // end-to-end: the empty workload still yields an empty frame
-    val empty = graft.pipeline.SelfHosting.observeWorkload(spark, sfDir, Seq.empty)
-    assert(empty.count() == 0)
-    // multi-query workload: every query's refs are present (the old
-    // first-callback-plus-200ms wait dropped late callbacks)
-    val usage = graft.pipeline.SelfHosting.observeWorkload(spark, sfDir, Seq(
-      "SELECT count(*) FROM lineitem",
-      "SELECT count(*) FROM orders",
-      "SELECT count(*) FROM customer",
-      "SELECT count(*) FROM supplier"))
-    val tables = usage.where(col("kind") === "table")
-      .collect().map(_.getString(1)).toSet
-    assert(Set("lineitem", "orders", "customer", "supplier").subsetOf(tables), tables.toString)
-  }
-
-  test("recorder state is bounded by stateCap; overflow counted, existing keys still aggregate") {
-    val rec = new UsageListener.Recorder(stateCap = 8)
-    (0 until 1000).foreach(i => rec.record("where_col", s"c$i", 1000L))
-    assert(rec.snapshot.size == 8, s"size ${rec.snapshot.size}")
-    assert(rec.droppedRefs == 992L, s"dropped ${rec.droppedRefs}")
-    // keys admitted before saturation keep aggregating in place
-    rec.record("where_col", "c0", 500L)
-    val c0 = rec.snapshot.find(_.name == "c0").get
-    assert(c0.count == 2L && c0.totalDurationNs == 1500L, c0.toString)
-    assert(rec.droppedRefs == 992L) // aggregation of a live key is not a drop
+  /** Every `.scala` file under `src/main/scala`; cancels the test when not
+    * run from the repo root. */
+  private def mainSources(): Seq[java.io.File] = {
+    val root = new java.io.File("src/main/scala")
+    assume(root.isDirectory, "run from repo root")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    walk(root)
   }
 
   test("grep gate: no data-proportional driver collect in src/main") {
@@ -165,18 +82,13 @@ class ListenerSpec extends SparkSpec {
       // path); its collects are single-row scalar aggregates (sum of
       // lengths) used to force the scan stage for isolated timing
       "TimeMultimodal.scala")
-    val root = new java.io.File("src/main/scala")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    assume(root.isDirectory, "run from repo root")
     // regex, not a literal: .collect (), collectAsList, toLocalIterator are
     // the same driver-materialization hazard spelled differently (r8 review
     // finding). head(n)/take(n) are excluded — they are bounded by their
     // argument and used legitimately for probes.
     val mat = java.util.regex.Pattern.compile(
       """\.\s*(collect|collectAsList|toLocalIterator)\s*\(""")
-    val offenders = walk(root).filter { f =>
+    val offenders = mainSources().filter { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       mat.matcher(src).find()
     }.map(_.getName).toSet
@@ -190,21 +102,14 @@ class ListenerSpec extends SparkSpec {
     // unless it is listed here with the reason it is not one
     val allowed = Map(
       "Memo.scala" -> Set("entries"), // the memo registry itself
-      // an accumulator of observed references, not a memo
-      "UsageListener.scala" -> Set("stats"),
       // PngFixtures: the rendered on-disk PNG corpus outlives sessions (a
       // directory per population)
       "Multimodal.scala" -> Set("cache"),
       // a write guard: which dir's bucketed-join tables are on disk
       "LayoutKeys.scala" -> Set("bucketedJoinDir"))
-    val root = new java.io.File("src/main/scala")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    assume(root.isDirectory, "run from repo root")
     val mention = java.util.regex.Pattern.compile("""\b(ConcurrentHashMap|AtomicReference)\b""")
     val field = java.util.regex.Pattern.compile("""\b(?:val|var)\s+(\w+)""")
-    val declared = walk(root).flatMap { f =>
+    val declared = mainSources().flatMap { f =>
       // code only: line comments, scaladoc lines and imports do not declare
       val code = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         .linesIterator
@@ -247,12 +152,7 @@ class ListenerSpec extends SparkSpec {
       // the filtered query log the export's artifacts all read, unpersisted
       // when the export ends
       "ReportExporter.scala" -> Set("export"))
-    val root = new java.io.File("src/main/scala")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    assume(root.isDirectory, "run from repo root")
-    val found = walk(root).filter(_.getName != "Memo.scala").flatMap { f =>
+    val found = mainSources().filter(_.getName != "Memo.scala").flatMap { f =>
       persistSites(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
         .map(f.getName -> _)
     }.toSet
@@ -336,12 +236,7 @@ class ListenerSpec extends SparkSpec {
       "Temporal.scala" -> 2,
       // packSequences two-level shard prefix (2)
       "TextAnalysis.scala" -> 2)
-    val root = new java.io.File("src/main/scala")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    assume(root.isDirectory, "run from repo root")
-    val sites = walk(root).map { f =>
+    val sites = mainSources().map { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       // strip line comments so prose explaining WHY a window was removed
       // does not count as a site

@@ -47,12 +47,12 @@ class Queries10Spec extends SparkSpec {
     val half = (1 to 20).map(i => s"tok$i").mkString(" ")
     val other = (100 to 140).map(i => s"tok$i").mkString(" ")
     val docs = Seq((0L, full), (1L, half), (2L, other)).toDF("doc_id", "text")
-    val c = Dedup.exactContainment(spark, docs, shingleW = 3,
+    val c = Dedup.exactContainment(docs, shingleW = 3,
       threshold = 0.5, idCap = 500).collect()
     assert(c.length == 1 && c(0).getLong(0) == 0L && c(0).getLong(1) == 1L,
       s"expected exactly the (0,1) truncation pair: ${c.toSeq}")
     assert(c(0).getDouble(2) == 1.0, s"truncation containment != 1.0: ${c(0)}")
-    val j = Dedup.exactJaccard(spark, docs, shingleW = 3,
+    val j = Dedup.exactJaccard(docs, shingleW = 3,
       threshold = 0.0, idCap = 500).collect()
       .find(r => r.getLong(0) == 0L && r.getLong(1) == 1L).get.getDouble(2)
     assert(j < 0.5, s"fixture broken: jaccard $j should under-read the truncation")

@@ -69,12 +69,12 @@ class Queries16Spec extends SparkSpec {
       (27L, b),     // copy of base-DROPPED 20 → still drops (J vs 10 ≥ 0.7)
       (37L, "red orange yellow green blue indigo violet pink brown black"))
       .toDF("doc_id", "text")
-    val out = graft.ext.Dedup.minhashIncrementalKeepers(spark, fresh, base)
+    val out = graft.ext.Dedup.minhashIncrementalKeepers(fresh, base)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(out == Map(17L -> 0, 27L -> 0, 37L -> 1), out.toString)
     // the base manifest is untouched by construction (the function never
     // writes base rows); re-screening the SAME new batch is idempotent
-    val again = graft.ext.Dedup.minhashIncrementalKeepers(spark, fresh, base)
+    val again = graft.ext.Dedup.minhashIncrementalKeepers(fresh, base)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(again == out)
   }

@@ -100,11 +100,11 @@ class SketchesSpec extends SparkSpec {
     // iter2: r(0) = 150000 + (850000·3·433333) div 1e6 = 1_254_999
     //        r(leaf) = 150000 + (850000·(2700000 div 3)) div 1e6 = 915_000
     val pairs = Seq((0L, 1L), (0L, 2L), (0L, 3L)).toDF("a_id", "b_id")
-    val got = graft.ext.Graph.pagerankFixedPoint(spark, pairs, iters = 2)
+    val got = graft.ext.Graph.pagerankFixedPoint(pairs, iters = 2)
       .select("vec_id", "rank").as[(Long, Long)].collect().toMap
     assert(got === Map(0L -> 1254999L, 1L -> 915000L, 2L -> 915000L, 3L -> 915000L))
     // integer sums are commutative — the result cannot depend on partitioning
-    val re = graft.ext.Graph.pagerankFixedPoint(spark, pairs.repartition(7), iters = 2)
+    val re = graft.ext.Graph.pagerankFixedPoint(pairs.repartition(7), iters = 2)
       .select("vec_id", "rank").as[(Long, Long)].collect().toMap
     assert(re === got)
   }

@@ -2,8 +2,7 @@ package graft
 
 import graft.catalog.TableRegistry
 import graft.ext.Multimodal
-import graft.listener.UsageListener
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Helpers only the specs call: typed and batch views over program
   * surfaces that no program path needs. */
@@ -28,12 +27,5 @@ object TestOps {
       : Dataset[Multimodal.Thumbnail] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.map(Multimodal.resizeStub(_, w, h)))
-  }
-
-  /** Recorded usage as a (kind, name, ref_count, duration_ms) frame. */
-  def usageFrame(spark: SparkSession, r: UsageListener.Recorder): DataFrame = {
-    import spark.implicits._
-    r.snapshot.map(e => (e.kind, e.name, e.count, e.totalDurationNs / 1000000L))
-      .toDF("kind", "name", "ref_count", "duration_ms")
   }
 }
