@@ -376,6 +376,22 @@ object Dedup {
         .withColumn("n", size(col("sh")))
     }
 
+  /** (a_id, b_id, na, nb, inter) for every pair a_id < b_id of capped docs
+    * sharing at least one shingle: both set sizes and |A∩B|, from the
+    * inverted index — explode to (shingle, doc_id), equi-join on the
+    * shingle, count per pair. */
+  private def sharedShingleCounts(docs: DataFrame, shingleW: Int,
+      idCap: Long): DataFrame = {
+    val inv = cappedShingles(docs, shingleW, idCap)
+      .select(col("doc_id"), col("n"), explode(col("sh")).as("g"))
+    val a = inv.select(col("g"), col("doc_id").as("a_id"), col("n").as("na"))
+    val b = inv.select(col("g"), col("doc_id").as("b_id"), col("n").as("nb"))
+    a.join(b, Seq("g"))
+      .where(col("a_id") < col("b_id"))
+      .groupBy("a_id", "b_id", "na", "nb")
+      .agg(count(lit(1)).as("inter"))
+  }
+
   /** Exact n-gram Jaccard self-join via an inverted index: explode to
     * (shingle, doc_id), equi-join on the shingle, and count co-occurrences
     * per pair — |A∩B| as one codegen'd hash aggregation. Identical output to
@@ -386,20 +402,12 @@ object Dedup {
     * stays the declarative set-intersect form). */
   def exactJaccard(docs: DataFrame, shingleW: Int,
       threshold: Double, idCap: Long): DataFrame = {
-    val inv = cappedShingles(docs, shingleW, idCap)
-      .select(col("doc_id"), col("n"), explode(col("sh")).as("g"))
-    val a = inv.select(col("g"), col("doc_id").as("a_id"), col("n").as("na"))
-    val b = inv.select(col("g"), col("doc_id").as("b_id"), col("n").as("nb"))
-    val out = a.join(b, Seq("g"))
-      .where(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id", "na", "nb")
-      .agg(count(lit(1)).as("inter"))
+    sharedShingleCounts(docs, shingleW, idCap)
       .withColumn("jaccard", round(col("inter") /
         (col("na") + col("nb") - col("inter")), 6))
       .where(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
       .orderBy("a_id", "b_id")
-    out
   }
 
   /** Near-superset containment dedup: C(a,b) = |A∩B| / min(|A|,|B|) over
@@ -416,14 +424,7 @@ object Dedup {
     * [[exactJaccard]]. */
   def exactContainment(docs: DataFrame, shingleW: Int,
       threshold: Double, idCap: Long): DataFrame = {
-    val inv = cappedShingles(docs, shingleW, idCap)
-      .select(col("doc_id"), col("n"), explode(col("sh")).as("g"))
-    val a = inv.select(col("g"), col("doc_id").as("a_id"), col("n").as("na"))
-    val b = inv.select(col("g"), col("doc_id").as("b_id"), col("n").as("nb"))
-    a.join(b, Seq("g"))
-      .where(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id", "na", "nb")
-      .agg(count(lit(1)).as("inter"))
+    sharedShingleCounts(docs, shingleW, idCap)
       .withColumn("containment",
         ExactMath.ratioRounded(col("inter"), least(col("na"), col("nb")), 6))
       .where(col("containment") >= threshold)

@@ -49,17 +49,21 @@ object SimSearch {
       .withColumn("nrm", norm(col("v")))
       .where(col("nrm") > 0)
 
-  /** Brute-force top-k cosine neighbors of one query vector. */
-  def topK(spark: SparkSession, emb: DataFrame, queryVecId: Long, k: Int): DataFrame = {
-    val e = withNorm(emb)
-    val q = e.where(col("vec_id") === queryVecId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"))
-    e.where(col("vec_id") =!= queryVecId)
-      .crossJoin(broadcast(q))
+  /** The `k` rows of `cands` with the highest 6-place rounded cosine to the
+    * one-row `query` (both [[withNorm]] frames), vec_id ascending among
+    * ties: the query row is broadcast against one scan of the candidates. */
+  private def topByCosine(cands: DataFrame, query: DataFrame, k: Int): DataFrame =
+    cands.crossJoin(broadcast(query.select(col("v").as("qv"), col("nrm").as("qnrm"))))
       .select(col("vec_id"),
         round(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
       .orderBy(desc("cos"), asc("vec_id"))
       .limit(k)
+
+  /** Brute-force top-k cosine neighbors of one query vector. */
+  def topK(spark: SparkSession, emb: DataFrame, queryVecId: Long, k: Int): DataFrame = {
+    val e = withNorm(emb)
+    topByCosine(e.where(col("vec_id") =!= queryVecId),
+      e.where(col("vec_id") === queryVecId), k)
   }
 
   /** Filtered ANN (X61): metadata predicate + top-k cosine in ONE scan —
@@ -76,15 +80,9 @@ object SimSearch {
     * usual. */
   def filteredTopK(spark: SparkSession, emb: DataFrame, queryVecId: Long,
       k: Int, labelValue: Int): DataFrame = {
-    val q = withNorm(emb.where(col("vec_id") === queryVecId))
-      .select(col("v").as("qv"), col("nrm").as("qnrm"))
-    withNorm(emb.where(col("label") === labelValue &&
-        col("vec_id") =!= queryVecId))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
+    topByCosine(
+      withNorm(emb.where(col("label") === labelValue && col("vec_id") =!= queryVecId)),
+      withNorm(emb.where(col("vec_id") === queryVecId)), k)
   }
 
   /** Deterministic hyperplane weight for plane `q`, dimension `i`:

@@ -87,14 +87,18 @@ object TextAnalysis {
   }
 
   def langId(text: Column, markers: Seq[(String, Seq[String])] = defaultMarkers): Column = {
-    val scores = langScores(text, markers)
-    // argmax with deterministic tie-break: first language (sorted order)
-    // with a strictly greater score than all that come before it.
+    argmaxLang(langScores(text, markers))
+  }
+
+  /** The language with the highest score, as one expression: a fold of
+    * `greatest`/`when` over `scores` in order, so ties go to the first
+    * language in profile order (a later one needs a strictly greater
+    * score). */
+  private def argmaxLang(scores: Seq[(String, Column)]): Column =
     scores.tail.foldLeft((scores.head._2, lit(scores.head._1))) {
       case ((bestScore, bestLang), (lang, s)) =>
         (greatest(bestScore, s), when(s > bestScore, lit(lang)).otherwise(bestLang))
     }._2
-  }
 
   /** DuckDB twin of the marker-intersect argmax ([[withLangIdIntersect]])
     * as oracle-SQL text, over a pre-split token-list column — ONE renderer
@@ -150,10 +154,7 @@ object TextAnalysis {
       lang -> size(filter(charTrigrams(text),
         g => ps.map(p => g.contains(lit(p))).reduce(_ || _)))
     }
-    scores.tail.foldLeft((scores.head._2, lit(scores.head._1))) {
-      case ((bestScore, bestLang), (lang, s)) =>
-        (greatest(bestScore, s), when(s > bestScore, lit(lang)).otherwise(bestLang))
-    }._2
+    argmaxLang(scores)
   }
 
   /** Dataframe-staged variant of [[langIdNgram]]: trigram extraction and the
@@ -172,11 +173,7 @@ object TextAnalysis {
         g => ps.map(p => g.contains(lit(p))).reduce(_ || _))))
     }
     val scores = profiles.map { case (lang, _) => lang -> col(s"__s_$lang") }
-    val pred = scores.tail.foldLeft((scores.head._2, lit(scores.head._1))) {
-      case ((bestScore, bestLang), (lang, s)) =>
-        (greatest(bestScore, s), when(s > bestScore, lit(lang)).otherwise(bestLang))
-    }._2
-    withScores.withColumn(out, pred)
+    withScores.withColumn(out, argmaxLang(scores))
       .drop("__grams" +: profiles.map(p => s"__s_${p._1}"): _*)
   }
 
@@ -197,11 +194,7 @@ object TextAnalysis {
         size(array_intersect(col("__toks"), array(ws.map(lit): _*))))
     }
     val scores = markers.map { case (lang, _) => lang -> col(s"__s_$lang") }
-    val pred = scores.tail.foldLeft((scores.head._2, lit(scores.head._1))) {
-      case ((bestScore, bestLang), (lang, s)) =>
-        (greatest(bestScore, s), when(s > bestScore, lit(lang)).otherwise(bestLang))
-    }._2
-    withScores.withColumn(out, pred)
+    withScores.withColumn(out, argmaxLang(scores))
       .drop("__toks" +: markers.map(p => s"__s_${p._1}"): _*)
   }
 
@@ -229,11 +222,7 @@ object TextAnalysis {
           GraftColumnBridge.expression(col(textCol)), ps)))
     }
     val scores = profiles.map { case (lang, _) => lang -> col(s"__s_$lang") }
-    val pred = scores.tail.foldLeft((scores.head._2, lit(scores.head._1))) {
-      case ((bestScore, bestLang), (lang, s)) =>
-        (greatest(bestScore, s), when(s > bestScore, lit(lang)).otherwise(bestLang))
-    }._2
-    withScores.withColumn(out, pred)
+    withScores.withColumn(out, argmaxLang(scores))
       .drop(profiles.map(p => s"__s_${p._1}"): _*)
   }
 

@@ -31,7 +31,7 @@ object DedupKeys {
     * head, and the nearest-centroid assignment (same −2·v·c + ‖c‖² ranking
     * and low-index tie-break as the engine's min-struct argmin), carrying the assigned
     * minimum m for distance math. Ends after `asg` — callers append. */
-  private[graft] val assignCtes: String =
+  private val assignCtes: String =
     """WITH e AS (SELECT vec_id, v FROM (
       |    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
       |    FROM embeddings) raw
@@ -48,6 +48,165 @@ object DedupKeys {
       |        list_sum(list_transform(range(len(e.v)), i -> e.v[i+1]*cent.cv[i+1])) * -2.0 + cent.c2,
       |        cent.ci) AS rk
       |    FROM e, cent) r WHERE rk = 1)""".stripMargin
+
+  /** Oracle CTE body: each doc's distinct 3-word shingle list `sh` (the
+    * [[Dedup.shingles]] family, w = 3). `from` follows `AS sp` in the
+    * inner select: the table, any doc filter, and any line break before
+    * them. */
+  private def shingleSets(from: String): String =
+    s"""SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
+       |    ELSE list_transform(range(1, len(sp)-1), i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2]) END) AS sh
+       |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp$from) d""".stripMargin
+
+  /** Oracle CTE chain of the MinHash signatures ([[Dedup.minhashNearDups]]'s
+    * family): the shingle CTE named `sh`, the polynomial shingle hashes
+    * `hs` and the 20-value signature `sig` (the shingle list kept beside
+    * it for verification). Starts at the CTE name, ends after `sig`. */
+  private def minhashSigCtes(sh: String, from: String): String =
+    s"""$sh AS (
+       |  ${shingleSets(from)}
+       |), hs AS (
+       |  SELECT doc_id, sh, list_transform(sh, g ->
+       |    list_reduce(list_prepend(CAST(7 AS BIGINT),
+       |      list_transform(range(1, length(g)+1), i -> CAST(unicode(g[i]) AS BIGINT))),
+       |      (acc, c) -> (acc * 131 + c) % 1000000007)) AS hs
+       |  FROM $sh
+       |), sig AS (
+       |  SELECT doc_id, sh, list_transform(range(20), i ->
+       |    list_min(list_transform(hs, h ->
+       |      (((i+1) * 2654435761 % 1000000007) * h + ((i+1) * 40503 + 17) % 1000000007) % 1000000007))) AS sig
+       |  FROM hs
+       |)""".stripMargin
+
+  /** [[minhashSigCtes]] plus the 5×4 band slices and the distinct
+    * band-collision candidate pairs `cand` (a_id < b_id). */
+  private def minhashCandCtes(from: String): String =
+    s"""${minhashSigCtes("sh", from)}, bands AS (
+       |  SELECT doc_id, b, sig[b*4+1 : b*4+4] AS key FROM sig, range(5) t(b)
+       |), cand AS (
+       |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+       |  FROM bands a JOIN bands b ON a.b = b.b AND a.key = b.key AND a.doc_id < b.doc_id
+       |)""".stripMargin
+
+  /** Oracle CTE chain of connected components over a `pairs` (a_id, b_id)
+    * CTE: undirected `edges`, recursive reachability seeded with every
+    * `documents` row that passes `seedFilter` (empty: all), min-id labels
+    * `lab` and component sizes `sz`. Needs `WITH RECURSIVE`; starts at
+    * `edges`, ends after `sz`. */
+  private def componentCtes(seedFilter: String): String =
+    s"""edges AS (
+       |  SELECT a_id AS src, b_id AS dst FROM pairs
+       |  UNION ALL SELECT b_id, a_id FROM pairs
+       |), reach(id, r) AS (
+       |  SELECT doc_id, doc_id FROM documents$seedFilter
+       |  UNION
+       |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id
+       |), lab AS (
+       |  SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id
+       |), sz AS (
+       |  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
+       |  FROM lab GROUP BY cluster_id
+       |)""".stripMargin
+
+  /** The capped (doc_id < 500) n-gram Jaccard pairs at ≥ 0.2 and their
+    * components: the oracle head of `dedup_cluster` and
+    * `cluster_keep_policy` ([[Dedup.jaccardClustersMemo]]). */
+  private val cappedJaccardComponentCtes: String =
+    s"""WITH RECURSIVE sh AS (
+       |  ${shingleSets("\n        FROM documents WHERE doc_id < 500")}
+       |), pairs AS (
+       |  SELECT a_id, b_id FROM (
+       |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+       |      ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+       |        (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
+       |    FROM sh a, sh b WHERE a.doc_id < b.doc_id) j
+       |  WHERE jaccard >= 0.2
+       |), ${componentCtes(" WHERE doc_id < 500")}""".stripMargin
+
+  /** The capped (doc_id < 500) all-pairs shingle overlap: intersection and
+    * both set sizes, the oracle head of the exact Jaccard and containment
+    * keys. */
+  private val cappedOverlapCtes: String =
+    s"""WITH sh AS (
+       |  ${shingleSets(" FROM documents WHERE doc_id < 500")}
+       |), pairs AS (
+       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+       |    len(list_intersect(a.sh, b.sh)) AS inter, len(a.sh) AS na, len(b.sh) AS nb
+       |  FROM sh a, sh b WHERE a.doc_id < b.doc_id
+       |)""".stripMargin
+
+  /** Oracle CTEs of the polynomial hash stream of a 4-token shingle CTE
+    * `sh` (doc_id, sh): the hash list `hs` and its (doc_id, pos, h) rows
+    * `p`. */
+  private val shingleHashCtes: String =
+    """hs AS (SELECT doc_id, list_transform(sh, g ->
+      |    list_reduce(list_prepend(CAST(7 AS BIGINT),
+      |      list_transform(range(1, length(g)+1), i -> CAST(unicode(g[i]) AS BIGINT))),
+      |      (a, c) -> (a * 131 + c) % 1000000007)) AS hl FROM sh),
+      |p AS (SELECT doc_id, u.pos AS pos, u.h AS h FROM (
+      |    SELECT doc_id, unnest(list_transform(range(1, len(hl)+1),
+      |      i -> {'pos': i - 1, 'h': hl[i]})) AS u FROM hs))""".stripMargin
+
+  /** Oracle CTE chain of [[graft.ext.Winnow.matchSpans]]: 4-token shingle
+    * hashes, w = 4 winnowing fingerprints, candidate pairs on fingerprints
+    * of document frequency 2–16, then the shared-gram points of each pair
+    * split into diagonal runs `seg2` (a_id, b_id, diag, pa, pb, seg). */
+  private val winnowSpanCtes: String =
+    s"""WITH sp AS (SELECT doc_id, source, text, string_split(text, ' ') AS sp
+       |  FROM documents),
+       |sh AS (SELECT doc_id, CASE WHEN len(sp) < 4 THEN [text]
+       |    ELSE list_transform(range(1, len(sp) - 2),
+       |      i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3]) END AS sh
+       |  FROM sp),
+       |$shingleHashCtes,
+       |wn AS (SELECT doc_id, pos, h,
+       |    COUNT(*) OVER (PARTITION BY doc_id) AS n,
+       |    MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
+       |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin FROM p),
+       |fp AS (SELECT DISTINCT doc_id, wmin AS fp FROM wn
+       |  WHERE pos <= GREATEST(0, n - 4)),
+       |ok AS (SELECT fp FROM fp GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND 16),
+       |pairs AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+       |  FROM fp a JOIN ok USING (fp) JOIN fp b USING (fp)
+       |  WHERE a.doc_id < b.doc_id),
+       |g0 AS (SELECT doc_id, list_transform(range(1, len(sp) - 2),
+       |    i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3]) AS gs
+       |  FROM sp WHERE len(sp) >= 7),
+       |grams AS (SELECT doc_id, u.p AS p, u.g AS g FROM (
+       |    SELECT doc_id, unnest(list_transform(range(1, len(gs)+1),
+       |      i -> {'p': i - 1, 'g': gs[i]})) AS u FROM g0)),
+       |pts AS (SELECT pr.a_id, pr.b_id, ga.p AS pa, gb.p AS pb
+       |  FROM pairs pr
+       |  JOIN grams ga ON ga.doc_id = pr.a_id
+       |  JOIN grams gb ON gb.doc_id = pr.b_id AND gb.g = ga.g),
+       |seg AS (SELECT a_id, b_id, pb - pa AS diag, pa, pb,
+       |    CASE WHEN pa - LAG(pa) OVER (PARTITION BY a_id, b_id, pb - pa
+       |      ORDER BY pa) = 1 THEN 0 ELSE 1 END AS brk FROM pts),
+       |seg2 AS (SELECT a_id, b_id, diag, pa, pb,
+       |    SUM(brk) OVER (PARTITION BY a_id, b_id, diag ORDER BY pa
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg FROM seg)""".stripMargin
+
+  /** [[winnowSpanCtes]] plus the maximal runs of ≥ 7 tokens and the
+    * distinct later-doc token positions `cov` (doc_id, pos) they cover
+    * ([[graft.ext.Winnow.coveredPositions]]). */
+  private val coveredPositionCtes: String =
+    s"""$winnowSpanCtes,
+       |runs AS (SELECT a_id, b_id, MIN(pa) AS a_start, MIN(pb) AS b_start,
+       |    COUNT(*) + 3 AS run_tokens
+       |  FROM seg2 GROUP BY a_id, b_id, diag, seg
+       |  HAVING COUNT(*) + 3 >= 7),
+       |cov AS (SELECT DISTINCT doc_id, pos FROM (
+       |    SELECT b_id AS doc_id,
+       |      unnest(range(b_start, b_start + run_tokens)) AS pos FROM runs))""".stripMargin
+
+  /** [[assignCtes]] plus the within-cluster cosine pairs `p` and the
+    * keep-first drop set `d` at cos ≥ 0.9 ([[SimSearch.semanticDedup]]). */
+  private val semanticDupCtes: String =
+    s"""$assignCtes,
+       |p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+       |    $cosineAB
+       |  FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
+       |d AS (SELECT DISTINCT b_id FROM p WHERE cos >= 0.9)""".stripMargin
 
   /** Per-doc decontamination manifest (X72): per TRAIN document, how much
     * of its distinct 3-word-shingle set also appears anywhere in the EVAL
@@ -129,27 +288,7 @@ object DedupKeys {
       // a full hash-compared check of the whole LSH pipeline.
       (s, dir) => Dedup.minhashNearDups(t(s, dir, "documents")),
       Some(
-        """WITH sh AS (
-          |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
-          |    ELSE list_transform(range(1, len(sp)-1), i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2]) END) AS sh
-          |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp FROM documents) d
-          |), hs AS (
-          |  SELECT doc_id, sh, list_transform(sh, g ->
-          |    list_reduce(list_prepend(CAST(7 AS BIGINT),
-          |      list_transform(range(1, length(g)+1), i -> CAST(unicode(g[i]) AS BIGINT))),
-          |      (acc, c) -> (acc * 131 + c) % 1000000007)) AS hs
-          |  FROM sh
-          |), sig AS (
-          |  SELECT doc_id, sh, list_transform(range(20), i ->
-          |    list_min(list_transform(hs, h ->
-          |      (((i+1) * 2654435761 % 1000000007) * h + ((i+1) * 40503 + 17) % 1000000007) % 1000000007))) AS sig
-          |  FROM hs
-          |), bands AS (
-          |  SELECT doc_id, b, sig[b*4+1 : b*4+4] AS key FROM sig, range(5) t(b)
-          |), cand AS (
-          |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-          |  FROM bands a JOIN bands b ON a.b = b.b AND a.key = b.key AND a.doc_id < b.doc_id
-          |)
+        s"""WITH ${minhashCandCtes(" FROM documents")}
           |SELECT a_id, b_id, jaccard FROM (
           |  SELECT c.a_id, c.b_id,
           |    ROUND(CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE) /
@@ -191,15 +330,7 @@ object DedupKeys {
       (s, dir) => Dedup.exactJaccard(t(s, dir, "documents"),
         shingleW = 3, threshold = 0.2, idCap = 500),
       Some(
-        """WITH sh AS (
-          |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
-          |    ELSE list_transform(range(1, len(sp)-1), i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2]) END) AS sh
-          |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp FROM documents WHERE doc_id < 500) d
-          |), pairs AS (
-          |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-          |    len(list_intersect(a.sh, b.sh)) AS inter, len(a.sh) AS na, len(b.sh) AS nb
-          |  FROM sh a, sh b WHERE a.doc_id < b.doc_id
-          |)
+        s"""$cappedOverlapCtes
           |SELECT a_id, b_id, jaccard FROM (
           |  SELECT a_id, b_id, ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 6) AS jaccard
           |  FROM pairs) j
@@ -211,13 +342,9 @@ object DedupKeys {
       (s, dir) => Dedup.embeddingNearDups(s, t(s, dir, "embeddings"),
         threshold = 0.9, idCap = 500),
       Some(
-        """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        s"""WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           |  FROM embeddings WHERE vec_id < 500),
-          |p AS (
-          |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-          |    ROUND(list_sum(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i])) /
-          |      (sqrt(list_sum(list_transform(a.v, x -> x*x))) * sqrt(list_sum(list_transform(b.v, x -> x*x)))), 6) AS cos
-          |  FROM e a, e b WHERE a.vec_id < b.vec_id),
+          |$cosinePairCte,
           |dups AS (SELECT DISTINCT b_id AS vec_id FROM p WHERE cos >= 0.9)
           |SELECT vec_id, label FROM e WHERE vec_id NOT IN (SELECT vec_id FROM dups)
           |ORDER BY vec_id""".stripMargin)),
@@ -243,31 +370,7 @@ object DedupKeys {
         Dedup.jaccardClustersMemo(s, dir)
       },
       Some(
-        """WITH RECURSIVE sh AS (
-          |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
-          |    ELSE list_transform(range(1, len(sp)-1), i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2]) END) AS sh
-          |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp
-          |        FROM documents WHERE doc_id < 500) d
-          |), pairs AS (
-          |  SELECT a_id, b_id FROM (
-          |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-          |      ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-          |        (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-          |    FROM sh a, sh b WHERE a.doc_id < b.doc_id) j
-          |  WHERE jaccard >= 0.2
-          |), edges AS (
-          |  SELECT a_id AS src, b_id AS dst FROM pairs
-          |  UNION ALL SELECT b_id, a_id FROM pairs
-          |), reach(id, r) AS (
-          |  SELECT doc_id, doc_id FROM documents WHERE doc_id < 500
-          |  UNION
-          |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id
-          |), lab AS (
-          |  SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id
-          |), sz AS (
-          |  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-          |  FROM lab GROUP BY cluster_id
-          |)
+        s"""$cappedJaccardComponentCtes
           |SELECT lab.doc_id, lab.cluster_id, sz.cluster_size
           |FROM lab JOIN sz USING (cluster_id)
           |ORDER BY doc_id""".stripMargin)),
@@ -536,18 +639,12 @@ object DedupKeys {
           col("c.end_pos").as("end_pos"))
         .orderBy("doc_id", "chunk_id"),
       Some(
-        """WITH sh AS (
+        s"""WITH sh AS (
           |  SELECT doc_id, CASE WHEN len(sp) < 4 THEN [text]
           |    ELSE list_transform(range(1, len(sp) - 2),
           |      i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3]) END AS sh
           |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp FROM documents) d),
-          |hs AS (SELECT doc_id, list_transform(sh, g ->
-          |    list_reduce(list_prepend(CAST(7 AS BIGINT),
-          |      list_transform(range(1, length(g)+1), i -> CAST(unicode(g[i]) AS BIGINT))),
-          |      (a, c) -> (a * 131 + c) % 1000000007)) AS hl FROM sh),
-          |p AS (SELECT doc_id, u.pos AS pos, u.h AS h FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(hl)+1),
-          |      i -> {'pos': i - 1, 'h': hl[i]})) AS u FROM hs)),
+          |$shingleHashCtes,
           |c AS (SELECT doc_id, pos,
           |    SUM(CASE WHEN h % 16 = 0 THEN 1 ELSE 0 END)
           |      OVER (PARTITION BY doc_id ORDER BY pos) AS chunk_id FROM p)
@@ -588,27 +685,7 @@ object DedupKeys {
           .orderBy("thresh")
       },
       Some(
-        """WITH sh AS (
-          |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
-          |    ELSE list_transform(range(1, len(sp)-1), i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2]) END) AS sh
-          |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp FROM documents WHERE doc_id < 500) d
-          |), hs AS (
-          |  SELECT doc_id, sh, list_transform(sh, g ->
-          |    list_reduce(list_prepend(CAST(7 AS BIGINT),
-          |      list_transform(range(1, length(g)+1), i -> CAST(unicode(g[i]) AS BIGINT))),
-          |      (acc, c) -> (acc * 131 + c) % 1000000007)) AS hs
-          |  FROM sh
-          |), sig AS (
-          |  SELECT doc_id, sh, list_transform(range(20), i ->
-          |    list_min(list_transform(hs, h ->
-          |      (((i+1) * 2654435761 % 1000000007) * h + ((i+1) * 40503 + 17) % 1000000007) % 1000000007))) AS sig
-          |  FROM hs
-          |), bands AS (
-          |  SELECT doc_id, b, sig[b*4+1 : b*4+4] AS key FROM sig, range(5) t(b)
-          |), cand AS (
-          |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-          |  FROM bands a JOIN bands b ON a.b = b.b AND a.key = b.key AND a.doc_id < b.doc_id
-          |), ex AS (
+        s"""WITH ${minhashCandCtes(" FROM documents WHERE doc_id < 500")}, ex AS (
           |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
           |    ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
           |      (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS j
@@ -666,46 +743,14 @@ object DedupKeys {
         Dedup.clusters(s, docs, repPairs.unionAll(starEdges))
       },
       Some(
-        """WITH RECURSIVE sh AS (
-          |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
-          |    ELSE list_transform(range(1, len(sp)-1), i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2]) END) AS sh
-          |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp FROM documents) d
-          |), hs AS (
-          |  SELECT doc_id, sh, list_transform(sh, g ->
-          |    list_reduce(list_prepend(CAST(7 AS BIGINT),
-          |      list_transform(range(1, length(g)+1), i -> CAST(unicode(g[i]) AS BIGINT))),
-          |      (acc, c) -> (acc * 131 + c) % 1000000007)) AS hs
-          |  FROM sh
-          |), sig AS (
-          |  SELECT doc_id, sh, list_transform(range(20), i ->
-          |    list_min(list_transform(hs, h ->
-          |      (((i+1) * 2654435761 % 1000000007) * h + ((i+1) * 40503 + 17) % 1000000007) % 1000000007))) AS sig
-          |  FROM hs
-          |), bands AS (
-          |  SELECT doc_id, b, sig[b*4+1 : b*4+4] AS key FROM sig, range(5) t(b)
-          |), cand AS (
-          |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-          |  FROM bands a JOIN bands b ON a.b = b.b AND a.key = b.key AND a.doc_id < b.doc_id
-          |), pairs AS (
+        s"""WITH RECURSIVE ${minhashCandCtes(" FROM documents")}, pairs AS (
           |  SELECT a_id, b_id FROM (
           |    SELECT c.a_id, c.b_id,
           |      ROUND(CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE) /
           |        (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))), 6) AS jaccard
           |    FROM cand c JOIN sig x ON x.doc_id = c.a_id JOIN sig y ON y.doc_id = c.b_id) v
           |  WHERE jaccard >= 0.2
-          |), edges AS (
-          |  SELECT a_id AS src, b_id AS dst FROM pairs
-          |  UNION ALL SELECT b_id, a_id FROM pairs
-          |), reach(id, r) AS (
-          |  SELECT doc_id, doc_id FROM documents
-          |  UNION
-          |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id
-          |), lab AS (
-          |  SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id
-          |), sz AS (
-          |  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-          |  FROM lab GROUP BY cluster_id
-          |)
+          |), ${componentCtes("")}
           |SELECT lab.doc_id, lab.cluster_id, sz.cluster_size
           |FROM lab JOIN sz USING (cluster_id)
           |ORDER BY doc_id""".stripMargin)),
@@ -736,31 +781,7 @@ object DedupKeys {
           .orderBy("cluster_id")
       },
       Some(
-        s"""WITH RECURSIVE sh AS (
-          |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
-          |    ELSE list_transform(range(1, len(sp)-1), i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2]) END) AS sh
-          |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp
-          |        FROM documents WHERE doc_id < 500) d
-          |), pairs AS (
-          |  SELECT a_id, b_id FROM (
-          |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-          |      ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-          |        (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-          |    FROM sh a, sh b WHERE a.doc_id < b.doc_id) j
-          |  WHERE jaccard >= 0.2
-          |), edges AS (
-          |  SELECT a_id AS src, b_id AS dst FROM pairs
-          |  UNION ALL SELECT b_id, a_id FROM pairs
-          |), reach(id, r) AS (
-          |  SELECT doc_id, doc_id FROM documents WHERE doc_id < 500
-          |  UNION
-          |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id
-          |), lab AS (
-          |  SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id
-          |), sz AS (
-          |  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-          |  FROM lab GROUP BY cluster_id
-          |), q AS (
+        s"""$cappedJaccardComponentCtes, q AS (
           |  SELECT doc_id,
           |    CAST(${graft.ext.TextAnalysis.qualityMicrosSql("sp")} AS DOUBLE) / 1000000 AS quality
           |  FROM (SELECT doc_id, string_split(text, ' ') AS sp FROM documents WHERE doc_id < 500) d
@@ -784,15 +805,7 @@ object DedupKeys {
       (s, dir) => Dedup.exactContainment(t(s, dir, "documents"),
         shingleW = 3, threshold = 0.5, idCap = 500),
       Some(
-        """WITH sh AS (
-          |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
-          |    ELSE list_transform(range(1, len(sp)-1), i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2]) END) AS sh
-          |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp FROM documents WHERE doc_id < 500) d
-          |), pairs AS (
-          |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-          |    len(list_intersect(a.sh, b.sh)) AS inter, len(a.sh) AS na, len(b.sh) AS nb
-          |  FROM sh a, sh b WHERE a.doc_id < b.doc_id
-          |)
+        s"""$cappedOverlapCtes
           |SELECT a_id, b_id, containment FROM (
           |  SELECT a_id, b_id,
           |    (CAST(((2000000::HUGEINT * inter + LEAST(na, nb)) // (2::HUGEINT * LEAST(na, nb))) AS DOUBLE) / 1000000) AS containment
@@ -820,12 +833,7 @@ object DedupKeys {
           threshold = 0.9)
       },
       Some(
-        s"""$assignCtes,
-           |p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-           |    ROUND(list_sum(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i])) /
-           |      (sqrt(list_sum(list_transform(a.v, x -> x*x))) * sqrt(list_sum(list_transform(b.v, x -> x*x)))), 6) AS cos
-           |  FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
-           |d AS (SELECT DISTINCT b_id FROM p WHERE cos >= 0.9)
+        s"""$semanticDupCtes
            |SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_vecs,
            |  CAST(SUM(CASE WHEN d.b_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
            |  CAST(COUNT(*) - SUM(CASE WHEN d.b_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
@@ -1029,45 +1037,7 @@ object DedupKeys {
         graft.ext.Winnow.matchSpans(t(s, dir, "documents"))
           .orderBy("a_id", "b_id", "a_start", "b_start"),
       Some(
-        """WITH sp AS (SELECT doc_id, source, text, string_split(text, ' ') AS sp
-          |  FROM documents),
-          |sh AS (SELECT doc_id, CASE WHEN len(sp) < 4 THEN [text]
-          |    ELSE list_transform(range(1, len(sp) - 2),
-          |      i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3]) END AS sh
-          |  FROM sp),
-          |hs AS (SELECT doc_id, list_transform(sh, g ->
-          |    list_reduce(list_prepend(CAST(7 AS BIGINT),
-          |      list_transform(range(1, length(g)+1), i -> CAST(unicode(g[i]) AS BIGINT))),
-          |      (a, c) -> (a * 131 + c) % 1000000007)) AS hl FROM sh),
-          |p AS (SELECT doc_id, u.pos AS pos, u.h AS h FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(hl)+1),
-          |      i -> {'pos': i - 1, 'h': hl[i]})) AS u FROM hs)),
-          |wn AS (SELECT doc_id, pos, h,
-          |    COUNT(*) OVER (PARTITION BY doc_id) AS n,
-          |    MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-          |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin FROM p),
-          |fp AS (SELECT DISTINCT doc_id, wmin AS fp FROM wn
-          |  WHERE pos <= GREATEST(0, n - 4)),
-          |ok AS (SELECT fp FROM fp GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND 16),
-          |pairs AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-          |  FROM fp a JOIN ok USING (fp) JOIN fp b USING (fp)
-          |  WHERE a.doc_id < b.doc_id),
-          |g0 AS (SELECT doc_id, list_transform(range(1, len(sp) - 2),
-          |    i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3]) AS gs
-          |  FROM sp WHERE len(sp) >= 7),
-          |grams AS (SELECT doc_id, u.p AS p, u.g AS g FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(gs)+1),
-          |      i -> {'p': i - 1, 'g': gs[i]})) AS u FROM g0)),
-          |pts AS (SELECT pr.a_id, pr.b_id, ga.p AS pa, gb.p AS pb
-          |  FROM pairs pr
-          |  JOIN grams ga ON ga.doc_id = pr.a_id
-          |  JOIN grams gb ON gb.doc_id = pr.b_id AND gb.g = ga.g),
-          |seg AS (SELECT a_id, b_id, pb - pa AS diag, pa, pb,
-          |    CASE WHEN pa - LAG(pa) OVER (PARTITION BY a_id, b_id, pb - pa
-          |      ORDER BY pa) = 1 THEN 0 ELSE 1 END AS brk FROM pts),
-          |seg2 AS (SELECT a_id, b_id, diag, pa, pb,
-          |    SUM(brk) OVER (PARTITION BY a_id, b_id, diag ORDER BY pa
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg FROM seg)
+        s"""$winnowSpanCtes
           |SELECT a_id, b_id, CAST(MIN(pa) AS INT) AS a_start,
           |  CAST(MIN(pb) AS INT) AS b_start,
           |  CAST(COUNT(*) + 3 AS BIGINT) AS run_tokens
@@ -1105,52 +1075,7 @@ object DedupKeys {
           .orderBy("doc_id")
       },
       Some(
-        """WITH sp AS (SELECT doc_id, source, text, string_split(text, ' ') AS sp
-          |  FROM documents),
-          |sh AS (SELECT doc_id, CASE WHEN len(sp) < 4 THEN [text]
-          |    ELSE list_transform(range(1, len(sp) - 2),
-          |      i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3]) END AS sh
-          |  FROM sp),
-          |hs AS (SELECT doc_id, list_transform(sh, g ->
-          |    list_reduce(list_prepend(CAST(7 AS BIGINT),
-          |      list_transform(range(1, length(g)+1), i -> CAST(unicode(g[i]) AS BIGINT))),
-          |      (a, c) -> (a * 131 + c) % 1000000007)) AS hl FROM sh),
-          |p AS (SELECT doc_id, u.pos AS pos, u.h AS h FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(hl)+1),
-          |      i -> {'pos': i - 1, 'h': hl[i]})) AS u FROM hs)),
-          |wn AS (SELECT doc_id, pos, h,
-          |    COUNT(*) OVER (PARTITION BY doc_id) AS n,
-          |    MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-          |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin FROM p),
-          |fp AS (SELECT DISTINCT doc_id, wmin AS fp FROM wn
-          |  WHERE pos <= GREATEST(0, n - 4)),
-          |ok AS (SELECT fp FROM fp GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND 16),
-          |pairs AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-          |  FROM fp a JOIN ok USING (fp) JOIN fp b USING (fp)
-          |  WHERE a.doc_id < b.doc_id),
-          |g0 AS (SELECT doc_id, list_transform(range(1, len(sp) - 2),
-          |    i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3]) AS gs
-          |  FROM sp WHERE len(sp) >= 7),
-          |grams AS (SELECT doc_id, u.p AS p, u.g AS g FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(gs)+1),
-          |      i -> {'p': i - 1, 'g': gs[i]})) AS u FROM g0)),
-          |pts AS (SELECT pr.a_id, pr.b_id, ga.p AS pa, gb.p AS pb
-          |  FROM pairs pr
-          |  JOIN grams ga ON ga.doc_id = pr.a_id
-          |  JOIN grams gb ON gb.doc_id = pr.b_id AND gb.g = ga.g),
-          |seg AS (SELECT a_id, b_id, pb - pa AS diag, pa, pb,
-          |    CASE WHEN pa - LAG(pa) OVER (PARTITION BY a_id, b_id, pb - pa
-          |      ORDER BY pa) = 1 THEN 0 ELSE 1 END AS brk FROM pts),
-          |seg2 AS (SELECT a_id, b_id, diag, pa, pb,
-          |    SUM(brk) OVER (PARTITION BY a_id, b_id, diag ORDER BY pa
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg FROM seg),
-          |runs AS (SELECT a_id, b_id, MIN(pa) AS a_start, MIN(pb) AS b_start,
-          |    COUNT(*) + 3 AS run_tokens
-          |  FROM seg2 GROUP BY a_id, b_id, diag, seg
-          |  HAVING COUNT(*) + 3 >= 7),
-          |cov AS (SELECT DISTINCT doc_id, pos FROM (
-          |    SELECT b_id AS doc_id,
-          |      unnest(range(b_start, b_start + run_tokens)) AS pos FROM runs)),
+        s"""$coveredPositionCtes,
           |cc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup
           |  FROM cov GROUP BY doc_id),
           |tk AS (SELECT doc_id,
@@ -1158,10 +1083,7 @@ object DedupKeys {
           |SELECT tk.doc_id AS doc_id, n_tok,
           |  CAST(COALESCE(n_dup, 0) AS BIGINT) AS n_dup_tokens,
           |  CAST(n_tok - COALESCE(n_dup, 0) AS BIGINT) AS n_keep,
-          |  """.stripMargin +
-        graft.ext.ExactMath.ratioRoundedSql(
-          "n_tok - COALESCE(n_dup, 0)", "n_tok", 6) +
-        """ AS keep_ratio
+          |  ${ExactMath.ratioRoundedSql("n_tok - COALESCE(n_dup, 0)", "n_tok", 6)} AS keep_ratio
           |FROM tk LEFT JOIN cc ON tk.doc_id = cc.doc_id
           |ORDER BY doc_id""".stripMargin)),
 
@@ -1207,52 +1129,7 @@ object DedupKeys {
           .orderBy("doc_id")
       },
       Some(
-        """WITH sp AS (SELECT doc_id, source, text, string_split(text, ' ') AS sp
-          |  FROM documents),
-          |sh AS (SELECT doc_id, CASE WHEN len(sp) < 4 THEN [text]
-          |    ELSE list_transform(range(1, len(sp) - 2),
-          |      i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3]) END AS sh
-          |  FROM sp),
-          |hs AS (SELECT doc_id, list_transform(sh, g ->
-          |    list_reduce(list_prepend(CAST(7 AS BIGINT),
-          |      list_transform(range(1, length(g)+1), i -> CAST(unicode(g[i]) AS BIGINT))),
-          |      (a, c) -> (a * 131 + c) % 1000000007)) AS hl FROM sh),
-          |p AS (SELECT doc_id, u.pos AS pos, u.h AS h FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(hl)+1),
-          |      i -> {'pos': i - 1, 'h': hl[i]})) AS u FROM hs)),
-          |wn AS (SELECT doc_id, pos, h,
-          |    COUNT(*) OVER (PARTITION BY doc_id) AS n,
-          |    MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-          |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin FROM p),
-          |fp AS (SELECT DISTINCT doc_id, wmin AS fp FROM wn
-          |  WHERE pos <= GREATEST(0, n - 4)),
-          |ok AS (SELECT fp FROM fp GROUP BY fp HAVING COUNT(*) BETWEEN 2 AND 16),
-          |pairs AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-          |  FROM fp a JOIN ok USING (fp) JOIN fp b USING (fp)
-          |  WHERE a.doc_id < b.doc_id),
-          |g0 AS (SELECT doc_id, list_transform(range(1, len(sp) - 2),
-          |    i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2] || ' ' || sp[i+3]) AS gs
-          |  FROM sp WHERE len(sp) >= 7),
-          |grams AS (SELECT doc_id, u.p AS p, u.g AS g FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(gs)+1),
-          |      i -> {'p': i - 1, 'g': gs[i]})) AS u FROM g0)),
-          |pts AS (SELECT pr.a_id, pr.b_id, ga.p AS pa, gb.p AS pb
-          |  FROM pairs pr
-          |  JOIN grams ga ON ga.doc_id = pr.a_id
-          |  JOIN grams gb ON gb.doc_id = pr.b_id AND gb.g = ga.g),
-          |seg AS (SELECT a_id, b_id, pb - pa AS diag, pa, pb,
-          |    CASE WHEN pa - LAG(pa) OVER (PARTITION BY a_id, b_id, pb - pa
-          |      ORDER BY pa) = 1 THEN 0 ELSE 1 END AS brk FROM pts),
-          |seg2 AS (SELECT a_id, b_id, diag, pa, pb,
-          |    SUM(brk) OVER (PARTITION BY a_id, b_id, diag ORDER BY pa
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seg FROM seg),
-          |runs AS (SELECT a_id, b_id, MIN(pa) AS a_start, MIN(pb) AS b_start,
-          |    COUNT(*) + 3 AS run_tokens
-          |  FROM seg2 GROUP BY a_id, b_id, diag, seg
-          |  HAVING COUNT(*) + 3 >= 7),
-          |cov AS (SELECT DISTINCT doc_id, pos FROM (
-          |    SELECT b_id AS doc_id,
-          |      unnest(range(b_start, b_start + run_tokens)) AS pos FROM runs)),
+        s"""$coveredPositionCtes,
           |tok AS (SELECT doc_id, u.pos AS pos, u.tok AS tok FROM (
           |    SELECT doc_id, unnest(list_transform(range(1, len(sp)+1),
           |      i -> {'pos': i - 1, 'tok': sp[i]})) AS u FROM sp)),
@@ -1281,12 +1158,7 @@ object DedupKeys {
           threshold = 0.9)
       },
       Some(
-        s"""$assignCtes,
-           |p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-           |    ROUND(list_sum(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i])) /
-           |      (sqrt(list_sum(list_transform(a.v, x -> x*x))) * sqrt(list_sum(list_transform(b.v, x -> x*x)))), 6) AS cos
-           |  FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
-           |d AS (SELECT DISTINCT b_id FROM p WHERE cos >= 0.9)
+        s"""$semanticDupCtes
            |SELECT vec_id, cluster,
            |  CAST(CASE WHEN d.b_id IS NULL THEN 1 ELSE 0 END AS INT) AS kept
            |FROM asg LEFT JOIN d ON asg.vec_id = d.b_id
@@ -1312,7 +1184,7 @@ object DedupKeys {
           threshold = 0.9)
       },
       Some(
-        """WITH e AS (SELECT vec_id, v FROM (
+        s"""WITH e AS (SELECT vec_id, v FROM (
           |    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           |    FROM embeddings) raw
           |  WHERE list_sum(list_transform(v, x -> x*x)) > 0),
@@ -1336,8 +1208,7 @@ object DedupKeys {
           |        cent.ci) AS rk
           |    FROM b2, cent) r WHERE rk = 1),
           |p1 AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-          |    ROUND(list_sum(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i])) /
-          |      (sqrt(list_sum(list_transform(a.v, x -> x*x))) * sqrt(list_sum(list_transform(b.v, x -> x*x)))), 6) AS cos
+          |    $cosineAB
           |  FROM asg1 a JOIN asg1 b ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
           |d1 AS (SELECT DISTINCT b_id FROM p1 WHERE cos >= 0.9),
           |kept1 AS (SELECT asg1.vec_id, asg1.v, asg1.cluster
@@ -1369,22 +1240,7 @@ object DedupKeys {
           docs.where(expr("doc_id % 10 < 7")))
       },
       Some(
-        """WITH sh0 AS (
-          |  SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
-          |    ELSE list_transform(range(1, len(sp)-1), i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2]) END) AS sh
-          |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp FROM documents) d
-          |), hs AS (
-          |  SELECT doc_id, sh, list_transform(sh, g ->
-          |    list_reduce(list_prepend(CAST(7 AS BIGINT),
-          |      list_transform(range(1, length(g)+1), i -> CAST(unicode(g[i]) AS BIGINT))),
-          |      (acc, c) -> (acc * 131 + c) % 1000000007)) AS hs
-          |  FROM sh0
-          |), sig AS (
-          |  SELECT doc_id, sh, list_transform(range(20), i ->
-          |    list_min(list_transform(hs, h ->
-          |      (((i+1) * 2654435761 % 1000000007) * h + ((i+1) * 40503 + 17) % 1000000007) % 1000000007))) AS sig
-          |  FROM hs
-          |), bsig AS (SELECT * FROM sig WHERE doc_id % 10 < 7),
+        s"""WITH ${minhashSigCtes("sh0", " FROM documents")}, bsig AS (SELECT * FROM sig WHERE doc_id % 10 < 7),
           |nsig AS (SELECT * FROM sig WHERE doc_id % 10 >= 7),
           |bb AS (SELECT doc_id, b, sig[b*4+1 : b*4+4] AS key FROM bsig, range(5) t(b)),
           |bc AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
@@ -1417,9 +1273,7 @@ object DedupKeys {
       (s, dir) => decontaminateEval(t(s, dir, "documents"),
         evalMod = 3L, flagAt = 0.5),
       Some(
-        s"""WITH sh0 AS (SELECT doc_id, list_distinct(CASE WHEN len(sp) < 3 THEN [text]
-          |    ELSE list_transform(range(1, len(sp)-1), i -> sp[i] || ' ' || sp[i+1] || ' ' || sp[i+2]) END) AS sh
-          |  FROM (SELECT doc_id, text, string_split(text, ' ') AS sp FROM documents) d),
+        s"""WITH sh0 AS (${shingleSets(" FROM documents")}),
           |ex AS (SELECT doc_id, unnest(sh) AS g FROM sh0),
           |ev AS (SELECT DISTINCT g FROM ex WHERE doc_id % 10 = 3),
           |a AS (SELECT doc_id, COUNT(*) AS n_shingles,

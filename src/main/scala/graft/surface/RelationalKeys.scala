@@ -20,6 +20,30 @@ object RelationalKeys {
     sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast("decimal(18,4)"))
   private val revSql = "SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)))"
 
+  /** Oracle FROM clause of the Q7/Q8 spine: supplier ⋈ lineitem ⋈ orders ⋈
+    * customer, with supplier nation `n1` and customer nation `n2`. */
+  private val supplierCustomerJoins: String =
+    """  FROM supplier JOIN lineitem ON s_suppkey = l_suppkey
+      |    JOIN orders ON l_orderkey = o_orderkey
+      |    JOIN customer ON o_custkey = c_custkey
+      |    JOIN nation n1 ON s_nationkey = n1.n_nationkey
+      |    JOIN nation n2 ON c_nationkey = n2.n_nationkey""".stripMargin
+
+  /** The median/MAD outlier oracle of `anomaly_mad`, with `extraCols`
+    * appended to its select list. */
+  private def madOracle(extraCols: String): String =
+    s"""WITH m AS (SELECT event_type, median(value) AS med
+       |           FROM events GROUP BY 1),
+       |s AS (SELECT e.event_type, MAX(m.med) AS med,
+       |        median(abs(e.value - m.med)) AS mad
+       |      FROM events e JOIN m USING (event_type) GROUP BY 1)
+       |SELECT e.event_type, ROUND(MAX(s.med), 6) AS med_r,
+       |  ROUND(MAX(s.mad), 6) AS mad_r,
+       |  CAST(SUM(CASE WHEN abs(e.value - s.med) > 3 * 1.4826 * s.mad
+       |       THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers$extraCols
+       |FROM events e JOIN s USING (event_type)
+       |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin
+
   val specs: Seq[QSpec] = Seq(
 
     QSpec("limit_probe",
@@ -1372,11 +1396,7 @@ object RelationalKeys {
            |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            |    CAST(year(l_shipdate) AS INT) AS l_year,
            |    l_extendedprice, l_discount
-           |  FROM supplier JOIN lineitem ON s_suppkey = l_suppkey
-           |    JOIN orders ON l_orderkey = o_orderkey
-           |    JOIN customer ON o_custkey = c_custkey
-           |    JOIN nation n1 ON s_nationkey = n1.n_nationkey
-           |    JOIN nation n2 ON c_nationkey = n2.n_nationkey
+           |$supplierCustomerJoins
            |  WHERE (n1.n_name = 'NATION_0' AND n2.n_name = 'NATION_1')
            |     OR (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_0')) v
            |GROUP BY supp_nation, cust_nation, l_year
@@ -1433,11 +1453,7 @@ object RelationalKeys {
            |  SELECT n1.n_name AS supp_nation,
            |    CAST(year(o_orderdate) AS INT) AS o_year,
            |    l_extendedprice, l_discount
-           |  FROM supplier JOIN lineitem ON s_suppkey = l_suppkey
-           |    JOIN orders ON l_orderkey = o_orderkey
-           |    JOIN customer ON o_custkey = c_custkey
-           |    JOIN nation n1 ON s_nationkey = n1.n_nationkey
-           |    JOIN nation n2 ON c_nationkey = n2.n_nationkey
+           |$supplierCustomerJoins
            |    JOIN region ON n2.n_regionkey = r_regionkey
            |  WHERE r_name = 'ASIA') v
            |GROUP BY o_year ORDER BY o_year""".stripMargin)),
@@ -1742,18 +1758,7 @@ object RelationalKeys {
               .otherwise(0L)).as("n_outliers"))
           .orderBy("event_type")
       },
-      Some(
-        """WITH m AS (SELECT event_type, median(value) AS med
-          |           FROM events GROUP BY 1),
-          |s AS (SELECT e.event_type, MAX(m.med) AS med,
-          |        median(abs(e.value - m.med)) AS mad
-          |      FROM events e JOIN m USING (event_type) GROUP BY 1)
-          |SELECT e.event_type, ROUND(MAX(s.med), 6) AS med_r,
-          |  ROUND(MAX(s.mad), 6) AS mad_r,
-          |  CAST(SUM(CASE WHEN abs(e.value - s.med) > 3 * 1.4826 * s.mad
-          |       THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-          |FROM events e JOIN s USING (event_type)
-          |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin)),
+      Some(madOracle(""))),
 
     QSpec("anomaly_mad_approx",
       // The 100 TB form of anomaly_mad: the same three-pass median+MAD
@@ -1813,20 +1818,9 @@ object RelationalKeys {
               .as("outliers_within_5pct"))
           .orderBy("event_type")
       },
-      Some(
-        """WITH m AS (SELECT event_type, median(value) AS med
-          |           FROM events GROUP BY 1),
-          |s AS (SELECT e.event_type, MAX(m.med) AS med,
-          |        median(abs(e.value - m.med)) AS mad
-          |      FROM events e JOIN m USING (event_type) GROUP BY 1)
-          |SELECT e.event_type, ROUND(MAX(s.med), 6) AS med_r,
-          |  ROUND(MAX(s.mad), 6) AS mad_r,
-          |  CAST(SUM(CASE WHEN abs(e.value - s.med) > 3 * 1.4826 * s.mad
-          |       THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
+      Some(madOracle(""",
           |  TRUE AS amed_within_1pct, TRUE AS amad_within_2pct,
-          |  TRUE AS outliers_within_5pct
-          |FROM events e JOIN s USING (event_type)
-          |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin)),
+          |  TRUE AS outliers_within_5pct""".stripMargin))),
 
     QSpec("cdc_merge_upsert",
       // The lakehouse MERGE shape: apply a keyed change log latest-wins.

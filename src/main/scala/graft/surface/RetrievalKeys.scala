@@ -14,6 +14,32 @@ import org.apache.spark.sql.functions._
   */
 object RetrievalKeys {
 
+  /** Oracle CTE chain of [[SimSearch.annSelfJoin]]'s band buckets: the
+    * corpus-scaled plane count `params`, the nonzero-norm vectors `n`
+    * (vec_id, v, nrm) and each vector's sign-pattern bucket per band `bk`. */
+  private val annBucketCtes: String =
+    """WITH params AS (SELECT GREATEST(8, LEAST(30, CAST(ceil(log2(GREATEST(CAST(ceil(count(*) / 8.0) AS BIGINT), 1))) AS INT))) AS r FROM embeddings),
+      |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e
+      |      WHERE list_sum(list_transform(v, x -> x*x)) > 0),
+      |bk AS (SELECT vec_id, band,
+      |  CAST(list_sum(list_transform(range(r), j -> CASE WHEN
+      |    list_sum(list_transform(range(len(v)), i -> v[i+1] * CAST((i*2654435761 + (band*r+j)*2246822519 + i*(band*r+j)*3266489917) % 1000 - 500 AS DOUBLE))) >= 0
+      |    THEN (1 << j) ELSE 0 END)) AS INT) AS bucket
+      |  FROM n, params, range(8) bs(band))""".stripMargin
+
+  /** Oracle CTEs of [[SimSearch.ivfTopK]]: the nearest-centroid
+    * assignment `asg` of `n` to `cent` (low-index tie-break) and the query
+    * row `q` (vec_id 0). */
+  private val ivfAssignCtes: String =
+    """asg AS (
+      |  SELECT vec_id, v, nrm, ci AS cluster FROM (
+      |    SELECT n.vec_id, n.v, n.nrm, cent.ci,
+      |      row_number() OVER (PARTITION BY n.vec_id ORDER BY
+      |        list_sum(list_transform(range(len(n.v)), i -> n.v[i+1]*cent.cv[i+1])) * -2.0 + cent.c2, cent.ci) AS rk
+      |    FROM n, cent) r WHERE rk = 1),
+      |q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 0)""".stripMargin
+
   val specs: Seq[QSpec] = Seq(
 
     QSpec("simsearch_topk",
@@ -40,15 +66,7 @@ object RetrievalKeys {
           nBands = SimSearch.annBands, threshold = 0.25)
       },
       Some(
-        """WITH params AS (SELECT GREATEST(8, LEAST(30, CAST(ceil(log2(GREATEST(CAST(ceil(count(*) / 8.0) AS BIGINT), 1))) AS INT))) AS r FROM embeddings),
-          |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-          |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e
-          |      WHERE list_sum(list_transform(v, x -> x*x)) > 0),
-          |bk AS (SELECT vec_id, band,
-          |  CAST(list_sum(list_transform(range(r), j -> CASE WHEN
-          |    list_sum(list_transform(range(len(v)), i -> v[i+1] * CAST((i*2654435761 + (band*r+j)*2246822519 + i*(band*r+j)*3266489917) % 1000 - 500 AS DOUBLE))) >= 0
-          |    THEN (1 << j) ELSE 0 END)) AS INT) AS bucket
-          |  FROM n, params, range(8) bs(band)),
+        s"""$annBucketCtes,
           |cand AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
           |  FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
           |SELECT a_id, b_id, cos FROM (
@@ -63,13 +81,9 @@ object RetrievalKeys {
       (s, dir) => SimSearch.exactSelfJoin(s, t(s, dir, "embeddings"), threshold = 0.30,
         idCap = Some(500L)),
       Some(
-        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           |  FROM embeddings WHERE vec_id < 500),
-          |p AS (
-          |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-          |    ROUND(list_sum(list_transform(range(1, len(a.v)+1), i -> a.v[i]*b.v[i])) /
-          |      (sqrt(list_sum(list_transform(a.v, x -> x*x))) * sqrt(list_sum(list_transform(b.v, x -> x*x)))), 6) AS cos
-          |  FROM e a, e b WHERE a.vec_id < b.vec_id)
+          |$cosinePairCte
           |SELECT a_id, b_id, cos FROM p WHERE cos >= 0.30 ORDER BY a_id, b_id""".stripMargin)),
 
     QSpec("simsearch_ivf",
@@ -80,18 +94,12 @@ object RetrievalKeys {
       (s, dir) => SimSearch.ivfTopK(s, t(s, dir, "embeddings"),
         queryVecId = 0, k = 10, nCentroids = 16, nProbe = 4),
       Some(
-        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+        s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
           |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e),
           |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, v AS cv,
           |         list_sum(list_transform(v, x -> x*x)) AS c2
           |         FROM n ORDER BY vec_id LIMIT 16),
-          |asg AS (
-          |  SELECT vec_id, v, nrm, ci AS cluster FROM (
-          |    SELECT n.vec_id, n.v, n.nrm, cent.ci,
-          |      row_number() OVER (PARTITION BY n.vec_id ORDER BY
-          |        list_sum(list_transform(range(len(n.v)), i -> n.v[i+1]*cent.cv[i+1])) * -2.0 + cent.c2, cent.ci) AS rk
-          |    FROM n, cent) r WHERE rk = 1),
-          |q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 0),
+          |$ivfAssignCtes,
           |probes AS (SELECT cent.ci FROM cent, q
           |           ORDER BY list_sum(list_transform(range(len(qv)), i -> (cent.cv[i+1]-qv[i+1])*(cent.cv[i+1]-qv[i+1]))), cent.ci
           |           LIMIT 4)
@@ -283,15 +291,7 @@ object RetrievalKeys {
              |    150000 + (850 * c.contrib) // 1000 AS rank
              |  FROM dg JOIN (SELECT ed.d AS id, SUM(r.rank // r.deg) AS contrib
              |    FROM ed JOIN $prev r ON ed.s = r.id GROUP BY ed.d) c ON dg.s = c.id)""".stripMargin
-        s"""WITH params AS (SELECT GREATEST(8, LEAST(30, CAST(ceil(log2(GREATEST(CAST(ceil(count(*) / 8.0) AS BIGINT), 1))) AS INT))) AS r FROM embeddings),
-           |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-           |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e
-           |      WHERE list_sum(list_transform(v, x -> x*x)) > 0),
-           |bk AS (SELECT vec_id, band,
-           |  CAST(list_sum(list_transform(range(r), j -> CASE WHEN
-           |    list_sum(list_transform(range(len(v)), i -> v[i+1] * CAST((i*2654435761 + (band*r+j)*2246822519 + i*(band*r+j)*3266489917) % 1000 - 500 AS DOUBLE))) >= 0
-           |    THEN (1 << j) ELSE 0 END)) AS INT) AS bucket
-           |  FROM n, params, range(8) bs(band)),
+        s"""$annBucketCtes,
            |cd AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
            |  FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
            |pr AS (SELECT a_id, b_id FROM (
@@ -389,17 +389,11 @@ object RetrievalKeys {
           .orderBy("n_probe")
       },
       Some(
-        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+        s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
           |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM e),
           |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, v AS cv,
           |         list_sum(list_transform(v, x -> x*x)) AS c2 FROM n ORDER BY vec_id LIMIT 16),
-          |asg AS (
-          |  SELECT vec_id, v, nrm, ci AS cluster FROM (
-          |    SELECT n.vec_id, n.v, n.nrm, cent.ci,
-          |      row_number() OVER (PARTITION BY n.vec_id ORDER BY
-          |        list_sum(list_transform(range(len(n.v)), i -> n.v[i+1]*cent.cv[i+1])) * -2.0 + cent.c2, cent.ci) AS rk
-          |    FROM n, cent) r WHERE rk = 1),
-          |q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 0),
+          |$ivfAssignCtes,
           |pr AS (SELECT unnest([2, 4]) AS n_probe),
           |ranked AS (
           |  SELECT cent.ci, row_number() OVER (ORDER BY

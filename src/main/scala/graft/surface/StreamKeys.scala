@@ -128,13 +128,7 @@ object StreamKeys {
            |m AS (SELECT source, n_email + n_ipv4 + n_phone AS n_red,
            |    string_split(text, ' ') AS sp, n_chars FROM s3),
            |r AS (SELECT source, n_red,
-           |    CAST(len(sp) AS BIGINT) AS n,
-           |    CAST(n_chars - (len(sp) - 1) AS BIGINT) AS ch,
-           |    CAST(len(list_filter(sp, t -> t = 'the' OR t = 'a')) AS BIGINT) AS st,
-           |    CAST(CASE WHEN len(sp) >= 2 THEN len(sp) - 1 ELSE 0 END AS BIGINT) AS tbi,
-           |    CAST(CASE WHEN len(sp) >= 2 THEN len(list_distinct(
-           |        list_transform(range(1, len(sp)), i -> sp[i] || ' ' || sp[i+1])))
-           |      ELSE 0 END AS BIGINT) AS dbi
+           |    $gopherCounts
            |  FROM m),
            |q AS (SELECT source, n_red,
            |    CASE WHEN n BETWEEN 20 AND 90 AND ch >= 3 * n AND ch <= 5 * n

@@ -43,6 +43,18 @@ object TextKeys {
       .select(col("source"), col("n_tokens"), col("w_micros"), col("alloc_tokens"))
   }
 
+  /** Oracle CTEs of [[mixtureAllocPlan]]'s weights: per-source tokens `ps`,
+    * their max `mx`, the sqrt weights in micros `w`, and the totals `t`. */
+  private val mixtureWeightCtes: String =
+    """ps AS (SELECT source, CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+      |  FROM documents GROUP BY source),
+      |mx AS (SELECT MAX(n_tokens) AS max_tokens FROM ps),
+      |w AS (SELECT source, n_tokens,
+      |    CAST(ROUND(sqrt(CAST(n_tokens AS DOUBLE) / max_tokens) * 1000000) AS BIGINT) AS w_micros
+      |  FROM ps, mx),
+      |t AS (SELECT CAST(SUM(w_micros) AS BIGINT) AS sum_w,
+      |    CAST(SUM(n_tokens) AS BIGINT) AS total_tok FROM w)""".stripMargin
+
   /** Chained-CTE replay of [[graft.ext.QualityModel]]'s feature build and
     * canonical training schedule (d → f → w0 → … → w12) — shared by the
     * `doc_quality_logreg` and `quality_calibration` oracles so the two
@@ -1065,14 +1077,7 @@ object TextKeys {
           .orderBy("source")
       },
       Some(
-        s"""WITH ps AS (SELECT source, CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-           |  FROM documents GROUP BY source),
-           |mx AS (SELECT MAX(n_tokens) AS max_tokens FROM ps),
-           |w AS (SELECT source, n_tokens,
-           |    CAST(ROUND(sqrt(CAST(n_tokens AS DOUBLE) / max_tokens) * 1000000) AS BIGINT) AS w_micros
-           |  FROM ps, mx),
-           |t AS (SELECT CAST(SUM(w_micros) AS BIGINT) AS sum_w,
-           |    CAST(SUM(n_tokens) AS BIGINT) AS total_tok FROM w),
+        s"""WITH $mixtureWeightCtes,
            |a AS (SELECT source, n_tokens, w_micros,
            |    CAST(${ExactMath.ratioRoundedSql("2::HUGEINT * total_tok * w_micros", "sum_w", 0)} AS BIGINT) AS alloc_tokens
            |  FROM w, t)
@@ -1859,13 +1864,7 @@ object TextKeys {
       Some(
         s"""WITH s AS (SELECT source, n_chars, string_split(text, ' ') AS sp FROM documents),
            |m AS (SELECT source,
-           |    CAST(len(sp) AS BIGINT) AS n,
-           |    CAST(n_chars - (len(sp) - 1) AS BIGINT) AS ch,
-           |    CAST(len(list_filter(sp, t -> t = 'the' OR t = 'a')) AS BIGINT) AS st,
-           |    CAST(CASE WHEN len(sp) >= 2 THEN len(sp) - 1 ELSE 0 END AS BIGINT) AS tbi,
-           |    CAST(CASE WHEN len(sp) >= 2 THEN len(list_distinct(
-           |        list_transform(range(1, len(sp)), i -> sp[i] || ' ' || sp[i+1])))
-           |      ELSE 0 END AS BIGINT) AS dbi
+           |    $gopherCounts
            |  FROM s),
            |r AS (SELECT source,
            |    CASE WHEN n BETWEEN 20 AND 90 THEN 1 ELSE 0 END AS r1,
@@ -1990,14 +1989,7 @@ object TextKeys {
           .orderBy("source")
       },
       Some(ExactMath.murmurCte("documents", "doc_id", 42) +
-        s""", ps AS (SELECT source, CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-           |  FROM documents GROUP BY source),
-           |mx AS (SELECT MAX(n_tokens) AS max_tokens FROM ps),
-           |w AS (SELECT source, n_tokens,
-           |    CAST(ROUND(sqrt(CAST(n_tokens AS DOUBLE) / max_tokens) * 1000000) AS BIGINT) AS w_micros
-           |  FROM ps, mx),
-           |t AS (SELECT CAST(SUM(w_micros) AS BIGINT) AS sum_w,
-           |    CAST(SUM(n_tokens) AS BIGINT) AS total_tok FROM w),
+        s""", $mixtureWeightCtes,
            |a AS (SELECT source, n_tokens,
            |    CAST(${ExactMath.ratioRoundedSql("2::HUGEINT * total_tok * w_micros", "sum_w", 0)} AS BIGINT) AS alloc_tokens
            |  FROM w, t),

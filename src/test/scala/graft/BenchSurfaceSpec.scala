@@ -25,6 +25,16 @@ class BenchSurfaceSpec extends SparkSpec {
     assert(orphans.isEmpty, s"oracle entries without a query: $orphans")
   }
 
+  // A shared oracle fragment placed in a """ string that lacks the `s`
+  // prefix would reach DuckDB as the literal text `$name` or `${...}`.
+  test("every oracle string is fully interpolated: no unexpanded fragment reference") {
+    val unexpanded = "\\$[{A-Za-z_]".r
+    val hits = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
+      unexpanded.findFirstIn(sql).map(m => s"$name: $m")
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   /** The 237 declared keys, sorted. */
   private val pinned: Seq[String] = Seq(
     "admission_gate", "agg_approx_distinct", "agg_collect_sorted", "agg_column_weight",
