@@ -1,8 +1,9 @@
 package graft.ext
 
 import graft.Memo
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
 /** X1/X2: document deduplication family for training-data pipelines.
   *
@@ -83,72 +84,49 @@ object Dedup {
       .select("doc_id", "dup_count")
 
   /** Word-shingle array (w consecutive tokens joined). opt-r15: runs as the
-    * one-pass codegen [[graft.functions.ShingleArray]] kernel — the former
+    * one-pass [[graft.functions.Shingler.shingleArray]] kernel — the former
     * `transform(sequence(…), i -> concat_ws(" ", slice(toks, i, w)))` form
     * evaluated the per-window lambda INTERPRETED (HOFs are CodegenFallback)
     * and allocated every window string; bit-identical (ShinglerSpec pins
     * the HOF form as the executable spec). */
-  def shingles(text: Column, w: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.ShingleArray(GraftColumnBridge.expression(text), w))
-  }
+  def shingles(text: Column, w: Int): Column =
+    shingler("shingleArray", ArrayType(StringType, containsNull = false), text, w)
 
   /** `array_distinct(shingles(text, w))` as one codegen pass (opt-r15). */
-  def distinctShingles(text: Column, w: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.DistinctShingles(GraftColumnBridge.expression(text), w))
-  }
+  def distinctShingles(text: Column, w: Int): Column =
+    shingler("distinctShingles", ArrayType(StringType, containsNull = false), text, w)
 
   /** `transform(array_distinct(shingles(text, w)), xxhash64)` as one
     * codegen pass — dedup on string identity, then one xxhash64 per
     * distinct window; no shingle strings ever materialize (opt-r15). */
-  def distinctShingleHashes(text: Column, w: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.DistinctShingleHashes(GraftColumnBridge.expression(text), w))
-  }
+  def distinctShingleHashes(text: Column, w: Int): Column =
+    shingler("distinctShingleHashes", ArrayType(LongType, containsNull = false), text, w)
 
   /** `transform(shingles(text, w), xxhash64)` — positional per-window
     * hashes for the winnowing verification frame (opt-r15). */
-  def shingleHashes64(text: Column, w: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.ShingleHashes(GraftColumnBridge.expression(text), w))
-  }
+  def shingleHashes64(text: Column, w: Int): Column =
+    shingler("shingleHashes", ArrayType(LongType, containsNull = false), text, w)
 
   /** `size(array_distinct(shingles(text, w)))` with zero materialization
     * (opt-r15; Gopher duplicate-bigram rule / repetition ratio). */
-  def distinctShingleCount(text: Column, w: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.DistinctShingleCount(GraftColumnBridge.expression(text), w))
-  }
+  def distinctShingleCount(text: Column, w: Int): Column =
+    shingler("distinctShingleCount", IntegerType, text, w)
 
-  /** MinHash signature: each shingle string is hashed ONCE to a 64-bit
-    * value; the k hash functions are cheap seeded re-mixes of that long
-    * (xxhash64(h, i)) — 10× cheaper than re-hashing the string k times,
-    * same LSH property. The k-minima pass runs as the codegen'd
-    * [[graft.functions.MinHashSig]] kernel (bit-identical to the former
-    * k-fold HOF form, one pass instead of k interpreted folds). */
-  def minhashSignature(sh: Column, k: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.MinHashSig(GraftColumnBridge.expression(sh), k))
-  }
+  /** `Shingler.fn(text, w)` — the shape every shingle kernel shares. */
+  private def shingler(fn: String, out: DataType, text: Column, w: Int): Column =
+    GraftColumnBridge.kernel(graft.functions.Shingler, fn, out,
+      text -> StringType, lit(w) -> IntegerType)
 
-  /** MinHash signature over the polynomial prime-field family — same
-    * codegen single-pass shape as [[minhashSignature]], but every step is
-    * plain modular arithmetic, so the DuckDB oracle replays the signature
-    * (and therefore the banding candidates and the final pair set) exactly.
-    * This is what upgrades `dedup_minhash` from a rows-only check to a full
-    * hash-compared oracle. */
-  def minhashPolySignature(sh: Column, k: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.MinHashPolySig(GraftColumnBridge.expression(sh), k))
-  }
+  /** MinHash signature over the polynomial prime-field family
+    * ([[graft.functions.TextSketch.minhashPoly]]): one codegen pass over
+    * the shingle array for all k per-seed minima, and every step is plain
+    * modular arithmetic, so the DuckDB oracle replays the signature (and
+    * therefore the banding candidates and the final pair set) exactly.
+    * This is what makes `dedup_minhash` a full hash-compared oracle. */
+  def minhashPolySignature(sh: Column, k: Int): Column =
+    GraftColumnBridge.kernel(graft.functions.TextSketch, "minhashPoly",
+      ArrayType(LongType, containsNull = false),
+      sh -> ArrayType(StringType), lit(k) -> IntegerType)
 
   /** LSH band→bucket projection of a signature frame (`doc_id`, `sig`):
     * one (doc_id, band, bucket, bslice) row per band, bucket = xxhash64 of
@@ -212,14 +190,12 @@ object Dedup {
     * token containing the separator; with each element prefixed by its
     * length, equal keys mean equal arrays short of a SHA-256 collision
     * (the corpus_curate dedup contract). */
-  private def shingleSetKey(sh: Column): Column = {
+  private[graft] def shingleSetKey(sh: Column): Column =
     // opt-r15: one-pass codegen digest — the HOF form ran interpreted and
     // allocated a length-prefixed copy of every shingle plus the joined
     // string per doc (ShinglerSpec pins bit-equality to that form)
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.ShingleSetKey(GraftColumnBridge.expression(sh)))
-  }
+    GraftColumnBridge.kernel(graft.functions.Shingler, "shingleSetKey", StringType,
+      sh -> ArrayType(StringType))
 
   /** Distinct-shingle-set pre-collapse (r14 — the r13 `dedup_simhash`
     * discipline applied to the minhash family): exact-duplicate texts
@@ -624,22 +600,18 @@ object Dedup {
     simhashFromHashes(tokenHashes61(split(text, " ")))
 
   /** Per-token 61-bit polynomial hashes (codegen single pass). */
-  def tokenHashes61(tokens: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.TokenHash61(GraftColumnBridge.expression(tokens)))
-  }
+  def tokenHashes61(tokens: Column): Column =
+    GraftColumnBridge.kernel(graft.functions.TextSketch, "tokenHash61",
+      ArrayType(LongType, containsNull = false), tokens -> ArrayType(StringType))
 
   /** Signature from a pre-materialized token-hash array, computed by the
-    * codegen'd [[graft.functions.SimHashSig]] kernel: one pass over the
+    * codegen'd [[graft.functions.TextSketch.simhash]] kernel: one pass over the
     * hashes for all 63 bit-sums (the former per-bit HOF folds re-walked the
     * array 63×, interpreted). Bit semantics unchanged: bit b set iff
     * Σ_h (bit b of h ? +1 : −1) > 0. */
-  def simhashFromHashes(hashes: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      graft.functions.SimHashSig(GraftColumnBridge.expression(hashes)))
-  }
+  def simhashFromHashes(hashes: Column): Column =
+    GraftColumnBridge.kernel(graft.functions.TextSketch, "simhash", LongType,
+      hashes -> ArrayType(LongType))
 
   /** SimHash near-dups: hamming(sig_a, sig_b) ≤ maxDist, candidates bucketed
     * by 16-bit band equality (a near-dup within ≤3 bits must agree on at

@@ -1,8 +1,9 @@
 package graft.ext
 
 import graft.Memo
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
 /** X3/X4: similarity search over an embedding column (`array<float>`).
   *
@@ -26,7 +27,6 @@ object SimSearch {
     * `aggregate(zip_with(…))` fold (same ascending summation order) but
     * ~100× cheaper per pair; see graft.functions.VectorDot. */
   def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(graft.functions.VectorDot(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
   }
@@ -662,7 +662,6 @@ object SimSearch {
     // against plan-constant double[]s, bit-identical per-element arithmetic
     // (FunctionsSpec parity pin)
     def centerDeflect(v: Column, d: Column): Column = {
-      import org.apache.spark.sql.GraftColumnBridge
       GraftColumnBridge.column(graft.functions.CenterDeflect(
         GraftColumnBridge.expression(v), GraftColumnBridge.expression(d),
         mu.toIndexedSeq, pc.toIndexedSeq))
@@ -766,9 +765,8 @@ object SimSearch {
     // ~190 µs/row on 64 dims (simsearch_quant 3.75 s for a 20k-row sf1
     // scan); the kernel is one fused pass with the identical double-op
     // order, pinned bit-equal to the HOF form in FunctionsSpec.
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.functions.Int8Quantize(
-      GraftColumnBridge.expression(v)))
+    GraftColumnBridge.kernel(graft.functions.VectorOps, "quantize",
+      ArrayType(DoubleType, containsNull = false), v -> ArrayType(DoubleType))
   }
 
   /** k-NN JOIN: every query vector (`vec_id < nQueries`) gets its k nearest
@@ -874,7 +872,6 @@ object SimSearch {
     // distance expression exponentially and ran each dot over a fresh
     // slice() allocation (~260 µs/row; see graft.functions.PqAdc)
     val adc = {
-      import org.apache.spark.sql.GraftColumnBridge
       val c2flat = for (s <- 0 until nSub; c <- 0 until nCodes)
         yield subC(s)(c).map(x => x * x).sum
       GraftColumnBridge.column(graft.functions.PqAdc(
@@ -916,12 +913,10 @@ object SimSearch {
   }
 
   /** Sign-bit binary code of a double vector (one long, 64 dims — see
-    * [[graft.functions.SignPack]]). */
-  def signCode(v: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.functions.SignPack(
-      GraftColumnBridge.expression(v)))
-  }
+    * [[graft.functions.VectorOps.signPack]]). */
+  def signCode(v: Column): Column =
+    GraftColumnBridge.kernel(graft.functions.VectorOps, "signPack", LongType,
+      v -> ArrayType(DoubleType))
 
   /** Binary-hash two-stage retrieval: sign-bit binarize every vector to one
     * 64-bit code (1 bit/dim — a 512× compression of fp64), take the `cand`
@@ -929,7 +924,7 @@ object SimSearch {
     * exact cosine and keep the top `k`.
     *
     * 100 TB posture: the corpus-wide stage is ONE fused codegen scan — pack
-    * (SignPack) → XOR → popcount (`bit_count`) → TakeOrderedAndProject on
+    * (`signPack`) → XOR → popcount (`bit_count`) → TakeOrderedAndProject on
     * (hamming, vec_id) — 2 ALU ops of distance math per vector instead of a
     * 64-FLOP dot product, no shuffle, no window over the corpus. The exact
     * re-rank touches only the `cand`-row candidate set (constant-sized, a

@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Mergeable-summary operators over the SQL-reproducible polynomial hash
   * family (graft.functions.TextSketch.polyHash — fold(7, h·131+cp) mod
@@ -32,11 +33,9 @@ object Sketches {
   private def bConst(i: Int): Long = (i * 40503L + 17L) % P
 
   /** Per-element polyHash of an array<string> column (codegen kernel). */
-  def polyHashArray(arr: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.functions.TokenHashPoly(
-      GraftColumnBridge.expression(arr)))
-  }
+  def polyHashArray(arr: Column): Column =
+    GraftColumnBridge.kernel(graft.functions.TextSketch, "tokenHashPoly",
+      ArrayType(LongType, containsNull = false), arr -> ArrayType(StringType))
 
   /** polyHash of a single string column (via the codegen array kernel). */
   def polyHashCol(s: Column): Column = element_at(polyHashArray(array(s)), 1)
@@ -44,21 +43,25 @@ object Sketches {
   /** One-pass per-shingle poly hashes straight from the text — bit-equal to
     * `polyHashArray(Dedup.shingles(text, w))` (SketchesSpec asserts it) but
     * without materializing shingle strings or interpreting HOF lambdas. */
-  def shingleHashes(text: Column, w: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.functions.ShingleHashPoly(
-      GraftColumnBridge.expression(text), w))
-  }
+  def shingleHashes(text: Column, w: Int): Column =
+    GraftColumnBridge.kernel(graft.functions.TextSketch, "shingleHashPoly",
+      ArrayType(LongType, containsNull = false), text -> StringType, lit(w) -> IntegerType)
 
   /** One-pass per-doc CDC chunk table (opt-r16): the chunk rows that
     * `posexplode(shingleHashes) → per-doc window cumsum → groupBy(doc,
     * chunk)` assembles, computed inside the scan projection —
     * array<struct<chunk_id, n_spans, start_pos, end_pos>>, boundaries at
-    * windows with hash ≡ 0 (mod `mod`). See [[graft.functions.CdcChunkStats]]. */
+    * windows with hash ≡ 0 (mod `mod`). See
+    * [[graft.functions.TextSketch.cdcChunkStats]]. */
   def cdcChunkStats(text: Column, w: Int, mod: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.functions.CdcChunkStats(
-      GraftColumnBridge.expression(text), w, mod))
+    require(mod > 0, s"cdc_chunk_stats needs a positive boundary modulus, got $mod")
+    GraftColumnBridge.kernel(graft.functions.TextSketch, "cdcChunkStats",
+      ArrayType(StructType(Seq(
+        StructField("chunk_id", IntegerType, nullable = false),
+        StructField("n_spans", LongType, nullable = false),
+        StructField("start_pos", IntegerType, nullable = false),
+        StructField("end_pos", IntegerType, nullable = false))), containsNull = false),
+      text -> StringType, lit(w) -> IntegerType, lit(mod) -> IntegerType)
   }
 
   /** Bucket of hash `h` under seed `i`, `w` cells: ((a_i·h + b_i) mod P) mod w.

@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** X6 + north-star text operators: tokenization, quality scoring, language
   * ID, fingerprinting. All per-row higher-order expressions — no UDFs, fully
@@ -13,12 +14,10 @@ object TextAnalysis {
   def tokens(text: Column): Column = split(text, " ")
 
   /** Unicode NFC normalization (codegen — see
-    * [[graft.functions.NfcNormalize]]). */
-  def nfc(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.functions.NfcNormalize(
-      GraftColumnBridge.expression(text)))
-  }
+    * [[graft.functions.TextSketch.nfc]]). */
+  def nfc(text: Column): Column =
+    GraftColumnBridge.kernel(graft.functions.TextSketch, "nfc", StringType,
+      text -> StringType)
 
   /** BPE-ish subword count: whitespace tokens plus an extra unit per 4 chars
     * of token beyond the first 4 (deterministic stand-in for a real BPE
@@ -79,17 +78,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "et"),
     "zh" -> Seq("的", "是", "了"))
 
-  def langScores(text: Column, markers: Seq[(String, Seq[String])] = defaultMarkers): Seq[(String, Column)] = {
-    val toks = tokens(text)
-    markers.map { case (lang, words) =>
-      lang -> size(filter(toks, t => t.isin(words.map(lit): _*)))
-    }
-  }
-
-  def langId(text: Column, markers: Seq[(String, Seq[String])] = defaultMarkers): Column = {
-    argmaxLang(langScores(text, markers))
-  }
-
   /** The language with the highest score, as one expression: a fold of
     * `greatest`/`when` over `scores` in order, so ties go to the first
     * language in profile order (a later one needs a strictly greater
@@ -126,10 +114,9 @@ object TextAnalysis {
     }
   }
 
-  /** Character-trigram language ID (the real n-gram heuristic shape): per
-    * language, a profile of characteristic trigrams; score = how many of the
-    * text's trigrams are in the profile; predict argmax (first-max-in-order
-    * tie-break, like [[langId]]). */
+  /** Character-n-gram language profiles (the real n-gram heuristic shape):
+    * per language, characteristic trigrams (single characters for zh),
+    * scored by [[withLangIdOccurrence]]. */
   val defaultTrigramProfiles: Seq[(String, Seq[String])] = Seq(
     "de" -> Seq("er ", "der", "ein", "ich", "sch"),
     "en" -> Seq("the", "he ", "ing", "and", " th"),
@@ -137,55 +124,14 @@ object TextAnalysis {
     "fr" -> Seq("le ", "es ", "ent", "une", "eur"),
     "zh" -> Seq("的", "是", "了", "我", "在"))
 
-  /** The text's character trigrams (positions 1..len-2), one pass, no
-    * shuffle; expressible identically in the DuckDB oracle. */
-  def charTrigrams(text: Column): Column =
-    transform(sequence(lit(1), greatest(length(text) - 2, lit(1))),
-      i => text.substr(i, lit(3)))
-
-  def langIdNgram(text: Column,
-      profiles: Seq[(String, Seq[String])] = defaultTrigramProfiles): Column = {
-    // CONTAINMENT, not equality: for the latin profiles (every entry
-    // exactly 3 chars) contains-in-a-3-char-gram IS equality, but the zh
-    // profile is single CHARACTERS — under isin they could never match a
-    // 3-char gram and Chinese text of length >= 3 fell through to the
-    // fold's seed language (dead profile entries, r8 review finding).
-    val scores = profiles.map { case (lang, ps) =>
-      lang -> size(filter(charTrigrams(text),
-        g => ps.map(p => g.contains(lit(p))).reduce(_ || _)))
-    }
-    argmaxLang(scores)
-  }
-
-  /** Dataframe-staged variant of [[langIdNgram]]: trigram extraction and the
-    * five per-language scores land in their own projections so the argmax
-    * fold references score *columns* instead of re-inlining the extraction
-    * per language (measured 10× slower as one expression tree). Use this
-    * form on data-proportional paths. */
-  def withLangIdNgram(df: org.apache.spark.sql.DataFrame, textCol: String,
-      out: String,
-      profiles: Seq[(String, Seq[String])] = defaultTrigramProfiles,
-      extractor: Column => Column = charTrigrams): org.apache.spark.sql.DataFrame = {
-    val withGrams = df.withColumn("__grams", extractor(col(textCol)))
-    val withScores = profiles.foldLeft(withGrams) { case (d, (lang, ps)) =>
-      // containment for the same single-char-profile reason as langIdNgram
-      d.withColumn(s"__s_$lang", size(filter(col("__grams"),
-        g => ps.map(p => g.contains(lit(p))).reduce(_ || _))))
-    }
-    val scores = profiles.map { case (lang, _) => lang -> col(s"__s_$lang") }
-    withScores.withColumn(out, argmaxLang(scores))
-      .drop("__grams" +: profiles.map(p => s"__s_${p._1}"): _*)
-  }
-
   /** Distinct-marker language ID: score(lang) = |tokens ∩ marker set| via one
     * codegen'd `array_intersect` per language — no interpreted lambda passes.
-    * (The r3 `withLangIdNgram(tokens)` form ran five interpreted
-    * `filter(isin)` HOFs per row and measured 10× slower than codegen string
-    * ops at sf0.1; `ArrayIntersect` is a native codegen binary expression.)
-    * Scores count DISTINCT matched markers, so its DuckDB twin is
-    * `len(list_intersect(sp, [...]))` — both engines dedup identically.
-    * Argmax tie-break identical to [[langId]]: first language in profile
-    * order with a strictly greater score. */
+    * (A form with five interpreted `filter(isin)` HOFs per row measured 10×
+    * slower than codegen string ops at sf0.1; `ArrayIntersect` is a native
+    * codegen binary expression.) Scores count DISTINCT matched markers, so
+    * its DuckDB twin is `len(list_intersect(sp, [...]))` — both engines
+    * dedup identically. Argmax tie-break: first language in profile order,
+    * a later one needs a strictly greater score. */
   def withLangIdIntersect(df: DataFrame, textCol: String, out: String,
       markers: Seq[(String, Seq[String])] = defaultMarkers): DataFrame = {
     val withToks = df.withColumn("__toks", tokens(col(textCol)))
@@ -201,10 +147,9 @@ object TextAnalysis {
   /** Occurrence-counting language ID: score(lang) = Σ_p over the language's
     * profile n-grams of the non-overlapping occurrence count of p in the
     * text, computed as (len(text) − len(replace(text, p))) / len(p) — plain
-    * codegen'd string ops, no array materialization. The trigram-array form
-    * ([[withLangIdNgram]]) allocates one substring per character position
-    * and filters it per language through interpreted higher-order lambdas;
-    * this form is the data-proportional-path default. Unlike the 3-char
+    * codegen'd string ops, no array materialization. A trigram-array form
+    * would allocate one substring per character position and filter it per
+    * language through interpreted higher-order lambdas. Unlike 3-char
     * substr grams, it also scores 1–2-char profile entries (e.g. CJK
     * single-character markers). Argmax tie-break identical: first language
     * in profile order with a strictly greater score. */
@@ -215,7 +160,6 @@ object TextAnalysis {
     // profiles); LangOccurrenceScore counts the same non-overlapping
     // occurrences allocation-free and replays the identical truncating
     // arithmetic (ShinglerSpec pins equality incl. multi-byte profiles)
-    import org.apache.spark.sql.GraftColumnBridge
     val withScores = profiles.foldLeft(df) { case (d, (lang, ps)) =>
       d.withColumn(s"__s_$lang", GraftColumnBridge.column(
         graft.functions.LangOccurrenceScore(

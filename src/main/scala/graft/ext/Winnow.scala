@@ -73,7 +73,7 @@ object Winnow {
         // opt-r15: positional per-window xxhash64 in ONE codegen pass —
         // the former shingles() + posexplode + xxhash64(g) materialized
         // every window string only to hash it (values bit-identical:
-        // ShingleHashes == transform(shingles, xxhash64), positions kept)
+        // Shingler.shingleHashes == transform(shingles, xxhash64), positions kept)
         docs
           .select(col("doc_id"), Dedup.shingleHashes64(col("text"), k).as("gs"))
           .where(size(col("gs")) >= minRun - k + 1)

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass word-shingle kernels (opt-r15). The dataflow forms —
@@ -26,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * contract has every consumer copy expression output into an UnsafeRow
   * before the producing row's buffer is reused, so the views never outlive
   * their backing bytes. Consumers that BUFFER results by reference in an
-  * interpreted path must copy first — the spec asserts these expressions
+  * interpreted path must copy first — the spec asserts these kernel calls
   * never fall back to interpreted mode (no CodegenFallback), which is what
   * keeps that hazard theoretical. Bit-identical to the HOF forms
   * (ShinglerSpec pins equality
@@ -152,10 +149,15 @@ object Shingler {
 
   private val HexDigits = "0123456789abcdef".getBytes("US-ASCII")
 
-  /** See [[graft.functions.ShingleSetKey]]: SHA-256 (lowercase hex) over
-    * the length-prefixed ':'-separated '|'-joined element stream. Null
-    * elements are skipped with no separator — transform maps them to null
-    * and concat_ws drops nulls — though kernel inputs never carry any. */
+  /** Injective group key of a shingle-set array (opt-r15) — bit-identical
+    * to `sha2(concat_ws("|", transform(sh, x => concat(length(x), ":", x))),
+    * 256)`: each element length-prefixed by its CHARACTER count in decimal,
+    * ':'-separated, '|'-joined, SHA-256, lowercase hex. The HOF form ran
+    * interpreted and allocated a length-prefixed copy of every shingle plus
+    * the full joined string per doc; this streams the same bytes through
+    * one MessageDigest. Null elements are skipped with no separator —
+    * transform maps them to null and concat_ws drops nulls — though kernel
+    * inputs never carry any. */
   def shingleSetKey(sh: ArrayData): UTF8String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     val n = sh.numElements()
@@ -203,89 +205,4 @@ object Shingler {
     }
     seen.size
   }
-}
-
-private[functions] trait ShinglerKernel extends UnaryExpression {
-  def w: Int
-  def fn: String
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"$fn needs string, got $other")
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Shingler.$fn($c, $w)")
-}
-
-/** Every w-token window string (== `Dedup.shingles`). */
-case class ShingleArray(child: Expression, w: Int) extends ShinglerKernel {
-  override def fn: String = "shingleArray"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Shingler.shingleArray(input.asInstanceOf[UTF8String], w)
-  override protected def withNewChildInternal(newChild: Expression): ShingleArray =
-    copy(child = newChild)
-}
-
-/** Positional per-window xxhash64 (== `transform(shingles, xxhash64)`). */
-case class ShingleHashes(child: Expression, w: Int) extends ShinglerKernel {
-  override def fn: String = "shingleHashes"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Shingler.shingleHashes(input.asInstanceOf[UTF8String], w)
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
-}
-
-/** Distinct window strings (== `array_distinct(shingles)`). */
-case class DistinctShingles(child: Expression, w: Int) extends ShinglerKernel {
-  override def fn: String = "distinctShingles"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Shingler.distinctShingles(input.asInstanceOf[UTF8String], w)
-  override protected def withNewChildInternal(newChild: Expression): DistinctShingles =
-    copy(child = newChild)
-}
-
-/** Per-distinct-window xxhash64 (== `transform(array_distinct(shingles),
-  * xxhash64)`). */
-case class DistinctShingleHashes(child: Expression, w: Int) extends ShinglerKernel {
-  override def fn: String = "distinctShingleHashes"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Shingler.distinctShingleHashes(input.asInstanceOf[UTF8String], w)
-  override protected def withNewChildInternal(newChild: Expression): DistinctShingleHashes =
-    copy(child = newChild)
-}
-
-/** Injective group key of a shingle-set array (opt-r15) — bit-identical to
-  * `sha2(concat_ws("|", transform(sh, x => concat(length(x), ":", x))), 256)`
-  * (Dedup.shingleSetKey's dataflow form): each element length-prefixed by
-  * its CHARACTER count in decimal, ':'-separated, '|'-joined, SHA-256,
-  * lowercase hex. The HOF form ran interpreted and allocated a
-  * length-prefixed copy of every shingle plus the full joined string per
-  * doc; this streams the same bytes through one MessageDigest. */
-case class ShingleSetKey(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"shingle_set_key needs array<string>, got $other")
-  }
-  override def nullSafeEval(input: Any): Any =
-    Shingler.shingleSetKey(input.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Shingler.shingleSetKey($c)")
-  override protected def withNewChildInternal(newChild: Expression): ShingleSetKey =
-    copy(child = newChild)
-}
-
-/** Distinct-window count (== `size(array_distinct(shingles))`). */
-case class DistinctShingleCount(child: Expression, w: Int) extends ShinglerKernel {
-  override def fn: String = "distinctShingleCount"
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    Shingler.distinctShingleCount(input.asInstanceOf[UTF8String], w)
-  override protected def withNewChildInternal(newChild: Expression): DistinctShingleCount =
-    copy(child = newChild)
 }

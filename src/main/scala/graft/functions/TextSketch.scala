@@ -1,64 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native sketch kernels for the dedup family (reference's near-dup
-  * north-star). The higher-order forms — k MinHash folds
-  * (`aggregate(hashes, MaxValue, least(acc, xxhash64(h, i)))` per seed) and
-  * 63 SimHash bit-sum folds — are interpreted per element (lambda binding +
-  * boxing): measured multi-second at sf0.1. These single-pass loops keep the
-  * sketch projection inside whole-stage codegen and are bit-identical to the
-  * HOF forms (same Spark xxhash64 mixing, same fold order).
+  * north-star), each called through one `GraftColumnBridge.kernel`. The
+  * higher-order forms — k MinHash folds and 63 SimHash bit-sum folds — are
+  * interpreted per element (lambda binding + boxing): measured multi-second
+  * at sf0.1. These single-pass loops keep the sketch projection inside
+  * whole-stage codegen and are bit-identical to the HOF forms (same
+  * arithmetic, same fold order).
   */
 object TextSketch {
-
-  /** out[i] = min over h in hashes of xxhash64(h, i) with Spark's chained
-    * seeding: hashInt(i, hashLong(h, 42)) — identical to the HOF form where
-    * the seed index comes from `sequence(0, k-1)` (IntegerType). */
-  def minhash(hashes: ArrayData, k: Int): ArrayData = {
-    val out = new Array[Long](k)
-    java.util.Arrays.fill(out, Long.MaxValue)
-    val n = hashes.numElements()
-    var j = 0
-    while (j < n) {
-      if (!hashes.isNullAt(j)) mix(XXH64.hashLong(hashes.getLong(j), 42L), k, out)
-      j += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  /** String-input variant: each element is hashed once with Spark's
-    * `xxhash64(s)` (seed 42), then re-mixed per seed exactly like
-    * [[minhash]] — so signatures equal `minhash(transform(sh, xxhash64), k)`
-    * without materializing the intermediate hash array. */
-  def minhashStr(shingles: ArrayData, k: Int): ArrayData = {
-    val out = new Array[Long](k)
-    java.util.Arrays.fill(out, Long.MaxValue)
-    val n = shingles.numElements()
-    var j = 0
-    while (j < n) {
-      if (!shingles.isNullAt(j)) {
-        val s = shingles.getUTF8String(j)
-        mix(XXH64.hashLong(XXH64.hashUTF8String(s, 42L), 42L), k, out)
-      }
-      j += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  private def mix(h0: Long, k: Int, out: Array[Long]): Unit = {
-    var i = 0
-    while (i < k) {
-      val v = XXH64.hashInt(i, h0)
-      if (v < out(i)) out(i) = v
-      i += 1
-    }
-  }
 
   // ------------------------------------------------------------------
   // Polynomial prime-field hashing — the SQL-reproducible family. Unlike
@@ -80,10 +34,10 @@ object TextSketch {
     * approximation one-sidedly (count-min / Bloom bucketing via
     * [[graft.ext.Sketches.bucket]], minhash folds below), never as an
     * identity. The 100 TB identity/dedup paths use 64-bit xxhash64
-    * ([[minhash]]/[[minhashStr]]) or 256-bit sha2 fingerprints. */
+    * (the [[Shingler]] hashes) or 256-bit sha2 fingerprints. */
   final val PolyP = 1000000007L
 
-  def polyHash(s: org.apache.spark.unsafe.types.UTF8String): Long = {
+  def polyHash(s: UTF8String): Long = {
     val str = s.toString
     var h = 7L
     var i = 0
@@ -106,8 +60,8 @@ object TextSketch {
     * upward by at most the colliding shingles' weight in the union. Fine
     * for LSH candidate GENERATION (band slices of these values — a false
     * candidate is removed by the exact-Jaccard verify stage that every
-    * dedup_cluster_lsh-shaped pipeline runs); for verification-free dedup
-    * at 100 TB use the xxhash64 family ([[minhash]]). */
+    * dedup_cluster_lsh-shaped pipeline runs); verification-free dedup at
+    * 100 TB would need a 64-bit family. */
   def minhashPoly(shingles: ArrayData, k: Int): ArrayData = {
     val out = new Array[Long](k)
     java.util.Arrays.fill(out, Long.MaxValue)
@@ -168,7 +122,7 @@ object TextSketch {
     * shingle strings, no per-element lambda binding, and no allocations
     * beyond the output array. Short docs (< w tokens) collapse to the
     * whole-text single shingle, matching [[graft.ext.Dedup.shingles]]. */
-  def shingleHashPoly(text: org.apache.spark.unsafe.types.UTF8String, w: Int): ArrayData = {
+  def shingleHashPoly(text: UTF8String, w: Int): ArrayData = {
     val s = text.toString
     val n = s.length
     // token start offsets under split(text, " ") semantics (keep empties)
@@ -215,7 +169,7 @@ object TextSketch {
     * grouped aggregation with per-CHUNK output rows (~1/mod of the spans)
     * and zero pre-sort shuffles — the chunk table of a 100 TB corpus never
     * exists in span form. */
-  def cdcChunkStats(text: org.apache.spark.unsafe.types.UTF8String, w: Int,
+  def cdcChunkStats(text: UTF8String, w: Int,
       mod: Int): ArrayData = {
     val hl = shingleHashPoly(text, w)
     val nw = hl.numElements()
@@ -256,6 +210,18 @@ object TextSketch {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
+  /** Unicode NFC normalization (canonical composition, UAX #15, via
+    * java.text.Normalizer) — the pass every multilingual corpus needs
+    * before exact dedup or tokenization: a decomposed "é" (e + U+0301) and
+    * the precomposed U+00E9 are byte-different (so they defeat sha2 dedup
+    * keys and split token types) but NFC-equal. The DuckDB oracle twin is
+    * `nfc_normalize(...)` and python's `unicodedata.normalize('NFC', ...)`
+    * the third-engine form; all three bind the same algorithm, so results
+    * are byte-identical across engines. */
+  def nfc(s: UTF8String): UTF8String =
+    UTF8String.fromString(
+      java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFC))
+
   /** 63-bit SimHash: bit b of the result is set iff
     * Σ_h (bit b of h ? +1 : −1) > 0. 63 bits keeps the assembled value
     * non-negative under ANSI arithmetic (Dedup.scala contract). */
@@ -282,177 +248,4 @@ object TextSketch {
     }
     sig
   }
-}
-
-/** MinHash signature (array<long> pre-hashed tokens OR array<string>
-  * shingles → array<long> of k per-seed minima) as one codegen'd pass. */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  private def isStr = child.dataType match {
-    case ArrayType(StringType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) | ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"minhash_sig needs array<bigint> or array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    if (isStr) TextSketch.minhashStr(input.asInstanceOf[ArrayData], k)
-    else TextSketch.minhash(input.asInstanceOf[ArrayData], k)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isStr) "minhashStr" else "minhash"
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSketch.$fn($c, $k)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** MinHash signature over the SQL-reproducible polynomial family
-  * (array<string> shingles → array<long> of k per-seed minima). */
-case class MinHashPolySig(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"minhash_poly_sig needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextSketch.minhashPoly(input.asInstanceOf[ArrayData], k)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSketch.minhashPoly($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashPolySig =
-    copy(child = newChild)
-}
-
-/** Per-token 61-bit polynomial hash (array<string> → array<long>),
-  * the SQL-reproducible SimHash input. */
-case class TokenHash61(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"token_hash61 needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextSketch.tokenHash61(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSketch.tokenHash61($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenHash61 =
-    copy(child = newChild)
-}
-
-/** SimHash signature (array<long> token hashes → 63-bit long) as one
-  * codegen'd pass. */
-case class SimHashSig(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"simhash_sig needs array<bigint>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextSketch.simhash(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSketch.simhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashSig =
-    copy(child = newChild)
-}
-
-/** Raw per-token polynomial hashes (array<string> → array<long> mod 1e9+7)
-  * — codegen'd input stage for the count-min / Bloom bucket families. */
-case class TokenHashPoly(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"token_hash_poly needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextSketch.tokenHashPoly(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSketch.tokenHashPoly($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenHashPoly =
-    copy(child = newChild)
-}
-
-/** One-pass per-shingle polynomial hashes (string → array<long>): the
-  * codegen replacement for shingles() + TokenHashPoly when only the hash
-  * values are consumed (span duplication, CDC boundaries). */
-case class ShingleHashPoly(child: Expression, w: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"shingle_hash_poly needs string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextSketch.shingleHashPoly(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSketch.shingleHashPoly($c, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashPoly =
-    copy(child = newChild)
-}
-
-/** One-pass CDC chunk table (string → array<struct<chunk_id:int,
-  * n_spans:bigint, start_pos:int, end_pos:int>>) — the codegen replacement
-  * for posexplode(ShingleHashPoly) → per-doc window cumsum → groupBy(doc,
-  * chunk) when only the chunk table is consumed (chunk_cdc). */
-case class CdcChunkStats(child: Expression, w: Int, mod: Int)
-    extends UnaryExpression {
-
-  require(mod > 0, s"cdc_chunk_stats needs a positive boundary modulus, got $mod")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("chunk_id", IntegerType, nullable = false),
-    StructField("n_spans", LongType, nullable = false),
-    StructField("start_pos", IntegerType, nullable = false),
-    StructField("end_pos", IntegerType, nullable = false))), containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"cdc_chunk_stats needs string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextSketch.cdcChunkStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w, mod)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSketch.cdcChunkStats($c, $w, $mod)")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcChunkStats =
-    copy(child = newChild)
 }

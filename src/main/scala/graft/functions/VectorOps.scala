@@ -77,6 +77,38 @@ object VectorOps {
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
+
+  /** Sign-bit binarization into one 64-bit code: bit `i` is set iff element
+    * `i` is non-null and ≥ 0.0 (−0.0 counts as ≥ 0, like the SQL comparison
+    * it mirrors; a null element is the SQL form's false, not a contract
+    * breach, since the output holds no per-element slot). Only the first 64
+    * dimensions participate — the fixture embeddings are exactly 64-dim,
+    * and a wider vector would need an `array<long>` code (documented
+    * contract, not a silent wrap).
+    *
+    * NaN yields a ZERO bit (Java's `NaN >= 0.0` is false); DuckDB's float
+    * total order ranks NaN above everything, so its `v[i] >= 0` would set
+    * the bit — the engines DISAGREE on NaN elements. Out of contract today
+    * (embedding_qa_report screens non-finite rows before any vector reaches
+    * this kernel), recorded so a future fixture with NaNs fails the
+    * simsearch_hamming oracle loudly for the right reason rather than
+    * looking like a packing bug.
+    *
+    * Binarization runs once per corpus vector on the retrieval hot path
+    * (simsearch_hamming's candidate stage), where the HOF formulation
+    * `aggregate(transform(sequence(...)))` would be interpreted; this loop
+    * keeps the candidate stage one fused scan: pack → XOR → popcount →
+    * TakeOrdered. */
+  def signPack(v: ArrayData): Long = {
+    val n = math.min(v.numElements(), 64)
+    var code = 0L
+    var i = 0
+    while (i < n) {
+      if (!v.isNullAt(i) && v.getDouble(i) >= 0.0) code |= (1L << i)
+      i += 1
+    }
+    code
+  }
 }
 
 /** `centerDeflect` sibling for product quantization: the WHOLE ADC pass —
@@ -176,28 +208,6 @@ case class PqAdc(child: Expression,
   * a partial aggregation — the k·tokens pair stream never shuffles
   * pre-aggregation, where the join form shuffled it twice (probe + partner
   * sides). Null elements are skipped on either side of a pair. */
-case class WindowPairs(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if k > 0 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(StringType, _) =>
-      TypeCheckResult.TypeCheckFailure(s"window_pairs needs k > 0, got $k")
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"window_pairs needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WindowPairs.pairs(input.asInstanceOf[ArrayData], k)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WindowPairs.pairs($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): WindowPairs =
-    copy(child = newChild)
-}
-
 object WindowPairs {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.unsafe.types.UTF8String
@@ -237,27 +247,6 @@ object WindowPairs {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** `quantize(v)` — see [[VectorOps.quantize]]. */
-case class Int8Quantize(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"int8_quantize needs array<double>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    VectorOps.quantize(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VectorOps.quantize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Int8Quantize =
-    copy(child = newChild)
 }
 
 /** `centerDeflect(v, d)` against the plan-constant (mu, pc) pair — see

@@ -234,7 +234,7 @@ object DedupKeys {
     // every window string (an earlier xxhash64-variant that still BUILT
     // the strings before hashing measured SLOWER, 1.32 → 1.59 s at
     // sf0.1/32c — hashing on top of construction only added work). The
-    // DistinctShingleHashes kernel deletes construction itself: one
+    // distinctShingleHashes kernel deletes construction itself: one
     // codegen pass over the text bytes dedups window VIEWS and emits
     // 64-bit hashes, so only (doc_id, gh:long) rows flow through the
     // explode → broadcast probe → map-side-combined per-doc fold. Engine
@@ -506,7 +506,7 @@ object DedupKeys {
         // read the materialized sketch (the memoizedSignatures discipline)
         val docs = t(s, dir, "documents")
         val sh = Memo.frame("span_shh", docs) {
-          // opt-r15: one-pass DistinctShingleHashes kernel — the former
+          // opt-r15: one-pass distinctShingleHashes kernel — the former
           // explode(array_distinct(shingles)) + xxhash64(sh) built every
           // distinct window STRING only to hash it at the next projection;
           // values bit-identical (dedup on string identity, then xxhash64)
@@ -878,7 +878,7 @@ object DedupKeys {
       // catches "Café␣␣X" vs "café x", byte-different twins plain
       // sha2 dedup misses. Keep-first (min doc_id per normalized key, the
       // engine-wide policy); surface = per-source docs/kept/dropped. The
-      // normalization chain is codegen end to end (NfcNormalize → lower →
+      // normalization chain is codegen end to end (TextSketch.nfc → lower →
       // regexp_replace → trim → sha2); shuffle rows carry only the 32-byte
       // digest + ids, never bodies (the dedup_exact shape). ASCII
       // single-space fixture ⇒ result equals plain exact dedup — the

@@ -658,7 +658,7 @@ object RetrievalKeys {
            |FROM d ORDER BY score_micros DESC, doc_id LIMIT 20""".stripMargin)),
 
     QSpec("simsearch_hamming",
-      // Binary-code retrieval: sign-bit binarize (SignPack — 1 bit/dim,
+      // Binary-code retrieval: sign-bit binarize (VectorOps.signPack — 1 bit/dim,
       // 512× smaller than fp64), Hamming-nearest 50 candidates via
       // XOR+popcount, exact cosine re-rank to top-10. The corpus stage is
       // one fused codegen scan ending in TakeOrdered — 2 ALU ops of

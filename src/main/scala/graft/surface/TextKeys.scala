@@ -802,8 +802,8 @@ object TextKeys {
       // no log/PMI libm drift; top-50 by lift, full lexicographic tiebreak.
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        // r13 shape: pair generation is ROW-LOCAL (the WindowPairs codegen
-        // kernel emits each position's ≤4 successor pairs straight from
+        // r13 shape: pair generation is ROW-LOCAL (the WindowPairs.pairs
+        // codegen kernel emits each position's ≤4 successor pairs straight from
         // the token array), so the k·tokens pair stream feeds partial
         // aggregation in the scan stage — the former probe-explode +
         // (doc_id, pos) self-join shuffled that stream twice before any
@@ -811,13 +811,16 @@ object TextKeys {
         // counts come from one explode pass and the corpus total derives
         // from them (metadata-sized), so no shared frame needs
         // materializing at all.
-        def pairKeys(toks: org.apache.spark.sql.Column) = {
+        def pairKeys(toks: org.apache.spark.sql.Column, k: Int) = {
           import org.apache.spark.sql.GraftColumnBridge
-          GraftColumnBridge.column(graft.functions.WindowPairs(
-            GraftColumnBridge.expression(toks), 4))
+          import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
+          require(k > 0, s"window_pairs needs k > 0, got $k")
+          GraftColumnBridge.kernel(graft.functions.WindowPairs, "pairs",
+            ArrayType(StringType, containsNull = false),
+            toks -> ArrayType(StringType), lit(k) -> IntegerType)
         }
         val pairs = docs
-          .select(explode(pairKeys(split(col("text"), " "))).as("pk"))
+          .select(explode(pairKeys(split(col("text"), " "), 4)).as("pk"))
           .groupBy("pk").agg(count(lit(1)).as("pair_cnt"))
           .select(substring_index(col("pk"), " ", 1).as("tok_a"),
             substring_index(col("pk"), " ", -1).as("tok_b"),
@@ -924,7 +927,7 @@ object TextKeys {
       // opt-r15: trigram list == the 3-shingle kernel output (adjacent
       // tokens joined by the single spaces they were split on), so the
       // interpreted transform+concat runs as the one-pass codegen
-      // ShingleArray kernel; the size<3 guard keeps its meaning (the
+      // shingleArray kernel; the size<3 guard keeps its meaning (the
       // kernel collapses short docs to ONE whole-text shingle, which this
       // key must exclude, not emit)
       (s, dir) => t(s, dir, "documents")
@@ -1617,7 +1620,7 @@ object TextKeys {
         // inverted-index self-join read this distinct-shingle frame
         val docs = t(s, dir, "documents")
         val sh = Memo.frame("srcshingle", docs) {
-          // opt-r15: one-pass DistinctShingleHashes kernel (no shingle
+          // opt-r15: one-pass distinctShingleHashes kernel (no shingle
           // strings materialize; values bit-identical — see DedupKeys'
           // span_dup_fraction span_shh note)
           docs.select(col("source"),
@@ -1886,7 +1889,7 @@ object TextKeys {
       // canonical composition and the char counts before/after — the
       // report that tells a multilingual pipeline whether decomposed forms
       // are defeating its sha2 dedup keys and splitting token types. The
-      // normalization itself is the codegen NfcNormalize kernel (UAX #15 —
+      // normalization itself is the codegen TextSketch.nfc kernel (UAX #15 —
       // the identical algorithm DuckDB's nfc_normalize and python's
       // unicodedata bind, so all three engines agree byte-for-byte). One
       // scan + O(sources) groups; the fixture corpus is ASCII, so

@@ -212,14 +212,6 @@ class ExtSpec extends SparkSpec {
     assert(rep.select(graft.ext.TextAnalysis.repetitionRatio(col("text"))).collect()(0).getDouble(0) == 0.6)
   }
 
-  test("trigram language id is deterministic and total") {
-    import spark.implicits._
-    val preds = docs.select(graft.ext.TextAnalysis.langIdNgram(col("text")).as("p"))
-      .as[String].collect()
-    assert(preds.length == docs.count())
-    assert(preds.toSet.subsetOf(Set("de", "en", "es", "fr", "zh")))
-  }
-
   test("transform_bucket values stay in [0, n) and are stable") {
     val li = TableRegistry.table(spark, sfDir, "lineitem")
     val buckets = li.select(pmod(hash(col("l_suppkey")), lit(8)).as("b"))

@@ -270,7 +270,7 @@ class PlanSpec extends SparkSpec {
 
   test("token_cooccurrence pairs are row-local — no pair join, partial agg in the scan stage") {
     // the bounded-at-scale guarantee, r13 form: pair generation is the
-    // WindowPairs kernel over each row's token array (fan-out k×tokens by
+    // WindowPairs.pairs kernel over each row's token array (fan-out k×tokens by
     // construction — the r4 vocabulary² trap cannot re-enter without
     // reintroducing a join), so the ONLY joins in the plan are the small
     // unigram-count/total joins AFTER aggregation, and the pair stream
@@ -278,7 +278,7 @@ class PlanSpec extends SparkSpec {
     val df = Queries.allSpecs.find(_.name == "token_cooccurrence").get.fn(spark, sfDir)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("windowpairs"), s"pair kernel missing:\n$plan")
+    assert(plan.contains("WindowPairs.pairs("), s"pair kernel missing:\n$plan")
     assert(!plan.contains("CartesianProduct"), plan)
     // no join keyed on doc_id/pos anywhere — pair work never shuffles raw
     assert(!"(?s)Join.{0,200}doc_id#\\d+".r.findFirstIn(plan).isDefined,

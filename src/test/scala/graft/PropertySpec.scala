@@ -123,19 +123,6 @@ class PropertySpec extends SparkSpec {
     assert(redup.count() == once.count())
   }
 
-  test("minhash signature length and determinism") {
-    val sig = docs.limit(50)
-      .select(Dedup.minhashSignature(
-        array_distinct(Dedup.shingles(col("text"), 3)), 20).as("sig"))
-      .collect().map(_.getSeq[Long](0))
-    assert(sig.forall(_.length == 20))
-    val sig2 = docs.limit(50)
-      .select(Dedup.minhashSignature(
-        array_distinct(Dedup.shingles(col("text"), 3)), 20).as("sig"))
-      .collect().map(_.getSeq[Long](0))
-    assert(sig.zip(sig2).forall { case (x, y) => x == y })
-  }
-
   test("topk_rows == window top-k over randomized data / k / partitioning") {
     import graft.functions.TopKRows.topKRows
     import org.apache.spark.sql.expressions.Window

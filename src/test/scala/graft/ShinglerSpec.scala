@@ -103,12 +103,10 @@ class ShinglerSpec extends SparkSpec {
   }
 
   test("ShingleSetKey == sha2(concat_ws of length-prefixed elements, 256)") {
-    import org.apache.spark.sql.GraftColumnBridge
     // the pre-kernel definition, verbatim (Dedup.shingleSetKey pre-opt-r15)
     def hofKey(sh: Column): Column =
       sha2(concat_ws("|", transform(sh, x => concat(length(x), lit(":"), x))), 256)
-    def kKey(sh: Column): Column = GraftColumnBridge.column(
-      graft.functions.ShingleSetKey(GraftColumnBridge.expression(sh)))
+    def kKey(sh: Column): Column = Dedup.shingleSetKey(sh)
     // real distinct-shingle arrays + adversarial ones: empty array, empty
     // string element, multi-byte elements (length() counts CHARACTERS),
     // elements containing the separators themselves
